@@ -590,7 +590,7 @@ object Graft {
     * was nothing to fold.
     */
   def ivfPqCompact(spark: SparkSession, dir: String, retain: Int = 1): Boolean =
-    graft.operators.AnnSuite.ivfPqCompact(spark, dir, retain = retain)
+    graft.operators.AnnSuite.CodesStore.compact(spark, dir, retain = retain)
 
   /** Tombstone a batch of vector ids out of a persisted IVFADC index —
     * right-to-be-forgotten without a rebuild: the ids land as a
@@ -607,7 +607,7 @@ object Graft {
     */
   def ivfPqDelete(spark: SparkSession, dir: String, ids: DataFrame,
       idCol: String, batchId: Long): Boolean =
-    graft.operators.AnnSuite.ivfPqDelete(spark, dir, ids, idCol, batchId)
+    graft.operators.AnnSuite.CodesStore.delete(spark, dir, ids, idCol, batchId)
 
   /** ZERO-DOWNTIME REINDEX of a persisted IVFADC index —
     * [[ivfRetrain]]'s twin for the quantized store. Codes are lossy,
@@ -699,7 +699,7 @@ object Graft {
     * use [[ivfCompact]] only for terminal-delete stores).
     */
   def ivfUpsertCompact(spark: SparkSession, dir: String, retain: Int = 1): Boolean =
-    graft.operators.AnnSuite.ivfUpsertCompact(spark, dir, retain = retain)
+    graft.operators.AnnSuite.IvfStore.upsertCompact(spark, dir, retain = retain)
 
   /** Incremental IVF maintenance: assign an arriving batch at a
     * persisted index's FIXED centroids and land it as a batchId-keyed
@@ -746,7 +746,7 @@ object Graft {
     * when there was nothing to fold.
     */
   def ivfCompact(spark: SparkSession, dir: String, retain: Int = 1): Boolean =
-    graft.operators.AnnSuite.ivfCompact(spark, dir, retain = retain)
+    graft.operators.AnnSuite.IvfStore.compact(spark, dir, retain = retain)
 
   /** Tombstone a batch of vector ids out of a persisted IVF index —
     * [[ivfPqDelete]]'s twin on the assignments store (same delete
@@ -755,7 +755,7 @@ object Graft {
     */
   def ivfDelete(spark: SparkSession, dir: String, ids: DataFrame,
       idCol: String, batchId: Long): Boolean =
-    graft.operators.AnnSuite.ivfDelete(spark, dir, ids, idCol, batchId)
+    graft.operators.AnnSuite.IvfStore.delete(spark, dir, ids, idCol, batchId)
 
   /** ZERO-DOWNTIME REINDEX of a persisted IVF index — the drift
     * answer (`ann_recall_eval` is the gate that says when): re-cluster

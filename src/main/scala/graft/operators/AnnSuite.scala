@@ -337,21 +337,22 @@ object AnnSuite {
     */
   case class PqIndex(book: DataFrame, codes: DataFrame, m: Int, dsub: Int)
 
-  /** The code store's naming scheme — the codes table is a living
-    * index exactly like the IVF assignments ([[ivfPqAppend]] lands
-    * batchId-keyed cell-partitioned segments, [[ivfPqCompact]] folds
-    * them), so it rides the same generation-manifest discipline.
+  /** The (IVF)PQ CODE store — a living index exactly like the IVF
+    * assignments ([[ivfPqAppend]] lands batchId-keyed cell-partitioned
+    * segments, `CodesStore.compact` folds them) on the same
+    * generation-manifest discipline. Keyed by cand_id; `cell` is
+    * present (and the partition column) for the IVFADC composition;
+    * [[ivfPqRetrain]] versions the centroids/book/flags sidecars; every
+    * terminal compaction records its purged ids (the rebuild-from-lake
+    * retrain anti-joins them).
     */
-  private[graft] val CodesScheme = graft.sources.SegmentStore.Scheme(
+  private[graft] val CodesStore = graft.sources.SegmentStore.Scheme(
     "codes.parquet", "codes_appends.parquet", "codes_v", "codes_appends_v",
-    "codes_deletes.parquet", "codes_deletes_v", "codes_purged.parquet")
-
-  /** The code store's sidecar families ([[ivfPqRetrain]]'s versioned
-    * centroids/book/flags) — every compaction passes these so a torn
-    * retrain's orphans are scrubbed before any manifest commit.
-    */
-  private[graft] val PqSidecarPrefixes =
-    Seq("centroids_v", "book_v", "flags_v")
+    "codes_deletes.parquet", "codes_deletes_v", "codes_purged.parquet",
+    keyCols = Seq("cand_id"), partitionCols = Seq("cell"),
+    sidecars = Seq("centroids", "book", "flags"), recordPurged = true,
+    core = Seq("cand_id", "codes", "cell"), carriesAttrs = true,
+    expectedKeys = _.select(col("vec_id").as("cand_id")))
 
   /** Persist a trained PQ index — build-once-serve-many across
     * sessions, the [[ivfSave]] twin. Codes partition by `cell` when
@@ -369,38 +370,7 @@ object AnnSuite {
         (if (idx.codes.columns.contains("cell")) w.partitionBy("cell") else w)
           .parquet(s"$dir/codes.parquet")
       })
-    val spark = idx.codes.sparkSession
-    graft.sources.SegmentStore.reset(spark, dir, CodesScheme)
-    // a save resets to generation 0: retrain-versioned sidecars from a
-    // prior lifecycle would shadow the fresh tables once the store
-    // re-reaches their generation
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(p)) fs.listStatus(p).foreach { st =>
-      val n = st.getPath.getName
-      if (n.startsWith("centroids_v") || n.startsWith("book_v") ||
-        n.startsWith("flags_v"))
-        fs.delete(st.getPath, true)
-    }
-  }
-
-  /** The generation-versioned SIDECAR tables of a quantized index
-    * (coarse centroids, codebook, residual flags): [[ivfPqRetrain]]
-    * lands `<name>_v<next>.parquet` inside its atomic commit window,
-    * and generation `gen` serves at the HIGHEST version at or below it
-    * (else the build's unversioned table) — compactions never move the
-    * mapping, retrains do, and the manifest commit is the single
-    * visibility point for (codes, centroids, book, flags) as a unit.
-    */
-  private[graft] def ivfPqSidecarPath(spark: SparkSession, dir: String,
-      name: String): String = {
-    val lay = graft.sources.SegmentStore.resolve(spark, dir, CodesScheme)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    ((lay.gen to 1 by -1).map(g => s"${name}_v$g.parquet") :+ s"$name.parquet")
-      .find(n => fs.exists(new org.apache.hadoop.fs.Path(s"$dir/$n")))
-      .map(n => s"$dir/$n")
-      .getOrElse(s"$dir/$name.parquet")
+    CodesStore.reset(idx.codes.sparkSession, dir)
   }
 
   /** The codebook half of a persisted index, without touching the
@@ -409,7 +379,7 @@ object AnnSuite {
     */
   private[graft] def pqBookLoad(spark: SparkSession, dir: String)
       : (DataFrame, Int, Int) = {
-    val book = spark.read.parquet(ivfPqSidecarPath(spark, dir, "book"))
+    val book = spark.read.parquet(CodesStore.sidecarPath(spark, dir, "book"))
     val sub = book.select(
       size(col("subcents")).as("m"),
       size(expr("element_at(element_at(subcents, 1), 1).ce")).as("dsub")).head()
@@ -430,7 +400,8 @@ object AnnSuite {
 
   private[graft] def pqMetaLoad(spark: SparkSession, dir: String): PqMeta = {
     val (book, m, dsub) = pqBookLoad(spark, dir)
-    PqMeta(book, m, dsub, ivfPqResidualFlag(spark, dir), pqCarryOf(spark, dir))
+    PqMeta(book, m, dsub, ivfPqResidualFlag(spark, dir),
+      CodesStore.carryOf(spark, dir))
   }
 
   /** Reload a [[pqSave]]d index; serves identically to the freshly
@@ -444,15 +415,7 @@ object AnnSuite {
       carry: Seq[String] = Nil,
       bookOpt: Option[(DataFrame, Int, Int)] = None): PqIndex = {
     val (book, m, dsub) = bookOpt.getOrElse(pqBookLoad(spark, dir))
-    val codes = graft.sources.SegmentStore.load(spark, dir, CodesScheme,
-      deleteKeys = Seq("cand_id")) { df =>
-      val typed = if (df.columns.contains("cell"))
-        df.withColumn("cell", col("cell").cast("long")) else df
-      val core = if (typed.columns.contains("cell"))
-        Seq("cand_id", "codes", "cell") else Seq("cand_id", "codes")
-      typed.select((core ++ carry).map(col): _*)
-    }
-    PqIndex(book, codes, m, dsub)
+    PqIndex(book, CodesStore.load(spark, dir, carry), m, dsub)
   }
 
   /** LAST-WRITE-WINS reader view of a persisted code store —
@@ -467,15 +430,7 @@ object AnnSuite {
   private[graft] def pqLoadLww(spark: SparkSession, dir: String,
       carry: Seq[String] = Nil): PqIndex = {
     val (book, m, dsub) = pqBookLoad(spark, dir)
-    val codes = graft.sources.SegmentStore.loadLww(spark, dir, CodesScheme,
-      Seq("cand_id")) { df =>
-      val typed = if (df.columns.contains("cell"))
-        df.withColumn("cell", col("cell").cast("long")) else df
-      val core = if (typed.columns.contains("cell"))
-        Seq("cand_id", "codes", "cell") else Seq("cand_id", "codes")
-      typed.select((core ++ carry).map(col): _*)
-    }
-    PqIndex(book, codes, m, dsub)
+    PqIndex(book, CodesStore.loadLww(spark, dir, carry), m, dsub)
   }
 
   /** [[ivfPqLoad]]'s LWW twin: the composed quantized index served
@@ -483,48 +438,8 @@ object AnnSuite {
     */
   private[graft] def ivfPqLoadLww(spark: SparkSession, dir: String,
       carry: Seq[String] = Nil): IvfPqIndex =
-    IvfPqIndex(spark.read.parquet(ivfPqSidecarPath(spark, dir, "centroids")),
+    IvfPqIndex(spark.read.parquet(CodesStore.sidecarPath(spark, dir, "centroids")),
       pqLoadLww(spark, dir, carry), ivfPqResidualFlag(spark, dir))
-
-  /** Fold the quantized LWW reader view into the next generation —
-    * [[ivfUpsertCompact]]'s code-store twin. No tombstone carry and no
-    * purged record: under last-write-wins a later insert legitimately
-    * supersedes a folded tombstone (the terminal stores' GDPR
-    * machinery does not apply to CDC-replicated keys).
-    */
-  private[graft] def ivfPqUpsertCompact(spark: SparkSession, dir: String,
-      crashBeforeCommit: Boolean = false, retain: Int = 1): Boolean =
-    graft.sources.SegmentStore.compact(spark, dir, CodesScheme,
-      pqLoadLww(spark, dir, pqCarryOf(spark, dir)).codes, Seq("cell"),
-      crashBeforeCommit, retain, sidecarPrefixes = PqSidecarPrefixes)
-
-  /** The ATTRIBUTE columns a persisted code table carries beyond the
-    * core (cand_id, codes, cell) — read from the base's parquet schema
-    * so maintenance (compaction, appends, retrains) preserves them
-    * without the caller restating the build's `carry` list.
-    */
-  private[graft] def pqCarryOf(spark: SparkSession, dir: String): Seq[String] = {
-    val lay = graft.sources.SegmentStore.resolve(spark, dir, CodesScheme)
-    spark.read.parquet(s"$dir/${lay.base}").columns.toSeq
-      .filterNot(Set("cand_id", "codes", "cell"))
-  }
-
-  /** Tombstone a batch of vector ids out of a persisted (IVF)PQ code
-    * store — the right-to-be-forgotten operation on the quantized
-    * living index: the ids land as a batchId-keyed delete segment
-    * ([[graft.sources.SegmentStore.appendDeletes]] — cost ∝ the delete
-    * batch, the standing codes are never read or rewritten), every
-    * [[pqLoad]] view anti-joins them out immediately (broadcast — the
-    * tombstone set is delete-traffic-sized), and the next
-    * [[ivfPqCompact]] purges the code rows physically. Delete-wins,
-    * terminal per id; same monotonic-batchId watermark contract as
-    * [[ivfPqAppend]] (shared id space — the watermark is what stops an
-    * append replay from resurrecting rows a folded delete removed).
-    */
-  private[graft] def ivfPqDelete(spark: SparkSession, dir: String,
-      ids: DataFrame, idCol: String, batchId: Long): Boolean =
-    graft.sources.SegmentStore.appendDeletes(spark, dir, CodesScheme,
-      ids.select(col(idCol).as("cand_id")).distinct(), batchId)
 
   /** Serve a query batch from a (possibly reloaded) flat-PQ index:
     * ADC tables from the index's own book, integer lookups over every
@@ -646,7 +561,7 @@ object AnnSuite {
     // planning + an AQE stage-job per call, and every load/append/
     // retrain/LWW path pays it (twice per maintain+serve entry)
     graft.sources.ParquetMeta.headBoolean(spark,
-      ivfPqSidecarPath(spark, dir, "flags"), "residual").getOrElse(false)
+      CodesStore.sidecarPath(spark, dir, "flags"), "residual").getOrElse(false)
 
   private[graft] def ivfPqLoad(spark: SparkSession, dir: String,
       carry: Seq[String] = Nil, meta: Option[PqMeta] = None): IvfPqIndex = {
@@ -656,7 +571,7 @@ object AnnSuite {
     // driver-side record read either way, so no Par needed here)
     val pq = pqLoad(spark, dir, carry, meta.map(mt => (mt.book, mt.m, mt.dsub)))
     val residual = meta.map(_.residual).getOrElse(ivfPqResidualFlag(spark, dir))
-    IvfPqIndex(spark.read.parquet(ivfPqSidecarPath(spark, dir, "centroids")),
+    IvfPqIndex(spark.read.parquet(CodesStore.sidecarPath(spark, dir, "centroids")),
       pq, residual)
   }
 
@@ -680,10 +595,10 @@ object AnnSuite {
       batch: DataFrame, idCol: String, embCol: String,
       batchId: Long, meta: Option[PqMeta] = None): Boolean = {
     val mt = meta.getOrElse(pqMetaLoad(spark, dir))
-    graft.sources.SegmentStore.append(spark, dir, CodesScheme,
+    CodesStore.append(spark, dir,
       ivfPqEncodeBatch(spark, dir, batch, idCol, embCol, mt.book, mt.m,
         mt.dsub, mt.residual, mt.carry),
-      Seq("cell"), batchId)
+      batchId)
   }
 
   /** The append path's assign+encode frame (exposed so IvfPqMaintSpec
@@ -701,27 +616,13 @@ object AnnSuite {
           col("ce2").as("embedding") +: carry.map(col)): _*)
       else {
         val cents = cellCents(
-          spark.read.parquet(ivfPqSidecarPath(spark, dir, "centroids")))
+          spark.read.parquet(CodesStore.sidecarPath(spark, dir, "centroids")))
         assigned.join(broadcast(cents), Seq("cell"))
           .select((col("cand_id").as("vec_id") +: col("cell") +:
             expr(residExpr("ce2", "cce")).as("embedding") +: carry.map(col)): _*)
       }
     pqEncode(toEncode, book, m, dsub, carry = "cell" +: carry)
   }
-
-  /** Fold every committed [[ivfPqAppend]] code segment into a new
-    * compacted base generation — [[ivfCompact]]'s twin for the code
-    * store (same land-then-swap manifest commit, same folded-batchId
-    * watermark, same one-generation reader retention, via
-    * [[graft.sources.SegmentStore.compact]]).
-    */
-  private[graft] def ivfPqCompact(spark: SparkSession, dir: String,
-      crashBeforeCommit: Boolean = false, retain: Int = 1): Boolean =
-    graft.sources.SegmentStore.compact(spark, dir, CodesScheme,
-      pqLoad(spark, dir, pqCarryOf(spark, dir)).codes, Seq("cell"),
-      crashBeforeCommit, retain,
-      sidecarPrefixes = PqSidecarPrefixes, deleteKeys = Seq("cand_id"),
-      recordPurged = true)
 
   /** ZERO-DOWNTIME REINDEX of the QUANTIZED index — [[ivfRetrain]]'s
     * twin for the store a 100 TB deployment actually serves. Codes are
@@ -733,7 +634,7 @@ object AnnSuite {
     * everything in as the next generation: the new codes land as the
     * folded base, the new centroids/book/flags land as
     * generation-versioned sidecars inside the atomic commit window
-    * ([[ivfPqSidecarPath]] — gen < next ignores them, so a torn
+    * (`CodesStore.sidecarPath` — gen < next ignores them, so a torn
     * retrain is invisible and a serving (codes, centroids, book,
     * flags) quadruple can never mix generations). Appends after the
     * retrain encode at the NEW parameters; tombstones purge; the
@@ -769,18 +670,18 @@ object AnnSuite {
     // geometry parameter from the k-row table's footers — driver-side,
     // no Spark job (ParquetMeta.rowCountDriver)
     val kCoarse = graft.sources.ParquetMeta.rowCountDriver(spark,
-      ivfPqSidecarPath(spark, dir, "centroids")).toInt
+      CodesStore.sidecarPath(spark, dir, "centroids")).toInt
     val residual = ivfPqResidualFlag(spark, dir)
-    val carry = pqCarryOf(spark, dir)
+    val carry = CodesStore.carryOf(spark, dir)
     val src0 = corpus.select((col(idCol).as("vec_id") +:
       col(embCol).as("embedding") +: carry.map(col)): _*)
     // mask BOTH the current generation's tombstones AND the cumulative
     // purged-key record: the caller's corpus frame is the LAKE table,
-    // which may still carry rows an earlier ivfPqCompact physically
+    // which may still carry rows an earlier compaction physically
     // purged (channel cleared) — without the purged list the rebuild
     // would quietly undo a completed right-to-be-forgotten purge.
-    val masks = graft.sources.SegmentStore.deletes(spark, dir, CodesScheme).toSeq ++
-      graft.sources.SegmentStore.purged(spark, dir, CodesScheme).toSeq
+    val masks = graft.sources.SegmentStore.deletes(spark, dir, CodesStore).toSeq ++
+      graft.sources.SegmentStore.purged(spark, dir, CodesStore).toSeq
     val src = masks.foldLeft(src0) { (acc, t) =>
       val m = t.select("cand_id")
       acc.join(broadcast(m), acc("vec_id") === m("cand_id"), "left_anti")
@@ -795,33 +696,16 @@ object AnnSuite {
       prebuilt: Option[IvfPqIndex] = None): Boolean = {
     val idx = prebuilt.getOrElse(
       ivfPqRetrainPrep(spark, dir, corpus, idCol, embCol))
-    val lowestRetained = graft.sources.SegmentStore
-      .resolve(spark, dir, CodesScheme).gen + 1 - retain
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    graft.sources.SegmentStore.compact(spark, dir, CodesScheme,
-      idx.pq.codes, Seq("cell"), crashBeforeCommit, retain,
-      requireSegments = false,
-      sidecarPrefixes = PqSidecarPrefixes, deleteKeys = Seq("cand_id"),
-      recordPurged = true,
-      beforeCommit = next => {
-        idx.centroids.write.mode("overwrite")
-          .parquet(s"$dir/centroids_v$next.parquet")
-        idx.pq.book.write.mode("overwrite")
-          .parquet(s"$dir/book_v$next.parquet")
-        import spark.implicits._
-        Seq(idx.residual).toDF("residual")
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$dir/flags_v$next.parquet")
-      },
-      onRetire = g => Seq("centroids", "book", "flags").foreach { name =>
-        // GC a superseded sidecar version only when every retained
-        // generation maps to a newer one (highest-at-or-below rule)
-        val newerCovers = (g + 1 to lowestRetained).exists(v =>
-          fs.exists(new org.apache.hadoop.fs.Path(s"$dir/${name}_v$v.parquet")))
-        if (newerCovers)
-          fs.delete(new org.apache.hadoop.fs.Path(s"$dir/${name}_v$g.parquet"), true)
-      })
+    CodesStore.swap(spark, dir, idx.pq.codes, crashBeforeCommit, retain) { next =>
+      idx.centroids.write.mode("overwrite")
+        .parquet(s"$dir/centroids_v$next.parquet")
+      idx.pq.book.write.mode("overwrite")
+        .parquet(s"$dir/book_v$next.parquet")
+      import spark.implicits._
+      Seq(idx.residual).toDF("residual")
+        .coalesce(1).write.mode("overwrite")
+        .parquet(s"$dir/flags_v$next.parquet")
+    }
   }
 
   /** Serve: probe `nprobe` coarse cells per query (the [[probeCells]]
@@ -962,38 +846,9 @@ object AnnSuite {
       idx.assigned.write.mode("overwrite")
         .partitionBy("cell").parquet(s"$dir/assigned.parquet"))
     // a save is a FULL rebuild: incremental segments from prior
-    // ivfAppend batches AND any compacted generations (manifests,
-    // versioned base/appends dirs) are superseded and must not leak
-    // into reloads — the layout resets to generation 0, including any
-    // retrain-versioned centroid tables (a stale centroids_v<g> would
-    // shadow the fresh build's centroids once the store re-reaches
-    // generation g)
-    val spark = idx.assigned.sparkSession
-    graft.sources.SegmentStore.reset(spark, dir, IvfScheme)
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(p)) fs.listStatus(p).foreach { st =>
-      if (st.getPath.getName.startsWith("centroids_v"))
-        fs.delete(st.getPath, true)
-    }
-  }
-
-  /** The centroid table generation `gen` of a persisted index serves
-    * at: the HIGHEST retrain-versioned table at or below the current
-    * generation (`centroids_v<m>.parquet`, m ≤ gen), else the build's
-    * `centroids.parquet`. Compactions never touch centroids, so the
-    * mapping only moves at a [[ivfRetrain]] — whose manifest commit is
-    * what makes a landed `centroids_v<next>` visible (gen < next
-    * ignores it, so a torn retrain is invisible).
-    */
-  private[graft] def ivfCentroidsPath(spark: SparkSession, dir: String): String = {
-    val lay = resolveLayout(spark, dir)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    ((lay.gen to 1 by -1).map(g => s"centroids_v$g.parquet") :+ "centroids.parquet")
-      .find(n => fs.exists(new org.apache.hadoop.fs.Path(s"$dir/$n")))
-      .map(n => s"$dir/$n")
-      .getOrElse(s"$dir/centroids.parquet")
+    // ivfAppend batches, compacted generations and retrain-versioned
+    // centroid tables must not leak into reloads
+    IvfStore.reset(idx.assigned.sparkSession, dir)
   }
 
   /** ZERO-DOWNTIME REINDEX — the answer to codebook/centroid drift on
@@ -1005,7 +860,7 @@ object AnnSuite {
     * centroid table means the pair can never mix) until the manifest
     * commits; a torn retrain is invisible; generation retention keeps
     * in-flight readers whole. Appends after the retrain assign at the
-    * NEW centroids ([[ivfAssignBatch]] resolves [[ivfCentroidsPath]]).
+    * NEW centroids ([[ivfAssignBatch]] resolves `IvfStore.sidecarPath`).
     * The retrain corpus is exactly what a reader sees, so
     * build-on-the-view determinism makes the swapped index equal a
     * fresh full build over the live corpus — which is the oracle
@@ -1019,88 +874,42 @@ object AnnSuite {
     // row count) — a caller re-clustering for drift keeps the nlist it
     // built with unless it explicitly asks for a new one; a hardcoded
     // numeric default silently re-clustered at the wrong geometry.
+    // (a footer read of the k-row table, ParquetMeta.rowCountDriver,
+    // not a Spark count job)
     val kEff =
       if (k > 0) k
-      else spark.read.parquet(ivfCentroidsPath(spark, dir)).count().toInt
-    val carry = ivfCarryOf(spark, dir)
-    val view = ivfLoad(spark, dir, carry).assigned
+      else graft.sources.ParquetMeta.rowCountDriver(spark,
+        IvfStore.sidecarPath(spark, dir, "centroids")).toInt
+    val carry = IvfStore.carryOf(spark, dir)
+    val view = IvfStore.load(spark, dir, carry)
       .select((col("cand_id").as("vec_id") +: col("ce2").as("embedding") +:
         carry.map(col)): _*)
     val idx = ivfBuild(view, "vec_id", "embedding", kEff, carry)
-    val lowestRetained = resolveLayout(spark, dir).gen + 1 - retain
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    graft.sources.SegmentStore.compact(spark, dir, IvfScheme,
-      idx.assigned, Seq("cell"), crashBeforeCommit, retain,
-      requireSegments = false,
-      sidecarPrefixes = IvfSidecarPrefixes, deleteKeys = Seq("cand_id"),
-      beforeCommit = next => idx.centroids.write.mode("overwrite")
-        .parquet(s"$dir/centroids_v$next.parquet"),
-      onRetire = g => {
-        // GC a superseded centroid version only when every RETAINED
-        // generation maps to a newer one (gen→centroids is
-        // highest-version-at-or-below, so deleting too eagerly would
-        // orphan a retained generation's serving pair)
-        val newerCovers = (g + 1 to lowestRetained).exists(v =>
-          fs.exists(new org.apache.hadoop.fs.Path(s"$dir/centroids_v$v.parquet")))
-        if (newerCovers)
-          fs.delete(new org.apache.hadoop.fs.Path(s"$dir/centroids_v$g.parquet"), true)
-      })
+    IvfStore.swap(spark, dir, idx.assigned, crashBeforeCommit, retain) { next =>
+      idx.centroids.write.mode("overwrite")
+        .parquet(s"$dir/centroids_v$next.parquet")
+    }
   }
 
-  /** The IVF assignment store's naming scheme — generation manifests,
-    * batchId-keyed segments, folded watermark, one-generation reader
-    * retention all live in [[graft.sources.SegmentStore]] (shared with
-    * the IVFADC code store and the substring-hash index).
+  /** The IVF ASSIGNMENT store — generation manifests, batchId-keyed
+    * segments, folded watermark and one-generation reader retention
+    * all live in [[graft.sources.SegmentStore]]. Keyed by cand_id,
+    * partitioned by `cell` (probe pruning on both union legs), core
+    * (cand_id, cell, ce2) plus carried attributes, one versioned
+    * sidecar family ([[ivfRetrain]]'s centroid tables). Its `compact`
+    * is the living index's answer to the small-files problem (a 1 s
+    * trigger lands ~86k segment directories/day, and the load's union
+    * + FileIndex listing degrade long before the data does); run it
+    * from the SAME maintenance loop that drives [[ivfAppend]]
+    * (single-writer discipline). IvfPersistSpec kills between every
+    * compaction stage and proves the served top-k is byte-identical
+    * before/during/after.
     */
-  private[graft] val IvfScheme = graft.sources.SegmentStore.Scheme(
-    "assigned.parquet", "appends.parquet", "assigned_v", "appends_v")
-
-  /** The IVF store's sidecar families ([[ivfRetrain]]'s versioned
-    * centroid tables) — every compaction passes these so a torn
-    * retrain's orphans are scrubbed before any manifest commit.
-    */
-  private[graft] val IvfSidecarPrefixes = Seq("centroids_v")
-
-  /** Resolve the index's CURRENT layout (base, appends, generation,
-    * folded-batchId watermark) — see [[graft.sources.SegmentStore]]
-    * for the manifest grammar and crash-safety invariants.
-    */
-  private[graft] def resolveLayout(spark: SparkSession, dir: String)
-      : graft.sources.SegmentStore.Layout =
-    graft.sources.SegmentStore.resolve(spark, dir, IvfScheme)
-
-  /** Fold every committed append segment into a NEW compacted base and
-    * atomically switch readers to it — the living index's answer to
-    * the small-files problem: a 1 s-trigger stream lands ~86k segment
-    * directories/day, and [[ivfLoad]]'s union + FileIndex listing
-    * degrade long before the data does (exactly what layout_compaction
-    * solves for tables). Run on a cadence from the SAME maintenance
-    * loop that drives [[ivfAppend]] (single-writer discipline: an
-    * append racing a compaction could land in a segment root the
-    * compaction is about to retire). Crash-safety — torn landing,
-    * torn manifest, replay-across-compaction, reader-vs-compactor
-    * generation retention — is [[graft.sources.SegmentStore.compact]]'s
-    * contract; IvfPersistSpec kills between every stage and proves the
-    * served top-k is byte-identical before/during/after.
-    */
-  private[graft] def ivfCompact(spark: SparkSession, dir: String,
-      crashBeforeCommit: Boolean = false, retain: Int = 1): Boolean =
-    graft.sources.SegmentStore.compact(spark, dir, IvfScheme,
-      ivfLoad(spark, dir, carry = ivfCarryOf(spark, dir)).assigned,
-      Seq("cell"), crashBeforeCommit, retain,
-      sidecarPrefixes = IvfSidecarPrefixes, deleteKeys = Seq("cand_id"))
-
-  /** The ATTRIBUTE columns a persisted index carries beyond the core
-    * (cand_id, cell, ce2) triple — read from the base's parquet schema
-    * so maintenance (compaction) preserves them without the caller
-    * restating the build's `carry` list.
-    */
-  private[graft] def ivfCarryOf(spark: SparkSession, dir: String): Seq[String] = {
-    val lay = resolveLayout(spark, dir)
-    spark.read.parquet(s"$dir/${lay.base}").columns.toSeq
-      .filterNot(Set("cand_id", "cell", "ce2"))
-  }
+  private[graft] val IvfStore = graft.sources.SegmentStore.Scheme(
+    "assigned.parquet", "appends.parquet", "assigned_v", "appends_v",
+    keyCols = Seq("cand_id"), partitionCols = Seq("cell"),
+    sidecars = Seq("centroids"), core = Seq("cand_id", "cell", "ce2"),
+    carriesAttrs = true, expectedKeys = _.select(col("vec_id").as("cand_id")))
 
   /** Reload a persisted index; the result serves [[ivfQuery]] exactly
     * like the freshly built one (build is deterministic and the
@@ -1113,19 +922,15 @@ object AnnSuite {
     */
   private[graft] def ivfLoad(spark: SparkSession, dir: String,
       carry: Seq[String] = Nil): IvfIndex =
-    IvfIndex(
-      graft.sources.SegmentStore.load(spark, dir, IvfScheme,
-        deleteKeys = Seq("cand_id"))(
-        _.withColumn("cell", col("cell").cast("long"))
-          .select((Seq("cand_id", "cell", "ce2") ++ carry).map(col): _*)),
-      spark.read.parquet(ivfCentroidsPath(spark, dir)))
+    IvfIndex(IvfStore.load(spark, dir, carry),
+      spark.read.parquet(IvfStore.sidecarPath(spark, dir, "centroids")))
 
   /** LAST-WRITE-WINS reader view of a persisted IVF index —
     * [[ivfLoad]]'s CDC-UPSERT twin (the reference sink's
     * insert-mode=upsert / LSN discipline): per cand_id the
     * highest-batchId append-segment row wins over the base and over
     * any EARLIER tombstone, so routing envelope `c` and `u` ops
-    * through [[ivfAppend]] and `d` ops through [[ivfDelete]] yields an
+    * through [[ivfAppend]] and `d` ops through `IvfStore.delete` yields an
     * index where an update of a live id SUPERSEDES instead of
     * duplicating, and a delete is no longer terminal (a later
     * re-insert revives the id). Within one batch an id must carry at
@@ -1134,43 +939,14 @@ object AnnSuite {
     * tombstone wins. Scale shape is [[graft.sources.SegmentStore
     * .loadLww]]'s: winner selection runs on the delta only; the
     * corpus-sized base pays one broadcast anti-join of the touched
-    * ids. Compact through [[ivfUpsertCompact]], which folds the LWW
-    * view (NOT the terminal-delete view) into the next generation.
+    * ids. Compact through `IvfStore.upsertCompact`, which folds the
+    * LWW view (NOT the terminal-delete view) into the next generation
+    * and carries no tombstone across the fold.
     */
   private[graft] def ivfLoadLww(spark: SparkSession, dir: String,
       carry: Seq[String] = Nil): IvfIndex =
-    IvfIndex(
-      graft.sources.SegmentStore.loadLww(spark, dir, IvfScheme,
-        Seq("cand_id"))(
-        _.withColumn("cell", col("cell").cast("long"))
-          .select((Seq("cand_id", "cell", "ce2") ++ carry).map(col): _*)),
-      spark.read.parquet(ivfCentroidsPath(spark, dir)))
-
-  /** Fold the LWW reader view into the next generation — the upsert
-    * store's compaction. Passes NO deleteKeys: under last-write-wins
-    * an unmatched tombstone must NOT carry across the fold (an insert
-    * arriving after the compaction has a higher batchId than the
-    * folded tombstone and legitimately wins), the exact opposite of
-    * the terminal-delete stores' carry-forward.
-    */
-  private[graft] def ivfUpsertCompact(spark: SparkSession, dir: String,
-      crashBeforeCommit: Boolean = false, retain: Int = 1): Boolean =
-    graft.sources.SegmentStore.compact(spark, dir, IvfScheme,
-      ivfLoadLww(spark, dir, carry = ivfCarryOf(spark, dir)).assigned,
-      Seq("cell"), crashBeforeCommit, retain,
-      sidecarPrefixes = IvfSidecarPrefixes)
-
-  /** Tombstone a batch of vector ids out of a persisted IVF index —
-    * see [[ivfPqDelete]] (the same delete channel on the assignments
-    * store): ids land as a batchId-keyed delete segment, [[ivfLoad]]
-    * anti-joins them out, [[ivfCompact]] purges them physically and
-    * clears the tombstones. Delete-wins and terminal per id; shares
-    * the append channel's monotonic-batchId watermark.
-    */
-  private[graft] def ivfDelete(spark: SparkSession, dir: String,
-      ids: DataFrame, idCol: String, batchId: Long): Boolean =
-    graft.sources.SegmentStore.appendDeletes(spark, dir, IvfScheme,
-      ids.select(col(idCol).as("cand_id")).distinct(), batchId)
+    IvfIndex(IvfStore.loadLww(spark, dir, carry),
+      spark.read.parquet(IvfStore.sidecarPath(spark, dir, "centroids")))
 
   /** A new batch assigned at a PERSISTED index's centroids — the
     * incremental-maintenance kernel: cost ∝ batch (one narrow scan of
@@ -1184,7 +960,7 @@ object AnnSuite {
     kmeansAssign(
         batch.select((col(idCol).as("vec_id") +:
           col(embCol).as("embedding") +: carry.map(col)): _*),
-        spark.read.parquet(ivfCentroidsPath(spark, dir)))
+        spark.read.parquet(IvfStore.sidecarPath(spark, dir, "centroids")))
       .select((col("vec_id").as("cand_id") +: col("cid").as("cell") +:
         col("embedding").as("ce2") +: carry.map(col)): _*)
 
@@ -1222,121 +998,8 @@ object AnnSuite {
   private[graft] def ivfAppend(spark: SparkSession, dir: String,
       batch: DataFrame, idCol: String, embCol: String,
       batchId: Long, carry: Seq[String] = Nil): Boolean =
-    graft.sources.SegmentStore.append(spark, dir, IvfScheme,
-      ivfAssignBatch(spark, dir, batch, idCol, embCol, carry),
-      Seq("cell"), batchId)
-
-  /** OPERATIONAL RECONCILIATION of a living index store — the
-    * reference's recon discipline (ref: src/reconciliation/
-    * strategies/row_count.py:1, referential checks) pointed at the
-    * engine's own segment stores: the specs prove exactly-once per
-    * operation, but a 100 TB deployment also needs the cheap SCHEDULED
-    * pass that catches what slips anyway (a lost segment, a
-    * double-landed batch, a tombstone for a key that never arrived).
-    * One tag-union + group-by over served keys ∪ corpus ids (the
-    * skew-immune recon_referential shape — single shuffle, scalar out)
-    * yields duplicate-key / parity counts; the delete channel and the
-    * segment listing are delta-sized side reads. Emitted invariants:
-    *   - `served_rows`, `dup_keys`     — duplicate cand_ids in the
-    *     reader view (a double-fold or replayed-past-the-watermark
-    *     landing; must be 0 on a healthy terminal-delete store);
-    *   - `missing_from_index` / `foreign_in_index` — index-vs-corpus
-    *     row parity (missing = corpus rows the view lacks, e.g.
-    *     legitimate deletes; foreign = served ids the corpus lacks);
-    *   - `orphan_tombstones`           — current-channel tombstones
-    *     matching no standing row (a delete waiting for its insert, or
-    *     one that will never come);
-    *   - `append_segments`, `stale_segments`, `watermark` — segment
-    *     listing vs manifest consistency (a committed segment at or
-    *     below the folded watermark should not exist: the fold retired
-    *     it, so its presence means a torn retire or a foreign writer).
-    *
-    * `lww = true` audits a store read through [[ivfLoadLww]] instead:
-    * pass the LWW view as `served`. The same invariants apply at the
-    * VIEW level — dup_keys must still be 0 (raw segment rows
-    * legitimately duplicate a superseded key, but the winner selection
-    * serves one row per key unless a writer violated the one-row-per-
-    * key-per-batch contract, which is exactly what this detects — see
-    * [[graft.sources.SegmentStore.loadLww]]'s operating bounds), and a
-    * tombstone superseded by a later insert is NOT an orphan (the
-    * anti-join's standing side already carries the later insert's
-    * segment row). One invariant is added: `superseded_rows` = raw
-    * base+segment rows minus served rows — the compaction debt
-    * [[ivfUpsertCompact]] clears, and the growth observable that sizes
-    * a deployment's compaction cadence (bench/lww_cadence.json).
-    */
-  private[graft] def reconIndexStore(spark: SparkSession, dir: String,
-      scheme: graft.sources.SegmentStore.Scheme, store: String,
-      served: DataFrame, corpusIds: DataFrame,
-      lww: Boolean = false): DataFrame = {
-    import spark.implicits._
-    val lay = graft.sources.SegmentStore.resolve(spark, dir, scheme)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val apPath = new org.apache.hadoop.fs.Path(s"$dir/${lay.appends}")
-    val segIds: Seq[Long] =
-      if (!fs.exists(apPath)) Seq.empty
-      else fs.listStatus(apPath).toSeq.map(_.getPath.getName)
-        .filter(_.startsWith("batch_id="))
-        .flatMap(_.stripPrefix("batch_id=").toLongOption)
-    // ONE pass over served keys ∪ corpus ids: per-key (index rows,
-    // corpus rows) → the dup/parity scalars
-    val tagged = served.select(col("cand_id"),
-        lit(1L).as("ni"), lit(0L).as("nc"))
-      .unionByName(corpusIds.select(col("vec_id").as("cand_id"),
-        lit(0L).as("ni"), lit(1L).as("nc")))
-    // the three audit legs (tag-union scalars / orphan anti-join / raw
-    // row counts) are independent blocking actions — overlap them
-    // (guide §2.6)
-    val (scalars, (orphans, rawRows)) = graft.functions.Par.inParallel(
-      tagged.groupBy(col("cand_id"))
-        .agg(sum(col("ni")).as("ni"), sum(col("nc")).as("nc"))
-        .agg(
-          sum(col("ni")).as("served_rows"),
-          sum(when(col("ni") > 1, 1L).otherwise(0L)).as("dup_keys"),
-          sum(when(col("ni") === 0 && col("nc") > 0, 1L).otherwise(0L))
-            .as("missing_from_index"),
-          sum(when(col("ni") > 0 && col("nc") === 0, 1L).otherwise(0L))
-            .as("foreign_in_index"))
-        .head(),
-      graft.functions.Par.inParallel(
-        graft.sources.SegmentStore.deletes(spark, dir, scheme)
-          .map { t =>
-            val standing = {
-              val b = spark.read.parquet(s"$dir/${lay.base}").select("cand_id")
-              if (fs.exists(apPath))
-                b.unionByName(
-                  spark.read.parquet(apPath.toString).select("cand_id"))
-              else b
-            }
-            t.select("cand_id").distinct()
-              .join(standing, Seq("cand_id"), "left_anti").count()
-          }
-          .getOrElse(0L),
-        if (!lww) 0L
-        else {
-          val baseRows = spark.read.parquet(s"$dir/${lay.base}").count()
-          val segRows =
-            if (fs.exists(apPath)) spark.read.parquet(apPath.toString).count()
-            else 0L
-          baseRows + segRows
-        }))
-    val extra =
-      if (!lww) Seq.empty[(String, Long)]
-      else Seq(("superseded_rows",
-        rawRows - scalars.getAs[Long]("served_rows")))
-    (Seq(
-      ("append_segments", segIds.size.toLong),
-      ("dup_keys", scalars.getAs[Long]("dup_keys")),
-      ("foreign_in_index", scalars.getAs[Long]("foreign_in_index")),
-      ("missing_from_index", scalars.getAs[Long]("missing_from_index")),
-      ("orphan_tombstones", orphans),
-      ("served_rows", scalars.getAs[Long]("served_rows")),
-      ("stale_segments", segIds.count(_ <= lay.folded).toLong),
-      ("watermark", lay.folded)) ++ extra)
-      .toDF("invariant", "value")
-      .select(lit(store).as("store"), col("invariant"), col("value"))
-  }
+    IvfStore.append(spark, dir,
+      ivfAssignBatch(spark, dir, batch, idCol, embCol, carry), batchId)
 
   /** The scheduled reconciliation fixture `recon_index` and
     * `recon_index_report` share: one deliberately-damaged IVF store
@@ -1362,8 +1025,7 @@ object AnnSuite {
     // — the audits' blocking head()/count() calls otherwise serialize
     // the whole fixture
     val (ra, rb) = graft.functions.Par.inParallel({
-      val dirA = graft.sources.Scratch.stable(
-        "recon_index_ivf/" + d.replaceAll("[^A-Za-z0-9.]", "_"))
+      val dirA = graft.sources.Scratch.perLake("recon_index_ivf", d)
       ivfSave(ivfBuild(e.filter(col("vec_id") % 7 =!= 3),
         "vec_id", "embedding", IvfK), dirA)
       // the three landings write disjoint batch_id dirs under the
@@ -1377,24 +1039,18 @@ object AnnSuite {
         // never existed (orphans — the NEGATIVE range, provably disjoint
         // from real vec_ids at every SF; an additive offset would collide
         // once the corpus reaches it and silently corrupt the counts)
-        () => ivfDelete(s, dirA,
+        () => IvfStore.delete(s, dirA,
           e.filter(col("vec_id") % 13 === 2).select("vec_id")
             .unionByName(e.filter(col("vec_id") % 17 === 4)
               .select((-col("vec_id") - 1L).as("vec_id"))),
           "vec_id", batchId = 2L))
-      reconIndexStore(s, dirA, IvfScheme, "ivf", ivfLoad(s, dirA).assigned, e)
+      IvfStore.audit(s, dirA, "ivf", e)
     }, {
-      val dirB = graft.sources.Scratch.stable(
-        "recon_index_ivfpq/" + d.replaceAll("[^A-Za-z0-9.]", "_"))
+      val dirB = graft.sources.Scratch.perLake("recon_index_ivfpq", d)
       ivfPqSave(ivfPqBuild(e.filter(col("vec_id") % 7 =!= 3),
         "vec_id", "embedding", IvfK, m = 8, dsub = 8, ksub = 16), dirB)
-      // one metadata read serves the append's encode AND the audit's
-      // served view (appends change no metadata — PqMeta doc)
-      val meta = pqMetaLoad(s, dirB)
-      ivfPqAppend(s, dirB, held, "vec_id", "embedding", batchId = 0L,
-        meta = Some(meta))
-      reconIndexStore(s, dirB, CodesScheme, "ivfpq",
-        pqLoad(s, dirB, bookOpt = Some((meta.book, meta.m, meta.dsub))).codes, e)
+      ivfPqAppend(s, dirB, held, "vec_id", "embedding", batchId = 0L)
+      CodesStore.audit(s, dirB, "ivfpq", e)
     })
     ra.unionByName(rb)
   }
@@ -1526,8 +1182,7 @@ object AnnSuite {
       // stable per-lake path + overwrite writes: repeated Verify/bench
       // passes reuse one directory instead of leaking a fresh index
       // copy into the scratch root per invocation
-      val dir = graft.sources.Scratch.stable(
-        "ann_ivf_persisted/" + d.replaceAll("[^A-Za-z0-9.]", "_"))
+      val dir = graft.sources.Scratch.perLake("ann_ivf_persisted", d)
       ivfSave(ivfBuild(e, "vec_id", "embedding", IvfK), dir)
       ivfQuery(ivfLoad(s, dir), e.filter(col("vec_id") < 5),
         "vec_id", "embedding", IvfNProbe, 3)
@@ -1543,8 +1198,7 @@ object AnnSuite {
     // assign-at-fixed-centroids algebra makes exactly equal.
     "ann_ivf_append" -> { (s, d) =>
       val e = Tables.embeddings(s, d)
-      val dir = graft.sources.Scratch.stable(
-        "ann_ivf_append/" + d.replaceAll("[^A-Za-z0-9.]", "_"))
+      val dir = graft.sources.Scratch.perLake("ann_ivf_append", d)
       // ivfSave's overwrite clears the layout, so repeated invocations
       // (bench warm runs) stay idempotent — each run is one fresh
       // build-then-append cycle in the same directory
@@ -1564,13 +1218,12 @@ object AnnSuite {
     // kill-between-every-stage job; the driver checks the values)
     "ann_ivf_compact" -> { (s, d) =>
       val e = Tables.embeddings(s, d)
-      val dir = graft.sources.Scratch.stable(
-        "ann_ivf_compact/" + d.replaceAll("[^A-Za-z0-9.]", "_"))
+      val dir = graft.sources.Scratch.perLake("ann_ivf_compact", d)
       ivfSave(ivfBuild(e.filter(col("vec_id") % 7 =!= 3),
         "vec_id", "embedding", IvfK), dir)
       ivfAppend(s, dir, e.filter(col("vec_id") % 7 === 3), "vec_id", "embedding",
         batchId = 0L)
-      ivfCompact(s, dir)
+      IvfStore.compact(s, dir)
       ivfQuery(ivfLoad(s, dir), e.filter(col("vec_id") < 5),
         "vec_id", "embedding", IvfNProbe, 3)
     },
@@ -1585,10 +1238,9 @@ object AnnSuite {
     // are fixed, exactly what the engine computes.
     "ann_ivf_delete" -> { (s, d) =>
       val e = Tables.embeddings(s, d)
-      val dir = graft.sources.Scratch.stable(
-        "ann_ivf_delete/" + d.replaceAll("[^A-Za-z0-9.]", "_"))
+      val dir = graft.sources.Scratch.perLake("ann_ivf_delete", d)
       ivfSave(ivfBuild(e, "vec_id", "embedding", IvfK), dir)
-      ivfDelete(s, dir, e.filter(col("vec_id") % 11 === 5).select("vec_id"),
+      IvfStore.delete(s, dir, e.filter(col("vec_id") % 11 === 5).select("vec_id"),
         "vec_id", batchId = 0L)
       ivfQuery(ivfLoad(s, dir), e.filter(col("vec_id") < 5),
         "vec_id", "embedding", IvfNProbe, 3)
@@ -1603,12 +1255,11 @@ object AnnSuite {
     // no deleted id in any base file, delete channel cleared).
     "ann_ivf_purge" -> { (s, d) =>
       val e = Tables.embeddings(s, d)
-      val dir = graft.sources.Scratch.stable(
-        "ann_ivf_purge/" + d.replaceAll("[^A-Za-z0-9.]", "_"))
+      val dir = graft.sources.Scratch.perLake("ann_ivf_purge", d)
       ivfSave(ivfBuild(e, "vec_id", "embedding", IvfK), dir)
-      ivfDelete(s, dir, e.filter(col("vec_id") % 11 === 5).select("vec_id"),
+      IvfStore.delete(s, dir, e.filter(col("vec_id") % 11 === 5).select("vec_id"),
         "vec_id", batchId = 0L)
-      ivfCompact(s, dir)
+      IvfStore.compact(s, dir)
       ivfQuery(ivfLoad(s, dir), e.filter(col("vec_id") < 5),
         "vec_id", "embedding", IvfNProbe, 3)
     },
@@ -1621,8 +1272,7 @@ object AnnSuite {
     // corpus back in, and cell partition pruning still applies on top.
     "ann_ivf_filtered" -> { (s, d) =>
       val e = Tables.embeddings(s, d)
-      val dir = graft.sources.Scratch.stable(
-        "ann_ivf_filtered/" + d.replaceAll("[^A-Za-z0-9.]", "_"))
+      val dir = graft.sources.Scratch.perLake("ann_ivf_filtered", d)
       ivfSave(ivfBuild(e, "vec_id", "embedding", IvfK, carry = Seq("label")), dir)
       val idx = ivfLoad(s, dir, carry = Seq("label"))
       ivfQuery(
@@ -1641,8 +1291,7 @@ object AnnSuite {
     // the append's stale assignments.
     "ann_ivf_retrain" -> { (s, d) =>
       val e = Tables.embeddings(s, d)
-      val dir = graft.sources.Scratch.stable(
-        "ann_ivf_retrain/" + d.replaceAll("[^A-Za-z0-9.]", "_"))
+      val dir = graft.sources.Scratch.perLake("ann_ivf_retrain", d)
       ivfSave(ivfBuild(e.filter(col("vec_id") % 7 =!= 3),
         "vec_id", "embedding", IvfK), dir)
       ivfAppend(s, dir, e.filter(col("vec_id") % 7 === 3), "vec_id", "embedding",
@@ -1903,8 +1552,7 @@ object AnnSuite {
     "ann_pq_persisted" -> { (s, d) =>
       org.apache.spark.sql.graft.Bridge.register(s)
       val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-      val dir = graft.sources.Scratch.stable(
-        "ann_pq_persisted/" + d.replaceAll("[^A-Za-z0-9.]", "_"))
+      val dir = graft.sources.Scratch.perLake("ann_pq_persisted", d)
       val book = pqTrain(e, m = 8, dsub = 8, ksub = 16)
       pqSave(PqIndex(book, pqEncode(e, book, m = 8, dsub = 8), 8, 8), dir)
       pqQuery(pqLoad(s, dir),
@@ -1924,8 +1572,7 @@ object AnnSuite {
     "ann_ivfpq" -> { (s, d) =>
       org.apache.spark.sql.graft.Bridge.register(s)
       val e = Tables.embeddings(s, d)
-      val dir = graft.sources.Scratch.stable(
-        "ann_ivfpq/" + d.replaceAll("[^A-Za-z0-9.]", "_"))
+      val dir = graft.sources.Scratch.perLake("ann_ivfpq", d)
       ivfPqSave(ivfPqBuild(e, "vec_id", "embedding",
         kCoarse = IvfK, m = 8, dsub = 8, ksub = 16), dir)
       ivfPqQuery(ivfPqLoad(s, dir), e.filter(col("vec_id") < 5),
@@ -1944,8 +1591,7 @@ object AnnSuite {
     "ann_ivfpq_retrain" -> { (s, d) =>
       org.apache.spark.sql.graft.Bridge.register(s)
       val e = Tables.embeddings(s, d)
-      val dir = graft.sources.Scratch.stable(
-        "ann_ivfpq_retrain/" + d.replaceAll("[^A-Za-z0-9.]", "_"))
+      val dir = graft.sources.Scratch.perLake("ann_ivfpq_retrain", d)
       ivfPqSave(ivfPqBuild(e.filter(col("vec_id") % 7 =!= 3), "vec_id", "embedding",
         kCoarse = IvfK, m = 8, dsub = 8, ksub = 16), dir)
       // the retrain's read-and-rebuild half never touches the appends
@@ -2011,7 +1657,7 @@ object AnnSuite {
     },
 
     // The scheduled reconciliation pass over the LIVING STORES
-    // ([[reconIndexStore]]) — run against one deliberately-damaged IVF
+    // (the stores' `audit`) — run against one deliberately-damaged IVF
     // store and one healthy IVFADC code store, so the entry proves
     // both that every fault class is caught AND that a clean store
     // reads clean. Faults injected (the real crash shapes): a
@@ -2024,7 +1670,7 @@ object AnnSuite {
       reconIndexFixture(s, d).orderBy("store", "invariant")
     },
 
-    // [[reconIndexStore]]'s LWW sibling, run against a deliberately
+    // the store audit's LWW form, run against a deliberately
     // damaged UPSERT store (the stream_ivf_upsert discipline): live-id
     // updates, a delete batch, a re-insert batch reviving half the
     // deleted keys, orphan tombstones in the disjoint negative range,
@@ -2034,12 +1680,11 @@ object AnnSuite {
     // detect at read time: the view serves duplicate rows for those
     // keys, and this pass's `dup_keys` is the scheduled detection path.
     // `superseded_rows` prices the standing compaction debt the next
-    // ivfUpsertCompact clears. All counts are modular-arithmetic
+    // IvfStore.upsertCompact clears. All counts are modular-arithmetic
     // replayable, so the whole audit is hash-checked.
     "recon_index_lww" -> { (s, d) =>
       val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-      val dir = graft.sources.Scratch.stable(
-        "recon_index_lww/" + d.replaceAll("[^A-Za-z0-9.]", "_"))
+      val dir = graft.sources.Scratch.perLake("recon_index_lww", d)
       ivfSave(ivfBuild(e, "vec_id", "embedding", IvfK), dir)
       // batches 0-4 write disjoint batch_id dirs under the static gen-0
       // layout — co-land all five (Par.all doc)
@@ -2050,7 +1695,7 @@ object AnnSuite {
             .select(col("vec_id"), reverse(col("embedding")).as("embedding")),
           "vec_id", "embedding", batchId = 0L),
         // batch 1: deletes (% 13 = 2)
-        () => ivfDelete(s, dir,
+        () => IvfStore.delete(s, dir,
           e.filter(col("vec_id") % 13 === 2).select("vec_id"),
           "vec_id", batchId = 1L),
         // batch 2: re-insert of the even half of the deleted keys
@@ -2060,7 +1705,7 @@ object AnnSuite {
             .select(col("vec_id"), reverse(col("embedding")).as("embedding")),
           "vec_id", "embedding", batchId = 2L),
         // batch 3: tombstones for keys that never existed (negative range)
-        () => ivfDelete(s, dir,
+        () => IvfStore.delete(s, dir,
           e.filter(col("vec_id") % 17 === 4)
             .select((-col("vec_id") - 1L).as("vec_id")),
           "vec_id", batchId = 3L),
@@ -2073,8 +1718,7 @@ object AnnSuite {
           ivfAppend(s, dir, dup.unionByName(dup), "vec_id", "embedding",
             batchId = 4L)
         })
-      reconIndexStore(s, dir, IvfScheme, "lww_ivf",
-          ivfLoadLww(s, dir).assigned, e, lww = true)
+      IvfStore.audit(s, dir, "lww_ivf", e, lww = true)
         .orderBy("store", "invariant")
     },
 
@@ -2179,8 +1823,7 @@ object AnnSuite {
     "ann_ivfpq_filtered" -> { (s, d) =>
       org.apache.spark.sql.graft.Bridge.register(s)
       val e = Tables.embeddings(s, d)
-      val dir = graft.sources.Scratch.stable(
-        "ann_ivfpq_filtered/" + d.replaceAll("[^A-Za-z0-9.]", "_"))
+      val dir = graft.sources.Scratch.perLake("ann_ivfpq_filtered", d)
       ivfPqSave(ivfPqBuild(e, "vec_id", "embedding",
         kCoarse = IvfK, m = 8, dsub = 8, ksub = 16,
         carry = Seq("label")), dir)
@@ -2196,15 +1839,14 @@ object AnnSuite {
 
     // the quantized index's DELETE leg — ann_ivf_delete's twin on the
     // code store: tombstone ids land as a delete segment, pqLoad
-    // anti-joins them (broadcast) on every serve, ivfPqCompact purges
+    // anti-joins them (broadcast) on every serve, CodesStore.compact purges
     // them physically. The oracle is the IVFADC chain with the deleted
     // ids excluded from the served candidates only (both trainings saw
     // the full corpus and are fixed — exactly the engine's state).
     "ann_ivfpq_delete" -> { (s, d) =>
       org.apache.spark.sql.graft.Bridge.register(s)
       val e = Tables.embeddings(s, d)
-      val dir = graft.sources.Scratch.stable(
-        "ann_ivfpq_delete/" + d.replaceAll("[^A-Za-z0-9.]", "_"))
+      val dir = graft.sources.Scratch.perLake("ann_ivfpq_delete", d)
       ivfPqSave(ivfPqBuild(e, "vec_id", "embedding",
         kCoarse = IvfK, m = 8, dsub = 8, ksub = 16), dir)
       // the tombstone landing touches only the delete channel; the
@@ -2212,7 +1854,7 @@ object AnnSuite {
       // overlap them (guide §2.6). The SERVING view (codes ∪ segments −
       // tombstones) is constructed below, after both finish.
       val (_, meta) = graft.functions.Par.inParallel(
-        ivfPqDelete(s, dir, e.filter(col("vec_id") % 11 === 5).select("vec_id"),
+        CodesStore.delete(s, dir, e.filter(col("vec_id") % 11 === 5).select("vec_id"),
           "vec_id", batchId = 0L),
         pqMetaLoad(s, dir))
       ivfPqQuery(ivfPqLoad(s, dir, meta = Some(meta)),
@@ -2284,8 +1926,7 @@ object AnnSuite {
     "ann_ivfpq_residual_persisted" -> { (s, d) =>
       org.apache.spark.sql.graft.Bridge.register(s)
       val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-      val dir = graft.sources.Scratch.stable(
-        "ann_ivfpq_residual_persisted/" + d.replaceAll("[^A-Za-z0-9.]", "_"))
+      val dir = graft.sources.Scratch.perLake("ann_ivfpq_residual_persisted", d)
       ivfPqSave(ivfPqBuild(e, "vec_id", "embedding",
         kCoarse = IvfK, m = 8, dsub = 8, ksub = 16, residual = true), dir)
       ivfPqQuery(ivfPqLoad(s, dir), e.filter(col("vec_id") < 5),
@@ -2341,8 +1982,7 @@ object AnnSuite {
     "ann_ivfpq_append" -> { (s, d) =>
       org.apache.spark.sql.graft.Bridge.register(s)
       val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-      val dir = graft.sources.Scratch.stable(
-        "ann_ivfpq_append/" + d.replaceAll("[^A-Za-z0-9.]", "_"))
+      val dir = graft.sources.Scratch.perLake("ann_ivfpq_append", d)
       ivfPqSave(ivfPqBuild(e.filter(col("vec_id") % 7 =!= 3),
         "vec_id", "embedding", kCoarse = IvfK, m = 8, dsub = 8, ksub = 16), dir)
       // one metadata read serves BOTH the append's encode and the
@@ -2366,13 +2006,12 @@ object AnnSuite {
     "ann_ivfpq_compact" -> { (s, d) =>
       org.apache.spark.sql.graft.Bridge.register(s)
       val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-      val dir = graft.sources.Scratch.stable(
-        "ann_ivfpq_compact/" + d.replaceAll("[^A-Za-z0-9.]", "_"))
+      val dir = graft.sources.Scratch.perLake("ann_ivfpq_compact", d)
       ivfPqSave(ivfPqBuild(e.filter(col("vec_id") % 7 =!= 3),
         "vec_id", "embedding", kCoarse = IvfK, m = 8, dsub = 8, ksub = 16), dir)
       ivfPqAppend(s, dir, e.filter(col("vec_id") % 7 === 3),
         "vec_id", "embedding", batchId = 0L)
-      ivfPqCompact(s, dir)
+      CodesStore.compact(s, dir)
       ivfPqQuery(ivfPqLoad(s, dir), e.filter(col("vec_id") < 5),
         "vec_id", "embedding", nprobe = IvfNProbe, topK = 5)
         .orderBy("query_id", "rk")

@@ -130,15 +130,14 @@ object CurationSuite {
     "dedup_incremental_persisted" -> { (s, d) =>
       org.apache.spark.sql.graft.Bridge.register(s)
       val sh = DedupSuite.shingleSets(s, d).localCheckpoint()
-      val dir = graft.sources.Scratch.stable(
-        "band_index_persisted/" + d.replaceAll("[^A-Za-z0-9.]", "_"))
+      val dir = graft.sources.Scratch.perLake("band_index_persisted", d)
       DedupSuite.bandIndexSave(
         DedupSuite.minhashBands(sh.filter(col("doc_id") < 1000000L)), dir)
       val batchBands = DedupSuite.gateHotBuckets(
         DedupSuite.minhashBands(sh.filter(col("doc_id") >= 1000000L)),
         Seq("band", "bucket"))
       val cands = batchBands.as("n")
-        .join(DedupSuite.bandIndexLoad(s, dir).as("c"),
+        .join(DedupSuite.BandStore.load(s, dir).as("c"),
           col("n.band") === col("c.band") && col("n.bucket") === col("c.bucket"))
         .select(col("n.doc_id").as("new_id"), col("c.doc_id").as("dup_of"))
         .dropDuplicates("new_id", "dup_of")
@@ -153,8 +152,7 @@ object CurationSuite {
     "dedup_incremental_append" -> { (s, d) =>
       org.apache.spark.sql.graft.Bridge.register(s)
       val sh = DedupSuite.shingleSets(s, d).localCheckpoint()
-      val dir = graft.sources.Scratch.stable(
-        "band_index_append/" + d.replaceAll("[^A-Za-z0-9.]", "_"))
+      val dir = graft.sources.Scratch.perLake("band_index_append", d)
       DedupSuite.bandIndexSave(
         DedupSuite.minhashBands(sh.filter(col("doc_id") < 1000000L)), dir)
       // injected ids are 1000000 + multiples of 10, so % 20 splits
@@ -168,7 +166,7 @@ object CurationSuite {
           col("doc_id") >= 1000000L && col("doc_id") % 20 === 10)),
         Seq("band", "bucket"))
       val cands = batchBands.as("n")
-        .join(DedupSuite.bandIndexLoad(s, dir).as("c"),
+        .join(DedupSuite.BandStore.load(s, dir).as("c"),
           col("n.band") === col("c.band") && col("n.bucket") === col("c.bucket"))
         .select(col("n.doc_id").as("new_id"), col("c.doc_id").as("dup_of"))
         .dropDuplicates("new_id", "dup_of")
@@ -183,18 +181,17 @@ object CurationSuite {
     "dedup_incremental_delete" -> { (s, d) =>
       org.apache.spark.sql.graft.Bridge.register(s)
       val sh = DedupSuite.shingleSets(s, d).localCheckpoint()
-      val dir = graft.sources.Scratch.stable(
-        "band_index_delete/" + d.replaceAll("[^A-Za-z0-9.]", "_"))
+      val dir = graft.sources.Scratch.perLake("band_index_delete", d)
       DedupSuite.bandIndexSave(
         DedupSuite.minhashBands(sh.filter(col("doc_id") < 1000000L)), dir)
-      DedupSuite.bandIndexDelete(s, dir,
+      DedupSuite.BandStore.delete(s, dir,
         sh.filter(col("doc_id") < 1000000L && col("doc_id") % 20 === 0)
           .select("doc_id"), "doc_id", batchId = 0L)
       val batchBands = DedupSuite.gateHotBuckets(
         DedupSuite.minhashBands(sh.filter(col("doc_id") >= 1000000L)),
         Seq("band", "bucket"))
       val cands = batchBands.as("n")
-        .join(DedupSuite.bandIndexLoad(s, dir).as("c"),
+        .join(DedupSuite.BandStore.load(s, dir).as("c"),
           col("n.band") === col("c.band") && col("n.bucket") === col("c.bucket"))
         .select(col("n.doc_id").as("new_id"), col("c.doc_id").as("dup_of"))
         .dropDuplicates("new_id", "dup_of")

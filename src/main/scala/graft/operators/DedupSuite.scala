@@ -416,7 +416,7 @@ object DedupSuite {
     },
 
     // the scheduled reconciliation pass over the BAND store
-    // ([[reconBandStore]]) — the dedup index gets the same audited
+    // (`BandStore.audit`) — the dedup index gets the same audited
     // health the vector stores have. Faults planted (the real crash
     // shapes, recon_index's on this store): one committed batch landed
     // AGAIN under a fresh batchId (a replay past a LOST watermark —
@@ -428,8 +428,7 @@ object DedupSuite {
     "recon_index_bands" -> { (s, d) =>
       org.apache.spark.sql.graft.Bridge.register(s)
       val sh = shingleSets(s, d).localCheckpoint()
-      val dir = graft.sources.Scratch.stable(
-        "recon_index_bands/" + d.replaceAll("[^A-Za-z0-9.]", "_"))
+      val dir = graft.sources.Scratch.perLake("recon_index_bands", d)
       // the base save (which also resets the segment store — it MUST
       // complete before any landing) and the injected segment's
       // materialization are independent jobs over the checkpointed
@@ -449,14 +448,14 @@ object DedupSuite {
       graft.functions.Par.all(
         () => bandIndexAppend(seg, dir, batchId = 0L),
         () => bandIndexAppend(seg, dir, batchId = 1L),
-        () => bandIndexDelete(s, dir,
+        () => BandStore.delete(s, dir,
           sh.filter(col("doc_id") < 1000000L && col("doc_id") % 20 === 10)
             .select("doc_id")
             .unionByName(
               sh.filter(col("doc_id") < 1000000L && col("doc_id") % 23 === 5)
                 .select((-col("doc_id") - 1L).as("doc_id"))),
           "doc_id", batchId = 2L))
-      reconBandStore(s, dir, "bands", sh.select("doc_id"))
+      BandStore.audit(s, dir, "bands", sh.select("doc_id"))
         .orderBy("store", "invariant")
     },
 
@@ -762,12 +761,16 @@ object DedupSuite {
     */
   private[graft] val SubstringW = 20
 
-  /** The standing window-hash index's segment-store naming — the same
-    * generation-manifest discipline as the IVF/IVFADC stores (it is a
-    * one-column hash table, so segments carry no partition columns).
+  /** The standing window-hash index's segment store — the same
+    * generation-manifest discipline as the IVF/IVFADC stores (a
+    * one-column hash table: no key channel, no partition columns). Its
+    * compaction re-applies DISTINCT, restoring the base's
+    * no-duplicates invariant across segment boundaries (a hash may
+    * enter through two batches — see [[substringIndexAppend]]).
     */
-  private[graft] val SubstringScheme = graft.sources.SegmentStore.Scheme(
-    "hashes.parquet", "hash_appends.parquet", "hashes_v", "hash_appends_v")
+  private[graft] val HashStore = graft.sources.SegmentStore.Scheme(
+    "hashes.parquet", "hash_appends.parquet", "hashes_v", "hash_appends_v",
+    core = Seq("h"), refold = _.distinct())
 
   /** The PERSISTED MinHash band index — dedup_incremental's standing
     * index made a living store (the doc-level twin of the substring
@@ -776,11 +779,20 @@ object DedupSuite {
     * probes never pay the occupancy window, batchId-keyed appends as
     * the committed corpus grows, doc_id tombstones for
     * right-to-be-forgotten (a deleted document must stop shadowing new
-    * arrivals as their `dup_of`), manifest-committed compactions.
+    * arrivals as their `dup_of`; purged physically at the next
+    * compaction), manifest-committed compactions that RE-GATE hot
+    * buckets (occupancy that only crossed the cap ACROSS segments is
+    * caught at the fold). A healthy store serves exactly one bucket per
+    * (doc_id, band): that pair is the audit key, while tombstones are
+    * doc_id-granular.
     */
-  private[graft] val BandScheme = graft.sources.SegmentStore.Scheme(
+  private[graft] val BandStore = graft.sources.SegmentStore.Scheme(
     "bands.parquet", "band_appends.parquet", "bands_v", "band_appends_v",
-    "band_deletes.parquet", "band_deletes_v")
+    "band_deletes.parquet", "band_deletes_v",
+    keyCols = Seq("doc_id"), core = Seq("doc_id", "band", "bucket"),
+    expectedKeys = _.select(col("doc_id"))
+      .withColumn("band", explode(expr(s"sequence(0, ${NumPerm / BandRows - 1})"))),
+    refold = gateHotBuckets(_, Seq("band", "bucket")))
 
   /** A save is a FULL rebuild: the store resets to generation 0.
     * `bands` is a [[minhashBands]] frame; the hot-bucket gate runs
@@ -789,7 +801,7 @@ object DedupSuite {
   private[graft] def bandIndexSave(bands: DataFrame, dir: String): Unit = {
     gateHotBuckets(bands, Seq("band", "bucket"))
       .write.mode("overwrite").parquet(s"$dir/bands.parquet")
-    graft.sources.SegmentStore.reset(bands.sparkSession, dir, BandScheme)
+    BandStore.reset(bands.sparkSession, dir)
   }
 
   /** Grow the standing band index at cost ∝ batch (hash + band only
@@ -801,102 +813,8 @@ object DedupSuite {
     */
   private[graft] def bandIndexAppend(bands: DataFrame, dir: String,
       batchId: Long): Boolean =
-    graft.sources.SegmentStore.append(bands.sparkSession, dir, BandScheme,
-      gateHotBuckets(bands, Seq("band", "bucket")), Seq.empty, batchId)
-
-  /** Tombstone documents out of the standing index (GDPR: a removed
-    * document must stop appearing as anyone's `dup_of`); purged
-    * physically at the next compaction.
-    */
-  private[graft] def bandIndexDelete(spark: SparkSession, dir: String,
-      ids: DataFrame, idCol: String, batchId: Long): Boolean =
-    graft.sources.SegmentStore.appendDeletes(spark, dir, BandScheme,
-      ids.select(col(idCol).as("doc_id")).distinct(), batchId)
-
-  /** Reader view: base ∪ committed segments − tombstoned doc_ids. */
-  private[graft] def bandIndexLoad(spark: SparkSession, dir: String): DataFrame =
-    graft.sources.SegmentStore.load(spark, dir, BandScheme,
-      deleteKeys = Seq("doc_id"))(_.select("doc_id", "band", "bucket"))
-
-  /** Fold segments (and purge tombstones) into a new base generation;
-    * the fold re-applies the hot-bucket gate so occupancy that only
-    * crossed the cap ACROSS segments is caught.
-    */
-  private[graft] def bandIndexCompact(spark: SparkSession, dir: String,
-      crashBeforeCommit: Boolean = false, retain: Int = 1): Boolean =
-    graft.sources.SegmentStore.compact(spark, dir, BandScheme,
-      gateHotBuckets(bandIndexLoad(spark, dir), Seq("band", "bucket")),
-      Seq.empty, crashBeforeCommit, retain, deleteKeys = Seq("doc_id"))
-
-  /** [[graft.operators.AnnSuite.reconIndexStore]]'s discipline pointed
-    * at the BAND store — the third living index: the key is
-    * (doc_id, band) (a healthy store serves exactly one bucket per
-    * document per band), tombstones are doc_id-granular. Same shape as
-    * the vector-store pass: ONE tag-union group-by over served keys ∪
-    * expected keys for the dup/parity scalars (skew-immune, single
-    * shuffle), delta-sized channel/segment side reads. `corpusDocs` is
-    * the doc_id set the index SHOULD cover (missing keys are
-    * tombstoned or never-appended documents).
-    */
-  private[graft] def reconBandStore(spark: SparkSession, dir: String,
-      store: String, corpusDocs: DataFrame): DataFrame = {
-    import spark.implicits._
-    val scheme = BandScheme
-    val lay = graft.sources.SegmentStore.resolve(spark, dir, scheme)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val apPath = new org.apache.hadoop.fs.Path(s"$dir/${lay.appends}")
-    val segIds: Seq[Long] =
-      if (!fs.exists(apPath)) Seq.empty
-      else fs.listStatus(apPath).toSeq.map(_.getPath.getName)
-        .filter(_.startsWith("batch_id="))
-        .flatMap(_.stripPrefix("batch_id=").toLongOption)
-    val served = bandIndexLoad(spark, dir)
-    val corpusPairs = corpusDocs.select(col("doc_id"))
-      .withColumn("band",
-        explode(expr(s"sequence(0, ${NumPerm / BandRows - 1})")))
-    val tagged = served.select(col("doc_id"), col("band"),
-        lit(1L).as("ni"), lit(0L).as("nc"))
-      .unionByName(corpusPairs.select(col("doc_id"), col("band"),
-        lit(0L).as("ni"), lit(1L).as("nc")))
-    // the tag-union scalars head() and the orphan anti-join count()
-    // are independent blocking reads of the store — overlap them
-    // (guide §2.6, the reconIndexStore audit pattern)
-    val (scalars, orphans) = graft.functions.Par.inParallel(
-      tagged.groupBy(col("doc_id"), col("band"))
-        .agg(sum(col("ni")).as("ni"), sum(col("nc")).as("nc"))
-        .agg(
-          sum(col("ni")).as("served_rows"),
-          sum(when(col("ni") > 1, 1L).otherwise(0L)).as("dup_keys"),
-          sum(when(col("ni") === 0 && col("nc") > 0, 1L).otherwise(0L))
-            .as("missing_from_index"),
-          sum(when(col("ni") > 0 && col("nc") === 0, 1L).otherwise(0L))
-            .as("foreign_in_index"))
-        .head(),
-      graft.sources.SegmentStore.deletes(spark, dir, scheme)
-        .map { t =>
-          val standing = {
-            val b = spark.read.parquet(s"$dir/${lay.base}").select("doc_id")
-            if (fs.exists(apPath))
-              b.unionByName(spark.read.parquet(apPath.toString).select("doc_id"))
-            else b
-          }
-          t.select("doc_id").distinct()
-            .join(standing, Seq("doc_id"), "left_anti").count()
-        }
-        .getOrElse(0L))
-    Seq(
-      ("append_segments", segIds.size.toLong),
-      ("dup_keys", scalars.getAs[Long]("dup_keys")),
-      ("foreign_in_index", scalars.getAs[Long]("foreign_in_index")),
-      ("missing_from_index", scalars.getAs[Long]("missing_from_index")),
-      ("orphan_tombstones", orphans),
-      ("served_rows", scalars.getAs[Long]("served_rows")),
-      ("stale_segments", segIds.count(_ <= lay.folded).toLong),
-      ("watermark", lay.folded))
-      .toDF("invariant", "value")
-      .select(lit(store).as("store"), col("invariant"), col("value"))
-  }
+    BandStore.append(bands.sparkSession, dir,
+      gateHotBuckets(bands, Seq("band", "bucket")), batchId)
 
   /** The distinct w-token window hashes of a document frame — the
     * 8-byte column every standing-index write shapes.
@@ -918,7 +836,7 @@ object DedupSuite {
   private[graft] def substringIndexSave(docs: DataFrame, w: Int, dir: String): Unit = {
     substringHashes(docs, w)
       .write.mode("overwrite").parquet(s"$dir/hashes.parquet")
-    graft.sources.SegmentStore.reset(docs.sparkSession, dir, SubstringScheme)
+    HashStore.reset(docs.sparkSession, dir)
   }
 
   /** Grow the standing index WITHOUT a rebuild: land one committed
@@ -930,30 +848,11 @@ object DedupSuite {
     * watermark, ids monotonically increasing. Cross-segment duplicate
     * hashes are tolerated (a hash may enter through two batches): the
     * probe dedups its batch-bounded flagged set, and
-    * [[substringIndexCompact]] restores the distinct invariant.
+    * `HashStore.compact` restores the distinct invariant.
     */
   private[graft] def substringIndexAppend(docs: DataFrame, w: Int, dir: String,
       batchId: Long): Boolean =
-    graft.sources.SegmentStore.append(docs.sparkSession, dir, SubstringScheme,
-      substringHashes(docs, w), Seq.empty, batchId)
-
-  /** The standing index's reader view: base hashes ∪ committed append
-    * segments (may contain cross-segment duplicates — see
-    * [[substringIndexAppend]]).
-    */
-  private[graft] def substringIndexLoad(spark: SparkSession, dir: String): DataFrame =
-    graft.sources.SegmentStore.load(spark, dir, SubstringScheme)(_.select("h"))
-
-  /** Fold committed hash segments into a new distinct base generation —
-    * the crash-safe land-then-swap of the shared segment store; the
-    * DISTINCT here restores the base's no-duplicates invariant across
-    * segment boundaries.
-    */
-  private[graft] def substringIndexCompact(spark: SparkSession, dir: String,
-      crashBeforeCommit: Boolean = false, retain: Int = 1): Boolean =
-    graft.sources.SegmentStore.compact(spark, dir, SubstringScheme,
-      substringIndexLoad(spark, dir).distinct(), Seq.empty, crashBeforeCommit,
-      retain)
+    HashStore.append(docs.sparkSession, dir, substringHashes(docs, w), batchId)
 
   /** One micro-batch of the streaming substring probe: the batch's
     * rolling window hashes flagged by EXISTENCE in the standing index
@@ -979,7 +878,7 @@ object DedupSuite {
     // seen through two segments would flag a batch gram twice, so the
     // (batch-bounded) flagged set dedups — broadcasting the batch side
     // still keeps the corpus-sized leg shuffle-free
-    val flagged = substringIndexLoad(spark, idxDir)
+    val flagged = HashStore.load(spark, idxDir)
       .join(broadcast(grams), Seq("h"))
       .select("doc_id", "pos")
       .distinct()

@@ -18,36 +18,43 @@ import org.apache.spark.sql.functions._
   */
 object ParquetMeta {
 
-  /** Per-file exact row counts (column `n`, one row per data file).
-    * Listing RECURSES so partitioned layouts (data files under
-    * `col=value/` subdirectories) count correctly, and a table with no
-    * data files yields an empty frame (not a repartition(0) crash) so
-    * [[rowCount]]'s zero-row fallback is reachable. Paths with any
-    * segment (relative to the root) starting with '_' or '.' are
-    * skipped, mirroring Spark's hidden-file filter: in-flight/aborted
-    * writes under `_temporary`/`.staging` must not inflate the count
-    * versus what a read of the table actually sees.
+  /** The parquet data files a read of `p` sees (`p` itself when it is a
+    * file; throws when it does not exist). Listing RECURSES so
+    * partitioned and nested layouts (data files under `col=value/`
+    * subdirectories) are covered. Paths with any segment (relative to
+    * the root) starting with '_' or '.' are skipped, mirroring Spark's
+    * hidden-file filter: in-flight/aborted writes under
+    * `_temporary`/`.staging` must not count versus what a read of the
+    * table actually sees.
+    */
+  private def dataFiles(fs: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.Path] = {
+    val root = fs.getFileStatus(p)
+    if (!root.isDirectory) return Seq(p)
+    val rootUri = root.getPath.toUri.getPath
+    def hidden(f: org.apache.hadoop.fs.Path): Boolean =
+      f.toUri.getPath.stripPrefix(rootUri).split('/')
+        .exists(seg => seg.startsWith("_") || seg.startsWith("."))
+    val it = fs.listFiles(p, true)
+    val buf = Seq.newBuilder[org.apache.hadoop.fs.Path]
+    while (it.hasNext) {
+      val f = it.next()
+      if (f.isFile && f.getPath.getName.endsWith(".parquet") && !hidden(f.getPath))
+        buf += f.getPath
+    }
+    buf.result()
+  }
+
+  /** Per-file exact row counts (column `n`, one row per data file,
+    * listed by [[dataFiles]]). A table with no data files yields an
+    * empty frame (not a repartition(0) crash) so [[rowCount]]'s
+    * zero-row fallback is reachable.
     */
   def fileRowCounts(s: SparkSession, path: String): DataFrame = {
     import s.implicits._
     val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val rootUri = fs.getFileStatus(p).getPath.toUri.getPath
-    def hidden(f: org.apache.hadoop.fs.Path): Boolean =
-      f.toUri.getPath.stripPrefix(rootUri).split('/')
-        .exists(seg => seg.startsWith("_") || seg.startsWith("."))
     val files: Seq[String] =
-      if (fs.getFileStatus(p).isDirectory) {
-        val it = fs.listFiles(p, true)
-        val buf = Seq.newBuilder[String]
-        while (it.hasNext) {
-          val f = it.next()
-          if (f.isFile && f.getPath.getName.endsWith(".parquet") &&
-            !hidden(f.getPath))
-            buf += f.getPath.toString
-        }
-        buf.result()
-      } else Seq(p.toString)
+      dataFiles(p.getFileSystem(s.sparkContext.hadoopConfiguration), p).map(_.toString)
     // ship the session's Hadoop conf (spark.hadoop.* — object-store
     // credentials, FS settings) to the executors; a bare Configuration
     // would only resolve against the local FS
@@ -76,31 +83,15 @@ object ParquetMeta {
   /** DRIVER-SIDE exact row count from parquet footers — for K-ROW
     * metadata tables (an index's centroid count is its geometry
     * parameter) where even [[rowCount]]'s one-task job pays full query
-    * planning. Footer reads only, no data pages; listing recurses like
-    * [[fileRowCounts]] with the same hidden-segment filter.
+    * planning. Footer reads only, no data pages, over the
+    * [[dataFiles]] listing; an absent table counts 0.
     */
   def rowCountDriver(s: SparkSession, path: String): Long = {
     val conf = s.sessionState.newHadoopConf()
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(conf)
     if (!fs.exists(p)) return 0L
-    val rootUri = fs.getFileStatus(p).getPath.toUri.getPath
-    def hidden(f: org.apache.hadoop.fs.Path): Boolean =
-      f.toUri.getPath.stripPrefix(rootUri).split('/')
-        .exists(seg => seg.startsWith("_") || seg.startsWith("."))
-    val files: Seq[org.apache.hadoop.fs.Path] =
-      if (fs.getFileStatus(p).isDirectory) {
-        val it = fs.listFiles(p, true)
-        val buf = Seq.newBuilder[org.apache.hadoop.fs.Path]
-        while (it.hasNext) {
-          val f = it.next()
-          if (f.isFile && f.getPath.getName.endsWith(".parquet") &&
-            !hidden(f.getPath))
-            buf += f.getPath
-        }
-        buf.result()
-      } else Seq(p)
-    files.map { f =>
+    dataFiles(fs, p).map { f =>
       val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
       try rd.getRecordCount finally rd.close()
@@ -113,7 +104,9 @@ object ParquetMeta {
     * a one-row table pays full query planning plus an AQE stage-job per
     * call (~100 ms and a cluster round-trip), where the parquet-hadoop
     * record reader pays one footer + one page read on the driver. Same
-    * value by construction (it reads the same file). Row-group skipping
+    * value by construction (it reads the same files — the
+    * [[dataFiles]] listing, so a table whose file sits under a
+    * subdirectory is found, not read as absent). Row-group skipping
     * never applies (the table is one row); files are visited in listing
     * order and the first non-null value wins — exactly head()'s
     * semantics on a coalesce(1)-written table.
@@ -123,13 +116,7 @@ object ParquetMeta {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(conf)
     if (!fs.exists(p)) return None
-    val files: Seq[org.apache.hadoop.fs.Path] =
-      if (fs.getFileStatus(p).isDirectory)
-        fs.listStatus(p).toSeq.map(_.getPath)
-          .filter(f => f.getName.endsWith(".parquet") &&
-            !f.getName.startsWith("_") && !f.getName.startsWith("."))
-      else Seq(p)
-    files.iterator.flatMap { f =>
+    dataFiles(fs, p).iterator.flatMap { f =>
       val reader = org.apache.parquet.hadoop.ParquetReader
         .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(), f)
         .withConf(conf).build()

@@ -44,4 +44,14 @@ object Scratch {
     Files.createDirectories(p.getParent)
     p.toString
   }
+
+  /** The [[stable]] directory of registry entry `entry` for lake
+    * `lake`: `<entry>/<lake path, every char outside [A-Za-z0-9.] as
+    * '_'>`. Prefixing with the entry name keeps entries that run
+    * concurrently (Verify's pool) on disjoint stores — entries that
+    * share one name share one store and must be chained in
+    * Verify.ConflictGroups.
+    */
+  def perLake(entry: String, lake: String): String =
+    stable(entry + "/" + lake.replaceAll("[^A-Za-z0-9.]", "_"))
 }

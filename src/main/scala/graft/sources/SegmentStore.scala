@@ -3,11 +3,18 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Generation-manifested segment storage — the shared maintenance
-  * discipline behind every "living index" in the engine (IVF
-  * assignments, IVFADC code tables, the streaming substring-dedup
-  * window-hash index). The reference's incremental reconciliation
-  * keeps a watermark table and re-reads only what moved
-  * (ref: src/reconciliation/incremental/watermark.py:1,
+  * discipline behind every "living index" in the engine: the IVF
+  * assignments and the IVFADC code tables (`AnnSuite.IvfStore`,
+  * `AnnSuite.CodesStore`), the MinHash band index and the streaming
+  * substring-dedup window-hash index (`DedupSuite.BandStore`,
+  * `DedupSuite.HashStore`). Each store is one [[Scheme]] value — the
+  * store HANDLE: it names the store's files, keys, partitions,
+  * sidecars and fold step, and carries every maintenance operation
+  * (load, loadLww, append, delete, compact, upsertCompact, swap,
+  * carryOf, sidecarPath, reset, audit), written once over the
+  * scheme-parametric primitives of this object. The reference's
+  * incremental reconciliation keeps a watermark table and re-reads
+  * only what moved (ref: src/reconciliation/incremental/watermark.py:1,
   * incremental.py:1); the lake analog for an APPEND-ONLY index is
   * batchId-keyed segments plus manifest-committed compactions, which
   * is what this implements.
@@ -66,24 +73,306 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object SegmentStore {
 
-  /** Directory-naming scheme of one segment store. `vBase`/`vAppends`/
-    * `vDeletes` are PREFIXES: generation n's dirs are
-    * `<vBase><n>.parquet` / `<vAppends><n>.parquet` /
+  /** One segment store's HANDLE: everything that identifies the store,
+    * and each maintenance operation written once on top of this
+    * object's scheme-parametric primitives.
+    *
+    * Naming: `vBase`/`vAppends`/`vDeletes` are PREFIXES — generation
+    * n's dirs are `<vBase><n>.parquet` / `<vAppends><n>.parquet` /
     * `<vDeletes><n>.parquet` (prefix form so [[reset]] can clear every
     * generation without knowing how many exist). The delete channel's
     * names default off the append channel's, but stores sharing one
     * index directory must pick non-colliding explicit names.
+    *
+    * Identity beyond the names:
+    *   - `keyCols`: the store key — the delete channel's tombstone
+    *     columns and the LWW winner key (Nil = no delete channel);
+    *   - `partitionCols`: the on-disk partition columns of base and
+    *     segments (read back as BIGINT — partition-value inference would
+    *     otherwise widen/narrow per lake);
+    *   - `sidecars`: generation-versioned sidecar tables
+    *     (`<name>_v<gen>.parquet`, see [[sidecarPath]]) a retrain lands
+    *     inside its commit window;
+    *   - `recordPurged`: whether a terminal compaction appends its
+    *     folded tombstones to the cumulative purged-key record;
+    *   - `core`: the reader view's core columns (in order); with
+    *     `carriesAttrs` the rows also carry caller attribute columns,
+    *     which maintenance reads back from the base schema
+    *     ([[carryOf]]);
+    *   - `expectedKeys`: maps a corpus id frame to the keys a healthy
+    *     store serves exactly once ([[audit]]);
+    *   - `refold`: the step a compaction applies to the folded view
+    *     (hot-bucket re-gating, distinct restoration, or identity).
     */
   case class Scheme(base0: String, appends0: String,
       vBase: String, vAppends: String,
       deletes0: String = "deletes.parquet", vDeletes: String = "deletes_v",
-      purged0: String = "purged.parquet") {
+      purged0: String = "purged.parquet",
+      keyCols: Seq[String] = Nil,
+      partitionCols: Seq[String] = Nil,
+      sidecars: Seq[String] = Nil,
+      recordPurged: Boolean = false,
+      core: Seq[String] = Nil,
+      carriesAttrs: Boolean = false,
+      expectedKeys: DataFrame => DataFrame = identity,
+      refold: DataFrame => DataFrame = identity) {
+    import org.apache.spark.sql.functions.{col, lit, sum, when}
+
     def baseOf(gen: Int): String = if (gen == 0) base0 else s"$vBase$gen.parquet"
     def appendsOf(gen: Int): String =
       if (gen == 0) appends0 else s"$vAppends$gen.parquet"
     def deletesOf(gen: Int): String =
       if (gen == 0) deletes0 else s"$vDeletes$gen.parquet"
+    private def sidecarPrefixes: Seq[String] = sidecars.map(_ + "_v")
+
+    /** The store's current layout ([[SegmentStore.resolve]]). */
+    def resolve(spark: SparkSession, dir: String): Layout =
+      SegmentStore.resolve(spark, dir, this)
+
+    /** The core-column projection both union legs of a reader view
+      * pass through: partition columns typed back to BIGINT, then the
+      * core columns present (in `core` order) plus `carry`.
+      */
+    private def project(df: DataFrame, carry: Seq[String]): DataFrame = {
+      val typed = partitionCols.filter(df.columns.contains)
+        .foldLeft(df)((d, c) => d.withColumn(c, col(c).cast("long")))
+      typed.select((core.filter(typed.columns.contains) ++ carry).map(col): _*)
+    }
+
+    /** Terminal-delete reader view: base ∪ committed segments −
+      * tombstoned keys ([[SegmentStore.load]]).
+      */
+    def load(spark: SparkSession, dir: String, carry: Seq[String] = Nil): DataFrame =
+      SegmentStore.load(spark, dir, this, keyCols)(project(_, carry))
+
+    /** Last-write-wins reader view ([[SegmentStore.loadLww]]). */
+    def loadLww(spark: SparkSession, dir: String, carry: Seq[String] = Nil): DataFrame =
+      SegmentStore.loadLww(spark, dir, this, keyCols)(project(_, carry))
+
+    /** Land one batch as a batchId-keyed segment; false (nothing
+      * written) for a replay at or below the watermark.
+      */
+    def append(spark: SparkSession, dir: String, segment: DataFrame,
+        batchId: Long): Boolean =
+      SegmentStore.append(spark, dir, this, segment, partitionCols, batchId)
+
+    /** Tombstone the distinct `idCol` values of `ids` as a batchId-keyed
+      * delete segment — same watermark contract as [[append]] (one
+      * shared monotonic batch-id space per store).
+      */
+    def delete(spark: SparkSession, dir: String, ids: DataFrame, idCol: String,
+        batchId: Long): Boolean = {
+      require(keyCols.size == 1, s"$base0: delete needs a one-column store key")
+      SegmentStore.appendDeletes(spark, dir, this,
+        ids.select(col(idCol).as(keyCols.head)).distinct(), batchId)
+    }
+
+    /** Fold the terminal-delete view (re-folded, attributes carried)
+      * into the next generation: unmatched tombstones carry forward,
+      * matched ones purge (recorded when `recordPurged`), and a torn
+      * retrain's orphaned sidecars are scrubbed before the commit.
+      */
+    def compact(spark: SparkSession, dir: String,
+        crashBeforeCommit: Boolean = false, retain: Int = 1): Boolean =
+      SegmentStore.compact(spark, dir, this,
+        refold(load(spark, dir, carryOf(spark, dir))), partitionCols,
+        crashBeforeCommit, retain, sidecarPrefixes = sidecarPrefixes,
+        deleteKeys = keyCols, recordPurged = recordPurged)
+
+    /** Fold the LWW view into the next generation. No tombstone carry
+      * and no purged record: under last-write-wins a later insert
+      * legitimately supersedes a folded tombstone.
+      */
+    def upsertCompact(spark: SparkSession, dir: String,
+        crashBeforeCommit: Boolean = false, retain: Int = 1): Boolean =
+      SegmentStore.compact(spark, dir, this,
+        refold(loadLww(spark, dir, carryOf(spark, dir))), partitionCols,
+        crashBeforeCommit, retain, sidecarPrefixes = sidecarPrefixes)
+
+    /** Swap a REBUILT base in as the next generation (a retrain): the
+      * fold runs with zero pending segments too, `landSidecars(next)`
+      * writes the rebuild's `<name>_v<next>` sidecars inside the atomic
+      * window, and a superseded sidecar version is GC'd only once every
+      * retained generation maps to a newer one (generation → sidecar is
+      * highest-version-at-or-below, so an eager delete would orphan a
+      * retained generation's serving tables).
+      */
+    def swap(spark: SparkSession, dir: String, rebuilt: DataFrame,
+        crashBeforeCommit: Boolean = false, retain: Int = 1)
+        (landSidecars: Int => Unit): Boolean = {
+      val lowestRetained = resolve(spark, dir).gen + 1 - retain
+      val fs = fileSystem(spark, dir)
+      def version(name: String, v: Int) =
+        new org.apache.hadoop.fs.Path(s"$dir/${name}_v$v.parquet")
+      SegmentStore.compact(spark, dir, this, rebuilt, partitionCols,
+        crashBeforeCommit, retain, requireSegments = false,
+        beforeCommit = landSidecars,
+        onRetire = g => sidecars.foreach { name =>
+          if ((g + 1 to lowestRetained).exists(v => fs.exists(version(name, v))))
+            fs.delete(version(name, g), true)
+        },
+        sidecarPrefixes = sidecarPrefixes, deleteKeys = keyCols,
+        recordPurged = recordPurged)
+    }
+
+    /** The ATTRIBUTE columns the store's rows carry beyond `core`, read
+      * from the current base's schema so maintenance preserves them
+      * without the caller restating the build's `carry` list (Nil, and
+      * no read, for stores without attributes).
+      */
+    def carryOf(spark: SparkSession, dir: String): Seq[String] =
+      if (!carriesAttrs) Nil
+      else spark.read.parquet(s"$dir/${resolve(spark, dir).base}").columns.toSeq
+        .filterNot(core.toSet)
+
+    /** The sidecar table `name` that the CURRENT generation serves: the
+      * HIGHEST `<name>_v<m>.parquet` with m ≤ gen, else the build's
+      * `<name>.parquet`. Compactions never move the mapping; a retrain's
+      * manifest commit does, which makes the commit the single
+      * visibility point for base + sidecars as a unit (gen < next
+      * ignores a torn retrain's landings).
+      */
+    def sidecarPath(spark: SparkSession, dir: String, name: String): String = {
+      val gen = resolve(spark, dir).gen
+      val fs = fileSystem(spark, dir)
+      ((gen to 1 by -1).map(g => s"${name}_v$g.parquet") :+ s"$name.parquet")
+        .find(n => fs.exists(new org.apache.hadoop.fs.Path(s"$dir/$n")))
+        .map(n => s"$dir/$n")
+        .getOrElse(s"$dir/$name.parquet")
+    }
+
+    /** Clear every segment, manifest, versioned generation and
+      * versioned sidecar — a full rebuild resets the store to
+      * generation 0 (the fresh base the caller just wrote). Prior
+      * segments must not leak into reloads of the new build, and a
+      * stale `<sidecar>_v<g>` would shadow the fresh build's table once
+      * the store re-reaches generation g.
+      */
+    def reset(spark: SparkSession, dir: String): Unit = {
+      val p = new org.apache.hadoop.fs.Path(dir)
+      val fs = fileSystem(spark, dir)
+      if (!fs.exists(p)) return
+      fs.listStatus(p).foreach { st =>
+        val n = st.getPath.getName
+        if (n == appends0 || n == deletes0 || n == purged0 ||
+          n.startsWith("MANIFEST-") || n.startsWith(vBase) ||
+          n.startsWith(vAppends) || n.startsWith(vDeletes) ||
+          sidecarPrefixes.exists(n.startsWith))
+          fs.delete(st.getPath, true)
+      }
+    }
+
+    /** OPERATIONAL RECONCILIATION of the store — the reference's recon
+      * discipline (ref: src/reconciliation/strategies/row_count.py:1,
+      * referential checks) pointed at the engine's own segment stores:
+      * the specs prove exactly-once per operation, but a 100 TB
+      * deployment also needs the cheap SCHEDULED pass that catches what
+      * slips anyway (a lost segment, a double-landed batch, a tombstone
+      * for a key that never arrived). One tag-union + group-by over the
+      * served keys ∪ the keys `corpus` should produce (`expectedKeys` —
+      * the skew-immune recon_referential shape, single shuffle, scalar
+      * out) yields duplicate-key / parity counts; the delete channel
+      * and the segment listing are delta-sized side reads. Emitted
+      * invariants, one (store, invariant, value) row each:
+      *   - `served_rows`, `dup_keys`     — duplicate keys in the reader
+      *     view (a double-fold or replayed-past-the-watermark landing;
+      *     must be 0 on a healthy store);
+      *   - `missing_from_index` / `foreign_in_index` — index-vs-corpus
+      *     key parity (missing = expected keys the view lacks, e.g.
+      *     legitimate deletes; foreign = served keys the corpus lacks);
+      *   - `orphan_tombstones`           — current-channel tombstones
+      *     matching no standing row (a delete waiting for its insert, or
+      *     one that will never come);
+      *   - `append_segments`, `stale_segments`, `watermark` — segment
+      *     listing vs manifest consistency (a committed segment at or
+      *     below the folded watermark should not exist: the fold retired
+      *     it, so its presence means a torn retire or a foreign writer).
+      *
+      * `lww = true` audits the [[loadLww]] view instead. The same
+      * invariants apply at the VIEW level — dup_keys must still be 0
+      * (raw segment rows legitimately duplicate a superseded key, but
+      * the winner selection serves one row per key unless a writer
+      * violated the one-row-per-key-per-batch contract, which is
+      * exactly what this detects — see [[SegmentStore.loadLww]]'s
+      * operating bounds), and a tombstone superseded by a later insert
+      * is NOT an orphan (the anti-join's standing side already carries
+      * the later insert's segment row). One invariant is added:
+      * `superseded_rows` = raw base+segment rows minus served rows — the
+      * compaction debt [[upsertCompact]] clears, and the growth
+      * observable that sizes a deployment's compaction cadence
+      * (bench/lww_cadence.json).
+      */
+    def audit(spark: SparkSession, dir: String, store: String,
+        corpus: DataFrame, lww: Boolean = false): DataFrame = {
+      import spark.implicits._
+      val served = if (lww) loadLww(spark, dir) else load(spark, dir)
+      val lay = resolve(spark, dir)
+      val fs = fileSystem(spark, dir)
+      val apPath = new org.apache.hadoop.fs.Path(s"$dir/${lay.appends}")
+      val segIds = segmentIds(fs, apPath)
+      val expected = expectedKeys(corpus)
+      val keys = expected.columns.toSeq.map(col)
+      // ONE pass over served keys ∪ expected keys: per-key (index rows,
+      // corpus rows) → the dup/parity scalars
+      val tagged = served.select(keys :+ lit(1L).as("ni") :+ lit(0L).as("nc"): _*)
+        .unionByName(expected.select(keys :+ lit(0L).as("ni") :+ lit(1L).as("nc"): _*))
+      def standingKeys: DataFrame = {
+        val b = spark.read.parquet(s"$dir/${lay.base}").select(keyCols.map(col): _*)
+        if (fs.exists(apPath))
+          b.unionByName(spark.read.parquet(apPath.toString).select(keyCols.map(col): _*))
+        else b
+      }
+      // the three audit legs (tag-union scalars / orphan anti-join / raw
+      // row counts) are independent blocking actions — overlap them
+      // (guide §2.6)
+      val (scalars, (orphans, rawRows)) = graft.functions.Par.inParallel(
+        tagged.groupBy(keys: _*)
+          .agg(sum(col("ni")).as("ni"), sum(col("nc")).as("nc"))
+          .agg(
+            sum(col("ni")).as("served_rows"),
+            sum(when(col("ni") > 1, 1L).otherwise(0L)).as("dup_keys"),
+            sum(when(col("ni") === 0 && col("nc") > 0, 1L).otherwise(0L))
+              .as("missing_from_index"),
+            sum(when(col("ni") > 0 && col("nc") === 0, 1L).otherwise(0L))
+              .as("foreign_in_index"))
+          .head(),
+        graft.functions.Par.inParallel(
+          deletes(spark, dir, this)
+            .map(_.select(keyCols.map(col): _*).distinct()
+              .join(standingKeys, keyCols, "left_anti").count())
+            .getOrElse(0L),
+          if (!lww) 0L
+          else {
+            val baseRows = spark.read.parquet(s"$dir/${lay.base}").count()
+            val segRows =
+              if (fs.exists(apPath)) spark.read.parquet(apPath.toString).count()
+              else 0L
+            baseRows + segRows
+          }))
+      val extra =
+        if (!lww) Seq.empty[(String, Long)]
+        else Seq(("superseded_rows", rawRows - scalars.getAs[Long]("served_rows")))
+      (Seq(
+        ("append_segments", segIds.size.toLong),
+        ("dup_keys", scalars.getAs[Long]("dup_keys")),
+        ("foreign_in_index", scalars.getAs[Long]("foreign_in_index")),
+        ("missing_from_index", scalars.getAs[Long]("missing_from_index")),
+        ("orphan_tombstones", orphans),
+        ("served_rows", scalars.getAs[Long]("served_rows")),
+        ("stale_segments", segIds.count(_ <= lay.folded).toLong),
+        ("watermark", lay.folded)) ++ extra)
+        .toDF("invariant", "value")
+        .select(lit(store).as("store"), col("invariant"), col("value"))
+    }
   }
+
+  /** The batch ids of the committed segments under one channel root. */
+  private def segmentIds(fs: org.apache.hadoop.fs.FileSystem,
+      root: org.apache.hadoop.fs.Path): Seq[Long] =
+    if (!fs.exists(root)) Seq.empty
+    else fs.listStatus(root).toSeq.map(_.getPath.getName)
+      .filter(_.startsWith("batch_id="))
+      .flatMap(_.stripPrefix("batch_id=").toLongOption)
 
   /** The resolved CURRENT view: base + appends dir names, generation
     * number, and the folded-batchId watermark (−1 before any
@@ -383,12 +672,8 @@ object SegmentStore {
     // the new watermark: every committed segment id — append AND
     // tombstone — folds into the base (tombstoned rows by omission:
     // `folded` is the reader view, which anti-joined them already)
-    def segIds(p: org.apache.hadoop.fs.Path): Seq[Long] =
-      if (!fs.exists(p)) Seq.empty
-      else fs.listStatus(p).toSeq.map(_.getPath.getName)
-        .filter(_.startsWith("batch_id="))
-        .flatMap(_.stripPrefix("batch_id=").toLongOption)
-    val newFolded = (segIds(appendsPath) ++ segIds(deletesPath) :+ lay.folded).max
+    val newFolded =
+      (segmentIds(fs, appendsPath) ++ segmentIds(fs, deletesPath) :+ lay.folded).max
     val next = lay.gen + 1
     // 1. land the folded base under the NEXT generation's name
     //    (idempotent overwrite — a torn attempt just redoes)
@@ -460,24 +745,5 @@ object SegmentStore {
       onRetire(g)
     }
     true
-  }
-
-  /** Clear every segment, manifest, and versioned generation — a full
-    * index rebuild resets the store to generation 0 (the fresh base
-    * the caller is about to write). Prior segments must not leak into
-    * reloads of the new build.
-    */
-  def reset(spark: SparkSession, dir: String, scheme: Scheme): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = fileSystem(spark, dir)
-    if (!fs.exists(p)) return
-    fs.listStatus(p).foreach { st =>
-      val n = st.getPath.getName
-      if (n == scheme.appends0 || n == scheme.deletes0 ||
-        n == scheme.purged0 || n.startsWith("MANIFEST-") ||
-        n.startsWith(scheme.vBase) || n.startsWith(scheme.vAppends) ||
-        n.startsWith(scheme.vDeletes))
-        fs.delete(st.getPath, true)
-    }
   }
 }

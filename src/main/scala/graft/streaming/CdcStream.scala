@@ -958,6 +958,56 @@ object CdcStream {
       .orderBy("channel")
   }
 
+  /** The store-maintaining twins' shared sink plumbing: land `rows` as
+    * a 4-file feed (`Scratch.dir(feedPrefix)`), replay it one file per
+    * micro-batch under `Trigger.AvailableNow` into `sink` through
+    * foreachBatch — checkpointed under a unique
+    * `<queryPrefix><uuid>_cp` scratch dir — then record the run's
+    * progress under `progressKey`. foreachBatch's batchId IS the store
+    * batch id, so a checkpoint replay of a torn batch re-lands the same
+    * segment (idempotent per batchId, refused at or below a
+    * compaction's watermark) — the exactly-once sink contract every
+    * twin relies on.
+    */
+  private def foldFeed(spark: SparkSession, progressKey: String,
+      feedPrefix: String, queryPrefix: String, rows: DataFrame)
+      (sink: (DataFrame, Long) => Unit): Unit = {
+    val feed = Scratch.dir(feedPrefix)
+    rows.repartition(4).write.mode("overwrite").parquet(feed)
+    val qname = queryPrefix + java.util.UUID.randomUUID.toString.replace("-", "")
+    val q = spark.readStream.schema(rows.schema)
+      .option("maxFilesPerTrigger", "1").parquet(feed)
+      .writeStream
+      .foreachBatch { (df: DataFrame, batchId: Long) => sink(df, batchId) }
+      .option("checkpointLocation", Scratch.dir(qname + "_cp"))
+      .trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    recordProgress(progressKey, q)
+  }
+
+  /** Route one CDC envelope micro-batch (op, `key`, `payload`): `c` and
+    * `u` rows, projected to (key, payload), go to `upsert`; `d` keys go
+    * to `delete`. An empty side lands nothing.
+    */
+  private def applyEnvelope(df: DataFrame, key: String, payload: String)
+      (upsert: DataFrame => Unit, delete: DataFrame => Unit): Unit = {
+    val up = df.filter(col("op").isin("c", "u")).select(key, payload)
+    val del = df.filter(col("op") === "d").select(key)
+    if (!up.isEmpty) upsert(up)
+    if (!del.isEmpty) delete(del)
+  }
+
+  /** A probe twin's stable per-lake result dir, emptied of a prior
+    * run's batch segments before the stream starts.
+    */
+  private def clearedOutDir(spark: SparkSession, entry: String, lake: String): String = {
+    val outDir = Scratch.perLake(entry, lake)
+    val outPath = new org.apache.hadoop.fs.Path(outDir)
+    val fs = outPath.getFileSystem(spark.sessionState.newHadoopConf())
+    if (fs.exists(outPath)) fs.delete(outPath, true)
+    outDir
+  }
+
   /** Streaming twin of incremental ANN maintenance (`ann_ivf_append`):
     * the living-corpus daily operation as a stream. Arriving documents
     * land as micro-batches and each batch is folded into the PERSISTED
@@ -988,28 +1038,17 @@ object CdcStream {
     // stable index dir + ivfSave's overwrite semantics: each run
     // rebuilds the base layout (clearing prior appends) so repeated
     // Verify/bench invocations stay idempotent, like ann_ivf_append
-    val idxDir = Scratch.stable(
-      "stream_ivf_append/" + dir.replaceAll("[^A-Za-z0-9.]", "_"))
+    val idxDir = Scratch.perLake("stream_ivf_append", dir)
     AnnSuite.ivfSave(AnnSuite.ivfBuild(e.filter(col("vec_id") % 7 =!= 3),
       "vec_id", "embedding", AnnSuite.IvfK), idxDir)
     // the arriving corpus: held-out rows landed as 4 files, one
     // micro-batch each (maxFilesPerTrigger=1 → 4 incremental folds)
     val batchRows = e.filter(col("vec_id") % 7 === 3)
       .select("vec_id", "embedding")
-    val feed = Scratch.dir("stream_ivf_feed")
-    batchRows.repartition(4).write.mode("overwrite").parquet(feed)
-    val qname = "ivf_append_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = spark.readStream.schema(batchRows.schema)
-      .option("maxFilesPerTrigger", "1").parquet(feed)
-      .writeStream
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        graft.api.Graft.ivfAppend(spark, idxDir, df, "vec_id", "embedding", batchId)
-        ()
-      }
-      .option("checkpointLocation", Scratch.dir(qname + "_cp"))
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    recordProgress("stream_ivf_append", q)
+    foldFeed(spark, "stream_ivf_append", "stream_ivf_feed", "ivf_append_",
+        batchRows) { (df, batchId) =>
+      graft.api.Graft.ivfAppend(spark, idxDir, df, "vec_id", "embedding", batchId)
+    }
     AnnSuite.ivfQuery(AnnSuite.ivfLoad(spark, idxDir),
       e.filter(col("vec_id") < 5), "vec_id", "embedding",
       AnnSuite.IvfNProbe, 3)
@@ -1031,25 +1070,13 @@ object CdcStream {
   def ivfPqAppendStream(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.AnnSuite
     val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-    val idxDir = Scratch.stable(
-      "stream_ivfpq_append/" + dir.replaceAll("[^A-Za-z0-9.]", "_"))
+    val idxDir = Scratch.perLake("stream_ivfpq_append", dir)
     AnnSuite.ivfPqSave(AnnSuite.ivfPqBuild(e.filter(col("vec_id") % 7 =!= 3),
       "vec_id", "embedding", AnnSuite.IvfK, m = 8, dsub = 8, ksub = 16), idxDir)
-    val batchRows = e.filter(col("vec_id") % 7 === 3)
-    val feed = Scratch.dir("stream_ivfpq_feed")
-    batchRows.repartition(4).write.mode("overwrite").parquet(feed)
-    val qname = "ivfpq_append_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = spark.readStream.schema(batchRows.schema)
-      .option("maxFilesPerTrigger", "1").parquet(feed)
-      .writeStream
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        graft.api.Graft.ivfPqAppend(spark, idxDir, df, "vec_id", "embedding", batchId)
-        ()
-      }
-      .option("checkpointLocation", Scratch.dir(qname + "_cp"))
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    recordProgress("stream_ivfpq_append", q)
+    foldFeed(spark, "stream_ivfpq_append", "stream_ivfpq_feed", "ivfpq_append_",
+        e.filter(col("vec_id") % 7 === 3)) { (df, batchId) =>
+      graft.api.Graft.ivfPqAppend(spark, idxDir, df, "vec_id", "embedding", batchId)
+    }
     AnnSuite.ivfPqQuery(AnnSuite.ivfPqLoad(spark, idxDir),
       e.filter(col("vec_id") < 5), "vec_id", "embedding",
       AnnSuite.IvfNProbe, topK = 5)
@@ -1089,8 +1116,7 @@ object CdcStream {
   def ivfCdcStream(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.AnnSuite
     val e = Tables.embeddings(spark, dir)
-    val idxDir = Scratch.stable(
-      "stream_ivf_cdc/" + dir.replaceAll("[^A-Za-z0-9.]", "_"))
+    val idxDir = Scratch.perLake("stream_ivf_cdc", dir)
     AnnSuite.ivfSave(AnnSuite.ivfBuild(e.filter(col("vec_id") % 7 =!= 3),
       "vec_id", "embedding", AnnSuite.IvfK), idxDir)
     // the envelope feed: held-out rows arrive as inserts, a disjoint
@@ -1102,26 +1128,12 @@ object CdcStream {
       .select(lit("d").as("op"), col("vec_id"),
         lit(null).cast(org.apache.spark.sql.types.ArrayType(
           org.apache.spark.sql.types.FloatType)).as("embedding"))
-    val feed = Scratch.dir("stream_ivf_cdc_feed")
-    ins.unionByName(dels).repartition(4).write.mode("overwrite").parquet(feed)
-    val qname = "ivf_cdc_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = spark.readStream.schema(ins.schema)
-      .option("maxFilesPerTrigger", "1").parquet(feed)
-      .writeStream
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        val up = df.filter(col("op").isin("c", "u"))
-          .select("vec_id", "embedding")
-        val del = df.filter(col("op") === "d").select("vec_id")
-        if (!up.isEmpty)
-          graft.api.Graft.ivfAppend(spark, idxDir, up, "vec_id", "embedding", batchId)
-        if (!del.isEmpty)
-          graft.api.Graft.ivfDelete(spark, idxDir, del, "vec_id", batchId)
-        ()
-      }
-      .option("checkpointLocation", Scratch.dir(qname + "_cp"))
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    recordProgress("stream_ivf_cdc", q)
+    foldFeed(spark, "stream_ivf_cdc", "stream_ivf_cdc_feed", "ivf_cdc_",
+        ins.unionByName(dels)) { (df, batchId) =>
+      applyEnvelope(df, "vec_id", "embedding")(
+        graft.api.Graft.ivfAppend(spark, idxDir, _, "vec_id", "embedding", batchId),
+        graft.api.Graft.ivfDelete(spark, idxDir, _, "vec_id", batchId))
+    }
     AnnSuite.ivfQuery(AnnSuite.ivfLoad(spark, idxDir),
       e.filter(col("vec_id") < 5), "vec_id", "embedding",
       AnnSuite.IvfNProbe, 3)
@@ -1152,8 +1164,7 @@ object CdcStream {
   def ivfUpsertStream(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.AnnSuite
     val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-    val idxDir = Scratch.stable(
-      "stream_ivf_upsert/" + dir.replaceAll("[^A-Za-z0-9.]", "_"))
+    val idxDir = Scratch.perLake("stream_ivf_upsert", dir)
     AnnSuite.ivfSave(AnnSuite.ivfBuild(e.filter(col("vec_id") % 7 =!= 3),
       "vec_id", "embedding", AnnSuite.IvfK), idxDir)
     val ups = e.filter(col("vec_id") % 7 =!= 3 && col("vec_id") % 5 === 1)
@@ -1166,27 +1177,12 @@ object CdcStream {
       .select(lit("d").as("op"), col("vec_id"),
         lit(null).cast(org.apache.spark.sql.types.ArrayType(
           org.apache.spark.sql.types.FloatType)).as("embedding"))
-    val feed = Scratch.dir("stream_ivf_upsert_feed")
-    ups.unionByName(ins).unionByName(dels)
-      .repartition(4).write.mode("overwrite").parquet(feed)
-    val qname = "ivf_upsert_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = spark.readStream.schema(ups.schema)
-      .option("maxFilesPerTrigger", "1").parquet(feed)
-      .writeStream
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        val up = df.filter(col("op").isin("c", "u"))
-          .select("vec_id", "embedding")
-        val del = df.filter(col("op") === "d").select("vec_id")
-        if (!up.isEmpty)
-          graft.api.Graft.ivfAppend(spark, idxDir, up, "vec_id", "embedding", batchId)
-        if (!del.isEmpty)
-          graft.api.Graft.ivfDelete(spark, idxDir, del, "vec_id", batchId)
-        ()
-      }
-      .option("checkpointLocation", Scratch.dir(qname + "_cp"))
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    recordProgress("stream_ivf_upsert", q)
+    foldFeed(spark, "stream_ivf_upsert", "stream_ivf_upsert_feed", "ivf_upsert_",
+        ups.unionByName(ins).unionByName(dels)) { (df, batchId) =>
+      applyEnvelope(df, "vec_id", "embedding")(
+        graft.api.Graft.ivfAppend(spark, idxDir, _, "vec_id", "embedding", batchId),
+        graft.api.Graft.ivfDelete(spark, idxDir, _, "vec_id", batchId))
+    }
     val idx = AnnSuite.ivfLoadLww(spark, idxDir)
     val queriesDf = idx.assigned.filter(col("cand_id") < 5)
       .select(col("cand_id").as("vec_id"), col("ce2").as("embedding"))
@@ -1210,8 +1206,7 @@ object CdcStream {
   def ivfPqUpsertStream(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.AnnSuite
     val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-    val idxDir = Scratch.stable(
-      "stream_ivfpq_upsert/" + dir.replaceAll("[^A-Za-z0-9.]", "_"))
+    val idxDir = Scratch.perLake("stream_ivfpq_upsert", dir)
     AnnSuite.ivfPqSave(AnnSuite.ivfPqBuild(e.filter(col("vec_id") % 7 =!= 3),
       "vec_id", "embedding", AnnSuite.IvfK, m = 8, dsub = 8, ksub = 16), idxDir)
     val ups = e.filter(col("vec_id") % 7 =!= 3 && col("vec_id") % 5 === 1)
@@ -1224,27 +1219,12 @@ object CdcStream {
       .select(lit("d").as("op"), col("vec_id"),
         lit(null).cast(org.apache.spark.sql.types.ArrayType(
           org.apache.spark.sql.types.FloatType)).as("embedding"))
-    val feed = Scratch.dir("stream_ivfpq_upsert_feed")
-    ups.unionByName(ins).unionByName(dels)
-      .repartition(4).write.mode("overwrite").parquet(feed)
-    val qname = "ivfpq_upsert_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = spark.readStream.schema(ups.schema)
-      .option("maxFilesPerTrigger", "1").parquet(feed)
-      .writeStream
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        val up = df.filter(col("op").isin("c", "u"))
-          .select("vec_id", "embedding")
-        val del = df.filter(col("op") === "d").select("vec_id")
-        if (!up.isEmpty)
-          graft.api.Graft.ivfPqAppend(spark, idxDir, up, "vec_id", "embedding", batchId)
-        if (!del.isEmpty)
-          graft.api.Graft.ivfPqDelete(spark, idxDir, del, "vec_id", batchId)
-        ()
-      }
-      .option("checkpointLocation", Scratch.dir(qname + "_cp"))
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    recordProgress("stream_ivfpq_upsert", q)
+    foldFeed(spark, "stream_ivfpq_upsert", "stream_ivfpq_upsert_feed", "ivfpq_upsert_",
+        ups.unionByName(ins).unionByName(dels)) { (df, batchId) =>
+      applyEnvelope(df, "vec_id", "embedding")(
+        graft.api.Graft.ivfPqAppend(spark, idxDir, _, "vec_id", "embedding", batchId),
+        graft.api.Graft.ivfPqDelete(spark, idxDir, _, "vec_id", batchId))
+    }
     // the corpus's FINAL per-id state — queries probe what is served
     val fin = e
       .filter(!(col("vec_id") % 13 === 2 &&
@@ -1268,8 +1248,7 @@ object CdcStream {
   def ivfPqCdcStream(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.AnnSuite
     val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-    val idxDir = Scratch.stable(
-      "stream_ivfpq_cdc/" + dir.replaceAll("[^A-Za-z0-9.]", "_"))
+    val idxDir = Scratch.perLake("stream_ivfpq_cdc", dir)
     AnnSuite.ivfPqSave(AnnSuite.ivfPqBuild(e.filter(col("vec_id") % 7 =!= 3),
       "vec_id", "embedding", AnnSuite.IvfK, m = 8, dsub = 8, ksub = 16), idxDir)
     val ins = e.filter(col("vec_id") % 7 === 3)
@@ -1278,26 +1257,12 @@ object CdcStream {
       .select(lit("d").as("op"), col("vec_id"),
         lit(null).cast(org.apache.spark.sql.types.ArrayType(
           org.apache.spark.sql.types.FloatType)).as("embedding"))
-    val feed = Scratch.dir("stream_ivfpq_cdc_feed")
-    ins.unionByName(dels).repartition(4).write.mode("overwrite").parquet(feed)
-    val qname = "ivfpq_cdc_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = spark.readStream.schema(ins.schema)
-      .option("maxFilesPerTrigger", "1").parquet(feed)
-      .writeStream
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        val up = df.filter(col("op").isin("c", "u"))
-          .select("vec_id", "embedding")
-        val del = df.filter(col("op") === "d").select("vec_id")
-        if (!up.isEmpty)
-          graft.api.Graft.ivfPqAppend(spark, idxDir, up, "vec_id", "embedding", batchId)
-        if (!del.isEmpty)
-          graft.api.Graft.ivfPqDelete(spark, idxDir, del, "vec_id", batchId)
-        ()
-      }
-      .option("checkpointLocation", Scratch.dir(qname + "_cp"))
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    recordProgress("stream_ivfpq_cdc", q)
+    foldFeed(spark, "stream_ivfpq_cdc", "stream_ivfpq_cdc_feed", "ivfpq_cdc_",
+        ins.unionByName(dels)) { (df, batchId) =>
+      applyEnvelope(df, "vec_id", "embedding")(
+        graft.api.Graft.ivfPqAppend(spark, idxDir, _, "vec_id", "embedding", batchId),
+        graft.api.Graft.ivfPqDelete(spark, idxDir, _, "vec_id", batchId))
+    }
     AnnSuite.ivfPqQuery(AnnSuite.ivfPqLoad(spark, idxDir),
       e.filter(col("vec_id") < 5), "vec_id", "embedding",
       AnnSuite.IvfNProbe, topK = 5)
@@ -1309,7 +1274,7 @@ object CdcStream {
     * ([[ivfCdcStream]]'s shape on the MinHash band index): one
     * envelope stream of (op, doc_id, shingles) rows drives
     * bandIndexAppend for `c`/`u` ops (hash + band ONLY the batch —
-    * cost ∝ batch, write-time hot-bucket gate) and bandIndexDelete for
+    * cost ∝ batch, write-time hot-bucket gate) and BandStore.delete for
     * `d` ops (GDPR: a tombstoned document stops appearing as anyone's
     * dup_of the moment the tombstone lands). Delete-wins and terminal
     * per doc_id, so batch ORDER is irrelevant to the final standing
@@ -1326,8 +1291,7 @@ object CdcStream {
     import graft.operators.{CurationSuite, DedupSuite}
     org.apache.spark.sql.graft.Bridge.register(spark)
     val sh = DedupSuite.shingleSets(spark, dir).localCheckpoint()
-    val idxDir = Scratch.stable(
-      "stream_dedup_cdc/" + dir.replaceAll("[^A-Za-z0-9.]", "_"))
+    val idxDir = Scratch.perLake("stream_dedup_cdc", dir)
     DedupSuite.bandIndexSave(
       DedupSuite.minhashBands(sh.filter(col("doc_id") < 1000000L)), idxDir)
     val cOps = sh.filter(col("doc_id") >= 1000000L && col("doc_id") % 20 === 0)
@@ -1338,26 +1302,12 @@ object CdcStream {
       .select(lit("d").as("op"), col("doc_id"),
         lit(null).cast(org.apache.spark.sql.types.ArrayType(
           org.apache.spark.sql.types.StringType)).as("shingles"))
-    val feed = Scratch.dir("stream_dedup_cdc_feed")
-    cOps.unionByName(dOps).repartition(4).write.mode("overwrite").parquet(feed)
-    val qname = "dedup_cdc_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = spark.readStream.schema(cOps.schema)
-      .option("maxFilesPerTrigger", "1").parquet(feed)
-      .writeStream
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        val up = df.filter(col("op").isin("c", "u"))
-          .select("doc_id", "shingles")
-        val del = df.filter(col("op") === "d").select("doc_id")
-        if (!up.isEmpty)
-          DedupSuite.bandIndexAppend(DedupSuite.minhashBands(up), idxDir, batchId)
-        if (!del.isEmpty)
-          DedupSuite.bandIndexDelete(spark, idxDir, del, "doc_id", batchId)
-        ()
-      }
-      .option("checkpointLocation", Scratch.dir(qname + "_cp"))
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    recordProgress("stream_dedup_cdc", q)
+    foldFeed(spark, "stream_dedup_cdc", "stream_dedup_cdc_feed", "dedup_cdc_",
+        cOps.unionByName(dOps)) { (df, batchId) =>
+      applyEnvelope(df, "doc_id", "shingles")(
+        up => DedupSuite.bandIndexAppend(DedupSuite.minhashBands(up), idxDir, batchId),
+        DedupSuite.BandStore.delete(spark, idxDir, _, "doc_id", batchId))
+    }
     // the arriving probe batch (injected % 20 = 10) against the
     // CDC-maintained standing index — the dedup_incremental probe shape
     val batchBands = DedupSuite.gateHotBuckets(
@@ -1365,7 +1315,7 @@ object CdcStream {
         col("doc_id") >= 1000000L && col("doc_id") % 20 === 10)),
       Seq("band", "bucket"))
     val cands = batchBands.as("n")
-      .join(DedupSuite.bandIndexLoad(spark, idxDir).as("c"),
+      .join(DedupSuite.BandStore.load(spark, idxDir).as("c"),
         col("n.band") === col("c.band") && col("n.bucket") === col("c.bucket"))
       .select(col("n.doc_id").as("new_id"), col("c.doc_id").as("dup_of"))
       .dropDuplicates("new_id", "dup_of")
@@ -1426,8 +1376,7 @@ object CdcStream {
     org.apache.spark.sql.graft.Bridge.register(spark)
     val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     val k = DedupSuite.semanticK(spark, dir)
-    val idxDir = Scratch.stable(
-      "stream_dedup_semantic/" + dir.replaceAll("[^A-Za-z0-9.]", "_"))
+    val idxDir = Scratch.perLake("stream_dedup_semantic", dir)
     val idx = AnnSuite.ivfBuild(e, "vec_id", "embedding", k)
     // gate hot cells at BUILD time (the dedup_semantic cap): a collapsed
     // cell would make every probing batch quadratic against it. The
@@ -1441,26 +1390,12 @@ object CdcStream {
     val batchRows = e.filter(col("vec_id") % 10 === 0)
       .withColumn("embedding", expr("transform(embedding, (v, i) -> IF(i = 0, -v, v))"))
       .withColumn("vec_id", col("vec_id") + 1000000L)
-    val feed = Scratch.dir("stream_sem_feed")
-    batchRows.repartition(4).write.mode("overwrite").parquet(feed)
-    val outDir = Scratch.stable(
-      "stream_dedup_semantic_out/" + dir.replaceAll("[^A-Za-z0-9.]", "_"))
-    // stable result dir: clear segments from prior runs before streaming
-    val outPath = new org.apache.hadoop.fs.Path(outDir)
-    val fs = outPath.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(outPath)) fs.delete(outPath, true)
-    val qname = "sem_probe_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = spark.readStream.schema(batchRows.schema)
-      .option("maxFilesPerTrigger", "1").parquet(feed)
-      .writeStream
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        semanticProbeBatch(spark, idxDir, df)
-          .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-      }
-      .option("checkpointLocation", Scratch.dir(qname + "_cp"))
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    recordProgress("stream_dedup_semantic", q)
+    val outDir = clearedOutDir(spark, "stream_dedup_semantic_out", dir)
+    foldFeed(spark, "stream_dedup_semantic", "stream_sem_feed", "sem_probe_",
+        batchRows) { (df, batchId) =>
+      semanticProbeBatch(spark, idxDir, df)
+        .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
+    }
     spark.read.parquet(outDir)
       .select("cell", "vec_a", "vec_b", "cos")
       .orderBy("cell", "vec_a", "vec_b")
@@ -1489,31 +1424,17 @@ object CdcStream {
     import graft.operators.DedupSuite
     val w = DedupSuite.SubstringW
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-    val idxDir = Scratch.stable(
-      "stream_dedup_substring_idx/" + dir.replaceAll("[^A-Za-z0-9.]", "_"))
+    val idxDir = Scratch.perLake("stream_dedup_substring_idx", dir)
     DedupSuite.substringIndexSave(docs, w, idxDir)
     val batchRows = docs.filter(col("doc_id") % 10 === 0)
       .select((col("doc_id") + 2000000L).as("doc_id"),
         concat(lit("zzzmutation "), col("text")).as("text"))
-    val feed = Scratch.dir("stream_sub_feed")
-    batchRows.repartition(4).write.mode("overwrite").parquet(feed)
-    val outDir = Scratch.stable(
-      "stream_dedup_substring_out/" + dir.replaceAll("[^A-Za-z0-9.]", "_"))
-    val outPath = new org.apache.hadoop.fs.Path(outDir)
-    val fs = outPath.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(outPath)) fs.delete(outPath, true)
-    val qname = "sub_probe_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = spark.readStream.schema(batchRows.schema)
-      .option("maxFilesPerTrigger", "1").parquet(feed)
-      .writeStream
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        DedupSuite.substringProbeBatch(spark, idxDir, df, w)
-          .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-      }
-      .option("checkpointLocation", Scratch.dir(qname + "_cp"))
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    recordProgress("stream_dedup_substring", q)
+    val outDir = clearedOutDir(spark, "stream_dedup_substring_out", dir)
+    foldFeed(spark, "stream_dedup_substring", "stream_sub_feed", "sub_probe_",
+        batchRows) { (df, batchId) =>
+      DedupSuite.substringProbeBatch(spark, idxDir, df, w)
+        .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
+    }
     spark.read.parquet(outDir)
       .select("doc_id", "start_tok", "end_tok", "n_win")
       .orderBy("doc_id", "start_tok")

@@ -25,7 +25,7 @@ import graft.sources.Tables
   *     (`superseded_rows`, `append_segments`), so the curve maps them
   *     to serving cost.
   *
-  * Then one [[AnnSuite.ivfUpsertCompact]] and the post-fold reads —
+  * Then one `AnnSuite.IvfStore.upsertCompact` and the post-fold reads —
   * the recovery a deployment sizes its compaction cadence from.
   * Timings are medians of 3 noop-sink materializations (the Bench
   * convention: every output column evaluates, no filesystem cost).
@@ -80,7 +80,7 @@ object LwwCadence {
     val fs = new org.apache.hadoop.fs.Path(idxDir)
       .getFileSystem(spark.sessionState.newHadoopConf())
     def channelRows(): (Long, Long, Long) = {
-      val lay = AnnSuite.resolveLayout(spark, idxDir)
+      val lay = AnnSuite.IvfStore.resolve(spark, idxDir)
       val ap = new org.apache.hadoop.fs.Path(s"$idxDir/${lay.appends}")
       val dp = new org.apache.hadoop.fs.Path(s"$idxDir/deletes.parquet")
       val segs =
@@ -101,7 +101,7 @@ object LwwCadence {
         e.filter(col("vec_id") % 41 === b)
           .select(col("vec_id"), reverse(col("embedding")).as("embedding")),
         "vec_id", "embedding", batchId = 2L * b)
-      AnnSuite.ivfDelete(spark, idxDir,
+      AnnSuite.IvfStore.delete(spark, idxDir,
         e.filter(col("vec_id") % 83 === b).select("vec_id"),
         "vec_id", batchId = 2L * b + 1)
       val (segRows, tombRows, touched) = channelRows()
@@ -110,7 +110,7 @@ object LwwCadence {
         s""""terminal_serve_ms":${med3(terminalServe())}}"""
     }
 
-    val compactMs = timeMs(AnnSuite.ivfUpsertCompact(spark, idxDir))
+    val compactMs = timeMs(AnnSuite.IvfStore.upsertCompact(spark, idxDir))
     val postLww = med3(lwwServe())
     val postTerm = med3(terminalServe())
     println(s"""{"metric":"lww_cadence","sf_dir":"$dir0",""" +

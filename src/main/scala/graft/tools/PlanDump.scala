@@ -32,7 +32,7 @@ object PlanDump {
       e.filter(col("vec_id") % 5 === 1)
         .select(col("vec_id"), reverse(col("embedding")).as("embedding")),
       "vec_id", "embedding", batchId = 0L)
-    AnnSuite.ivfDelete(spark, dir,
+    AnnSuite.IvfStore.delete(spark, dir,
       e.filter(col("vec_id") % 13 === 2).select("vec_id"), "vec_id", batchId = 1L)
     val q = AnnSuite.ivfQuery(AnnSuite.ivfLoadLww(spark, dir),
       e.filter(col("vec_id") < 3).select("vec_id", "embedding"),

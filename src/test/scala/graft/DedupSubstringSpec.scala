@@ -151,8 +151,8 @@ class DedupSubstringSpec extends SparkSpecBase {
     assert(spans2 === Seq((200L, 2L, 11L, 3L)))
     // compaction folds the segments into a distinct base generation
     // without changing what probes see
-    assert(DedupSuite.substringIndexCompact(spark, dir))
-    assert(DedupSuite.substringIndexLoad(spark, dir)
+    assert(DedupSuite.HashStore.compact(spark, dir))
+    assert(DedupSuite.HashStore.load(spark, dir)
       .groupBy("h").count().filter(col("count") > 1).count() === 0L,
       "compaction left duplicate hashes in the folded base")
     assert(DedupSuite.substringProbeBatch(spark, dir, arriving, w)

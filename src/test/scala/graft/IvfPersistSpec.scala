@@ -176,7 +176,7 @@ class IvfPersistSpec extends SparkSpecBase {
     val rows = AnnSuite.ivfLoad(spark, dir).assigned.count()
     assert(before.nonEmpty && rows === e.count())
 
-    assert(AnnSuite.ivfCompact(spark, dir), "compaction had segments to fold")
+    assert(AnnSuite.IvfStore.compact(spark, dir), "compaction had segments to fold")
     // generation 1 committed; generation 0 is RETAINED for in-flight
     // readers (it retires only when generation 2 commits)
     assert(dataDirs() === Seq("MANIFEST-1", "appends.parquet",
@@ -184,7 +184,7 @@ class IvfPersistSpec extends SparkSpecBase {
     assert(AnnSuite.ivfLoad(spark, dir).assigned.count() === rows)
     assert(served() === before, "compaction changed the served top-k")
     // nothing left to fold → no-op (and the generation is stable)
-    assert(!AnnSuite.ivfCompact(spark, dir))
+    assert(!AnnSuite.IvfStore.compact(spark, dir))
     assert(dataDirs() === Seq("MANIFEST-1", "appends.parquet",
       "assigned.parquet", "assigned_v1.parquet"))
 
@@ -207,7 +207,7 @@ class IvfPersistSpec extends SparkSpecBase {
       .filter(col("cand_id") === 5000007L).count() === 1L)
     // a second compaction folds generation 1 → 2 AND retires the
     // retained generation 0
-    assert(AnnSuite.ivfCompact(spark, dir))
+    assert(AnnSuite.IvfStore.compact(spark, dir))
     assert(dataDirs() === Seq("MANIFEST-1", "MANIFEST-2",
       "appends_v1.parquet", "assigned_v1.parquet", "assigned_v2.parquet"))
     assert(AnnSuite.ivfLoad(spark, dir).assigned.count() === rows + 1)
@@ -229,7 +229,7 @@ class IvfPersistSpec extends SparkSpecBase {
     val inFlight = AnnSuite.ivfQuery(AnnSuite.ivfLoad(spark, dir),
       e.filter(col("vec_id") < 5), "vec_id", "embedding",
       AnnSuite.IvfNProbe, 3)
-    assert(AnnSuite.ivfCompact(spark, dir))
+    assert(AnnSuite.IvfStore.compact(spark, dir))
     // the pre-compaction plan still executes — and serves the same
     // rows the post-compaction view does (the fold changed layout,
     // never content)
@@ -253,11 +253,11 @@ class IvfPersistSpec extends SparkSpecBase {
     }
     AnnSuite.ivfAppend(spark, dir, e.filter(col("vec_id") % 7 === 3),
       "vec_id", "embedding", batchId = 0L)
-    assert(AnnSuite.ivfCompact(spark, dir, retain = 2)) // gen 1
+    assert(AnnSuite.IvfStore.compact(spark, dir, retain = 2)) // gen 1
     AnnSuite.ivfAppend(spark, dir,
       e.filter(col("vec_id") === 7L).withColumn("vec_id", col("vec_id") + 6000000L),
       "vec_id", "embedding", batchId = 1L)
-    assert(AnnSuite.ivfCompact(spark, dir, retain = 2)) // gen 2
+    assert(AnnSuite.IvfStore.compact(spark, dir, retain = 2)) // gen 2
     // retain=2 at gen 2's commit keeps generations 0 AND 1 on disk
     assert(names().contains("assigned.parquet"))
     assert(names().contains("assigned_v1.parquet"))
@@ -265,7 +265,7 @@ class IvfPersistSpec extends SparkSpecBase {
       e.filter(col("vec_id") === 8L).withColumn("vec_id", col("vec_id") + 6000000L),
       "vec_id", "embedding", batchId = 2L)
     // shrinking retain back to 1 heals the extra retained generations
-    assert(AnnSuite.ivfCompact(spark, dir)) // gen 3, retain = 1
+    assert(AnnSuite.IvfStore.compact(spark, dir)) // gen 3, retain = 1
     assert(!names().contains("assigned.parquet"))
     assert(!names().contains("assigned_v1.parquet"))
     assert(names().contains("assigned_v2.parquet"))
@@ -310,7 +310,7 @@ class IvfPersistSpec extends SparkSpecBase {
     run(injectCrash = true)
     assert(crashed.get, "the injected crash never fired — batch 2 was not reached")
     // maintenance compaction folds the landed-but-uncommitted batch 2
-    assert(AnnSuite.ivfCompact(spark, dir))
+    assert(AnnSuite.IvfStore.compact(spark, dir))
     run(injectCrash = false) // restart: the checkpoint replays batch 2
     val loaded = AnnSuite.ivfLoad(spark, dir)
     assert(loaded.assigned.groupBy("cand_id")
@@ -337,14 +337,14 @@ class IvfPersistSpec extends SparkSpecBase {
     val before = served()
     // die after landing the folded base but BEFORE the manifest commit:
     // readers must still see the OLD generation, bit-identically
-    assert(!AnnSuite.ivfCompact(spark, dir, crashBeforeCommit = true))
-    assert(AnnSuite.resolveLayout(spark, dir).gen === 0,
+    assert(!AnnSuite.IvfStore.compact(spark, dir, crashBeforeCommit = true))
+    assert(AnnSuite.IvfStore.resolve(spark, dir).gen === 0,
       "a torn compaction must not advance the generation")
     assert(AnnSuite.ivfLoad(spark, dir).assigned.count() === e.count())
     assert(served() === before, "torn compaction leaked into the served view")
     // the redo overwrites the torn landing and completes the fold —
     // every row exactly once, served set unchanged
-    assert(AnnSuite.ivfCompact(spark, dir))
+    assert(AnnSuite.IvfStore.compact(spark, dir))
     val loaded = AnnSuite.ivfLoad(spark, dir)
     assert(loaded.assigned.groupBy("cand_id")
       .agg(count(lit(1)).as("n")).filter(col("n") > 1).count() === 0L)
@@ -359,7 +359,7 @@ class IvfPersistSpec extends SparkSpecBase {
     val doomed = e.filter(col("vec_id") % 11 === 5).select("vec_id")
     val nDoomed = doomed.count()
     assert(nDoomed > 0)
-    assert(AnnSuite.ivfDelete(spark, dir, doomed, "vec_id", batchId = 0L))
+    assert(AnnSuite.IvfStore.delete(spark, dir, doomed, "vec_id", batchId = 0L))
 
     // masked at once: the loaded view anti-joins the tombstones
     def deletedVisible() = AnnSuite.ivfLoad(spark, dir).assigned
@@ -375,8 +375,8 @@ class IvfPersistSpec extends SparkSpecBase {
     // purge: compaction folds the tombstone-filtered view into a new
     // base generation — the deleted rows are PHYSICALLY absent from the
     // new base files and the delete channel is cleared
-    assert(AnnSuite.ivfCompact(spark, dir), "a deletes-only compaction must fold")
-    val lay = AnnSuite.resolveLayout(spark, dir)
+    assert(AnnSuite.IvfStore.compact(spark, dir), "a deletes-only compaction must fold")
+    val lay = AnnSuite.IvfStore.resolve(spark, dir)
     assert(lay.gen === 1)
     assert(spark.read.parquet(s"$dir/${lay.base}")
       .filter(col("cand_id") % 11 === 5).count() === 0L,
@@ -388,7 +388,7 @@ class IvfPersistSpec extends SparkSpecBase {
     assert(served() === masked, "the purge changed the served top-k")
 
     // a replay of the folded delete batch is refused by the watermark
-    assert(!AnnSuite.ivfDelete(spark, dir, doomed, "vec_id", batchId = 0L))
+    assert(!AnnSuite.IvfStore.delete(spark, dir, doomed, "vec_id", batchId = 0L))
   }
 
   test("an append replay cannot resurrect rows a folded delete removed") {
@@ -406,8 +406,8 @@ class IvfPersistSpec extends SparkSpecBase {
     val doomed = batch.filter(col("vec_id") % 3 === 0).select("vec_id")
     val nDoomed = doomed.count()
     assert(nDoomed > 0)
-    assert(AnnSuite.ivfDelete(spark, dir, doomed, "vec_id", batchId = 1L))
-    assert(AnnSuite.ivfCompact(spark, dir))
+    assert(AnnSuite.IvfStore.delete(spark, dir, doomed, "vec_id", batchId = 1L))
+    assert(AnnSuite.IvfStore.compact(spark, dir))
     val after = AnnSuite.ivfLoad(spark, dir).assigned.count()
     assert(after === e.count() - nDoomed)
     // the replay: batchId 0 <= folded watermark 1 → lands NOTHING
@@ -428,7 +428,7 @@ class IvfPersistSpec extends SparkSpecBase {
     // the delete arrives in an EARLIER batch than the insert (a CDC
     // stream slicing one changefeed into micro-batches can do this for
     // independent keys); the anti-join masks regardless of landing order
-    assert(AnnSuite.ivfDelete(spark, dir, doomed, "vec_id", batchId = 0L))
+    assert(AnnSuite.IvfStore.delete(spark, dir, doomed, "vec_id", batchId = 0L))
     assert(AnnSuite.ivfAppend(spark, dir, batch, "vec_id", "embedding", batchId = 1L))
     val loaded = AnnSuite.ivfLoad(spark, dir).assigned
     assert(loaded.filter(col("cand_id") % 7 === 3 && col("cand_id") % 3 === 0)
@@ -448,7 +448,7 @@ class IvfPersistSpec extends SparkSpecBase {
       "vec_id", "embedding", AnnSuite.IvfK), dir)
     AnnSuite.ivfAppend(spark, dir, e.filter(col("vec_id") % 7 === 3),
       "vec_id", "embedding", batchId = 0L)
-    AnnSuite.ivfDelete(spark, dir,
+    AnnSuite.IvfStore.delete(spark, dir,
       e.filter(col("vec_id") % 13 === 2).select("vec_id"), "vec_id", batchId = 1L)
     val bulk = AnnSuite.ivfQuery(AnnSuite.ivfLoad(spark, dir),
       e.filter(col("vec_id") < 5), "vec_id", "embedding",
@@ -525,13 +525,13 @@ class IvfPersistSpec extends SparkSpecBase {
     val dir = Scratch.dir("ivf_carry_spec")
     AnnSuite.ivfSave(AnnSuite.ivfBuild(e.filter(col("vec_id") % 7 =!= 3),
       "vec_id", "embedding", AnnSuite.IvfK, carry = Seq("label")), dir)
-    assert(AnnSuite.ivfCarryOf(spark, dir) === Seq("label"))
+    assert(AnnSuite.IvfStore.carryOf(spark, dir) === Seq("label"))
     // appends to a carried index carry the same attribute columns
     assert(AnnSuite.ivfAppend(spark, dir, e.filter(col("vec_id") % 7 === 3),
       "vec_id", "embedding", batchId = 0L, carry = Seq("label")))
     // compaction preserves the carried column (it derives the carry
     // list from the base schema, not from the caller)
-    assert(AnnSuite.ivfCompact(spark, dir))
+    assert(AnnSuite.IvfStore.compact(spark, dir))
     val loaded = AnnSuite.ivfLoad(spark, dir, carry = Seq("label"))
     assert(loaded.assigned.columns.toSeq ===
       Seq("cand_id", "cell", "ce2", "label"))
@@ -571,8 +571,8 @@ class IvfPersistSpec extends SparkSpecBase {
     // torn retrain: the new base and centroids land but no manifest —
     // readers still serve the OLD pair, bit-identically
     assert(!AnnSuite.ivfRetrain(spark, dir, AnnSuite.IvfK, crashBeforeCommit = true))
-    assert(AnnSuite.resolveLayout(spark, dir).gen === 0)
-    assert(AnnSuite.ivfCentroidsPath(spark, dir).endsWith("centroids.parquet"),
+    assert(AnnSuite.IvfStore.resolve(spark, dir).gen === 0)
+    assert(AnnSuite.IvfStore.sidecarPath(spark, dir, "centroids").endsWith("centroids.parquet"),
       "a torn retrain's centroids leaked into the serving path")
     assert(served() === stale)
 
@@ -580,8 +580,8 @@ class IvfPersistSpec extends SparkSpecBase {
     // build (build-on-the-view determinism — the oracle's claim,
     // asserted engine-side here)
     assert(AnnSuite.ivfRetrain(spark, dir, AnnSuite.IvfK))
-    assert(AnnSuite.resolveLayout(spark, dir).gen === 1)
-    assert(AnnSuite.ivfCentroidsPath(spark, dir).endsWith("centroids_v1.parquet"))
+    assert(AnnSuite.IvfStore.resolve(spark, dir).gen === 1)
+    assert(AnnSuite.IvfStore.sidecarPath(spark, dir, "centroids").endsWith("centroids_v1.parquet"))
     val fresh = AnnSuite.ivfQuery(
       AnnSuite.ivfBuild(e, "vec_id", "embedding", AnnSuite.IvfK),
       e.filter(col("vec_id") < 5), "vec_id", "embedding",
@@ -609,7 +609,7 @@ class IvfPersistSpec extends SparkSpecBase {
     val dir = Scratch.dir("ivf_retrain_purge_spec")
     AnnSuite.ivfSave(AnnSuite.ivfBuild(e, "vec_id", "embedding", AnnSuite.IvfK), dir)
     val doomed = e.filter(col("vec_id") % 11 === 5).select("vec_id")
-    assert(AnnSuite.ivfDelete(spark, dir, doomed, "vec_id", batchId = 0L))
+    assert(AnnSuite.IvfStore.delete(spark, dir, doomed, "vec_id", batchId = 0L))
     // plan a read against generation 0, and capture what it should
     // return (a retrain MOVES centroids, so the old and new
     // generations may legitimately rank differently — the isolation
@@ -624,7 +624,7 @@ class IvfPersistSpec extends SparkSpecBase {
     assert(AnnSuite.ivfRetrain(spark, dir, AnnSuite.IvfK))
     // the retrain trained on the tombstone-filtered view: deleted rows
     // are physically absent from the new base and the channel is clear
-    val lay = AnnSuite.resolveLayout(spark, dir)
+    val lay = AnnSuite.IvfStore.resolve(spark, dir)
     assert(lay.gen === 1)
     assert(spark.read.parquet(s"$dir/${lay.base}")
       .filter(col("cand_id") % 11 === 5).count() === 0L)
@@ -669,9 +669,9 @@ class IvfPersistSpec extends SparkSpecBase {
     val doomed = e.filter(col("vec_id") % 7 === 3 && col("vec_id") % 2 === 0)
       .select("vec_id")
     assert(doomed.count() > 0)
-    assert(AnnSuite.ivfDelete(spark, dir, doomed, "vec_id", batchId = 0L))
+    assert(AnnSuite.IvfStore.delete(spark, dir, doomed, "vec_id", batchId = 0L))
     // deletes-only compaction between the tombstone and its insert
-    assert(AnnSuite.ivfCompact(spark, dir))
+    assert(AnnSuite.IvfStore.compact(spark, dir))
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sessionState.newHadoopConf())
     assert(fs.exists(new org.apache.hadoop.fs.Path(s"$dir/deletes_v1.parquet")),
@@ -687,10 +687,10 @@ class IvfPersistSpec extends SparkSpecBase {
       e.filter(col("vec_id") % 7 === 3 && col("vec_id") % 2 =!= 0).count())
     // the next compaction sees the carried tombstones matched by the
     // appended rows: they purge with the channel, nothing re-carries
-    assert(AnnSuite.ivfCompact(spark, dir))
+    assert(AnnSuite.IvfStore.compact(spark, dir))
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/deletes_v2.parquet")),
       "matched tombstones must purge at the fold, not carry forever")
-    val lay2 = AnnSuite.resolveLayout(spark, dir)
+    val lay2 = AnnSuite.IvfStore.resolve(spark, dir)
     assert(lay2.gen === 2)
     assert(spark.read.parquet(s"$dir/${lay2.base}")
       .filter(col("cand_id") % 7 === 3 && col("cand_id") % 2 === 0)
@@ -714,11 +714,11 @@ class IvfPersistSpec extends SparkSpecBase {
     // ordinary maintenance proceeds: one append, one plain compaction
     assert(AnnSuite.ivfAppend(spark, dir, e.filter(col("vec_id") % 7 === 3),
       "vec_id", "embedding", batchId = 0L))
-    assert(AnnSuite.ivfCompact(spark, dir))
-    assert(AnnSuite.resolveLayout(spark, dir).gen === 1)
+    assert(AnnSuite.IvfStore.compact(spark, dir))
+    assert(AnnSuite.IvfStore.resolve(spark, dir).gen === 1)
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/centroids_v1.parquet")),
       "the torn retrain's sidecar became visible as generation-1 state")
-    assert(AnnSuite.ivfCentroidsPath(spark, dir) === s"$dir/centroids.parquet",
+    assert(AnnSuite.IvfStore.sidecarPath(spark, dir, "centroids") === s"$dir/centroids.parquet",
       "generation 1 must keep serving the build's centroids")
     // and the serving pair is consistent: the compacted store answers
     // exactly like a build-then-append store that never saw the crash
@@ -739,7 +739,7 @@ class IvfPersistSpec extends SparkSpecBase {
     AnnSuite.ivfSave(AnnSuite.ivfBuild(e, "vec_id", "embedding", k = 7), dir)
     assert(graft.api.Graft.ivfRetrain(spark, dir)) // no k passed
     val cents = spark.read
-      .parquet(AnnSuite.ivfCentroidsPath(spark, dir)).count()
+      .parquet(AnnSuite.IvfStore.sidecarPath(spark, dir, "centroids")).count()
     assert(cents === 7L,
       s"default-argument retrain re-clustered at the wrong geometry ($cents cells)")
   }
@@ -761,7 +761,7 @@ class IvfPersistSpec extends SparkSpecBase {
     // the original vector — the last op must win, not the first)
     assert(AnnSuite.ivfAppend(spark, dir, rowOf(xId, mutate = true),
       "vec_id", "embedding", batchId = 0L))
-    assert(AnnSuite.ivfDelete(spark, dir,
+    assert(AnnSuite.IvfStore.delete(spark, dir,
       rowOf(yId, mutate = false).select("vec_id"), "vec_id", batchId = 1L))
     assert(AnnSuite.ivfAppend(spark, dir, rowOf(yId, mutate = true),
       "vec_id", "embedding", batchId = 2L))
@@ -774,7 +774,7 @@ class IvfPersistSpec extends SparkSpecBase {
     // the tombstone wins (the terminal stores' delete-wins tie rule)
     assert(AnnSuite.ivfAppend(spark, dir, rowOf(zId, mutate = true),
       "vec_id", "embedding", batchId = 4L))
-    assert(AnnSuite.ivfDelete(spark, dir,
+    assert(AnnSuite.IvfStore.delete(spark, dir,
       rowOf(zId, mutate = false).select("vec_id"), "vec_id", batchId = 4L))
 
     def check(assigned: org.apache.spark.sql.DataFrame): Unit = {
@@ -799,7 +799,7 @@ class IvfPersistSpec extends SparkSpecBase {
     check(AnnSuite.ivfLoadLww(spark, dir).assigned)
     // the upsert compaction folds the LWW view (never the terminal
     // view) and, being LWW, carries NO tombstones forward
-    assert(AnnSuite.ivfUpsertCompact(spark, dir))
+    assert(AnnSuite.IvfStore.upsertCompact(spark, dir))
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sessionState.newHadoopConf())
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/deletes_v1.parquet")),
@@ -872,7 +872,7 @@ class IvfPersistSpec extends SparkSpecBase {
     val ins = e.filter(col("vec_id") % 7 === 3).select("vec_id", "embedding")
     AnnSuite.ivfAppend(spark, dir, ups.unionByName(ins),
       "vec_id", "embedding", batchId = 0L)
-    AnnSuite.ivfDelete(spark, dir,
+    AnnSuite.IvfStore.delete(spark, dir,
       e.filter(col("vec_id") % 13 === 2 &&
         col("vec_id") % 5 =!= 1 && col("vec_id") % 7 =!= 3).select("vec_id"),
       "vec_id", batchId = 1L)

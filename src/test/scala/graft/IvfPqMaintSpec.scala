@@ -78,11 +78,11 @@ class IvfPqMaintSpec extends SparkSpecBase {
     assert(twoFolds.nonEmpty && twoFolds === bulk)
 
     // a torn compaction is invisible (readers stay on generation 0)
-    assert(!AnnSuite.ivfPqCompact(spark, dir, crashBeforeCommit = true))
+    assert(!AnnSuite.CodesStore.compact(spark, dir, crashBeforeCommit = true))
     assert(served() === twoFolds, "torn code compaction leaked into the served view")
     // the redo commits; the served set is unchanged and the code rows
     // are exactly-once
-    assert(AnnSuite.ivfPqCompact(spark, dir))
+    assert(AnnSuite.CodesStore.compact(spark, dir))
     assert(served() === twoFolds, "code compaction changed the served top-k")
     val codes = AnnSuite.ivfPqLoad(spark, dir).pq.codes
     assert(codes.groupBy("cand_id").agg(count(lit(1)).as("n"))

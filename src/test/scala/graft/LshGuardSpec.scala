@@ -73,14 +73,14 @@ class LshGuardSpec extends SparkSpecBase {
     DedupSuite.bandIndexSave(
       mk(0, 2600, "HOT").unionByName(mk(100000, 10, "ok")), dir)
     assert(DedupSuite.bandIndexAppend(mk(10000, 2600, "HOT"), dir, batchId = 0L))
-    assert(DedupSuite.bandIndexLoad(spark, dir)
+    assert(DedupSuite.BandStore.load(spark, dir)
       .filter(col("bucket") === "HOT").count() === 5200L,
       "per-segment gating must serve a bucket that is only union-hot")
-    assert(DedupSuite.bandIndexCompact(spark, dir))
-    assert(DedupSuite.bandIndexLoad(spark, dir)
+    assert(DedupSuite.BandStore.compact(spark, dir))
+    assert(DedupSuite.BandStore.load(spark, dir)
       .filter(col("bucket") === "HOT").count() === 0L,
       "the fold must re-gate across segment boundaries")
-    assert(DedupSuite.bandIndexLoad(spark, dir).count() === 10L,
+    assert(DedupSuite.BandStore.load(spark, dir).count() === 10L,
       "non-hot buckets must survive the fold untouched")
   }
 

@@ -211,7 +211,7 @@ class PlanShapeSpec extends SparkSpecBase {
       "vec_id", "embedding", AnnSuite.IvfK), dir)
     AnnSuite.ivfAppend(spark, dir, e.filter(col("vec_id") % 7 === 3),
       "vec_id", "embedding", batchId = 0L)
-    AnnSuite.ivfDelete(spark, dir,
+    AnnSuite.IvfStore.delete(spark, dir,
       e.filter(col("vec_id") % 13 === 2).select("vec_id"), "vec_id", batchId = 1L)
     val p = AnnSuite.ivfLoadLww(spark, dir).assigned.queryExecution
       .explainString(ExplainMode.fromString("formatted"))

@@ -68,7 +68,7 @@ class PqPersistSpec extends SparkSpecBase {
     val doomed = e.filter(col("vec_id") % 11 === 5).select("vec_id")
     val nDoomed = doomed.count()
     assert(nDoomed > 0)
-    assert(AnnSuite.ivfPqDelete(spark, dir, doomed, "vec_id", batchId = 0L))
+    assert(AnnSuite.CodesStore.delete(spark, dir, doomed, "vec_id", batchId = 0L))
     def served() = AnnSuite.ivfPqQuery(AnnSuite.ivfPqLoad(spark, dir),
       e.filter(col("vec_id") < 5), "vec_id", "embedding",
       nprobe = AnnSuite.IvfNProbe, topK = 5)
@@ -81,8 +81,8 @@ class PqPersistSpec extends SparkSpecBase {
     assert(masked.nonEmpty)
     // purge: the compacted code base physically excludes them and the
     // delete channel resets; the served top-k is unchanged
-    assert(AnnSuite.ivfPqCompact(spark, dir), "deletes-only compaction must fold")
-    val lay = graft.sources.SegmentStore.resolve(spark, dir, AnnSuite.CodesScheme)
+    assert(AnnSuite.CodesStore.compact(spark, dir), "deletes-only compaction must fold")
+    val lay = graft.sources.SegmentStore.resolve(spark, dir, AnnSuite.CodesStore)
     assert(lay.gen === 1)
     assert(spark.read.parquet(s"$dir/${lay.base}")
       .filter(col("cand_id") % 11 === 5).count() === 0L)
@@ -91,7 +91,7 @@ class PqPersistSpec extends SparkSpecBase {
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/codes_deletes_v1.parquet")))
     assert(served() === masked)
     // the folded delete's batchId is under the watermark → replay no-ops
-    assert(!AnnSuite.ivfPqDelete(spark, dir, doomed, "vec_id", batchId = 0L))
+    assert(!AnnSuite.CodesStore.delete(spark, dir, doomed, "vec_id", batchId = 0L))
   }
 
   test("ivfPqRetrain swaps the serving quadruple atomically; torn retrains invisible; appends use the new book") {
@@ -112,8 +112,8 @@ class PqPersistSpec extends SparkSpecBase {
     assert(!AnnSuite.ivfPqRetrain(spark, dir, e, "vec_id", "embedding",
       crashBeforeCommit = true))
     assert(graft.sources.SegmentStore
-      .resolve(spark, dir, AnnSuite.CodesScheme).gen === 0)
-    assert(AnnSuite.ivfPqSidecarPath(spark, dir, "book")
+      .resolve(spark, dir, AnnSuite.CodesStore).gen === 0)
+    assert(AnnSuite.CodesStore.sidecarPath(spark, dir, "book")
       .endsWith("/book.parquet"),
       "a torn retrain's book leaked into the serving path")
     assert(served() === stale)
@@ -121,7 +121,7 @@ class PqPersistSpec extends SparkSpecBase {
     // the redo commits: the swapped index equals a fresh full-corpus
     // build (the oracle's claim, asserted engine-side)
     assert(AnnSuite.ivfPqRetrain(spark, dir, e, "vec_id", "embedding"))
-    assert(AnnSuite.ivfPqSidecarPath(spark, dir, "book")
+    assert(AnnSuite.CodesStore.sidecarPath(spark, dir, "book")
       .endsWith("book_v1.parquet"))
     val freshDir = Scratch.dir("ivfpq_retrain_fresh")
     AnnSuite.ivfPqSave(AnnSuite.ivfPqBuild(e, "vec_id", "embedding",
@@ -161,11 +161,11 @@ class PqPersistSpec extends SparkSpecBase {
     AnnSuite.ivfPqSave(AnnSuite.ivfPqBuild(e.filter(col("vec_id") % 7 =!= 3),
       "vec_id", "embedding", AnnSuite.IvfK, m = m, dsub = dsub, ksub = ksub,
       carry = Seq("label")), dir)
-    assert(AnnSuite.pqCarryOf(spark, dir) === Seq("label"))
+    assert(AnnSuite.CodesStore.carryOf(spark, dir) === Seq("label"))
     // appends derive the carry list from the base codes' schema
     assert(AnnSuite.ivfPqAppend(spark, dir, e.filter(col("vec_id") % 7 === 3),
       "vec_id", "embedding", batchId = 0L))
-    assert(AnnSuite.ivfPqCompact(spark, dir))
+    assert(AnnSuite.CodesStore.compact(spark, dir))
     val loaded = AnnSuite.pqLoad(spark, dir, carry = Seq("label"))
     assert(loaded.codes.columns.toSeq === Seq("cand_id", "codes", "cell", "label"))
     assert(loaded.codes.count() === e.count())
@@ -201,8 +201,8 @@ class PqPersistSpec extends SparkSpecBase {
       AnnSuite.IvfK, m, dsub, ksub), dir)
     val doomed = e.filter(col("vec_id") % 11 === 5).select("vec_id")
     assert(doomed.count() > 0)
-    assert(AnnSuite.ivfPqDelete(spark, dir, doomed, "vec_id", batchId = 0L))
-    assert(AnnSuite.ivfPqCompact(spark, dir))
+    assert(AnnSuite.CodesStore.delete(spark, dir, doomed, "vec_id", batchId = 0L))
+    assert(AnnSuite.CodesStore.compact(spark, dir))
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sessionState.newHadoopConf())
     assert(!fs.exists(
@@ -246,9 +246,9 @@ class PqPersistSpec extends SparkSpecBase {
       .select("cand_id", "codes").collect().map(_.toString).sorted.toSeq
     assert(served === freshCodes, "a live-id update did not supersede its encoding")
     // the upsert fold keeps exactly the LWW view and carries no tombstones
-    assert(AnnSuite.ivfPqDelete(spark, dir,
+    assert(AnnSuite.CodesStore.delete(spark, dir,
       e.filter(col("vec_id") === 1).select("vec_id"), "vec_id", batchId = 1L))
-    assert(AnnSuite.ivfPqUpsertCompact(spark, dir))
+    assert(AnnSuite.CodesStore.upsertCompact(spark, dir))
     val folded = AnnSuite.pqLoadLww(spark, dir).codes
     assert(folded.filter(col("cand_id") === 1).count() === 0L)
     assert(folded.count() === lww.count() - 1)

@@ -6,8 +6,8 @@ import graft.operators.{AnnSuite, DedupSuite}
 import graft.sources.{Scratch, Tables}
 
 /** The scheduled store-reconciliation kernels: the LWW audit
-  * (reconIndexStore(lww = true)) and the band-store audit
-  * (reconBandStore). Two properties per kernel: a HEALTHY store reads
+  * (IvfStore.audit(lww = true)) and the band-store audit
+  * (BandStore.audit). Two properties per kernel: a HEALTHY store reads
   * clean (every corruption invariant 0), and each planted fault class
   * moves exactly its own invariant.
   */
@@ -28,9 +28,9 @@ class ReconIndexSpec extends SparkSpecBase {
     val dels = e.filter(col("vec_id") % 13 === 2 && col("vec_id") % 5 =!= 1)
       .select("vec_id")
     assert(AnnSuite.ivfAppend(spark, dir, ups, "vec_id", "embedding", 0L))
-    assert(AnnSuite.ivfDelete(spark, dir, dels, "vec_id", 1L))
-    val inv = invMap(AnnSuite.reconIndexStore(spark, dir, AnnSuite.IvfScheme,
-      "lww", AnnSuite.ivfLoadLww(spark, dir).assigned, e, lww = true))
+    assert(AnnSuite.IvfStore.delete(spark, dir, dels, "vec_id", 1L))
+    val inv = invMap(AnnSuite.IvfStore.audit(spark, dir,
+      "lww", e, lww = true))
     assert(inv("dup_keys") === 0L, "healthy LWW view must be dup-free")
     assert(inv("foreign_in_index") === 0L)
     assert(inv("orphan_tombstones") === 0L,
@@ -48,14 +48,14 @@ class ReconIndexSpec extends SparkSpecBase {
       AnnSuite.ivfBuild(e, "vec_id", "embedding", AnnSuite.IvfK), dir)
     // delete then RE-INSERT the same keys (supersede) — not orphans
     val keys = e.filter(col("vec_id") % 13 === 2)
-    assert(AnnSuite.ivfDelete(spark, dir, keys.select("vec_id"), "vec_id", 0L))
+    assert(AnnSuite.IvfStore.delete(spark, dir, keys.select("vec_id"), "vec_id", 0L))
     assert(AnnSuite.ivfAppend(spark, dir, keys, "vec_id", "embedding", 1L))
     // the damage: a slice landed TWICE inside one segment
     val dup = e.filter(col("vec_id") % 7 === 3)
     assert(AnnSuite.ivfAppend(spark, dir, dup.unionByName(dup),
       "vec_id", "embedding", 2L))
-    val inv = invMap(AnnSuite.reconIndexStore(spark, dir, AnnSuite.IvfScheme,
-      "lww", AnnSuite.ivfLoadLww(spark, dir).assigned, e, lww = true))
+    val inv = invMap(AnnSuite.IvfStore.audit(spark, dir,
+      "lww", e, lww = true))
     assert(inv("dup_keys") === dup.count(),
       "the duplicated keys must surface through the LWW view audit")
     assert(inv("orphan_tombstones") === 0L,
@@ -71,8 +71,8 @@ class ReconIndexSpec extends SparkSpecBase {
       DedupSuite.minhashBands(sh.filter(col("doc_id") < 1000000L)), dir)
     DedupSuite.bandIndexAppend(
       DedupSuite.minhashBands(sh.filter(col("doc_id") >= 1000000L)), dir, 0L)
-    assert(DedupSuite.bandIndexCompact(spark, dir))
-    val clean = invMap(DedupSuite.reconBandStore(spark, dir, "bands",
+    assert(DedupSuite.BandStore.compact(spark, dir))
+    val clean = invMap(DedupSuite.BandStore.audit(spark, dir, "bands",
       sh.select("doc_id")))
     assert(clean("dup_keys") === 0L)
     assert(clean("missing_from_index") === 0L)
@@ -87,9 +87,9 @@ class ReconIndexSpec extends SparkSpecBase {
     DedupSuite.bandIndexAppend(seg, dir, 2L)
     val sess = spark
     import sess.implicits._
-    DedupSuite.bandIndexDelete(spark, dir,
+    DedupSuite.BandStore.delete(spark, dir,
       Seq(-42L).toDF("doc_id"), "doc_id", 3L)
-    val bad = invMap(DedupSuite.reconBandStore(spark, dir, "bands",
+    val bad = invMap(DedupSuite.BandStore.audit(spark, dir, "bands",
       sh.select("doc_id")))
     assert(bad("dup_keys") ===
       4L * sh.filter(col("doc_id") >= 1000000L && col("doc_id") % 20 === 0).count())

@@ -31,6 +31,21 @@ class StoreMetaSpec extends SparkSpecBase {
     assert(ParquetMeta.headBoolean(spark, s"$dir/flags.parquet", "no_such").isEmpty)
   }
 
+  test("headBoolean finds a flags file under a subdirectory, matching head()") {
+    val s = spark
+    import s.implicits._
+    val dir = Scratch.dir("meta_flag_nested_spec")
+    for (v <- Seq(true, false)) {
+      // partitioned: the one data file lands under p=0/
+      Seq((v, 0)).toDF("residual", "p").coalesce(1)
+        .write.mode("overwrite").partitionBy("p").parquet(s"$dir/part.parquet")
+      val viaJob = spark.read.parquet(s"$dir/part.parquet").head()
+        .getAs[Boolean]("residual")
+      assert(ParquetMeta.headBoolean(spark, s"$dir/part.parquet", "residual")
+        === Some(viaJob) && viaJob === v)
+    }
+  }
+
   test("rowCountDriver matches count() incl. partitioned layouts and hidden files") {
     val dir = Scratch.dir("meta_count_spec")
     val df = Tables.embeddings(spark, sf).select(col("vec_id"),
