@@ -1,10 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.LongAdder
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd, SparkListenerTaskStart}
-import org.apache.spark.sql.SparkSession
-
 /** Per-round benchmark: times the headline queries at the driver-chosen
   * SF and prints one JSON line. Headline = the throughput-representative
   * subset (scan/agg, joins, windows, checksums, cdc apply, dedup, text,
@@ -74,58 +69,12 @@ object Bench {
     // doc). The steady-state serving curve is bench/lww_cadence.json.
     "recon_index_lww")
 
-  /** Sums task-level shuffle-write and spill metrics across every task
-    * the session runs; the timed loop snapshots it around each run.
-    * Task metrics are exact counters, not samples — identical plans
-    * produce identical byte counts run over run.
-    */
-  private final class WorkMeter extends SparkListener {
-    val bytes = new LongAdder; val records = new LongAdder; val spill = new LongAdder
-    // Max CONCURRENTLY-RUNNING tasks since the last resetConc() — the
-    // per-query parallelism evidence the wall-clock scaling probe can't
-    // give at toy SFs (r16 verdict: 8-core total ≈ 32-core total because
-    // every local stage is planning-bound; whether a query CAN fill the
-    // cores is a property of its task graph, and this measures exactly
-    // that). Listener events arrive in posting order on one queue, so
-    // the running count is consistent with the scheduler's own ordering.
-    private val active = new java.util.concurrent.atomic.AtomicInteger
-    private val high = new java.util.concurrent.atomic.AtomicInteger
-    override def onTaskStart(e: SparkListenerTaskStart): Unit = {
-      val a = active.incrementAndGet()
-      high.getAndAccumulate(a, Math.max(_: Int, _: Int))
-    }
-    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-      active.decrementAndGet()
-      val m = e.taskMetrics
-      // successful tasks only: a failed-then-retried task would count
-      // its shuffle writes twice and fabricate a gate flag
-      if (m != null && e.taskInfo != null && e.taskInfo.successful) {
-        bytes.add(m.shuffleWriteMetrics.bytesWritten)
-        records.add(m.shuffleWriteMetrics.recordsWritten)
-        spill.add(m.memoryBytesSpilled + m.diskBytesSpilled)
-      }
-    }
-    def snap: (Long, Long, Long) = (bytes.sum, records.sum, spill.sum)
-    def resetConc(): Unit = high.set(active.get)
-    def maxConc: Int = high.get
-  }
-
   private case class Work(bytes: Long, records: Long, spill: Long, conc: Int)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      // (note: each lake table is a single one-row-group parquet file,
-      // so scan parallelism is fixed at 1 task regardless of
-      // maxPartitionBytes; post-scan stages parallelize across cores)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Session.cpus
+    val spark = Session.local(cpus)
     val meter = new WorkMeter
     spark.sparkContext.addSparkListener(meter)
 
@@ -627,7 +576,7 @@ object Bench {
     // SPARK_GRAFT_CPUS must not fabricate regressions.
     val budgetPath = "/root/repo/bench/shuffle_budget.txt"
     val budget: Map[String, Long] =
-      if (!sfDir.endsWith("sf0.1") || cpus != "32" ||
+      if (!sfDir.endsWith("sf0.1") || cpus != 32 ||
         !new java.io.File(budgetPath).isFile) Map.empty
       else scala.io.Source.fromFile(budgetPath, "UTF-8").getLines()
         .map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#"))
@@ -659,12 +608,11 @@ object Bench {
     // directly.
     // clamp to the session's core count: TaskStart events can outpace
     // TaskEnd processing on the listener bus (measured: 13 "running"
-    // at local[8]), but local mode physically runs at most `cpus`
+    // on 8 local cores), but local mode physically runs at most `cpus`
     // tasks — the clamped figure is the defensible one
-    val concCap = cpus.toIntOption.getOrElse(Int.MaxValue)
     def concMap(work: Map[String, Work]): String =
       work.toSeq.sortBy(_._1)
-        .map { case (k, w) => jstr(k) + ":" + math.min(w.conc, concCap) }
+        .map { case (k, w) => jstr(k) + ":" + math.min(w.conc, cpus) }
         .mkString("{", ",", "}")
     val concJson = s""","cpus":$cpus,"max_concurrent_tasks":${concMap(workMap)}""" +
       (if (sf1Work.isEmpty) ""
@@ -675,7 +623,7 @@ object Bench {
     val compactScaling = {
       def sub(work: Map[String, Work]): String =
         scalingProbe.flatMap(k => work.get(k)
-          .map(w => jstr(k) + ":" + math.min(w.conc, concCap)))
+          .map(w => jstr(k) + ":" + math.min(w.conc, cpus)))
           .mkString("{", ",", "}")
       s""","cpus":$cpus,"max_conc":${sub(workMap)}""" +
         (if (sf1Work.isEmpty) "" else s""","max_conc_sf1":${sub(sf1Work)}""")
@@ -726,7 +674,7 @@ object Bench {
     // next default (sf10-less) run overwriting last_bench.json.
     val fullDefaultRun = sys.env.get("SPARK_GRAFT_BENCH_ONLY").isEmpty &&
       !sys.env.contains("SPARK_GRAFT_BENCH_ALL") && sfDir.endsWith("sf0.1") &&
-      cpus == "32" && streamingNames.nonEmpty && sf1Dir.nonEmpty && sf01mDir.nonEmpty &&
+      cpus == 32 && streamingNames.nonEmpty && sf1Dir.nonEmpty && sf01mDir.nonEmpty &&
       // the continuous section (incl. its @sf1 point) is part of the
       // committed artifact's shape — a run with any of its knobs off
       // must not clobber last_bench.json with the reduced shape

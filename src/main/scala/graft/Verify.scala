@@ -27,27 +27,39 @@ object Verify {
   def main(args: Array[String]): Unit = {
     // optional 3rd+ args: restrict to the named queries (local iteration
     // aid; the driver always invokes with exactly two)
-    val (sfDir, outDir, only) = (args(0), args(1), args.drop(2).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus)
+    try run(spark, args(0), args(1), args.drop(2).toSet)
+    finally spark.stop()
+  }
+
+  /** Dumps every entry (or the `only` names) to `<outDir>/<name>`, plus
+    * `oracle_sql.json` and `verify_status.jsonl`: one `{"name", "status":
+    * "ok"|"failed", "wall_ms", "error"}` line appended per finished entry,
+    * so a failure is on disk even when a tail capture drops stderr.
+    */
+  def run(spark: SparkSession, sfDir: String, outDir: String,
+      only: Set[String]): Unit = {
     // hoist the per-entry session setup: register the native functions
     // once here, so the 59 in-entry Bridge.register calls become no-ops
     // (idempotence guard in Bridge) instead of 59 × 11 re-registrations
     org.apache.spark.sql.graft.Bridge.register(spark)
     new java.io.File(outDir).mkdirs()
+    val status = Files.newBufferedWriter(Paths.get(s"$outDir/verify_status.jsonl"))
 
     def runOne(name: String): Unit = {
-      try SparkEntry.queries(name)(spark, sfDir).coalesce(1).write
-        .mode("overwrite").parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
+      val t0 = System.nanoTime()
+      val err =
+        try {
+          SparkEntry.queries(name)(spark, sfDir).coalesce(1).write
+            .mode("overwrite").parquet(s"$outDir/$name")
+          None
+        } catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          Some(e.toString)
+        }
+      val line = s"""{"name":${q(name)},"status":"${if (err.isEmpty) "ok" else "failed"}",""" +
+        s""""wall_ms":${(System.nanoTime() - t0) / 1000000},"error":${err.map(q).getOrElse("null")}}"""
+      status.synchronized { status.write(line); status.newLine(); status.flush() }
       // pipeline exit: drop any persists the query registered so cached
       // intermediates don't accumulate across the 230-query run (main
       // code holds no persists — localCheckpoint blocks are unaffected —
@@ -73,23 +85,14 @@ object Verify {
         }
     // default 8 measured best at sf0.01 (316 s sequential → 136 s at 4
     // → 111 s at 8 → 127 s at 12, same 228/228 oracle PASS); override
-    // with SPARK_GRAFT_VERIFY_PAR, 1 = the old sequential loop
+    // with SPARK_GRAFT_VERIFY_PAR — a one-thread pool runs the units in
+    // the sequential loop's order
     val par = sys.env.getOrElse("SPARK_GRAFT_VERIFY_PAR", "8").toInt.max(1)
-    if (par == 1 || units.length <= 1) units.foreach(_.foreach(runOne))
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(par,
-        new java.util.concurrent.ThreadFactory {
-          private val n = new java.util.concurrent.atomic.AtomicInteger
-          def newThread(r: Runnable): Thread = {
-            val t = new Thread(r, s"verify-${n.incrementAndGet()}")
-            t.setDaemon(true); t
-          }
-        })
-      try units.map { u =>
-        pool.submit(new Runnable { def run(): Unit = u.foreach(runOne) })
-      }.foreach(_.get()) // runOne never throws; .get() surfaces pool errors
-      finally pool.shutdown()
-    }
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(par)
+    try units.map { u =>
+      pool.submit(new Runnable { def run(): Unit = u.foreach(runOne) })
+    }.foreach(_.get()) // runOne never throws; .get() surfaces pool errors
+    finally { pool.shutdown(); status.close() }
     // LSH hot-bucket diagnostic: the Spark-side gate caps buckets at
     // MaxBucket while the oracles run uncapped — surface the observed
     // occupancy at THIS scale factor so a corpus that crosses the cap
@@ -104,21 +107,21 @@ object Verify {
     } catch { case e: Throwable =>
       System.err.println(s"[verify] bucket diagnostics failed: ${e.getMessage}")
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
   }
+
+  // JSON string escape: backslash, quote, and ALL control chars (<0x20)
+  // — a tab or CR in builder-authored SQL would otherwise make the
+  // driver's json.load fail and silently zero the round's correctness.
+  private def q(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

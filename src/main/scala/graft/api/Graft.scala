@@ -1075,21 +1075,35 @@ object Graft {
       graft.operators.LlmExtra.mirrorCells(up), iters)
   }
 
+  /** Tokens covered by the top-k words of `textCol` (lower-cased,
+    * split on ' '), per k; no row for k < 1. The sum depends only on
+    * the sorted counts (words tied at the k boundary have equal counts),
+    * so it is read off the (count → number of words) histogram: each k
+    * takes the count level its k-th word falls in. The ordered window
+    * spans the distinct counts (at most √(2·tokens)), not the vocabulary.
+    */
   def vocabCoverage(df: DataFrame, textCol: Column, ks: Seq[Long]): DataFrame = {
     import df.sparkSession.implicits._
-    val counts = df.select(explode(split(lower(textCol), " ")).as("w"))
+    val upTo = Window.orderBy(desc("cnt"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val all = Window.partitionBy()
+    val levels = df.select(explode(split(lower(textCol), " ")).as("w"))
       .filter(col("w") =!= "")
       .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
-    val ranked = counts.withColumn("rk",
-      row_number().over(Window.orderBy(desc("cnt"), col("w"))))
-    val tot = counts.agg(sum(col("cnt")).as("total_tokens"),
-      count(lit(1)).as("n_vocab"))
-    ks.toDF("k").join(ranked, col("rk") <= col("k"))
-      .groupBy(col("k"))
-      .agg(count(lit(1)).as("n_top"), sum(col("cnt")).as("covered_tokens"))
-      .crossJoin(broadcast(tot))
+      .groupBy(col("cnt")).agg(count(lit(1)).as("n_w"))
+      .select(col("cnt"), col("n_w"),
+        // words / tokens at counts >= cnt
+        sum(col("n_w")).over(upTo).as("words_to"),
+        sum(col("cnt") * col("n_w")).over(upTo).as("tokens_to"),
+        sum(col("cnt") * col("n_w")).over(all).as("total_tokens"),
+        sum(col("n_w")).over(all).as("n_vocab"))
+    val nTop = least(col("k"), col("words_to"))
+    ks.toDF("k")
+      .join(levels, col("words_to") - col("n_w") < col("k") &&
+        (col("k") <= col("words_to") || col("words_to") === col("n_vocab")))
+      .select(col("k"), nTop.as("n_top"),
+        (col("tokens_to") - (col("words_to") - nTop) * col("cnt")).as("covered_tokens"),
+        col("total_tokens"), col("n_vocab"))
       .withColumn("coverage_ppm", expr("covered_tokens * 1000000 DIV total_tokens"))
-      .select("k", "n_top", "covered_tokens", "total_tokens", "n_vocab", "coverage_ppm")
   }
 }

@@ -1056,10 +1056,10 @@ object AnnSuite {
   }
 
   /** The held-out slice (% 7 = 3) displaced by a constant +0.5 on
-    * every dimension — the deterministic drift fixture the shifted
-    * gate entries and [[graft.tools.DriftCurve]] share. The offset is
-    * computed in doubles and cast back to FLOAT (IEEE-identical in
-    * DuckDB as CAST(... AS REAL)), so drifted chains stay hash-checked.
+    * every dimension — the drift fixture of the shifted gate entries
+    * and of bench/drift_curve.json. The offset is computed in doubles
+    * and cast back to FLOAT (IEEE-identical in DuckDB as
+    * CAST(... AS REAL)), so drifted chains stay hash-checked.
     */
   private[graft] def driftedCorpus(e: DataFrame): DataFrame =
     e.select(col("vec_id"),
@@ -1644,8 +1644,8 @@ object AnnSuite {
     // discrimination collapses), while the retrained build allocates
     // cells and sub-centroids in the displaced region. This entry is
     // the FORM at oracle size; bench/drift_curve.json carries the
-    // measurement-size reading (graft.tools.DriftCurve, 100 queries,
-    // recall@10) where retrained beats stale beyond the noise band —
+    // measurement-size reading (100 queries, recall@10) where
+    // retrained beats stale beyond the noise band —
     // the committed number that justifies pulling the ivfPqRetrain
     // trigger (ref: the reference's recon discipline exists to detect
     // divergence worth repairing, src/reconciliation/report/

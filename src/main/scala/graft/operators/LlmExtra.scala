@@ -433,12 +433,12 @@ object LlmExtra {
     // Vocabulary coverage curve (the tokenizer-budget stat BPE training
     // starts from): what fraction of corpus tokens the top-K words
     // cover, for K in {10, 100, 1000}. Explode→count is one shuffle
-    // with map-side combine keyed on the word; the global rank sorts
-    // only the VOCABULARY (distinct words — bounded by language, not
-    // corpus bytes), so the single-partition window is safe at 100 TB.
+    // with map-side combine keyed on the word. No window ranks the
+    // vocabulary (10⁸+ words at 100 TB would sit on one task): the
+    // coverage is read off the count histogram, whose ordered window
+    // spans only the distinct count values.
     "text_vocab_coverage" -> { (s, d) =>
-      // fixture binding of Graft.vocabCoverage (the vocabulary-counts
-      // leg is localCheckpointed inside it; blocks auto-released)
+      // fixture binding of Graft.vocabCoverage
       graft.api.Graft.vocabCoverage(Tables.documents(s, d), col("text"),
           Seq(10L, 100L, 1000L))
         .orderBy("k")

@@ -194,10 +194,10 @@ object TextSuite {
       // reliableCheckpoint (spark.sparkContext.setCheckpointDir to a
       // DFS) or persist(DISK_ONLY_2) — one-line change, same plan shape
       // (SURVEY §5 records the operating guidance).
-      // Layout (r11, from the sf10 component profile in
-      // tools/TfidfProfile): repartition DOCS by doc_id BEFORE the
-      // explode. HashPartitioning(doc_id) satisfies the (doc_id, w)
-      // count aggregate's ClusteredDistribution, so the (doc, term)
+      // Layout (r11, from an sf10 per-stage component profile):
+      // repartition DOCS by doc_id BEFORE the explode.
+      // HashPartitioning(doc_id) satisfies the (doc_id, w) count
+      // aggregate's ClusteredDistribution, so the (doc, term)
       // pair exchange disappears — the build runs scan → one doc-level
       // shuffle → in-stage aggregate (measured sf10: 2.8 s → 1.2 s;
       // full query ~9 s → ~5 s). Byte trade at 100 TB: the wire now

@@ -109,25 +109,43 @@ object ParquetMeta {
     * subdirectory is found, not read as absent). Row-group skipping
     * never applies (the table is one row); files are visited in listing
     * order and the first non-null value wins — exactly head()'s
-    * semantics on a coalesce(1)-written table.
+    * semantics on a coalesce(1)-written table. A table partitioned BY
+    * `column` keeps the value only in its `<column>=<v>/` directory
+    * name, where head() finds it too. An absent table is `None`; a data
+    * file with the column neither in its schema nor in its path throws
+    * (reading it as absent would silently flip the caller's default).
     */
   def headBoolean(s: SparkSession, path: String, column: String): Option[Boolean] = {
     val conf = s.sessionState.newHadoopConf()
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(conf)
     if (!fs.exists(p)) return None
+    val rootUri = fs.getFileStatus(p).getPath.toUri.getPath
+    def fromPath(f: org.apache.hadoop.fs.Path): Option[Boolean] =
+      f.toUri.getPath.stripPrefix(rootUri).split('/').dropRight(1)
+        .collectFirst { case seg if seg.startsWith(column + "=") => seg.drop(column.length + 1) }
+        .map(v => if (v == "__HIVE_DEFAULT_PARTITION__") None else Some(v.toBoolean))
+        .getOrElse(throw new IllegalStateException(
+          s"$f carries no column '$column' in its schema or its path"))
     dataFiles(fs, p).iterator.flatMap { f =>
-      val reader = org.apache.parquet.hadoop.ParquetReader
-        .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(), f)
-        .withConf(conf).build()
-      try {
-        Iterator.continually(reader.read()).takeWhile(_ != null)
-          .collectFirst {
-            case g if g.getType.containsField(column) &&
-              g.getFieldRepetitionCount(column) > 0 =>
-              g.getBoolean(column, 0)
-          }
-      } finally reader.close()
+      val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
+      val (rows, inFile) =
+        try (footer.getRecordCount, footer.getFileMetaData.getSchema.containsField(column))
+        finally footer.close()
+      if (rows == 0) None
+      else if (!inFile) fromPath(f)
+      else {
+        val reader = org.apache.parquet.hadoop.ParquetReader
+          .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(), f)
+          .withConf(conf).build()
+        try {
+          Iterator.continually(reader.read()).takeWhile(_ != null)
+            .collectFirst {
+              case g if g.getFieldRepetitionCount(column) > 0 => g.getBoolean(column, 0)
+            }
+        } finally reader.close()
+      }
     }.nextOption()
   }
 }

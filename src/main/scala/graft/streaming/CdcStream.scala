@@ -257,8 +257,8 @@ object CdcStream {
     // DEFAULT (10), indistinguishable from a user set, so that form
     // silently never pinned and the every-10th-batch snapshot spike
     // returned (measured: sf1 RocksDB p95 554 ms pinned → 1062 ms
-    // unpinned, spikes riding exactly batches 10/20). ContinuousTune's
-    // cadence sweep passes its value through this parameter instead.
+    // unpinned, spikes riding exactly batches 10/20). A cadence sweep
+    // passes its value through this parameter instead.
     val cadenceKey = "spark.sql.streaming.stateStore.minDeltasForSnapshot"
     val probeConf = Map(
       "spark.sql.shuffle.partitions" -> stateParts.toString,

@@ -1,68 +1,49 @@
 package graft.tools
 
-import scala.collection.mutable
+import graft.WorkMeter
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
-
-/** Dev tool: per-JOB wall-time attribution for one registry query —
-  * which driver ACTIONS (parquet writes, localCheckpoints, counts,
-  * broadcast builds, the final noop sink) a query's wall is made of,
-  * keyed by the action's call site. The bench's per-query wall is a sum
-  * of jobs; this splits it so optimization targets the dominant ones
-  * instead of guessing. Usage:
+/** Dev tool: per-JOB wall-time attribution for registry queries — which
+  * driver ACTIONS (parquet writes, localCheckpoints, counts, broadcast
+  * builds, the final noop sink) a query's wall is made of. Each entry
+  * runs once warm, then once metered under job group `<entry>`, and its
+  * jobs print by call site and by job group: AQE stage jobs land on an
+  * anonymous site, and streaming micro-batch jobs carry their query's
+  * runId group, so the group view keeps them as their own rows. Usage:
   *
-  *   runMain graft.tools.JobProfile <sfDir> <query> [runs]
+  *   runMain graft.tools.JobProfile <sfDir> <query>...
   */
 object JobProfile {
-  private final class JobMeter extends SparkListener {
-    case class J(id: Int, site: String, t0: Long, var t1: Long = -1L)
-    val jobs = mutable.LinkedHashMap.empty[Int, J]
-    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
-      // the result stage's name IS the triggering action's call site
-      val site = e.stageInfos.lastOption.map(_.name.takeWhile(_ != '(').trim)
-        .getOrElse("?")
-      jobs(e.jobId) = J(e.jobId, site, System.nanoTime())
-    }
-    override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
-      jobs.get(e.jobId).foreach(_.t1 = System.nanoTime())
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val names = if (args.length > 1) args.drop(1).toSeq else Seq("recon_index")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(graft.Session.cpus)
 
     names.foreach { name =>
       def run(): Unit = graft.SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
 
       run() // warm: codegen + scratch-layout steady state
-      val meter = new JobMeter
+      val meter = new WorkMeter
       spark.sparkContext.addSparkListener(meter)
       spark.catalog.clearCache(); System.gc()
+      spark.sparkContext.setJobGroup(name, name)
       val t0 = System.nanoTime()
-      run()
+      try run() finally spark.sparkContext.clearJobGroup()
       val wall = (System.nanoTime() - t0) / 1e9
       // drain so the last job's end event is folded in
       org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
       spark.sparkContext.removeSparkListener(meter)
-      println(f"===== $name%s: wall $wall%.2f s, ${meter.jobs.size}%d jobs =====")
-      val done = meter.jobs.values.toSeq.filter(_.t1 > 0)
-      val bySite = done.groupBy(_.site).map { case (s, js) =>
-        (s, js.size, js.map(j => (j.t1 - j.t0) / 1e9).sum)
-      }.toSeq.sortBy(-_._3)
-      bySite.take(15).foreach { case (site, n, sec) =>
-        println(f"$sec%8.3f s  x$n%-3d  $site%s") }
-      val jobSum = done.map(j => (j.t1 - j.t0) / 1e9).sum
-      println(f"job-covered: $jobSum%.2f s of $wall%.2f s (gap = driver planning/IO)")
+      val done = meter.jobs.filter(_.end >= 0)
+      println(f"===== $name%s: wall $wall%.2f s, ${done.size}%d jobs =====")
+      Seq[(String, WorkMeter.Job => String)]("call site" -> (_.site), "job group" -> (_.group))
+        .foreach { case (title, key) =>
+          println(s"-- by $title")
+          done.groupBy(key).map { case (k, js) => (k, js.size, js.map(_.ms).sum / 1e3) }
+            .toSeq.sortBy(-_._3).take(15)
+            .foreach { case (k, n, sec) => println(f"$sec%8.3f s  x$n%-3d  $k%s") }
+        }
+      println(f"job-covered: ${done.map(_.ms).sum / 1e3}%.2f s of $wall%.2f s " +
+        "(gap = driver planning/IO)")
     }
     spark.stop()
   }

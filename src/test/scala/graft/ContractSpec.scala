@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 /** Guards the driver contract itself against drift. */
 class ContractSpec extends SparkSpecBase {
 
@@ -34,6 +36,34 @@ class ContractSpec extends SparkSpecBase {
     assert(budget == headline,
       s"unbudgeted headline: ${headline -- budget}; stale budget lines: ${budget -- headline}")
     assert(headline.subsetOf(SparkEntry.queries.keySet))
+  }
+
+  test("every session is built by graft.Session, with no hardcoded local master") {
+    // needles assembled at runtime so this file does not match itself
+    val builder = "SparkSession" + ".builder"
+    val master = ("local" + """\[\d+\]""").r
+    val files = Seq("src/main", "src/test").flatMap { d =>
+      val ps = java.nio.file.Files.walk(java.nio.file.Paths.get(d))
+      try ps.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally ps.close()
+    }
+    assert(files.size > 50, s"scanned only ${files.size} files from ${sys.props("user.dir")}")
+    val src = files.map(p => p.toString -> java.nio.file.Files.readString(p))
+    assert(src.collect { case (p, t) if t.contains(builder) => p } ==
+      Seq("src/main/scala/graft/Session.scala"))
+    assert(src.collect { case (p, t) if master.findFirstIn(t).nonEmpty => p }.isEmpty)
+  }
+
+  test("Session.local(4) carries the shared engine settings") {
+    val cpus = 4
+    val s = Session.local(cpus)
+    assert(s.sparkContext.master == s"local[$cpus]")
+    assert(s.conf.get("spark.sql.shuffle.partitions") == "4")
+    assert(s.conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(s.conf.get("spark.sql.autoBroadcastJoinThreshold") == (64L * 1024 * 1024).toString)
+    assert(s.sparkContext.uiWebUrl.isEmpty)
+    assert(org.apache.logging.log4j.LogManager.getRootLogger.getLevel ==
+      org.apache.logging.log4j.Level.WARN)
   }
 
   test("oracle SQL mentions every output column name of its query") {

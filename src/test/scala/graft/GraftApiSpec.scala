@@ -389,6 +389,32 @@ class GraftApiSpec extends SparkSpecBase {
     df.sparkSession.catalog.clearCache()
   }
 
+  test("vocabCoverage equals the vocabulary-window form, ties at the k boundary included") {
+    // counts: a=5, b=2, c=2, d=2, e=1, f=1 (13 tokens) — k=2 and k=3 cut the tied
+    // b/c/d level, k=5 cuts the tied e/f level, k=9 is past the vocabulary
+    val df = Seq("a a b c", "a d b", "A c d e", "a  f", "").toDF("t")
+    val ks = Seq(0L, 1L, 2L, 3L, 4L, 5L, 6L, 9L)
+    val counts = df.select(explode(split(lower(col("t")), " ")).as("w"))
+      .filter(col("w") =!= "").groupBy(col("w")).agg(count(lit(1)).as("cnt"))
+    val ranked = counts.withColumn("rk", row_number().over(
+      org.apache.spark.sql.expressions.Window.orderBy(desc("cnt"), col("w"))))
+    val tot = counts.agg(sum(col("cnt")).as("total_tokens"), count(lit(1)).as("n_vocab"))
+    val viaWindow = ks.toDF("k").join(ranked, col("rk") <= col("k"))
+      .groupBy(col("k"))
+      .agg(count(lit(1)).as("n_top"), sum(col("cnt")).as("covered_tokens"))
+      .crossJoin(tot)
+      .withColumn("coverage_ppm", expr("covered_tokens * 1000000 DIV total_tokens"))
+      .select("k", "n_top", "covered_tokens", "total_tokens", "n_vocab", "coverage_ppm")
+    val got = Graft.vocabCoverage(df, col("t"), ks)
+    assert(got.schema.map(f => f.name -> f.dataType) ==
+      viaWindow.schema.map(f => f.name -> f.dataType))
+    assert(got.orderBy("k").collect().toSeq == viaWindow.orderBy("k").collect().toSeq)
+    val byK = got.collect().map(r => r.getLong(0) -> r).toMap
+    assert(!byK.contains(0L))
+    assert(byK(3L).getAs[Long]("covered_tokens") == 9L)
+    assert(byK(9L).getAs[Long]("n_top") == 6L && byK(9L).getAs[Long]("covered_tokens") == 13L)
+  }
+
   /** 12 deterministic 16-dim vectors in [-0.75, 0.75] — a dimension the
     * lake does NOT use, so these tests fail if the kernels still
     * hard-code 64 anywhere.

@@ -26,9 +26,11 @@ class StoreMetaSpec extends SparkSpecBase {
       assert(ParquetMeta.headBoolean(spark, s"$dir/flags.parquet", "residual")
         === Some(viaJob) && viaJob === v)
     }
-    // absent table and absent column both degrade to None, never throw
+    // an absent table degrades to None; a column neither the file nor
+    // its path carries throws
     assert(ParquetMeta.headBoolean(spark, s"$dir/nope.parquet", "residual").isEmpty)
-    assert(ParquetMeta.headBoolean(spark, s"$dir/flags.parquet", "no_such").isEmpty)
+    intercept[IllegalStateException](
+      ParquetMeta.headBoolean(spark, s"$dir/flags.parquet", "no_such"))
   }
 
   test("headBoolean finds a flags file under a subdirectory, matching head()") {
@@ -44,6 +46,33 @@ class StoreMetaSpec extends SparkSpecBase {
       assert(ParquetMeta.headBoolean(spark, s"$dir/part.parquet", "residual")
         === Some(viaJob) && viaJob === v)
     }
+  }
+
+  test("headBoolean reads a flags table partitioned BY the flag from its path, matching head()") {
+    val s = spark
+    import s.implicits._
+    val dir = Scratch.dir("meta_flag_partcol_spec")
+    for (v <- Seq(true, false)) {
+      // the value lives only in the residual=<v>/ directory name (which
+      // partition inference reads back as the string "true"/"false")
+      Seq((v, 1L)).toDF("residual", "n").coalesce(1)
+        .write.mode("overwrite").partitionBy("residual").parquet(s"$dir/flags.parquet")
+      val viaJob = spark.read.parquet(s"$dir/flags.parquet").head()
+        .getAs[Any]("residual").toString.toBoolean
+      assert(ParquetMeta.headBoolean(spark, s"$dir/flags.parquet", "residual")
+        === Some(viaJob) && viaJob === v)
+    }
+  }
+
+  test("headBoolean throws when data files carry the column nowhere") {
+    val s = spark
+    import s.implicits._
+    val dir = Scratch.dir("meta_flag_missing_spec")
+    Seq((true, 0)).toDF("other", "p").coalesce(1)
+      .write.mode("overwrite").partitionBy("p").parquet(s"$dir/flags.parquet")
+    val e = intercept[IllegalStateException](
+      ParquetMeta.headBoolean(spark, s"$dir/flags.parquet", "residual"))
+    assert(e.getMessage.contains("residual"))
   }
 
   test("rowCountDriver matches count() incl. partitioned layouts and hidden files") {
