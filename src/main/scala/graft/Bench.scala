@@ -141,12 +141,16 @@ object Bench {
           val before = snapDrained()
           meter.resetConc()
           val t0 = System.nanoTime()
+          // the entry's jobs (Par propagates the group to its pool
+          // threads) carry job group `<name>`
+          spark.sparkContext.setJobGroup(name, name)
           val err =
             try { materialize(SparkEntry.queries(name)(spark, dir)); None }
             catch { case e: Throwable =>
               System.err.println(s"[bench] $name FAILED: $e")
               Some(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(120)}")
             }
+            finally spark.sparkContext.clearJobGroup()
           val dt = (System.nanoTime() - t0) / 1e9
           if (err.isEmpty && i == timedRuns) {
             val after = snapDrained()

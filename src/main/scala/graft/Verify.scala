@@ -34,8 +34,13 @@ object Verify {
 
   /** Dumps every entry (or the `only` names) to `<outDir>/<name>`, plus
     * `oracle_sql.json` and `verify_status.jsonl`: one `{"name", "status":
-    * "ok"|"failed", "wall_ms", "error"}` line appended per finished entry,
-    * so a failure is on disk even when a tail capture drops stderr.
+    * "ok"|"failed", "jobs", "wall_ms", "error"}` line appended per
+    * finished entry, so a failure is on disk even when a tail capture
+    * drops stderr. Each entry runs under job group `<name>` (Par carries
+    * it to its pool threads); `jobs` counts the [[WorkMeter]] jobs of
+    * that group, dump write included, read after the listener bus
+    * drains. A streaming entry's micro-batch jobs carry their query's
+    * own runId group, so they are not in its count.
     */
   def run(spark: SparkSession, sfDir: String, outDir: String,
       only: Set[String]): Unit = {
@@ -45,9 +50,12 @@ object Verify {
     org.apache.spark.sql.graft.Bridge.register(spark)
     new java.io.File(outDir).mkdirs()
     val status = Files.newBufferedWriter(Paths.get(s"$outDir/verify_status.jsonl"))
+    val meter = new WorkMeter
+    spark.sparkContext.addSparkListener(meter)
 
     def runOne(name: String): Unit = {
       val t0 = System.nanoTime()
+      spark.sparkContext.setJobGroup(name, name)
       val err =
         try {
           SparkEntry.queries(name)(spark, sfDir).coalesce(1).write
@@ -56,9 +64,12 @@ object Verify {
         } catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
           Some(e.toString)
-        }
+        } finally spark.sparkContext.clearJobGroup()
+      val wallMs = (System.nanoTime() - t0) / 1000000
+      org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
+      val jobs = meter.jobs.count(_.group == name)
       val line = s"""{"name":${q(name)},"status":"${if (err.isEmpty) "ok" else "failed"}",""" +
-        s""""wall_ms":${(System.nanoTime() - t0) / 1000000},"error":${err.map(q).getOrElse("null")}}"""
+        s""""jobs":$jobs,"wall_ms":$wallMs,"error":${err.map(q).getOrElse("null")}}"""
       status.synchronized { status.write(line); status.newLine(); status.flush() }
       // pipeline exit: drop any persists the query registered so cached
       // intermediates don't accumulate across the 230-query run (main
@@ -92,7 +103,10 @@ object Verify {
     try units.map { u =>
       pool.submit(new Runnable { def run(): Unit = u.foreach(runOne) })
     }.foreach(_.get()) // runOne never throws; .get() surfaces pool errors
-    finally { pool.shutdown(); status.close() }
+    finally {
+      pool.shutdown(); status.close()
+      spark.sparkContext.removeSparkListener(meter)
+    }
     // LSH hot-bucket diagnostic: the Spark-side gate caps buckets at
     // MaxBucket while the oracles run uncapped — surface the observed
     // occupancy at THIS scale factor so a corpus that crosses the cap

@@ -1067,64 +1067,149 @@ object AnnSuite {
         expr("transform(embedding, v -> CAST(CAST(v AS DOUBLE) + 0.5D AS FLOAT))"))
         .otherwise(col("embedding")).as("embedding"))
 
-  /** Shared body of the quantized when-to-retrain gate
-    * (`ann_ivfpq_drift` / `ann_ivfpq_drift_shifted`): recall against
-    * the exact L2 truth for the STALE serving state (coarse cells +
-    * codebook trained on the %7≠3 base rows, full corpus encoded at
-    * those frozen parameters) vs the RETRAINED state (fresh full-corpus
-    * build). One shared truth pass grades both legs; everything rides
-    * the deterministic kernels, so the drift delta is engine-exact.
+  /** Every (query, candidate ≠ query) pair for the `queryPred` rows of
+    * `e` (vec_id, embedding): the broadcast query side against one
+    * narrow corpus scan, the brute-force shape (queries ≪ corpus; the
+    * corpus never shuffles). Columns query_id, qe, cand_id, ce.
     */
-  private[graft] def ivfPqDriftGate(e0: DataFrame, queryPred: Column,
-      topK: Int = 3): DataFrame = {
-    val e = e0.select(col("vec_id"), col("embedding"))
-    val queriesDf = e.filter(queryPred)
-      .select(col("vec_id").as("query_id"), col("embedding"))
+  private def exactPairs(e: DataFrame, queryPred: Column): DataFrame = {
     val q = e.filter(queryPred)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-    val c = e.select(col("vec_id").as("cand_id"), col("embedding").as("ce"))
-    def truthPass(): DataFrame = graft.api.Graft.rankedByGroup(
-        c.join(broadcast(q), col("query_id") =!= col("cand_id"))
-          .withColumn("d_e6", floor(expr(
-            """aggregate(zip_with(qe, ce,
-              |  (x, y) -> (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))
-              |          * (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))),
-              |  CAST(0 AS DOUBLE), (acc, v) -> acc + v)""".stripMargin)
-            * 1e6 + 0.5).cast("long"))
-          .select(col("query_id"), col("d_e6"), col("cand_id")),
-        Seq("query_id"), Seq(col("d_e6").asc, col("cand_id")))
-      .filter(col("rn") <= topK)
+    e.select(col("vec_id").as("cand_id"), col("embedding").as("ce"))
+      .join(broadcast(q), col("query_id") =!= col("cand_id"))
+  }
+
+  /** Exact squared-L2 distance of every [[exactPairs]] pair, summed in
+    * dimension order in doubles and e6-floored to BIGINT `d_e6` (the
+    * metric ADC approximates). The L2 truth ranks it; the shortlist
+    * re-rank legs (ann_pq_recall, ann_ivfpq_tune) join it too.
+    */
+  private def l2Dist(e: DataFrame, queryPred: Column): DataFrame =
+    exactPairs(e, queryPred)
+      .withColumn("d_e6", floor(expr(
+        """aggregate(zip_with(qe, ce,
+          |  (x, y) -> (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))
+          |          * (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))),
+          |  CAST(0 AS DOUBLE), (acc, v) -> acc + v)""".stripMargin)
+        * 1e6 + 0.5).cast("long"))
+      .select(col("query_id"), col("d_e6"), col("cand_id"))
+
+  /** The k nearest (query_id, cand_id) per query of a scored-pair frame:
+    * by `cos` descending when it carries one, else by `d_e6` ascending;
+    * ties by cand_id. Distributed selection (rankedByGroup): a window
+    * partitioned by query_id would sort each query's full-corpus
+    * candidate list on one task (parallelism = query count).
+    */
+  private def nearest(scored: DataFrame, k: Int): DataFrame = {
+    val byScore =
+      if (scored.columns.contains("cos")) col("cos").desc else col("d_e6").asc
+    graft.api.Graft.rankedByGroup(scored, Seq("query_id"), Seq(byScore, col("cand_id")))
+      .filter(col("rn") <= k)
       .select("query_id", "cand_id")
-      .localCheckpoint()
+  }
+
+  /** The exact top-k truth every recall entry grades against: `cosine`
+    * ranks by the native cosine_sim rounded to e6, `l2` by [[l2Dist]].
+    * Returned unmaterialized — callers checkpoint it where they share it.
+    */
+  private def exactTruth(e: DataFrame, queryPred: Column, metric: String,
+      k: Int): DataFrame =
+    nearest(metric match {
+      case "cosine" => exactPairs(e, queryPred)
+        .withColumn("cos", floor(expr("cosine_sim(qe, ce)") * 1e6 + 0.5) / 1e6)
+        .select(col("query_id"), col("cos"), col("cand_id"))
+      case "l2" => l2Dist(e, queryPred)
+    }, k)
+
+  /** Recall of served sets against `truth` (query_id, cand_id): one left
+    * join per leg `(got, hitsCol, recallCol)` (`got` carries query_id,
+    * cand_id), then `n_truth`, each leg's hits and its e6-rounded recall,
+    * per query (`perQuery`, query_id first) or as one row.
+    */
+  private def recallOf(truth: DataFrame, perQuery: Boolean,
+      legs: (DataFrame, String, String)*): DataFrame = {
+    val marks = legs.indices.map(i => if (i == 0) "got" else s"got$i")
+    val joined = legs.zip(marks).foldLeft(truth) { case (t, ((got, _, _), m)) =>
+      t.join(got.select(col("query_id"), col("cand_id"), lit(1L).as(m)),
+        Seq("query_id", "cand_id"), "left")
+    }
+    val keys = if (perQuery) Seq(col("query_id")) else Nil
+    val hits = legs.zip(marks).map { case ((_, h, _), m) =>
+      sum(when(col(m).isNotNull, 1L).otherwise(0L)).as(h)
+    }
+    joined.groupBy(keys: _*).agg(count(lit(1)).as("n_truth"), hits: _*)
+      .select(keys ++ (col("n_truth") +: legs.flatMap { case (_, h, r) =>
+        Seq(col(h), floor(col(h).cast("double") * 1e6 / col("n_truth") + 0.5)
+          .cast("long").as(r))
+      }): _*)
+  }
+
+  /** One operating point of the sweep entries (ann_tune,
+    * ann_ivfpq_tune): the one-row recall of `got` against `truth` beside
+    * the price paid — index rows inside each query's `np` probed cells
+    * (`occ`: cell → cell_n) and their e6 share of queries × corpus —
+    * under `lead`.
+    */
+  private def sweepRow(truth: DataFrame, got: DataFrame, cents: DataFrame,
+      queriesDf: DataFrame, occ: DataFrame, np: Int, corpusN: Long,
+      lead: Column*): DataFrame = {
+    val scan = probeCells(cents, queriesDf, np)
+      .join(occ, Seq("cell"))
+      .agg(sum(col("cell_n")).as("scanned_rows"),
+        countDistinct(col("query_id")).as("nq"))
+    // 1-row × 1-row broadcast-scalar join (the recon_report pattern)
+    recallOf(truth, perQuery = false, (got, "hits", "recall_e6"))
+      .crossJoin(scan).select(lead ++ Seq(
+      col("n_truth"), col("hits"), col("recall_e6"), col("scanned_rows"),
+      floor(col("scanned_rows").cast("double") * 1e6
+        / (col("nq") * lit(corpusN)) + 0.5)
+        .cast("long").as("frac_scanned_e6")): _*)
+  }
+
+  /** The when-to-retrain gate shared by ann_ivf_drift (IVF, cosine
+    * truth) and the quantized gates (IVFADC, L2 truth): recall@3 against
+    * the exact truth for the STALE serving state (`build` on the %7≠3
+    * base rows, then `restale` serves the full corpus at those frozen
+    * parameters) vs the RETRAINED state (`build` on everything). One
+    * truth pass grades both rows; everything rides the deterministic
+    * kernels, so the drift delta is engine-exact.
+    */
+  private def driftGate[I](e: DataFrame, queryPred: Column, metric: String)(
+      build: DataFrame => I, restale: I => I,
+      serve: (I, DataFrame) => DataFrame): DataFrame = {
+    val queriesDf = e.filter(queryPred)
+      .select(col("vec_id").as("query_id"), col("embedding"))
     // the exact-truth pass and the two index builds are independent —
     // overlap all three (guide §2.6); each is itself checkpoint-bounded
-    val (truth, (sIdx, fresh)) = graft.functions.Par.inParallel(
-      truthPass(),
+    val (truth, (base, fresh)) = graft.functions.Par.inParallel(
+      exactTruth(e, queryPred, metric, 3).localCheckpoint(),
       graft.functions.Par.inParallel(
-        ivfPqBuild(e.filter(col("vec_id") % 7 =!= 3),
-          "vec_id", "embedding", IvfK, m = 8, dsub = 8, ksub = 16),
-        ivfPqBuild(e, "vec_id", "embedding", IvfK,
-          m = 8, dsub = 8, ksub = 16)))
-    def recallOf(idx: IvfPqIndex, variant: String): DataFrame = {
-      val got = ivfPqQuery(idx, queriesDf, "query_id", "embedding",
-          IvfNProbe, topK = topK)
-        .select(col("query_id"), col("cand_id"), lit(1L).as("got"))
-      truth.join(got, Seq("query_id", "cand_id"), "left")
-        .agg(count(lit(1)).as("n_truth"),
-          sum(when(col("got").isNotNull, 1L).otherwise(0L)).as("hits"))
-        .select(lit(variant).as("variant"), col("n_truth"), col("hits"),
-          floor(col("hits").cast("double") * 1e6 / col("n_truth") + 0.5)
-            .cast("long").as("recall_e6"))
-    }
-    val sCents = sIdx.centroids // ivfBuild centroids are checkpointed
-    val assignedFull = kmeansAssign(e, sCents)
-      .select(col("vec_id"), col("cid").as("cell"), col("embedding"))
-    val codesFull = pqEncode(assignedFull, sIdx.pq.book, m = 8, dsub = 8,
-      carry = Seq("cell"))
-    val stale = IvfPqIndex(sCents, PqIndex(sIdx.pq.book, codesFull, 8, 8))
-    recallOf(stale, "stale")
-      .unionByName(recallOf(fresh, "retrained"))
+        build(e.filter(col("vec_id") % 7 =!= 3)), build(e)))
+    def row(idx: I, variant: String): DataFrame =
+      recallOf(truth, perQuery = false, (serve(idx, queriesDf), "hits", "recall_e6"))
+        .select(lit(variant).as("variant"), col("*"))
+    row(restale(base), "stale")
+      .unionByName(row(fresh, "retrained"))
       .orderBy("variant")
+  }
+
+  /** The quantized when-to-retrain gate (`ann_ivfpq_drift` /
+    * `ann_ivfpq_drift_shifted`): [[driftGate]] over IVFADC builds, the
+    * stale state assigning and encoding the full corpus at the base
+    * build's centroids and codebook, graded by the exact L2 truth.
+    */
+  private[graft] def ivfPqDriftGate(e0: DataFrame, queryPred: Column): DataFrame = {
+    val e = e0.select(col("vec_id"), col("embedding"))
+    driftGate[IvfPqIndex](e, queryPred, "l2")(
+      ivfPqBuild(_, "vec_id", "embedding", IvfK, m = 8, dsub = 8, ksub = 16),
+      base => {
+        // ivfBuild centroids are checkpointed
+        val assigned = kmeansAssign(e, base.centroids)
+          .select(col("vec_id"), col("cid").as("cell"), col("embedding"))
+        IvfPqIndex(base.centroids, PqIndex(base.pq.book,
+          pqEncode(assigned, base.pq.book, m = 8, dsub = 8, carry = Seq("cell")), 8, 8))
+      },
+      ivfPqQuery(_, _, "query_id", "embedding", IvfNProbe, topK = 3))
   }
 
   /** Sample-trained flat-PQ serve (the 100 TB training economics —
@@ -1309,56 +1394,22 @@ object AnnSuite {
     // swaps in). One shared truth pass; both legs the deterministic
     // kernels, so the drift delta is engine-exact and hash-checked —
     // a deployment reruns this on a query sample and retrains when
-    // the stale row's recall drops below its bar. The 100 TB read: the
-    // STALE leg serves from the PERSISTED standing index (ivfLoad — no
-    // corpus re-assign; the full-corpus kmeansAssign below mirrors, at
-    // bench SFs, exactly what that index's base + append segments
-    // already hold), and only the RETRAINED leg pays a build — priced
-    // once, on the corpus the reindex would cover.
+    // the stale row's recall drops below its bar. The stale leg
+    // re-assigns the whole corpus at the base build's centroids
+    // (kmeansAssign) — the assignment a persisted standing index's base
+    // + append segments already hold; only the RETRAINED leg prices a
+    // build, on the corpus the reindex would cover.
     "ann_ivf_drift" -> { (s, d) =>
       org.apache.spark.sql.graft.Bridge.register(s)
       val e = Tables.embeddings(s, d)
-      val queriesDf = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding"))
-      val q = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-      val c = e.select(col("vec_id").as("cand_id"), col("embedding").as("ce"))
-      // the exact-truth pass and the two builds are independent —
-      // overlap all three (guide §2.6, the quantized gate's pattern);
-      // ivfBuild's centroids are already checkpointed
-      val (truth, (base, fresh)) = graft.functions.Par.inParallel(
-        graft.api.Graft.rankedByGroup(
-            c.join(broadcast(q), col("query_id") =!= col("cand_id"))
-              .withColumn("cos",
-                floor(expr("cosine_sim(qe, ce)") * 1e6 + 0.5) / 1e6)
-              .select(col("query_id"), col("cos"), col("cand_id")),
-            Seq("query_id"), Seq(col("cos").desc, col("cand_id")))
-          .filter(col("rn") <= 3)
-          .select("query_id", "cand_id")
-          .localCheckpoint(),
-        graft.functions.Par.inParallel(
-          ivfBuild(e.filter(col("vec_id") % 7 =!= 3),
-            "vec_id", "embedding", IvfK),
-          ivfBuild(e, "vec_id", "embedding", IvfK)))
-      def recallOf(idx: IvfIndex, variant: String): DataFrame = {
-        val got = ivfQuery(idx, queriesDf, "query_id", "embedding", IvfNProbe, 3)
-          .select(col("query_id"), col("cand_id"), lit(1L).as("got"))
-        truth.join(got, Seq("query_id", "cand_id"), "left")
-          .agg(count(lit(1)).as("n_truth"),
-            sum(when(col("got").isNotNull, 1L).otherwise(0L)).as("hits"))
-          .select(lit(variant).as("variant"), col("n_truth"), col("hits"),
-            floor(col("hits").cast("double") * 1e6 / col("n_truth") + 0.5)
-              .cast("long").as("recall_e6"))
-      }
-      val staleCents = base.centroids
-      val stale = IvfIndex(
-        kmeansAssign(e.select(col("vec_id"), col("embedding")), staleCents)
-          .select(col("vec_id").as("cand_id"), col("cid").as("cell"),
-            col("embedding").as("ce2")),
-        staleCents)
-      recallOf(stale, "stale")
-        .unionByName(recallOf(fresh, "retrained"))
-        .orderBy("variant")
+      driftGate[IvfIndex](e, col("vec_id") < 5, "cosine")(
+        ivfBuild(_, "vec_id", "embedding", IvfK),
+        base => IvfIndex(
+          kmeansAssign(e.select(col("vec_id"), col("embedding")), base.centroids)
+            .select(col("vec_id").as("cand_id"), col("cid").as("cell"),
+              col("embedding").as("ce2")),
+          base.centroids),
+        ivfQuery(_, _, "query_id", "embedding", IvfNProbe, 3))
     },
 
     // ANN quality evaluation: recall@3 of the IVF path against the
@@ -1374,30 +1425,9 @@ object AnnSuite {
     "ann_recall_eval" -> { (s, d) =>
       org.apache.spark.sql.graft.Bridge.register(s)
       val e = Tables.embeddings(s, d)
-      val q = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-      val c = e.select(col("vec_id").as("cand_id"), col("embedding").as("ce"))
-      // truth-leg top-3 via the distributed-selection kernel: a window
-      // partitioned by query_id would sort each query's FULL-corpus
-      // candidate list on one task (parallelism = query count at any
-      // cluster size); rankedByGroup spreads every query's candidates
-      // across all tasks (cand_id is the unique tiebreak)
-      val truth = graft.api.Graft.rankedByGroup(
-          c.join(broadcast(q), col("query_id") =!= col("cand_id"))
-            .withColumn("cos", floor(expr("cosine_sim(qe, ce)") * 1e6 + 0.5) / 1e6)
-            .select(col("query_id"), col("cos"), col("cand_id")),
-          Seq("query_id"), Seq(col("cos").desc, col("cand_id")))
-        .filter(col("rn") <= 3)
-        .select("query_id", "cand_id")
-      val got = ivfSearch(e, e.filter(col("vec_id") < 5),
-          "vec_id", "embedding", IvfK, IvfNProbe, 3)
-        .select(col("query_id"), col("cand_id"), lit(1L).as("got"))
-      truth.join(got, Seq("query_id", "cand_id"), "left")
-        .groupBy(col("query_id"))
-        .agg(count(lit(1)).as("n_truth"),
-          sum(when(col("got").isNotNull, 1L).otherwise(0L)).as("hits"))
-        .withColumn("recall_e6",
-          floor(col("hits").cast("double") * 1e6 / col("n_truth") + 0.5).cast("long"))
+      recallOf(exactTruth(e, col("vec_id") < 5, "cosine", 3), perQuery = true,
+        (ivfSearch(e, e.filter(col("vec_id") < 5), "vec_id", "embedding",
+          IvfK, IvfNProbe, 3), "hits", "recall_e6"))
         .orderBy("query_id")
     },
 
@@ -1419,9 +1449,6 @@ object AnnSuite {
       val queriesDf = e.filter(col("vec_id") < 5)
         .select(col("vec_id").as("query_id"), col("embedding"))
       val corpusN = graft.sources.ParquetMeta.rowCount(s, s"$d/embeddings.parquet")
-      val q = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-      val c = e.select(col("vec_id").as("cand_id"), col("embedding").as("ce"))
       // index build (+ assignment/occupancy materialization) and the
       // exact-truth pass are independent — overlap them (guide §2.6)
       val ((idx, occ), truth) = graft.functions.Par.inParallel({
@@ -1431,41 +1458,12 @@ object AnnSuite {
         val ix = IvfIndex(built.assigned.localCheckpoint(), built.centroids)
         (ix, ix.assigned.groupBy(col("cell"))
           .agg(count(lit(1)).as("cell_n")).localCheckpoint())
-      },
-        graft.api.Graft.rankedByGroup(
-            c.join(broadcast(q), col("query_id") =!= col("cand_id"))
-              .withColumn("cos",
-                floor(expr("cosine_sim(qe, ce)") * 1e6 + 0.5) / 1e6)
-              .select(col("query_id"), col("cos"), col("cand_id")),
-            Seq("query_id"), Seq(col("cos").desc, col("cand_id")))
-          .filter(col("rn") <= 3)
-          .select("query_id", "cand_id")
-          .localCheckpoint())
-      def legOf(np: Int): DataFrame = {
-        val got = ivfQuery(idx, queriesDf, "query_id", "embedding", np, 3)
-          .select(col("query_id"), col("cand_id"), lit(1L).as("got"))
-        val rec = truth.join(got, Seq("query_id", "cand_id"), "left")
-          .agg(count(lit(1)).as("n_truth"),
-            sum(when(col("got").isNotNull, 1L).otherwise(0L)).as("hits"))
-        val scan = probeCells(idx.centroids, queriesDf, np)
-          .join(occ, Seq("cell"))
-          .agg(sum(col("cell_n")).as("scanned_rows"),
-            countDistinct(col("query_id")).as("nq"))
-        // 1-row × 1-row broadcast-scalar join (the recon_report pattern)
-        rec.crossJoin(scan).select(
-          lit(np.toLong).as("nprobe"),
-          col("n_truth"), col("hits"),
-          floor(col("hits").cast("double") * 1e6 / col("n_truth") + 0.5)
-            .cast("long").as("recall_e6"),
-          col("scanned_rows"),
-          floor(col("scanned_rows").cast("double") * 1e6
-            / (col("nq") * lit(corpusN)) + 0.5)
-            .cast("long").as("frac_scanned_e6"))
-      }
+      }, exactTruth(e, col("vec_id") < 5, "cosine", 3).localCheckpoint())
       // each leg's serve checkpoints its probe set at construction —
       // build the four legs concurrently
-      val legs = graft.functions.Par.all(
-        Seq(1, 2, 4, 8).map(np => () => legOf(np)): _*)
+      val legs = graft.functions.Par.all(Seq(1, 2, 4, 8).map(np => () =>
+        sweepRow(truth, ivfQuery(idx, queriesDf, "query_id", "embedding", np, 3),
+          idx.centroids, queriesDf, occ, np, corpusN, lit(np.toLong).as("nprobe"))): _*)
       legs.reduce(_.unionByName(_)).orderBy("nprobe")
     },
 
@@ -1498,47 +1496,16 @@ object AnnSuite {
     "ann_pq_recall" -> { (s, d) =>
       org.apache.spark.sql.graft.Bridge.register(s)
       val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-      val q = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-      val c = e.select(col("vec_id").as("cand_id"), col("embedding").as("ce"))
-      val scoredAll = c.join(broadcast(q), col("query_id") =!= col("cand_id"))
-        .withColumn("d_e6", floor(expr(
-          """aggregate(zip_with(qe, ce,
-            |  (x, y) -> (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))
-            |          * (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))),
-            |  CAST(0 AS DOUBLE), (acc, v) -> acc + v)""".stripMargin)
-          * 1e6 + 0.5).cast("long"))
-        .select(col("query_id"), col("d_e6"), col("cand_id"))
-      val truth = graft.api.Graft.rankedByGroup(scoredAll,
-          Seq("query_id"), Seq(col("d_e6").asc, col("cand_id")))
-        .filter(col("rn") <= 3)
-        .select("query_id", "cand_id")
+      val dist = l2Dist(e, col("vec_id") < 5)
       val short = pqSearch(e,
           e.filter(col("vec_id") < 5)
             .select(col("vec_id").as("query_id"), col("embedding")),
           m = 8, dsub = 8, ksub = 16, topK = 50)
         .select("query_id", "cand_id", "rk")
-      val gotAdc = short.filter(col("rk") <= 3)
-        .select(col("query_id"), col("cand_id"), lit(1L).as("adc"))
-      val rerank = graft.api.Graft.rankedByGroup(
-          scoredAll.join(short.select("query_id", "cand_id"),
-            Seq("query_id", "cand_id")),
-          Seq("query_id"), Seq(col("d_e6").asc, col("cand_id")))
-        .filter(col("rn") <= 3)
-        .select(col("query_id"), col("cand_id"), lit(1L).as("rr"))
-      truth.join(gotAdc, Seq("query_id", "cand_id"), "left")
-        .join(rerank, Seq("query_id", "cand_id"), "left")
-        .groupBy("query_id")
-        .agg(count(lit(1)).as("n_truth"),
-          sum(when(col("adc").isNotNull, 1L).otherwise(0L)).as("hits_adc"),
-          sum(when(col("rr").isNotNull, 1L).otherwise(0L)).as("hits_rerank"))
-        .select(col("query_id"), col("n_truth"),
-          col("hits_adc"),
-          floor(col("hits_adc").cast("double") * 1e6 / col("n_truth") + 0.5)
-            .cast("long").as("recall_adc_e6"),
-          col("hits_rerank"),
-          floor(col("hits_rerank").cast("double") * 1e6 / col("n_truth") + 0.5)
-            .cast("long").as("recall_rerank_e6"))
+      recallOf(nearest(dist, 3), perQuery = true,
+        (short.filter(col("rk") <= 3), "hits_adc", "recall_adc_e6"),
+        (nearest(dist.join(short.select("query_id", "cand_id"), Seq("query_id", "cand_id")), 3),
+          "hits_rerank", "recall_rerank_e6"))
         .orderBy("query_id")
     },
 
@@ -1870,34 +1837,12 @@ object AnnSuite {
     "ann_ivfpq_recall" -> { (s, d) =>
       org.apache.spark.sql.graft.Bridge.register(s)
       val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-      val q = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-      val c = e.select(col("vec_id").as("cand_id"), col("embedding").as("ce"))
-      val truth = graft.api.Graft.rankedByGroup(
-          c.join(broadcast(q), col("query_id") =!= col("cand_id"))
-            .withColumn("d_e6", floor(expr(
-              """aggregate(zip_with(qe, ce,
-                |  (x, y) -> (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))
-                |          * (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))),
-                |  CAST(0 AS DOUBLE), (acc, v) -> acc + v)""".stripMargin)
-              * 1e6 + 0.5).cast("long"))
-            .select(col("query_id"), col("d_e6"), col("cand_id")),
-          Seq("query_id"), Seq(col("d_e6").asc, col("cand_id")))
-        .filter(col("rn") <= 3)
-        .select("query_id", "cand_id")
-      val got = ivfPqQuery(
+      recallOf(exactTruth(e, col("vec_id") < 5, "l2", 3), perQuery = true,
+        (ivfPqQuery(
           ivfPqBuild(e, "vec_id", "embedding",
             kCoarse = IvfK, m = 8, dsub = 8, ksub = 16),
           e.filter(col("vec_id") < 5), "vec_id", "embedding",
-          nprobe = IvfNProbe, topK = 3)
-        .select(col("query_id"), col("cand_id"), lit(1L).as("got"))
-      truth.join(got, Seq("query_id", "cand_id"), "left")
-        .groupBy("query_id")
-        .agg(count(lit(1)).as("n_truth"),
-          sum(when(col("got").isNotNull, 1L).otherwise(0L)).as("hits_adc"))
-        .withColumn("recall_adc_e6",
-          floor(col("hits_adc").cast("double") * 1e6 / col("n_truth") + 0.5)
-            .cast("long"))
+          nprobe = IvfNProbe, topK = 3), "hits_adc", "recall_adc_e6"))
         .orderBy("query_id")
     },
 
@@ -1942,32 +1887,10 @@ object AnnSuite {
     "ann_ivfpq_residual_recall" -> { (s, d) =>
       org.apache.spark.sql.graft.Bridge.register(s)
       val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-      val q = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-      val c = e.select(col("vec_id").as("cand_id"), col("embedding").as("ce"))
-      val truth = graft.api.Graft.rankedByGroup(
-          c.join(broadcast(q), col("query_id") =!= col("cand_id"))
-            .withColumn("d_e6", floor(expr(
-              """aggregate(zip_with(qe, ce,
-                |  (x, y) -> (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))
-                |          * (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))),
-                |  CAST(0 AS DOUBLE), (acc, v) -> acc + v)""".stripMargin)
-              * 1e6 + 0.5).cast("long"))
-            .select(col("query_id"), col("d_e6"), col("cand_id")),
-          Seq("query_id"), Seq(col("d_e6").asc, col("cand_id")))
-        .filter(col("rn") <= 3)
-        .select("query_id", "cand_id")
-      val got = ivfPqResidualSearch(e, e.filter(col("vec_id") < 5),
+      recallOf(exactTruth(e, col("vec_id") < 5, "l2", 3), perQuery = true,
+        (ivfPqResidualSearch(e, e.filter(col("vec_id") < 5),
           kCoarse = IvfK, nprobe = IvfNProbe, m = 8, dsub = 8, ksub = 16,
-          topK = 3)
-        .select(col("query_id"), col("cand_id"), lit(1L).as("got"))
-      truth.join(got, Seq("query_id", "cand_id"), "left")
-        .groupBy("query_id")
-        .agg(count(lit(1)).as("n_truth"),
-          sum(when(col("got").isNotNull, 1L).otherwise(0L)).as("hits_adc"))
-        .withColumn("recall_adc_e6",
-          floor(col("hits_adc").cast("double") * 1e6 / col("n_truth") + 0.5)
-            .cast("long"))
+          topK = 3), "hits_adc", "recall_adc_e6"))
         .orderBy("query_id")
     },
 
@@ -2051,9 +1974,6 @@ object AnnSuite {
       val corpusN = graft.sources.ParquetMeta.rowCount(s, s"$d/embeddings.parquet")
       val queriesDf = e.filter(col("vec_id") < 5)
         .select(col("vec_id").as("query_id"), col("embedding"))
-      val q = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-      val c = e.select(col("vec_id").as("cand_id"), col("embedding").as("ce"))
       // the index build (+ code/occupancy materialization) and the
       // exact-truth distance pass are independent — overlap them
       // (guide §2.6, the drift-gate pattern)
@@ -2069,48 +1989,16 @@ object AnnSuite {
       },
         // full (query × corpus) exact L2 distances, shared by the truth
         // ranking and every shortlist re-rank leg
-        c.join(broadcast(q), col("query_id") =!= col("cand_id"))
-          .withColumn("d_e6", floor(expr(
-            """aggregate(zip_with(qe, ce,
-              |  (x, y) -> (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))
-              |          * (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))),
-              |  CAST(0 AS DOUBLE), (acc, v) -> acc + v)""".stripMargin)
-            * 1e6 + 0.5).cast("long"))
-          .select(col("query_id"), col("d_e6"), col("cand_id"))
-          .localCheckpoint())
-      val truth = graft.api.Graft.rankedByGroup(tdist,
-          Seq("query_id"), Seq(col("d_e6").asc, col("cand_id")))
-        .filter(col("rn") <= 3)
-        .select("query_id", "cand_id")
-        .localCheckpoint()
+        l2Dist(e, col("vec_id") < 5).localCheckpoint())
+      val truth = nearest(tdist, 3).localCheckpoint()
       def legOf(np: Int, sl: Int): DataFrame = {
         val served = ivfPqQuery(idx, queriesDf, "query_id", "embedding",
-          nprobe = np, topK = if (sl == 0) 3 else sl)
-        val got = (if (sl == 0) served.select("query_id", "cand_id")
-          else graft.api.Graft.rankedByGroup(
-              tdist.join(served.select("query_id", "cand_id"),
-                Seq("query_id", "cand_id")),
-              Seq("query_id"), Seq(col("d_e6").asc, col("cand_id")))
-            .filter(col("rn") <= 3)
-            .select("query_id", "cand_id"))
-          .withColumn("got", lit(1L))
-        val rec = truth.join(got, Seq("query_id", "cand_id"), "left")
-          .agg(count(lit(1)).as("n_truth"),
-            sum(when(col("got").isNotNull, 1L).otherwise(0L)).as("hits"))
-        val scan = probeCells(idx.centroids, queriesDf, np)
-          .join(occ, Seq("cell"))
-          .agg(sum(col("cell_n")).as("scanned_rows"),
-            countDistinct(col("query_id")).as("nq"))
-        rec.crossJoin(scan).select(
-          lit(np.toLong).as("nprobe"),
-          lit(sl.toLong).as("shortlist"),
-          col("n_truth"), col("hits"),
-          floor(col("hits").cast("double") * 1e6 / col("n_truth") + 0.5)
-            .cast("long").as("recall_e6"),
-          col("scanned_rows"),
-          floor(col("scanned_rows").cast("double") * 1e6
-            / (col("nq") * lit(corpusN)) + 0.5)
-            .cast("long").as("frac_scanned_e6"))
+            nprobe = np, topK = if (sl == 0) 3 else sl)
+          .select("query_id", "cand_id")
+        val got = if (sl == 0) served
+          else nearest(tdist.join(served, Seq("query_id", "cand_id")), 3)
+        sweepRow(truth, got, idx.centroids, queriesDf, occ, np, corpusN,
+          lit(np.toLong).as("nprobe"), lit(sl.toLong).as("shortlist"))
       }
       // leg CONSTRUCTION is also eager (each serve checkpoints its
       // probe set) — build the eight legs concurrently
@@ -2153,22 +2041,7 @@ object AnnSuite {
     "ann_pq_sampled_recall" -> { (s, d) =>
       org.apache.spark.sql.graft.Bridge.register(s)
       val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-      val q = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
-      val c = e.select(col("vec_id").as("cand_id"), col("embedding").as("ce"))
-      val truth = graft.api.Graft.rankedByGroup(
-          c.join(broadcast(q), col("query_id") =!= col("cand_id"))
-            .withColumn("d_e6", floor(expr(
-              """aggregate(zip_with(qe, ce,
-                |  (x, y) -> (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))
-                |          * (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))),
-                |  CAST(0 AS DOUBLE), (acc, v) -> acc + v)""".stripMargin)
-              * 1e6 + 0.5).cast("long"))
-            .select(col("query_id"), col("d_e6"), col("cand_id")),
-          Seq("query_id"), Seq(col("d_e6").asc, col("cand_id")))
-        .filter(col("rn") <= 3)
-        .select("query_id", "cand_id")
-        .localCheckpoint()
+      val truth = exactTruth(e, col("vec_id") < 5, "l2", 3).localCheckpoint()
       val queriesDf = e.filter(col("vec_id") < 5)
         .select(col("vec_id").as("query_id"), col("embedding"))
       // each rate's codebook training is an eager checkpoint — train
@@ -2177,20 +2050,12 @@ object AnnSuite {
       val books = graft.functions.Par.all(Seq(1, 2, 16, 256).map(mod =>
         () => mod -> pqTrain(e, m = 8, dsub = 8, ksub = 16,
           sampleMod = mod)): _*)
-      val legs = books.map { case (mod, book) =>
-        val got = pqQuery(
-            PqIndex(book, pqEncode(e, book, m = 8, dsub = 8), 8, 8),
-            queriesDf, topK = 3)
-          .select(col("query_id"), col("cand_id"), lit(1L).as("got"))
-        truth.join(got, Seq("query_id", "cand_id"), "left")
-          .agg(count(lit(1)).as("n_truth"),
-            sum(when(col("got").isNotNull, 1L).otherwise(0L)).as("hits_adc"))
-          .select(lit(mod.toLong).as("sample_mod"),
-            col("n_truth"), col("hits_adc"),
-            floor(col("hits_adc").cast("double") * 1e6 / col("n_truth") + 0.5)
-              .cast("long").as("recall_adc_e6"))
-      }
-      legs.reduce(_.unionByName(_)).orderBy("sample_mod")
+      books.map { case (mod, book) =>
+        recallOf(truth, perQuery = false,
+          (pqQuery(PqIndex(book, pqEncode(e, book, m = 8, dsub = 8), 8, 8),
+            queriesDf, topK = 3), "hits_adc", "recall_adc_e6"))
+          .select(lit(mod.toLong).as("sample_mod"), col("*"))
+      }.reduce(_.unionByName(_)).orderBy("sample_mod")
     },
 
     // Deterministic k-means over the embedding corpus (k = IvfK, TWO
@@ -2251,23 +2116,24 @@ object AnnSuite {
     // corpus determinism ⇒ the plain full-corpus IVFADC chain
     ("ann_ivfpq_retrain" -> oraclesBase("ann_ivfpq"))
 
-  /** The coarse-quantizer CTE chain of the IVFADC oracles — the
-    * ann_ivf chain (seeds → one Lloyd step → final assignment +
-    * probes) with iv_-prefixed names so it composes with [[PqChainSql]]
-    * in one WITH list. Ends at `iv_a1` (cand_id, cell), `iv_pr` (each
-    * query's FULL cell ranking — the tune sweep filters it per
-    * nprobe), and `iv_probes` (the default-nprobe probe set).
-    * Parameterized by the index-BUILD corpus (`basePred` — seeds and
-    * the Lloyd step run over matching rows; the final assignment and
-    * probes cover the whole table): `TRUE` checks the plain build,
-    * a proper subset checks build-then-append at the base's fixed
-    * centroids (the ann_ivf_append algebra). `p` prefixes every
-    * emitted CTE so two differently-trained chains can share one WITH
-    * list (the drift oracle compares them); `a1`/`pr` carry the row
-    * vectors (`ce2`/`qe`) so consumers can exact-cosine re-rank.
+  /** The coarse-quantizer CTE chain every IVF and IVFADC oracle
+    * composes (seeds → one Lloyd step → final assignment + probes) —
+    * never inline a second copy. Ends at `${p}a1` (cand_id, cell, the
+    * `carry` columns, ce2) and `${p}pr` (each query's FULL cell ranking
+    * `rn`, `qe` the query vector — a serve probes the cells with
+    * `rn <= nprobe`). `basePred`
+    * picks the index-BUILD corpus: seeds and the Lloyd step run over
+    * matching rows (`${p}eb`), the final assignment and probes cover all
+    * of `serveBase` — `TRUE` checks the plain build, a proper subset
+    * checks build-then-append at the base's fixed centroids (the
+    * ann_ivf_append algebra). `p` prefixes every emitted CTE so two
+    * differently-trained chains can share one WITH list (the drift
+    * oracles compare them); `carry` columns (e.g. `label`) ride from
+    * `serveBase` into `${p}a1` for serve-side predicates.
     */
   private def ivfCellChainSql(basePred: String, p: String = "iv_",
-      serveBase: String = "e", queryPred: String = "vec_id < 5"): String =
+      serveBase: String = "e", queryPred: String = "vec_id < 5",
+      carry: Seq[String] = Nil): String =
     s"""${p}eb AS (SELECT vec_id, embedding FROM e WHERE $basePred),
        |${p}seeds AS (
        |  SELECT vec_id AS cid, embedding AS ce FROM ${p}eb
@@ -2290,25 +2156,24 @@ object AnnSuite {
        |      CAST(SUM(FLOOR(v*1e6 + 0.5)) AS DOUBLE)/COUNT(*)/1e6 AS m
        |    FROM ${p}dims GROUP BY cid, i) t GROUP BY cid),
        |${p}d1 AS (
-       |  SELECT e.vec_id, c.cid, e.embedding,
+       |  SELECT e.vec_id, c.cid, ${carry.map(c => s"e.$c, ").mkString}e.embedding,
        |    ${oracleDist("c.ce")} AS dist
        |  FROM $serveBase e, ${p}cents c),
        |${p}a1 AS (
-       |  SELECT vec_id AS cand_id, cid AS cell, embedding AS ce2 FROM (
+       |  SELECT vec_id AS cand_id, cid AS cell, ${carry.map(_ + ", ").mkString}embedding AS ce2 FROM (
        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
        |    FROM ${p}d1) t WHERE rn = 1),
        |${p}pr AS (
        |  SELECT vec_id AS query_id, cid AS cell, embedding AS qe,
        |    ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
-       |  FROM ${p}d1 WHERE $queryPred),
-       |${p}probes AS (
-       |  SELECT query_id, cell, qe FROM ${p}pr WHERE rn <= $IvfNProbe)""".stripMargin
+       |  FROM ${p}d1 WHERE $queryPred)""".stripMargin
 
   /** Shared DuckDB-oracle fragments for the embedding-distance family —
-    * one source of truth for the formula that ann_ivf, ann_recall_eval,
-    * and emb_kmeans all mirror (a fix applied to one copy and not the
-    * others would produce a hash mismatch that is expensive to
-    * localize). `e` is the conventional embeddings-CTE alias.
+    * one source of truth for each formula the Spark kernels are mirrored
+    * by (a fix applied to one copy and not the others would produce a
+    * hash mismatch that is expensive to localize). `e` is the
+    * conventional embeddings-CTE alias, `q` the queries CTE (query_id,
+    * embedding). Oracles compose these fragments; none inlines a copy.
     */
   private val OracleSq = "(CAST(e.embedding[i] AS DOUBLE) - CAST(%s[i] AS DOUBLE))"
   private def oracleDist(c: String) =
@@ -2316,29 +2181,155 @@ object AnnSuite {
        |      i -> ${OracleSq.format(c)} * ${OracleSq.format(c)}))""".stripMargin
   private val OracleNorm =
     "sqrt(list_sum(list_transform(%s, v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE))))"
+  /** e6-rounded cosine of two FLOAT[] columns (native cosine_sim's twin). */
+  private def cosSql(a: String, b: String): String =
+    s"""FLOOR(
+       |      list_sum(list_transform(range(1, len($a) + 1),
+       |        i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE))) /
+       |      (${OracleNorm.format(a)} * ${OracleNorm.format(b)}) * 1e6 + 0.5)/1e6""".stripMargin
 
-  /** The shared PQ oracle chain (ann_pq + ann_pq_recall): per subspace
-    * j (0..7), hash-ordered seeds sliced into sub-vectors, argmin
-    * assignment (ties lowest cid), one fixed-point Lloyd mean,
-    * re-encode, then ADC — per-(query, j, sub-centroid) squared
-    * distances e6-floored to BIGINT BEFORE the cross-subspace sum.
-    * `slot` (ROW_NUMBER over cid within j) is the oracle twin of the
-    * Spark side's array_position into the cid-ascending codebook
-    * array. Ends at `sc2` (query_id, cand_id, adist_e6); consumers
-    * append CTEs or the final SELECT.
+  /** The exact top-3 truth CTEs every recall oracle grades against:
+    * `tdist` scores each (query of `q`, candidate ≠ query of `e`) pair —
+    * `cosine`: e6-rounded `cos`, higher is nearer; `l2`: e6-floored
+    * BIGINT squared distance `d_e6`, lower is nearer — and `truth`
+    * keeps each query's top 3, ties by cand_id.
     */
+  private def truthSql(metric: String): String = {
+    val (score, order) = metric match {
+      case "cosine" => (s"${cosSql("q.embedding", "c.embedding")} AS cos", "cos DESC")
+      case "l2" =>
+        ("""CAST(FLOOR(list_sum(list_transform(range(1, 65),
+           |      i -> (CAST(q.embedding[i] AS DOUBLE) - CAST(c.embedding[i] AS DOUBLE))
+           |         * (CAST(q.embedding[i] AS DOUBLE) - CAST(c.embedding[i] AS DOUBLE))))
+           |      * 1e6 + 0.5) AS BIGINT) AS d_e6""".stripMargin, "d_e6")
+    }
+    s"""tdist AS (
+       |  SELECT q.query_id, c.vec_id AS cand_id,
+       |    $score
+       |  FROM q JOIN e c ON q.query_id <> c.vec_id),
+       |truth AS (
+       |  SELECT query_id, cand_id FROM (
+       |    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+       |                                 ORDER BY $order, cand_id) AS rk
+       |    FROM tdist) t WHERE rk <= 3)""".stripMargin
+  }
+
+  /** The recall aggregate over `truth`: per leg `(served, hitsCol,
+    * recallCol)` — `served` a (query_id, cand_id) relation — a left join,
+    * the hit count and the e6-rounded recall, after the `lead` select
+    * items; per query (grouped and ordered) when `perQuery`.
+    */
+  private def recallSql(lead: String, perQuery: Boolean,
+      legs: (String, String, String)*): String = {
+    def hit(i: Int) = s"SUM(CASE WHEN g$i.cand_id IS NOT NULL THEN 1 ELSE 0 END)"
+    val cols = legs.zipWithIndex.map { case ((_, h, r), i) =>
+      s"""CAST(${hit(i)} AS BIGINT) AS $h,
+         |  CAST(FLOOR(CAST(${hit(i)} AS DOUBLE) * 1e6 / COUNT(*) + 0.5) AS BIGINT) AS $r""".stripMargin
+    }
+    val joins = legs.zipWithIndex.map { case ((g, _, _), i) =>
+      s"LEFT JOIN $g g$i ON g$i.query_id = t.query_id AND g$i.cand_id = t.cand_id"
+    }
+    s"""SELECT $lead${if (perQuery) "t.query_id, " else ""}CAST(COUNT(*) AS BIGINT) AS n_truth,
+       |  ${cols.mkString(",\n  ")}
+       |FROM truth t
+       |${joins.mkString("\n")}""".stripMargin +
+      (if (perQuery) "\nGROUP BY t.query_id ORDER BY t.query_id" else "")
+  }
+
+  /** The top `k` (query_id, cand_id) of a query with a per-query `rk`,
+    * as a parenthesized relation.
+    */
+  private def topSql(ranked: String, k: Int): String =
+    s"(SELECT query_id, cand_id FROM ($ranked) r WHERE rk <= $k)"
+
+  /** Exact-L2 re-rank of a (query_id, cand_id) `short`list relation: its
+    * top 3 by `tdist.d_e6`, ties by cand_id.
+    */
+  private def rerankSql(short: String): String =
+    s"""(SELECT query_id, cand_id FROM (
+       |  SELECT t.query_id, t.cand_id,
+       |    ROW_NUMBER() OVER (PARTITION BY t.query_id
+       |                       ORDER BY t.d_e6, t.cand_id) AS rk
+       |  FROM tdist t JOIN $short sh
+       |    ON sh.query_id = t.query_id AND sh.cand_id = t.cand_id) x WHERE rk <= 3)""".stripMargin
+
+  /** The IVF serve: exact cosine of the candidates (`${iv}a1`) in each
+    * query's `np` nearest cells (`${iv}pr`) passing `pred` — delete
+    * masks, attribute filters — ranked per query by (cos DESC, cand_id)
+    * as `rk`.
+    */
+  private def ivfCosRankSql(iv: String = "iv_", np: Int = IvfNProbe,
+      pred: String = "TRUE"): String =
+    s"""SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+       |                               ORDER BY cos DESC, cand_id) AS rk FROM (
+       |  SELECT p.query_id, a.cand_id, a.cell, ${cosSql("p.qe", "a.ce2")} AS cos
+       |  FROM ${iv}a1 a JOIN ${iv}pr p ON a.cell = p.cell AND p.rn <= $np
+       |  WHERE p.query_id <> a.cand_id AND ($pred)) sc""".stripMargin
+
+  /** The IVFADC serve: `${pq}sc2` ADC candidates whose cell (`${iv}a1`)
+    * is one of the query's `np` nearest cells (`${iv}pr`), passing
+    * `pred`, ranked per query by (adist_e6, cand_id) as `rk`.
+    */
+  private def probedAdcSql(pq: String = "", iv: String = "iv_", np: Int = IvfNProbe,
+      pred: String = "TRUE"): String =
+    s"""SELECT s.query_id, s.cand_id, a.cell, s.adist_e6,
+       |    ROW_NUMBER() OVER (PARTITION BY s.query_id
+       |                       ORDER BY s.adist_e6, s.cand_id) AS rk
+       |  FROM ${pq}sc2 s
+       |  JOIN ${iv}a1 a ON a.cand_id = s.cand_id
+       |  JOIN ${iv}pr p
+       |    ON p.query_id = s.query_id AND p.cell = a.cell AND p.rn <= $np
+       |  WHERE $pred""".stripMargin
+
+  /** Unpruned ADC ranking of a (query_id, cand_id, adist_e6) relation. */
+  private def adcRankSql(scores: String): String =
+    s"""SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+       |                               ORDER BY adist_e6, cand_id) AS rk
+       |  FROM $scores""".stripMargin
+
+  /** A served top-5: query_id, cand_id, `cols`, rk of a ranked query. */
+  private def top5Sql(cols: String, ranked: String): String =
+    s"""SELECT query_id, cand_id, $cols, CAST(rk AS BIGINT) AS rk FROM (
+       |  $ranked) t
+       |WHERE rk <= 5 ORDER BY query_id, rk""".stripMargin
+
+  /** The deterministic 1/`mod` hash-sample (pqTrain's sampleMod rule). */
+  private def sampleSql(mod: Int): String =
+    s"('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 15))::BIGINT % $mod = 0"
+
+  /** The sweep oracles (ann_tune, ann_ivfpq_tune): after the `chains`
+    * WITH list (ending in the `iv_` cell chain), the probed cells'
+    * occupancy and the exact `metric` truth, then per leg `(lead, got,
+    * np)` one row: the recall of `got` and the price of `np` probes —
+    * index rows in the probed cells and their e6 share of queries ×
+    * corpus.
+    */
+  private def sweepOracleSql(chains: String, metric: String,
+      legs: Seq[(String, String, Int)], order: String): String = {
+    val rows = legs.map { case (lead, got, np) =>
+      s"""SELECT $lead, r.n_truth, r.hits, r.recall_e6, s.scanned_rows,
+         |    CAST(FLOOR(CAST(s.scanned_rows AS DOUBLE) * 1e6
+         |      / (s.nq * (SELECT COUNT(*) FROM e)) + 0.5) AS BIGINT) AS frac_scanned_e6
+         |  FROM (${recallSql("", false, (got, "hits", "recall_e6"))}) r,
+         |    (SELECT CAST(SUM(occ.cell_n) AS BIGINT) AS scanned_rows,
+         |       CAST(COUNT(DISTINCT p.query_id) AS BIGINT) AS nq
+         |     FROM iv_pr p JOIN iv_occ occ ON occ.cell = p.cell
+         |     WHERE p.rn <= $np) s""".stripMargin
+    }
+    s"""$chains,
+       |iv_occ AS (SELECT cell, CAST(COUNT(*) AS BIGINT) AS cell_n
+       |           FROM iv_a1 GROUP BY cell),
+       |${truthSql(metric)}
+       |SELECT * FROM (
+       |${rows.mkString("\nUNION ALL\n")}
+       |) u ORDER BY $order""".stripMargin
+  }
+
+  /** Squared distance of two 8-dim sub-vectors (indexed expressions). */
   private def pqSubDist(sv: String, sc: String) =
     s"""list_sum(list_transform(range(1, 9),
        |      i -> (CAST($sv AS DOUBLE) - CAST($sc AS DOUBLE))
        |         * (CAST($sv AS DOUBLE) - CAST($sc AS DOUBLE))))""".stripMargin
-  /** The chain parameterized by the TRAINING corpus (`et` — seeds and
-    * the Lloyd mean run over rows matching `trainPred`; the encode and
-    * ADC legs always cover the whole table). `TRUE` is the full-corpus
-    * codebook every fused entry uses; a hash predicate checks
-    * sample-trained codebooks (`ann_pq_sampled`) — at 100 TB the
-    * codebook trains on a sample, only the encode pass touches
-    * everything.
-    */
   /** The PQ train+encode CTE fragment (seeds → slots → codes),
     * parameterized so both the raw-vector chains and the residual
     * IVFADC chain share one source of truth: train over `$trainBase`,
@@ -2381,70 +2372,56 @@ object AnnSuite {
        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id, j ORDER BY dist, cid) AS rn
        |    FROM ${p}d1) t WHERE rn = 1)""".stripMargin
 
-  /** The quantized drift gate's full oracle (ann_ivfpq_drift and its
-    * shifted twin): two complete IVFADC chains in one WITH list —
-    * stale trains coarse cells AND codebook on the %7≠3 base rows
-    * (siv_/spq_ prefixes), retrained on everything (fiv_/fpq_); both
-    * encode/serve the full corpus; one exact-L2 truth pass grades
-    * both. `eSelect` defines the corpus CTE (the shifted twin bakes
-    * the +0.5 drift into it); `qPred` picks the query rows (and rides
-    * into the coarse chains' probe CTEs).
+  /** The PQ oracles' ADC scoring (after [[pqCodesSql]] with prefix
+    * `p`): `${p}dt` holds each query's per-(subspace, slot) distance
+    * e6-floored to BIGINT BEFORE the cross-subspace sum, `${p}sc2` each
+    * (query, candidate ≠ query) integer ADC distance `adist_e6`.
     */
-  private def ivfPqDriftOracleSql(eSelect: String, qPred: String): String = {
-    def adcLeg(p: String, ivp: String, trainBase: String): String =
-      s"""${pqCodesSql(trainBase, "e", p)},
-         |${p}dt AS (
-         |  SELECT q.query_id, c.j, c.slot,
-         |    CAST(FLOOR(${pqSubDist("q.embedding[c.j*8+i]", "c.sc[i]")} * 1e6 + 0.5) AS BIGINT) AS d_e6
-         |  FROM q, ${p}slots c),
-         |${p}sc2 AS (
-         |  SELECT dt.query_id, cd.vec_id AS cand_id,
-         |    CAST(SUM(dt.d_e6) AS BIGINT) AS adist_e6
-         |  FROM ${p}codes cd JOIN ${p}dt dt ON dt.j = cd.j AND dt.slot = cd.slot
-         |  WHERE dt.query_id <> cd.vec_id
-         |  GROUP BY dt.query_id, cd.vec_id),
-         |${p}got AS (
-         |  SELECT query_id, cand_id FROM (
-         |    SELECT s.query_id, s.cand_id,
-         |      ROW_NUMBER() OVER (PARTITION BY s.query_id
-         |                         ORDER BY s.adist_e6, s.cand_id) AS rk
-         |    FROM ${p}sc2 s
-         |    JOIN ${ivp}a1 a ON a.cand_id = s.cand_id
-         |    JOIN ${ivp}probes pb ON pb.query_id = s.query_id
-         |                        AND pb.cell = a.cell) t
-         |  WHERE rk <= 3)""".stripMargin
-    def leg(variant: String, p: String): String =
-      s"""SELECT '$variant' AS variant,
-         |  CAST(COUNT(*) AS BIGINT) AS n_truth,
-         |  CAST(SUM(CASE WHEN g.cand_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS hits,
-         |  CAST(FLOOR(CAST(SUM(CASE WHEN g.cand_id IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE)
-         |    * 1e6 / COUNT(*) + 0.5) AS BIGINT) AS recall_e6
-         |FROM truth t LEFT JOIN ${p}got g
-         |  ON g.query_id = t.query_id AND g.cand_id = t.cand_id""".stripMargin
+  private def adcScoreSql(p: String): String =
+    s"""${p}dt AS (
+       |  SELECT q.query_id, c.j, c.slot,
+       |    CAST(FLOOR(${pqSubDist("q.embedding[c.j*8+i]", "c.sc[i]")} * 1e6 + 0.5) AS BIGINT) AS d_e6
+       |  FROM q, ${p}slots c),
+       |${p}sc2 AS (
+       |  SELECT dt.query_id, cd.vec_id AS cand_id,
+       |    CAST(SUM(dt.d_e6) AS BIGINT) AS adist_e6
+       |  FROM ${p}codes cd JOIN ${p}dt dt ON dt.j = cd.j AND dt.slot = cd.slot
+       |  WHERE dt.query_id <> cd.vec_id
+       |  GROUP BY dt.query_id, cd.vec_id)""".stripMargin
+
+  /** The drift gates' oracle (ann_ivf_drift, ann_ivfpq_drift and its
+    * shifted twin), [[driftGate]]'s mirror: two complete chains in one
+    * WITH list — stale (`s_` prefixes) trains on the %7≠3 base rows,
+    * retrained (`f_`) on everything, both serve the full corpus —
+    * emitted by `served(prefix, basePred)` down to its top-3
+    * `<prefix>got`; one exact `metric` truth grades both. `eSelect`
+    * defines the corpus (the shifted twin bakes the +0.5 drift into
+    * it); `qPred` picks the query rows.
+    */
+  private def driftOracleSql(eSelect: String, qPred: String, metric: String)(
+      served: (String, String) => String): String =
     s"""WITH e AS ($eSelect),
        |q AS (SELECT vec_id AS query_id, embedding FROM e WHERE $qPred),
-       |${ivfCellChainSql("vec_id % 7 <> 3", "siv_", queryPred = qPred)},
-       |${ivfCellChainSql("TRUE", "fiv_", queryPred = qPred)},
-       |${adcLeg("spq_", "siv_", "siv_eb")},
-       |${adcLeg("fpq_", "fiv_", "e")},
-       |tdist AS (
-       |  SELECT q.query_id, c.vec_id AS cand_id,
-       |    CAST(FLOOR(list_sum(list_transform(range(1, 65),
-       |      i -> (CAST(q.embedding[i] AS DOUBLE) - CAST(c.embedding[i] AS DOUBLE))
-       |         * (CAST(q.embedding[i] AS DOUBLE) - CAST(c.embedding[i] AS DOUBLE))))
-       |      * 1e6 + 0.5) AS BIGINT) AS d_e6
-       |  FROM q JOIN e c ON q.query_id <> c.vec_id),
-       |truth AS (
-       |  SELECT query_id, cand_id FROM (
-       |    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-       |                                 ORDER BY d_e6, cand_id) AS rk
-       |    FROM tdist) t WHERE rk <= 3)
+       |${served("s_", "vec_id % 7 <> 3")},
+       |${served("f_", "TRUE")},
+       |${truthSql(metric)}
        |SELECT * FROM (
-       |${leg("stale", "spq_")}
+       |${recallSql("'stale' AS variant, ", false, ("s_got", "hits", "recall_e6"))}
        |UNION ALL
-       |${leg("retrained", "fpq_")}
+       |${recallSql("'retrained' AS variant, ", false, ("f_got", "hits", "recall_e6"))}
        |) u ORDER BY variant""".stripMargin
-  }
+
+  /** The quantized drift oracle: per variant the coarse chain and the
+    * PQ chain, both trained on the variant's build rows (`qPred` rides
+    * into the probes), served through the probed-cell ADC ranking.
+    */
+  private def ivfPqDriftOracleSql(eSelect: String, qPred: String): String =
+    driftOracleSql(eSelect, qPred, "l2") { (p, basePred) =>
+      s"""${ivfCellChainSql(basePred, s"${p}iv_", queryPred = qPred)},
+         |${pqCodesSql(s"${p}iv_eb", "e", s"${p}pq_")},
+         |${adcScoreSql(s"${p}pq_")},
+         |${p}got AS ${topSql(probedAdcSql(s"${p}pq_", s"${p}iv_"), 3)}""".stripMargin
+    }
 
   /** The shifted drift gate's oracle (shared by
     * ann_ivfpq_drift_shifted and recon_index_report's drift rows).
@@ -2501,21 +2478,23 @@ object AnnSuite {
       |  SELECT 'ivfpq' AS store, invariant, value FROM pq) u
       |ORDER BY store, invariant""".stripMargin
 
+  /** The PQ oracle chain: per subspace j (0..7), hash-ordered seeds
+    * sliced into sub-vectors, argmin assignment (ties lowest cid), one
+    * fixed-point Lloyd mean, re-encode, then ADC ([[adcScoreSql]]).
+    * `slot` (ROW_NUMBER over cid within j) is the oracle twin of the
+    * Spark side's array_position into the cid-ascending codebook
+    * array. Parameterized by the TRAINING corpus (`et` — seeds and the
+    * Lloyd mean run over rows matching `trainPred`; the encode and ADC
+    * legs always cover the whole table): `TRUE` is the full-corpus
+    * codebook, a hash predicate ([[sampleSql]]) checks sample-trained
+    * codebooks. Ends at `sc2` (query_id, cand_id, adist_e6).
+    */
   private def pqChainSqlFor(trainPred: String): String =
     s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
        |et AS (SELECT vec_id, embedding FROM e WHERE $trainPred),
        |${pqCodesSql("et", "e", "")},
        |q AS (SELECT vec_id AS query_id, embedding FROM e WHERE vec_id < 5),
-       |dt AS (
-       |  SELECT q.query_id, c.j, c.slot,
-       |    CAST(FLOOR(${pqSubDist("q.embedding[c.j*8+i]", "c.sc[i]")} * 1e6 + 0.5) AS BIGINT) AS d_e6
-       |  FROM q, slots c),
-       |sc2 AS (
-       |  SELECT dt.query_id, cd.vec_id AS cand_id,
-       |    CAST(SUM(dt.d_e6) AS BIGINT) AS adist_e6
-       |  FROM codes cd JOIN dt ON dt.j = cd.j AND dt.slot = cd.slot
-       |  WHERE dt.query_id <> cd.vec_id
-       |  GROUP BY dt.query_id, cd.vec_id)""".stripMargin
+       |${adcScoreSql("")}""".stripMargin
 
   /** The full-corpus-trained instance every fused PQ oracle rides. */
   private lazy val PqChainSql: String = pqChainSqlFor("TRUE")
@@ -2541,9 +2520,10 @@ object AnnSuite {
        |  SELECT p.query_id, p.cell,
        |    list_transform(range(1, 65), i ->
        |      CAST(CAST(q.embedding[i] AS DOUBLE) - CAST(c.ce[i] AS DOUBLE) AS REAL)) AS embedding
-       |  FROM iv_probes p
+       |  FROM iv_pr p
        |  JOIN e q ON q.vec_id = p.query_id
-       |  JOIN iv_cents c ON c.cid = p.cell),
+       |  JOIN iv_cents c ON c.cid = p.cell
+       |  WHERE p.rn <= $IvfNProbe),
        |dtr AS (
        |  SELECT qr.query_id, qr.cell, c.j, c.slot,
        |    CAST(FLOOR(${pqSubDist("qr.embedding[c.j*8+i]", "c.sc[i]")} * 1e6 + 0.5) AS BIGINT) AS d_e6
@@ -2557,74 +2537,25 @@ object AnnSuite {
        |  WHERE dtr.query_id <> cr.vec_id
        |  GROUP BY dtr.query_id, cr.vec_id, rr.cell)""".stripMargin
 
-  /** The full IVF oracle chain, parameterized by the index-BUILD
-    * corpus: seeds + the Lloyd step run over rows matching `basePred`
-    * (`eb`); the final assignment, probes and re-rank cover the whole
-    * table. `basePred = TRUE` checks the plain build (ann_ivf /
-    * ann_ivf_persisted); a proper subset checks build-then-append —
-    * appending a batch at the persisted index's FIXED centroids is
-    * algebraically one assignment of the unioned corpus at those
-    * centroids, so the same chain is the append path's oracle.
-    * `servePred` restricts which CANDIDATE rows the serve leg may
-    * score (training and probes are untouched): `NOT (cand_id …)`
-    * mirrors tombstone deletes, an attribute predicate (`label = …`)
-    * mirrors filtered search — both operate on the a1 columns
-    * (cand_id, cell, label). `serveBase` swaps the frame the serve-side
-    * assignment/probes cover (default the raw corpus `e`): an
-    * LWW-upserted index serves the corpus's FINAL state — updated
-    * vectors superseding, deleted ids absent — which `extraCtes`
-    * defines as a (vec_id, label, embedding) CTE derived from `e`.
+  /** The full IVF oracle: [[ivfCellChainSql]] (carrying `label`) served
+    * by [[ivfCosRankSql]]'s top-3. `basePred = TRUE` checks the plain
+    * build (ann_ivf / ann_ivf_persisted); a proper subset checks
+    * build-then-append — appending a batch at the persisted index's
+    * FIXED centroids is algebraically one assignment of the unioned
+    * corpus at those centroids. `servePred` restricts which CANDIDATE
+    * rows the serve may score (training and probes are untouched):
+    * `NOT (cand_id …)` mirrors tombstone deletes, an attribute
+    * predicate (`label = …`) mirrors filtered search. `serveBase` swaps
+    * the frame the serve-side assignment/probes cover (default the raw
+    * corpus `e`): an LWW-upserted index serves the corpus's FINAL state,
+    * which `extraCtes` defines as a (vec_id, label, embedding) CTE.
     */
   private def ivfOracleSql(basePred: String, servePred: String = "TRUE",
       serveBase: String = "e", extraCtes: String = ""): String =
     s"""WITH e AS (SELECT vec_id, label, embedding FROM embeddings),
-       |${extraCtes}eb AS (SELECT vec_id, label, embedding FROM e WHERE $basePred),
-       |seeds AS (
-       |  SELECT vec_id AS cid, embedding AS ce FROM eb
-       |  ORDER BY ('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 15))::BIGINT, vec_id
-       |  LIMIT $IvfK),
-       |d0 AS (
-       |  SELECT e.vec_id, s.cid, e.embedding,
-       |    ${oracleDist("s.ce")} AS dist
-       |  FROM eb e, seeds s),
-       |a0 AS (
-       |  SELECT vec_id, cid, embedding FROM (
-       |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
-       |    FROM d0) t WHERE rn = 1),
-       |dims AS (
-       |  -- DuckDB range() can't take lateral column refs; dim is fixed 64
-       |  SELECT cid, i, CAST(embedding[i] AS DOUBLE) AS v
-       |  FROM a0, range(1, 65) r(i)),
-       |cents AS (
-       |  SELECT cid, list(CAST(m AS REAL) ORDER BY i) AS ce FROM (
-       |    SELECT cid, i,
-       |      CAST(SUM(FLOOR(v*1e6 + 0.5)) AS DOUBLE)/COUNT(*)/1e6 AS m
-       |    FROM dims GROUP BY cid, i) t GROUP BY cid),
-       |d1 AS (
-       |  SELECT e.vec_id, c.cid, e.label, e.embedding,
-       |    ${oracleDist("c.ce")} AS dist
-       |  FROM $serveBase e, cents c),
-       |a1 AS (
-       |  SELECT vec_id AS cand_id, cid AS cell, label, embedding AS ce2 FROM (
-       |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
-       |    FROM d1) t WHERE rn = 1),
-       |probes AS (
-       |  SELECT vec_id AS query_id, cid AS cell, embedding AS qe FROM (
-       |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
-       |    FROM d1 WHERE vec_id < 5) t WHERE rn <= $IvfNProbe),
-       |scored AS (
-       |  SELECT query_id, cand_id, a1.cell AS cell,
-       |    FLOOR(
-       |      list_sum(list_transform(range(1, len(qe) + 1),
-       |        i -> CAST(qe[i] AS DOUBLE) * CAST(ce2[i] AS DOUBLE))) /
-       |      (${OracleNorm.format("qe")} * ${OracleNorm.format("ce2")}) * 1e6 + 0.5)/1e6 AS cos
-       |  FROM a1 JOIN probes ON a1.cell = probes.cell
-       |  WHERE query_id <> cand_id AND ($servePred)),
-       |ranked AS (
-       |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-       |                               ORDER BY cos DESC, cand_id) AS rk
-       |  FROM scored)
-       |SELECT query_id, cand_id, cell, cos, rk FROM ranked
+       |$extraCtes${ivfCellChainSql(basePred, serveBase = serveBase, carry = Seq("label"))}
+       |SELECT query_id, cand_id, cell, cos, rk FROM (
+       |  ${ivfCosRankSql(pred = servePred)}) r
        |WHERE rk <= 3 ORDER BY query_id, rk""".stripMargin
 
   /** The CDC-maintained living index's oracle (stream_ivf_cdc): base
@@ -2648,35 +2579,38 @@ object AnnSuite {
     * ORDERED multi-op-per-id algebra is IvfPersistSpec's LWW case).
     */
   private[graft] lazy val IvfUpsertOracleSql: String = ivfOracleSql(
-    basePred = "vec_id % 7 <> 3",
-    serveBase = "fin",
-    extraCtes =
-      s"""fin AS (
-         |  SELECT vec_id, label,
-         |    CASE WHEN vec_id % 7 <> 3 AND vec_id % 5 = 1
-         |         THEN list_transform(range(1, len(embedding) + 1),
-         |                i -> embedding[len(embedding) + 1 - i])
-         |         ELSE embedding END AS embedding
-         |  FROM e
-         |  WHERE NOT (vec_id % 13 = 2 AND vec_id % 5 <> 1 AND vec_id % 7 <> 3)),
-         |""".stripMargin)
+    basePred = "vec_id % 7 <> 3", serveBase = "fin", extraCtes = s"$FinSql,\n")
+
+  /** The upsert oracles' `fin`: the corpus's FINAL per-id state after
+    * the stream (updates of live base ids % 5 = 1 reverse the vector;
+    * base deletes % 13 = 2 are absent; inserts % 7 = 3 are as-is).
+    */
+  private val FinSql: String =
+    """fin AS (
+      |  SELECT vec_id, label,
+      |    CASE WHEN vec_id % 7 <> 3 AND vec_id % 5 = 1
+      |         THEN list_transform(range(1, len(embedding) + 1),
+      |                i -> embedding[len(embedding) + 1 - i])
+      |         ELSE embedding END AS embedding
+      |  FROM e
+      |  WHERE NOT (vec_id % 13 = 2 AND vec_id % 5 <> 1 AND vec_id % 7 <> 3))""".stripMargin
 
   /** The quantized CDC twin (stream_ivfpq_cdc): the IVFADC
     * build-then-append chain (both trainings on the base rows) with
     * the stream's deletes masked from the served candidates.
     */
   private[graft] lazy val IvfPqCdcOracleSql: String =
-    s"""${pqChainSqlFor("vec_id % 7 <> 3")},
-       |${ivfCellChainSql("vec_id % 7 <> 3")}
-       |SELECT query_id, cand_id, cell, adist_e6, CAST(rk AS BIGINT) AS rk FROM (
-       |  SELECT s.query_id, s.cand_id, a.cell, s.adist_e6,
-       |    ROW_NUMBER() OVER (PARTITION BY s.query_id
-       |                       ORDER BY s.adist_e6, s.cand_id) AS rk
-       |  FROM sc2 s
-       |  JOIN iv_a1 a ON a.cand_id = s.cand_id
-       |  JOIN iv_probes p ON p.query_id = s.query_id AND p.cell = a.cell
-       |  WHERE NOT (s.cand_id % 13 = 2)) t
-       |WHERE rk <= 5 ORDER BY query_id, rk""".stripMargin
+    ivfPqOracleSql("vec_id % 7 <> 3", "vec_id % 7 <> 3", "NOT (s.cand_id % 13 = 2)")
+
+  /** An IVFADC oracle: the PQ chain trained on `trainPred` rows ∪ the
+    * coarse chain built on `basePred` rows, serving the probed-cell ADC
+    * top-5 among candidates passing `servePred`.
+    */
+  private def ivfPqOracleSql(trainPred: String, basePred: String,
+      servePred: String = "TRUE"): String =
+    s"""${pqChainSqlFor(trainPred)},
+       |${ivfCellChainSql(basePred)}
+       |${top5Sql("cell, adist_e6", probedAdcSql(pred = servePred))}""".stripMargin
 
   /** The quantized LWW upsert oracle (stream_ivfpq_upsert): coarse
     * cells AND codebook train on the base rows (original vectors —
@@ -2687,49 +2621,20 @@ object AnnSuite {
     * vectors (a deployment queries the state it serves).
     */
   private[graft] lazy val IvfPqUpsertOracleSql: String =
-    s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
-       |fin AS (
-       |  SELECT vec_id,
-       |    CASE WHEN vec_id % 7 <> 3 AND vec_id % 5 = 1
-       |         THEN list_transform(range(1, len(embedding) + 1),
-       |                i -> embedding[len(embedding) + 1 - i])
-       |         ELSE embedding END AS embedding
-       |  FROM e
-       |  WHERE NOT (vec_id % 13 = 2 AND vec_id % 5 <> 1 AND vec_id % 7 <> 3)),
+    s"""WITH e AS (SELECT vec_id, label, embedding FROM embeddings),
+       |$FinSql,
        |${ivfCellChainSql("vec_id % 7 <> 3", serveBase = "fin")},
        |${pqCodesSql("iv_eb", "fin", "")},
        |q AS (SELECT vec_id AS query_id, embedding FROM fin WHERE vec_id < 5),
-       |dt AS (
-       |  SELECT q.query_id, c.j, c.slot,
-       |    CAST(FLOOR(${pqSubDist("q.embedding[c.j*8+i]", "c.sc[i]")} * 1e6 + 0.5) AS BIGINT) AS d_e6
-       |  FROM q, slots c),
-       |sc2 AS (
-       |  SELECT dt.query_id, cd.vec_id AS cand_id,
-       |    CAST(SUM(dt.d_e6) AS BIGINT) AS adist_e6
-       |  FROM codes cd JOIN dt ON dt.j = cd.j AND dt.slot = cd.slot
-       |  WHERE dt.query_id <> cd.vec_id
-       |  GROUP BY dt.query_id, cd.vec_id)
-       |SELECT query_id, cand_id, cell, adist_e6, CAST(rk AS BIGINT) AS rk FROM (
-       |  SELECT s.query_id, s.cand_id, a.cell, s.adist_e6,
-       |    ROW_NUMBER() OVER (PARTITION BY s.query_id
-       |                       ORDER BY s.adist_e6, s.cand_id) AS rk
-       |  FROM sc2 s
-       |  JOIN iv_a1 a ON a.cand_id = s.cand_id
-       |  JOIN iv_probes p ON p.query_id = s.query_id AND p.cell = a.cell) t
-       |WHERE rk <= 5 ORDER BY query_id, rk""".stripMargin
+       |${adcScoreSql("")}
+       |${top5Sql("cell, adist_e6", probedAdcSql())}""".stripMargin
 
   private def oraclesBase: Map[String, String] = Map(
     "ann_bruteforce" ->
-      """WITH q AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 5),
+      s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 5),
         |c AS (SELECT vec_id AS cand_id, label, embedding AS ce FROM embeddings),
         |scored AS (
-        |  SELECT query_id, cand_id, label,
-        |    floor(
-        |      list_sum(list_transform(range(1, len(qe) + 1),
-        |        i -> CAST(qe[i] AS DOUBLE) * CAST(ce[i] AS DOUBLE))) /
-        |      (sqrt(list_sum(list_transform(qe, v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))) *
-        |       sqrt(list_sum(list_transform(ce, v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))))
-        |      * 1e6 + 0.5) / 1e6 AS cos
+        |  SELECT query_id, cand_id, label, ${cosSql("qe", "ce")} AS cos
         |  FROM c JOIN q ON query_id <> cand_id),
         |ranked AS (
         |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, cand_id) AS rk
@@ -2758,129 +2663,21 @@ object AnnSuite {
     // attribute — same serve-side algebra as a delete mask
     "ann_ivf_filtered" -> ivfOracleSql("TRUE", "label = 3"),
 
-    "ann_recall_eval" -> {
-      // the IVF CTE chain (identical to ann_ivf's, i-prefixed) joined
-      // against the exact brute-force top-3 (b-prefixed); recall is
-      // matched/|truth| in portable fixed-point
+    // the ann_ivf chain's served top-3 graded against the exact cosine
+    // truth; recall is matched/|truth| in portable fixed-point
+    "ann_recall_eval" ->
       s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
-         |seeds AS (
-         |  SELECT vec_id AS cid, embedding AS ce FROM e
-         |  ORDER BY ('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 15))::BIGINT, vec_id
-         |  LIMIT $IvfK),
-         |d0 AS (
-         |  SELECT e.vec_id, s.cid, e.embedding,
-         |    ${oracleDist("s.ce")} AS dist
-         |  FROM e, seeds s),
-         |a0 AS (
-         |  SELECT vec_id, cid, embedding FROM (
-         |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
-         |    FROM d0) t WHERE rn = 1),
-         |dims AS (
-         |  SELECT cid, i, CAST(embedding[i] AS DOUBLE) AS v
-         |  FROM a0, range(1, 65) r(i)),
-         |cents AS (
-         |  SELECT cid, list(CAST(m AS REAL) ORDER BY i) AS ce FROM (
-         |    SELECT cid, i,
-         |      CAST(SUM(FLOOR(v*1e6 + 0.5)) AS DOUBLE)/COUNT(*)/1e6 AS m
-         |    FROM dims GROUP BY cid, i) t GROUP BY cid),
-         |d1 AS (
-         |  SELECT e.vec_id, c.cid, e.embedding,
-         |    ${oracleDist("c.ce")} AS dist
-         |  FROM e, cents c),
-         |a1 AS (
-         |  SELECT vec_id AS cand_id, cid AS cell, embedding AS ce2 FROM (
-         |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
-         |    FROM d1) t WHERE rn = 1),
-         |probes AS (
-         |  SELECT vec_id AS query_id, cid AS cell, embedding AS qe FROM (
-         |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
-         |    FROM d1 WHERE vec_id < 5) t WHERE rn <= $IvfNProbe),
-         |iscored AS (
-         |  SELECT query_id, cand_id,
-         |    FLOOR(
-         |      list_sum(list_transform(range(1, len(qe) + 1),
-         |        i -> CAST(qe[i] AS DOUBLE) * CAST(ce2[i] AS DOUBLE))) /
-         |      (${OracleNorm.format("qe")} * ${OracleNorm.format("ce2")}) * 1e6 + 0.5)/1e6 AS cos
-         |  FROM a1 JOIN probes ON a1.cell = probes.cell
-         |  WHERE query_id <> cand_id),
-         |ivf AS (
-         |  SELECT query_id, cand_id FROM (
-         |    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-         |                                 ORDER BY cos DESC, cand_id) AS rk
-         |    FROM iscored) t WHERE rk <= 3),
-         |bscored AS (
-         |  SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
-         |    FLOOR(
-         |      list_sum(list_transform(range(1, len(q.embedding) + 1),
-         |        i -> CAST(q.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE))) /
-         |      (${OracleNorm.format("q.embedding")} * ${OracleNorm.format("c.embedding")})
-         |      * 1e6 + 0.5)/1e6 AS cos
-         |  FROM e q JOIN e c ON q.vec_id < 5 AND q.vec_id <> c.vec_id),
-         |truth AS (
-         |  SELECT query_id, cand_id FROM (
-         |    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-         |                                 ORDER BY cos DESC, cand_id) AS rk
-         |    FROM bscored) t WHERE rk <= 3)
-         |SELECT t.query_id AS query_id,
-         |  CAST(COUNT(*) AS BIGINT) AS n_truth,
-         |  CAST(SUM(CASE WHEN i.cand_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS hits,
-         |  CAST(FLOOR(
-         |    CAST(SUM(CASE WHEN i.cand_id IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE)
-         |    * 1e6 / COUNT(*) + 0.5) AS BIGINT) AS recall_e6
-         |FROM truth t LEFT JOIN ivf i
-         |  ON i.query_id = t.query_id AND i.cand_id = t.cand_id
-         |GROUP BY t.query_id ORDER BY query_id""".stripMargin
-    },
+         |q AS (SELECT vec_id AS query_id, embedding FROM e WHERE vec_id < 5),
+         |${ivfCellChainSql("TRUE")},
+         |${truthSql("cosine")}
+         |${recallSql("", true, (topSql(ivfCosRankSql(), 3), "hits", "recall_e6"))}""".stripMargin,
 
-    "ann_ivf_drift" -> {
-      // two full coarse chains in one WITH list (prefixes s_/f_ —
-      // stale trains on the base rows, fresh on everything), one
-      // exact-cosine truth, recall aggregated per variant
-      def scored(p: String): String =
-        s"""${p}scored AS (
-           |  SELECT p.query_id, a.cand_id,
-           |    FLOOR(
-           |      list_sum(list_transform(range(1, len(qe) + 1),
-           |        i -> CAST(qe[i] AS DOUBLE) * CAST(ce2[i] AS DOUBLE))) /
-           |      (${OracleNorm.format("qe")} * ${OracleNorm.format("ce2")}) * 1e6 + 0.5)/1e6 AS cos
-           |  FROM ${p}a1 a JOIN ${p}probes p ON a.cell = p.cell
-           |  WHERE p.query_id <> a.cand_id),
-           |${p}ivf AS (
-           |  SELECT query_id, cand_id FROM (
-           |    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-           |                                 ORDER BY cos DESC, cand_id) AS rk
-           |    FROM ${p}scored) t WHERE rk <= 3)""".stripMargin
-      def leg(variant: String, p: String): String =
-        s"""SELECT '$variant' AS variant,
-           |  CAST(COUNT(*) AS BIGINT) AS n_truth,
-           |  CAST(SUM(CASE WHEN g.cand_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS hits,
-           |  CAST(FLOOR(CAST(SUM(CASE WHEN g.cand_id IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE)
-           |    * 1e6 / COUNT(*) + 0.5) AS BIGINT) AS recall_e6
-           |FROM truth t LEFT JOIN ${p}ivf g
-           |  ON g.query_id = t.query_id AND g.cand_id = t.cand_id""".stripMargin
-      s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
-         |${ivfCellChainSql("vec_id % 7 <> 3", "s_")},
-         |${ivfCellChainSql("TRUE", "f_")},
-         |bscored AS (
-         |  SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
-         |    FLOOR(
-         |      list_sum(list_transform(range(1, len(q.embedding) + 1),
-         |        i -> CAST(q.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE))) /
-         |      (${OracleNorm.format("q.embedding")} * ${OracleNorm.format("c.embedding")})
-         |      * 1e6 + 0.5)/1e6 AS cos
-         |  FROM e q JOIN e c ON q.vec_id < 5 AND q.vec_id <> c.vec_id),
-         |truth AS (
-         |  SELECT query_id, cand_id FROM (
-         |    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-         |                                 ORDER BY cos DESC, cand_id) AS rk
-         |    FROM bscored) t WHERE rk <= 3),
-         |${scored("s_")},
-         |${scored("f_")}
-         |SELECT * FROM (
-         |${leg("stale", "s_")}
-         |UNION ALL
-         |${leg("retrained", "f_")}
-         |) u ORDER BY variant""".stripMargin
+    // two full coarse chains (stale on the base rows, retrained on
+    // everything), one exact-cosine truth, recall per variant
+    "ann_ivf_drift" -> driftOracleSql(
+        "SELECT vec_id, embedding FROM embeddings", "vec_id < 5", "cosine") { (p, basePred) =>
+      s"""${ivfCellChainSql(basePred, p)},
+         |${p}got AS ${topSql(ivfCosRankSql(p), 3)}""".stripMargin
     },
 
     "ann_ivfpq_drift" -> ivfPqDriftOracleSql(
@@ -2988,448 +2785,111 @@ object AnnSuite {
          |FROM rows0 ORDER BY component, metric""".stripMargin
     },
 
-    "ann_tune" -> {
-      // the recall chain shared with ann_recall_eval, swept over
-      // nprobe ∈ {1,2,4,8}: `pr` keeps every query's FULL cell ranking
-      // (rn), each leg filters rn <= nprobe for its ivf top-3 and its
-      // scanned-row price; legs UNION ALL into the operating-point table
-      val legs = Seq(1, 2, 4, 8).map { np =>
-        s"""SELECT CAST($np AS BIGINT) AS nprobe, r.n_truth, r.hits,
-           |    CAST(FLOOR(CAST(r.hits AS DOUBLE) * 1e6 / r.n_truth + 0.5) AS BIGINT) AS recall_e6,
-           |    s.scanned_rows,
-           |    CAST(FLOOR(CAST(s.scanned_rows AS DOUBLE) * 1e6
-           |      / (s.nq * (SELECT COUNT(*) FROM e)) + 0.5) AS BIGINT) AS frac_scanned_e6
-           |  FROM (
-           |    SELECT CAST(COUNT(*) AS BIGINT) AS n_truth,
-           |      CAST(SUM(CASE WHEN i.cand_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS hits
-           |    FROM truth t LEFT JOIN (
-           |      SELECT query_id, cand_id FROM (
-           |        SELECT query_id, cand_id, ROW_NUMBER() OVER (PARTITION BY query_id
-           |                                     ORDER BY cos DESC, cand_id) AS rk
-           |        FROM (
-           |          SELECT p.query_id, a1.cand_id,
-           |            FLOOR(
-           |              list_sum(list_transform(range(1, len(qe) + 1),
-           |                i -> CAST(qe[i] AS DOUBLE) * CAST(ce2[i] AS DOUBLE))) /
-           |              (${OracleNorm.format("qe")} * ${OracleNorm.format("ce2")}) * 1e6 + 0.5)/1e6 AS cos
-           |          FROM a1 JOIN pr p ON a1.cell = p.cell AND p.rn <= $np
-           |          WHERE p.query_id <> a1.cand_id) sc) rk0 WHERE rk <= 3) i
-           |      ON i.query_id = t.query_id AND i.cand_id = t.cand_id) r,
-           |    (SELECT CAST(SUM(occ.cell_n) AS BIGINT) AS scanned_rows,
-           |       CAST(COUNT(DISTINCT p.query_id) AS BIGINT) AS nq
-           |     FROM pr p JOIN occ ON occ.cell = p.cell WHERE p.rn <= $np) s""".stripMargin
-      }
-      s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
-         |seeds AS (
-         |  SELECT vec_id AS cid, embedding AS ce FROM e
-         |  ORDER BY ('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 15))::BIGINT, vec_id
-         |  LIMIT $IvfK),
-         |d0 AS (
-         |  SELECT e.vec_id, s.cid, e.embedding,
-         |    ${oracleDist("s.ce")} AS dist
-         |  FROM e, seeds s),
-         |a0 AS (
-         |  SELECT vec_id, cid, embedding FROM (
-         |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
-         |    FROM d0) t WHERE rn = 1),
-         |dims AS (
-         |  SELECT cid, i, CAST(embedding[i] AS DOUBLE) AS v
-         |  FROM a0, range(1, 65) r(i)),
-         |cents AS (
-         |  SELECT cid, list(CAST(m AS REAL) ORDER BY i) AS ce FROM (
-         |    SELECT cid, i,
-         |      CAST(SUM(FLOOR(v*1e6 + 0.5)) AS DOUBLE)/COUNT(*)/1e6 AS m
-         |    FROM dims GROUP BY cid, i) t GROUP BY cid),
-         |d1 AS (
-         |  SELECT e.vec_id, c.cid, e.embedding,
-         |    ${oracleDist("c.ce")} AS dist
-         |  FROM e, cents c),
-         |a1 AS (
-         |  SELECT vec_id AS cand_id, cid AS cell, embedding AS ce2 FROM (
-         |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
-         |    FROM d1) t WHERE rn = 1),
-         |occ AS (SELECT cell, CAST(COUNT(*) AS BIGINT) AS cell_n FROM a1 GROUP BY cell),
-         |pr AS (
-         |  SELECT vec_id AS query_id, cid AS cell, embedding AS qe,
-         |    ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
-         |  FROM d1 WHERE vec_id < 5),
-         |bscored AS (
-         |  SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
-         |    FLOOR(
-         |      list_sum(list_transform(range(1, len(q.embedding) + 1),
-         |        i -> CAST(q.embedding[i] AS DOUBLE) * CAST(c.embedding[i] AS DOUBLE))) /
-         |      (${OracleNorm.format("q.embedding")} * ${OracleNorm.format("c.embedding")})
-         |      * 1e6 + 0.5)/1e6 AS cos
-         |  FROM e q JOIN e c ON q.vec_id < 5 AND q.vec_id <> c.vec_id),
-         |truth AS (
-         |  SELECT query_id, cand_id FROM (
-         |    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-         |                                 ORDER BY cos DESC, cand_id) AS rk
-         |    FROM bscored) t WHERE rk <= 3)
-         |SELECT * FROM (
-         |${legs.mkString("", "\nUNION ALL\n", "")}
-         |) u ORDER BY nprobe""".stripMargin
-    },
-
-    "ann_pq" -> {
-      // the shared PqChainSql (see its doc) + the served top-5
-      s"""$PqChainSql
-         |SELECT query_id, cand_id, adist_e6, CAST(rk AS BIGINT) AS rk FROM (
-         |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-         |                               ORDER BY adist_e6, cand_id) AS rk
-         |  FROM sc2) t
-         |WHERE rk <= 5 ORDER BY query_id, rk""".stripMargin
-    },
-
-    "ann_pq_sampled" -> {
-      // same serve as ann_pq, codebook trained on the hash-half sample
-      s"""${pqChainSqlFor(
-        "('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 15))::BIGINT % 2 = 0")}
-         |SELECT query_id, cand_id, adist_e6, CAST(rk AS BIGINT) AS rk FROM (
-         |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-         |                               ORDER BY adist_e6, cand_id) AS rk
-         |  FROM sc2) t
-         |WHERE rk <= 5 ORDER BY query_id, rk""".stripMargin
-    },
-
-    "ann_pq_recall" -> {
-      // the quantization-error gate in both operating modes: ADC top-3
-      // and exact re-rank over the ADC top-50 shortlist, each graded
-      // against the exact full-vector L2 truth — truth distances
-      // e6-floored to BIGINT, ties by cand_id, every leg deterministic
-      s"""$PqChainSql,
-         |tdist AS (
-         |  SELECT q.query_id, c.vec_id AS cand_id,
-         |    CAST(FLOOR(list_sum(list_transform(range(1, 65),
-         |      i -> (CAST(q.embedding[i] AS DOUBLE) - CAST(c.embedding[i] AS DOUBLE))
-         |         * (CAST(q.embedding[i] AS DOUBLE) - CAST(c.embedding[i] AS DOUBLE))))
-         |      * 1e6 + 0.5) AS BIGINT) AS d_e6
-         |  FROM q JOIN e c ON q.query_id <> c.vec_id),
-         |truth AS (
-         |  SELECT query_id, cand_id FROM (
-         |    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-         |                                 ORDER BY d_e6, cand_id) AS rk
-         |    FROM tdist) t WHERE rk <= 3),
-         |short AS (
-         |  SELECT query_id, cand_id, rk FROM (
-         |    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-         |                                 ORDER BY adist_e6, cand_id) AS rk
-         |    FROM sc2) t WHERE rk <= 50),
-         |rr AS (
-         |  SELECT query_id, cand_id FROM (
-         |    SELECT t.query_id, t.cand_id,
-         |      ROW_NUMBER() OVER (PARTITION BY t.query_id
-         |                         ORDER BY t.d_e6, t.cand_id) AS rk
-         |    FROM tdist t JOIN short s
-         |      ON s.query_id = t.query_id AND s.cand_id = t.cand_id) x
-         |  WHERE rk <= 3)
-         |SELECT t.query_id, CAST(COUNT(*) AS BIGINT) AS n_truth,
-         |  CAST(SUM(CASE WHEN g.cand_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS hits_adc,
-         |  CAST(FLOOR(CAST(SUM(CASE WHEN g.cand_id IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE)
-         |    * 1e6 / COUNT(*) + 0.5) AS BIGINT) AS recall_adc_e6,
-         |  CAST(SUM(CASE WHEN r.cand_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS hits_rerank,
-         |  CAST(FLOOR(CAST(SUM(CASE WHEN r.cand_id IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE)
-         |    * 1e6 / COUNT(*) + 0.5) AS BIGINT) AS recall_rerank_e6
-         |FROM truth t
-         |LEFT JOIN (SELECT query_id, cand_id FROM short WHERE rk <= 3) g
-         |  ON g.query_id = t.query_id AND g.cand_id = t.cand_id
-         |LEFT JOIN rr r
-         |  ON r.query_id = t.query_id AND r.cand_id = t.cand_id
-         |GROUP BY t.query_id ORDER BY t.query_id""".stripMargin
-    },
-
-    "ann_ivfpq" -> {
-      // PqChainSql (codes + ADC scores) ∪ IvfCellChainSql (cells +
-      // probes): the served set is ADC scores restricted to candidates
-      // whose cell one of the query's probes covers, ranked within it
-      s"""$PqChainSql,
-         |${ivfCellChainSql("TRUE")}
-         |SELECT query_id, cand_id, cell, adist_e6, CAST(rk AS BIGINT) AS rk FROM (
-         |  SELECT s.query_id, s.cand_id, a.cell, s.adist_e6,
-         |    ROW_NUMBER() OVER (PARTITION BY s.query_id
-         |                       ORDER BY s.adist_e6, s.cand_id) AS rk
-         |  FROM sc2 s
-         |  JOIN iv_a1 a ON a.cand_id = s.cand_id
-         |  JOIN iv_probes p ON p.query_id = s.query_id AND p.cell = a.cell) t
-         |WHERE rk <= 5 ORDER BY query_id, rk""".stripMargin
-    },
-
-    "ann_ivfpq_filtered" -> {
-      // the ann_ivfpq chain with the carried-attribute predicate on
-      // the served candidates (trainings saw the full corpus)
-      s"""$PqChainSql,
-         |${ivfCellChainSql("TRUE")}
-         |SELECT query_id, cand_id, cell, adist_e6, CAST(rk AS BIGINT) AS rk FROM (
-         |  SELECT s.query_id, s.cand_id, a.cell, s.adist_e6,
-         |    ROW_NUMBER() OVER (PARTITION BY s.query_id
-         |                       ORDER BY s.adist_e6, s.cand_id) AS rk
-         |  FROM sc2 s
-         |  JOIN iv_a1 a ON a.cand_id = s.cand_id
-         |  JOIN iv_probes p ON p.query_id = s.query_id AND p.cell = a.cell
-         |  WHERE s.cand_id IN (SELECT vec_id FROM embeddings WHERE label = 3)) t
-         |WHERE rk <= 5 ORDER BY query_id, rk""".stripMargin
-    },
-
-    "ann_ivfpq_delete" -> {
-      // the ann_ivfpq chain with tombstoned ids masked out of the
-      // served candidates (trainings saw the full corpus and are fixed)
-      s"""$PqChainSql,
-         |${ivfCellChainSql("TRUE")}
-         |SELECT query_id, cand_id, cell, adist_e6, CAST(rk AS BIGINT) AS rk FROM (
-         |  SELECT s.query_id, s.cand_id, a.cell, s.adist_e6,
-         |    ROW_NUMBER() OVER (PARTITION BY s.query_id
-         |                       ORDER BY s.adist_e6, s.cand_id) AS rk
-         |  FROM sc2 s
-         |  JOIN iv_a1 a ON a.cand_id = s.cand_id
-         |  JOIN iv_probes p ON p.query_id = s.query_id AND p.cell = a.cell
-         |  WHERE NOT (s.cand_id % 11 = 5)) t
-         |WHERE rk <= 5 ORDER BY query_id, rk""".stripMargin
-    },
-
-    "ann_ivfpq_sampled" -> {
-      // sampled-training PQ chain ∪ full-corpus coarse chain, served
-      // exactly like ann_ivfpq
-      s"""${pqChainSqlFor(
-        "('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 15))::BIGINT % 16 = 0")},
-         |${ivfCellChainSql("TRUE")}
-         |SELECT query_id, cand_id, cell, adist_e6, CAST(rk AS BIGINT) AS rk FROM (
-         |  SELECT s.query_id, s.cand_id, a.cell, s.adist_e6,
-         |    ROW_NUMBER() OVER (PARTITION BY s.query_id
-         |                       ORDER BY s.adist_e6, s.cand_id) AS rk
-         |  FROM sc2 s
-         |  JOIN iv_a1 a ON a.cand_id = s.cand_id
-         |  JOIN iv_probes p ON p.query_id = s.query_id AND p.cell = a.cell) t
-         |WHERE rk <= 5 ORDER BY query_id, rk""".stripMargin
-    },
-
-    "ann_ivfpq_append" -> {
-      // build-then-append at FIXED coarse centroids + FIXED codebook
-      // equals one build over the unioned corpus with BOTH trainings
-      // restricted to the base rows: the same served-top-5 chain as
-      // ann_ivfpq, with the coarse chain's build corpus and the PQ
-      // chain's training corpus both predicated on the base
-      s"""${pqChainSqlFor("vec_id % 7 <> 3")},
-         |${ivfCellChainSql("vec_id % 7 <> 3")}
-         |SELECT query_id, cand_id, cell, adist_e6, CAST(rk AS BIGINT) AS rk FROM (
-         |  SELECT s.query_id, s.cand_id, a.cell, s.adist_e6,
-         |    ROW_NUMBER() OVER (PARTITION BY s.query_id
-         |                       ORDER BY s.adist_e6, s.cand_id) AS rk
-         |  FROM sc2 s
-         |  JOIN iv_a1 a ON a.cand_id = s.cand_id
-         |  JOIN iv_probes p ON p.query_id = s.query_id AND p.cell = a.cell) t
-         |WHERE rk <= 5 ORDER BY query_id, rk""".stripMargin
-    },
-
-    "ann_ivfpq_tune" -> {
-      // the quantized operating-point sweep: per (nprobe, shortlist)
-      // leg, probed-cell ADC candidates ranked (rk), served either raw
-      // (rk <= 3) or exact-re-ranked over the rk <= 50 shortlist, each
-      // graded against the exact L2 truth; the price is the probed
-      // cells' code-row occupancy as a fraction of queries × corpus
-      def cand(np: Int): String =
-        s"""SELECT s.query_id, s.cand_id,
-           |      ROW_NUMBER() OVER (PARTITION BY s.query_id
-           |                         ORDER BY s.adist_e6, s.cand_id) AS rk
-           |    FROM sc2 s
-           |    JOIN iv_a1 a ON a.cand_id = s.cand_id
-           |    JOIN iv_pr p ON p.query_id = s.query_id AND p.cell = a.cell
-           |      AND p.rn <= $np""".stripMargin
-      def got(np: Int, sl: Int): String =
-        if (sl == 0)
-          s"SELECT query_id, cand_id FROM (${cand(np)}) rr WHERE rk <= 3"
-        else
-          s"""SELECT query_id, cand_id FROM (
-             |  SELECT t.query_id, t.cand_id,
-             |    ROW_NUMBER() OVER (PARTITION BY t.query_id
-             |                       ORDER BY t.d_e6, t.cand_id) AS rk2
-             |  FROM tdist t JOIN (${cand(np)}) sh
-             |    ON sh.rk <= $sl AND sh.query_id = t.query_id
-             |   AND sh.cand_id = t.cand_id) x WHERE rk2 <= 3""".stripMargin
-      def leg(np: Int, sl: Int): String =
-        s"""SELECT CAST($np AS BIGINT) AS nprobe, CAST($sl AS BIGINT) AS shortlist,
-           |    r.n_truth, r.hits,
-           |    CAST(FLOOR(CAST(r.hits AS DOUBLE) * 1e6 / r.n_truth + 0.5) AS BIGINT) AS recall_e6,
-           |    s.scanned_rows,
-           |    CAST(FLOOR(CAST(s.scanned_rows AS DOUBLE) * 1e6
-           |      / (s.nq * (SELECT COUNT(*) FROM e)) + 0.5) AS BIGINT) AS frac_scanned_e6
-           |  FROM (
-           |    SELECT CAST(COUNT(*) AS BIGINT) AS n_truth,
-           |      CAST(SUM(CASE WHEN g.cand_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS hits
-           |    FROM truth t LEFT JOIN (${got(np, sl)}) g
-           |      ON g.query_id = t.query_id AND g.cand_id = t.cand_id) r,
-           |    (SELECT CAST(SUM(occ.cell_n) AS BIGINT) AS scanned_rows,
-           |       CAST(COUNT(DISTINCT p.query_id) AS BIGINT) AS nq
-           |     FROM iv_pr p JOIN iv_occ occ ON occ.cell = p.cell
-           |     WHERE p.rn <= $np) s""".stripMargin
-      val legs = for { np <- Seq(1, 2, 4, 8); sl <- Seq(0, 50) } yield leg(np, sl)
-      s"""$PqChainSql,
-         |${ivfCellChainSql("TRUE")},
-         |iv_occ AS (SELECT cell, CAST(COUNT(*) AS BIGINT) AS cell_n
-         |           FROM iv_a1 GROUP BY cell),
-         |tdist AS (
-         |  SELECT q.query_id, c.vec_id AS cand_id,
-         |    CAST(FLOOR(list_sum(list_transform(range(1, 65),
-         |      i -> (CAST(q.embedding[i] AS DOUBLE) - CAST(c.embedding[i] AS DOUBLE))
-         |         * (CAST(q.embedding[i] AS DOUBLE) - CAST(c.embedding[i] AS DOUBLE))))
-         |      * 1e6 + 0.5) AS BIGINT) AS d_e6
-         |  FROM q JOIN e c ON q.query_id <> c.vec_id),
-         |truth AS (
-         |  SELECT query_id, cand_id FROM (
-         |    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-         |                                 ORDER BY d_e6, cand_id) AS rk
-         |    FROM tdist) t WHERE rk <= 3)
-         |SELECT * FROM (
-         |${legs.mkString("", "\nUNION ALL\n", "")}
-         |) u ORDER BY nprobe, shortlist""".stripMargin
-    },
-
-    "ann_pq_sampled16" -> {
-      // same serve as ann_pq, codebook trained on the 1/16 hash-sample
-      s"""${pqChainSqlFor(
-        "('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 15))::BIGINT % 16 = 0")}
-         |SELECT query_id, cand_id, adist_e6, CAST(rk AS BIGINT) AS rk FROM (
-         |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-         |                               ORDER BY adist_e6, cand_id) AS rk
-         |  FROM sc2) t
-         |WHERE rk <= 5 ORDER BY query_id, rk""".stripMargin
-    },
-
-    "ann_pq_sampled_recall" -> {
-      // three sampled-training chains (mod 1 / 2 / 16, m<mod>_-prefixed
-      // CTEs) graded against one exact-L2 truth — the recall-per-
-      // training-rate curve
-      def modChain(mod: Int, p: String): String = {
-        val trainBase = if (mod <= 1) "e" else s"${p}et"
-        val tb = if (mod <= 1) "" else
-          s"""${p}et AS (SELECT vec_id, embedding FROM e
-             |  WHERE ('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 15))::BIGINT % $mod = 0),
-             |""".stripMargin
-        s"""$tb${pqCodesSql(trainBase, "e", p)},
-           |${p}dt AS (
-           |  SELECT q.query_id, c.j, c.slot,
-           |    CAST(FLOOR(${pqSubDist("q.embedding[c.j*8+i]", "c.sc[i]")} * 1e6 + 0.5) AS BIGINT) AS d_e6
-           |  FROM q, ${p}slots c),
-           |${p}sc2 AS (
-           |  SELECT dt.query_id, cd.vec_id AS cand_id,
-           |    CAST(SUM(dt.d_e6) AS BIGINT) AS adist_e6
-           |  FROM ${p}codes cd JOIN ${p}dt dt ON dt.j = cd.j AND dt.slot = cd.slot
-           |  WHERE dt.query_id <> cd.vec_id
-           |  GROUP BY dt.query_id, cd.vec_id),
-           |${p}adc AS (
-           |  SELECT query_id, cand_id FROM (
-           |    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-           |                                 ORDER BY adist_e6, cand_id) AS rk
-           |    FROM ${p}sc2) t WHERE rk <= 3)""".stripMargin
-      }
-      def legSql(mod: Int, p: String): String =
-        s"""SELECT CAST($mod AS BIGINT) AS sample_mod,
-           |  CAST(COUNT(*) AS BIGINT) AS n_truth,
-           |  CAST(SUM(CASE WHEN g.cand_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS hits_adc,
-           |  CAST(FLOOR(CAST(SUM(CASE WHEN g.cand_id IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE)
-           |    * 1e6 / COUNT(*) + 0.5) AS BIGINT) AS recall_adc_e6
-           |FROM truth t LEFT JOIN ${p}adc g
-           |  ON g.query_id = t.query_id AND g.cand_id = t.cand_id""".stripMargin
+    // ann_recall_eval's chain swept over nprobe ∈ {1,2,4,8}: each leg
+    // serves the cells its query's rn <= nprobe probes cover
+    "ann_tune" -> sweepOracleSql(
       s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
          |q AS (SELECT vec_id AS query_id, embedding FROM e WHERE vec_id < 5),
-         |tdist AS (
-         |  SELECT q.query_id, c.vec_id AS cand_id,
-         |    CAST(FLOOR(list_sum(list_transform(range(1, 65),
-         |      i -> (CAST(q.embedding[i] AS DOUBLE) - CAST(c.embedding[i] AS DOUBLE))
-         |         * (CAST(q.embedding[i] AS DOUBLE) - CAST(c.embedding[i] AS DOUBLE))))
-         |      * 1e6 + 0.5) AS BIGINT) AS d_e6
-         |  FROM q JOIN e c ON q.query_id <> c.vec_id),
-         |truth AS (
-         |  SELECT query_id, cand_id FROM (
-         |    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-         |                                 ORDER BY d_e6, cand_id) AS rk
-         |    FROM tdist) t WHERE rk <= 3),
-         |${modChain(1, "m1_")},
-         |${modChain(2, "m2_")},
-         |${modChain(16, "m16_")},
-         |${modChain(256, "m256_")}
+         |${ivfCellChainSql("TRUE")}""".stripMargin, "cosine",
+      Seq(1, 2, 4, 8).map(np => (s"CAST($np AS BIGINT) AS nprobe",
+        topSql(ivfCosRankSql(np = np), 3), np)),
+      "nprobe"),
+
+    // the shared PqChainSql (see its doc) + the served top-5
+    "ann_pq" -> s"$PqChainSql\n${top5Sql("adist_e6", adcRankSql("sc2"))}",
+
+    // same serve as ann_pq, codebook trained on the hash-half sample
+    "ann_pq_sampled" ->
+      s"${pqChainSqlFor(sampleSql(2))}\n${top5Sql("adist_e6", adcRankSql("sc2"))}",
+
+    // the quantization-error gate in both operating modes: ADC top-3
+    // and exact re-rank over the ADC top-50 shortlist, each graded
+    // against the exact full-vector L2 truth
+    "ann_pq_recall" ->
+      s"""$PqChainSql,
+         |${truthSql("l2")},
+         |adc AS (${adcRankSql("sc2")})
+         |${recallSql("", true,
+              (topSql("SELECT * FROM adc", 3), "hits_adc", "recall_adc_e6"),
+              (rerankSql(topSql("SELECT * FROM adc", 50)), "hits_rerank", "recall_rerank_e6"))}""".stripMargin,
+
+    // PqChainSql (codes + ADC scores) ∪ the coarse chain (cells +
+    // probes): the served set is ADC scores restricted to candidates
+    // whose cell one of the query's probes covers, ranked within it
+    "ann_ivfpq" -> ivfPqOracleSql("TRUE", "TRUE"),
+
+    // the carried-attribute predicate on the served candidates
+    // (trainings saw the full corpus)
+    "ann_ivfpq_filtered" -> ivfPqOracleSql("TRUE", "TRUE",
+      "s.cand_id IN (SELECT vec_id FROM embeddings WHERE label = 3)"),
+
+    // tombstoned ids masked out of the served candidates (trainings saw
+    // the full corpus and are fixed)
+    "ann_ivfpq_delete" -> ivfPqOracleSql("TRUE", "TRUE", "NOT (s.cand_id % 11 = 5)"),
+
+    // sampled-training PQ chain ∪ full-corpus coarse chain
+    "ann_ivfpq_sampled" -> ivfPqOracleSql(sampleSql(16), "TRUE"),
+
+    // build-then-append at FIXED coarse centroids + FIXED codebook
+    // equals one build over the unioned corpus with BOTH trainings
+    // restricted to the base rows
+    "ann_ivfpq_append" -> ivfPqOracleSql("vec_id % 7 <> 3", "vec_id % 7 <> 3"),
+
+    // the quantized sweep: per (nprobe, shortlist) leg the probed-cell
+    // ADC ranking served raw (rk <= 3) or exact-re-ranked over its
+    // rk <= 50 shortlist, priced by the probed cells' code rows
+    "ann_ivfpq_tune" -> sweepOracleSql(
+      s"$PqChainSql,\n${ivfCellChainSql("TRUE")}", "l2",
+      for { np <- Seq(1, 2, 4, 8); sl <- Seq(0, 50) } yield {
+        val cand = probedAdcSql(np = np)
+        (s"CAST($np AS BIGINT) AS nprobe, CAST($sl AS BIGINT) AS shortlist",
+          if (sl == 0) topSql(cand, 3) else rerankSql(topSql(cand, sl)), np)
+      },
+      "nprobe, shortlist"),
+
+    // same serve as ann_pq, codebook trained on the 1/16 hash-sample
+    "ann_pq_sampled16" ->
+      s"${pqChainSqlFor(sampleSql(16))}\n${top5Sql("adist_e6", adcRankSql("sc2"))}",
+
+    // one sampled-training PQ chain per rate (m<mod>_ prefixes) graded
+    // against one exact-L2 truth — the recall-per-training-rate curve
+    "ann_pq_sampled_recall" -> {
+      val mods = Seq(1, 2, 16, 256)
+      def chain(mod: Int): String =
+        s"""m${mod}_et AS (SELECT vec_id, embedding FROM e WHERE ${sampleSql(mod)}),
+           |${pqCodesSql(s"m${mod}_et", "e", s"m${mod}_")},
+           |${adcScoreSql(s"m${mod}_")}""".stripMargin
+      s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
+         |q AS (SELECT vec_id AS query_id, embedding FROM e WHERE vec_id < 5),
+         |${truthSql("l2")},
+         |${mods.map(chain).mkString(",\n")}
          |SELECT * FROM (
-         |${Seq(legSql(1, "m1_"), legSql(2, "m2_"), legSql(16, "m16_"),
-              legSql(256, "m256_"))
+         |${mods.map(mod => recallSql(s"CAST($mod AS BIGINT) AS sample_mod, ", false,
+              (topSql(adcRankSql(s"m${mod}_sc2"), 3), "hits_adc", "recall_adc_e6")))
             .mkString("\nUNION ALL\n")}
          |) u ORDER BY sample_mod""".stripMargin
     },
 
-    "ann_ivfpq_residual" -> {
-      // the shared residual chain + the served top-5
-      s"""$ResidualChainSql
-         |SELECT query_id, cand_id, cell, adist_e6, CAST(rk AS BIGINT) AS rk FROM (
-         |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-         |                               ORDER BY adist_e6, cand_id) AS rk
-         |  FROM scr) t
-         |WHERE rk <= 5 ORDER BY query_id, rk""".stripMargin
-    },
+    // the shared residual chain + the served top-5
+    "ann_ivfpq_residual" ->
+      s"$ResidualChainSql\n${top5Sql("cell, adist_e6", adcRankSql("scr"))}",
 
-    "ann_ivfpq_residual_recall" -> {
-      // the shared residual chain's ADC top-3 graded against the exact
-      // full-vector L2 truth — compare per-query to ann_ivfpq_recall's
-      // recall_adc_e6 to price what the residual codebook buys
+    // the shared residual chain's ADC top-3 graded against the exact
+    // full-vector L2 truth — compare per-query to ann_ivfpq_recall's
+    // recall_adc_e6 to price what the residual codebook buys
+    "ann_ivfpq_residual_recall" ->
       s"""$ResidualChainSql,
          |q AS (SELECT vec_id AS query_id, embedding FROM e WHERE vec_id < 5),
-         |tdist AS (
-         |  SELECT q.query_id, c.vec_id AS cand_id,
-         |    CAST(FLOOR(list_sum(list_transform(range(1, 65),
-         |      i -> (CAST(q.embedding[i] AS DOUBLE) - CAST(c.embedding[i] AS DOUBLE))
-         |         * (CAST(q.embedding[i] AS DOUBLE) - CAST(c.embedding[i] AS DOUBLE))))
-         |      * 1e6 + 0.5) AS BIGINT) AS d_e6
-         |  FROM q JOIN e c ON q.query_id <> c.vec_id),
-         |truth AS (
-         |  SELECT query_id, cand_id FROM (
-         |    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-         |                                 ORDER BY d_e6, cand_id) AS rk
-         |    FROM tdist) t WHERE rk <= 3),
-         |adc AS (
-         |  SELECT query_id, cand_id FROM (
-         |    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-         |                                 ORDER BY adist_e6, cand_id) AS rk
-         |    FROM scr) t WHERE rk <= 3)
-         |SELECT t.query_id, CAST(COUNT(*) AS BIGINT) AS n_truth,
-         |  CAST(SUM(CASE WHEN g.cand_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS hits_adc,
-         |  CAST(FLOOR(CAST(SUM(CASE WHEN g.cand_id IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE)
-         |    * 1e6 / COUNT(*) + 0.5) AS BIGINT) AS recall_adc_e6
-         |FROM truth t LEFT JOIN adc g
-         |  ON g.query_id = t.query_id AND g.cand_id = t.cand_id
-         |GROUP BY t.query_id ORDER BY t.query_id""".stripMargin
-    },
+         |${truthSql("l2")}
+         |${recallSql("", true, (topSql(adcRankSql("scr"), 3), "hits_adc", "recall_adc_e6"))}""".stripMargin,
 
-    "ann_ivfpq_recall" -> {
-      // probed-cells ADC top-3 graded against the exact full-vector L2
-      // truth (the ann_pq_recall convention, single-leg)
+    // probed-cells ADC top-3 graded against the exact full-vector L2
+    // truth (the ann_pq_recall convention, single-leg)
+    "ann_ivfpq_recall" ->
       s"""$PqChainSql,
          |${ivfCellChainSql("TRUE")},
-         |tdist AS (
-         |  SELECT q.query_id, c.vec_id AS cand_id,
-         |    CAST(FLOOR(list_sum(list_transform(range(1, 65),
-         |      i -> (CAST(q.embedding[i] AS DOUBLE) - CAST(c.embedding[i] AS DOUBLE))
-         |         * (CAST(q.embedding[i] AS DOUBLE) - CAST(c.embedding[i] AS DOUBLE))))
-         |      * 1e6 + 0.5) AS BIGINT) AS d_e6
-         |  FROM q JOIN e c ON q.query_id <> c.vec_id),
-         |truth AS (
-         |  SELECT query_id, cand_id FROM (
-         |    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-         |                                 ORDER BY d_e6, cand_id) AS rk
-         |    FROM tdist) t WHERE rk <= 3),
-         |adc AS (
-         |  SELECT query_id, cand_id FROM (
-         |    SELECT s.query_id, s.cand_id,
-         |      ROW_NUMBER() OVER (PARTITION BY s.query_id
-         |                         ORDER BY s.adist_e6, s.cand_id) AS rk
-         |    FROM sc2 s
-         |    JOIN iv_a1 a ON a.cand_id = s.cand_id
-         |    JOIN iv_probes p ON p.query_id = s.query_id AND p.cell = a.cell) t
-         |  WHERE rk <= 3)
-         |SELECT t.query_id, CAST(COUNT(*) AS BIGINT) AS n_truth,
-         |  CAST(SUM(CASE WHEN g.cand_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS hits_adc,
-         |  CAST(FLOOR(CAST(SUM(CASE WHEN g.cand_id IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE)
-         |    * 1e6 / COUNT(*) + 0.5) AS BIGINT) AS recall_adc_e6
-         |FROM truth t LEFT JOIN adc g
-         |  ON g.query_id = t.query_id AND g.cand_id = t.cand_id
-         |GROUP BY t.query_id ORDER BY t.query_id""".stripMargin
-    },
+         |${truthSql("l2")}
+         |${recallSql("", true, (topSql(probedAdcSql(), 3), "hits_adc", "recall_adc_e6"))}""".stripMargin,
 
     "emb_kmeans" -> {
       // the ann_ivf chain extended one Lloyd round, then the

@@ -14,9 +14,17 @@ class ContractSpec extends SparkSpecBase {
         s"orphan oracles: ${SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet}")
   }
 
+  /** Output column names of every non-streaming entry, built once and
+    * shared by the two schema checks below (each entry's eager fixture
+    * work is the cost of this suite).
+    */
+  private lazy val schemas: Map[String, Seq[String]] =
+    SparkEntry.queries.filterNot(q => streaming(q._1)).map { case (name, fn) =>
+      name -> fn(spark, sf).schema.fieldNames.toSeq
+    }
+
   test("result schemas: lowercase, distinct, no spark-illegal column names") {
-    SparkEntry.queries.filterNot(q => streaming(q._1)).foreach { case (name, fn) =>
-      val cols = fn(spark, sf).schema.fieldNames
+    schemas.foreach { case (name, cols) =>
       assert(cols.distinct.length == cols.length, s"$name has duplicate columns")
       cols.foreach { c =>
         assert(c == c.toLowerCase || c == "__deleted",
@@ -70,8 +78,7 @@ class ContractSpec extends SparkSpecBase {
     // cheap guard for alias drift: each Spark column name should appear
     // verbatim in the oracle text (as alias or source column)
     SparkEntry.oracleSql.filterNot(q => streaming(q._1)).foreach { case (name, sql) =>
-      val cols = SparkEntry.queries(name)(spark, sf).schema.fieldNames
-      cols.foreach { c =>
+      schemas(name).foreach { c =>
         assert(sql.toLowerCase.contains(c.toLowerCase),
           s"$name: column '$c' not found in oracle SQL")
       }

@@ -264,6 +264,36 @@ class LlmOpsSpec extends SparkSpecBase {
     }
   }
 
+  test("ann pq/ivfpq recall: hits_adc matches an exact L2 top-3 recomputed from the raw vectors") {
+    // the L2 grader recomputed outside Spark: sequential double sum of
+    // squared differences, floor(x*1e6+0.5), ties by cand_id
+    val vecs = graft.sources.Tables.embeddings(spark, sf).select("vec_id", "embedding")
+      .collect().map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
+    def l2e6(a: Array[Float], b: Array[Float]): Long = math.floor(a.indices.foldLeft(0.0) {
+      (acc, i) => val d = a(i).toDouble - b(i).toDouble; acc + d * d } * 1e6 + 0.5).toLong
+    val truth = vecs.filter(_._1 < 5).map { case (q, qv) =>
+      q -> vecs.filter(_._1 != q).map { case (c, cv) => (l2e6(qv, cv), c) }
+        .sorted.take(3).map(_._2).toSet
+    }.toMap
+    assert(truth.size == 5)
+    Seq("ann_ivfpq_recall" -> "ann_ivfpq", "ann_pq_recall" -> "ann_pq").foreach {
+      case (recall, served) =>
+        val got = AnnSuite.queries(served)(spark, sf).collect()
+          .filter(_.getAs[Long]("rk") <= 3)
+          .groupBy(_.getAs[Long]("query_id"))
+          .map { case (q, rs) => q -> rs.map(_.getAs[Long]("cand_id")).toSet }
+        val rows = AnnSuite.queries(recall)(spark, sf).collect()
+        assert(rows.map(_.getAs[Long]("query_id")).toSet == truth.keySet, recall)
+        rows.foreach { r =>
+          val q = r.getAs[Long]("query_id")
+          assert(r.getAs[Long]("n_truth") == 3L, s"$recall query $q")
+          val expectHits = (truth(q) intersect got.getOrElse(q, Set.empty)).size.toLong
+          assert(r.getAs[Long]("hits_adc") == expectHits,
+            s"$recall query $q: hits_adc ${r.getAs[Long]("hits_adc")} != recomputed $expectHits")
+        }
+    }
+  }
+
   test("emb_kmeans: full partition of the corpus, seed-labeled, inertia consistent") {
     val rows = AnnSuite.queries("emb_kmeans")(spark, sf).collect()
     assert(rows.nonEmpty && rows.length <= AnnSuite.IvfK,
