@@ -185,6 +185,37 @@ class CurationSpec extends SparkSpecBase {
       "streaming state machine must converge to the batch dimension")
   }
 
+  test("stream_dedup_cdc equals its bulk batch formulation (appends banded, deletes tombstoned)") {
+    import graft.operators.DedupSuite
+    org.apache.spark.sql.graft.Bridge.register(spark)
+    val streamed = graft.streaming.CdcStream.queries("stream_dedup_cdc")(spark, sf)
+      .collect().map(_.toString).sorted.toSeq
+    // the bulk twin: same base index, one band append of all c ops, one
+    // tombstone batch of all d keys, the same probe batch
+    val sh = DedupSuite.shingleSets(spark, sf).localCheckpoint()
+    val dir = graft.sources.Scratch.dir("dedup_cdc_bulk_twin")
+    DedupSuite.bandIndexSave(
+      DedupSuite.minhashBands(sh.filter(col("doc_id") < 1000000L)), dir)
+    DedupSuite.bandIndexAppend(DedupSuite.minhashBands(
+      sh.filter(col("doc_id") >= 1000000L && col("doc_id") % 20 === 0)), dir, 0L)
+    DedupSuite.BandStore.delete(spark, dir, sh.filter(
+        (col("doc_id") < 1000000L && col("doc_id") % 20 === 0) ||
+        (col("doc_id") >= 1000000L && col("doc_id") % 40 === 0)).select("doc_id"),
+      "doc_id", batchId = 1L)
+    val batchBands = DedupSuite.gateHotBuckets(
+      DedupSuite.minhashBands(sh.filter(
+        col("doc_id") >= 1000000L && col("doc_id") % 20 === 10)),
+      Seq("band", "bucket"))
+    val cands = batchBands.as("n")
+      .join(DedupSuite.BandStore.load(spark, dir).as("c"),
+        col("n.band") === col("c.band") && col("n.bucket") === col("c.bucket"))
+      .select(col("n.doc_id").as("new_id"), col("c.doc_id").as("dup_of"))
+      .dropDuplicates("new_id", "dup_of")
+    val bulk = CurationSuite.verifyCands(cands, sh)
+      .collect().map(_.toString).sorted.toSeq
+    assert(streamed.nonEmpty && streamed === bulk)
+  }
+
   test("scd2 versions: contiguous validity, one current version per live key") {
     val rows = CdcSuite.queries("cdc_scd2_build")(spark, sf).collect()
     val byKey = rows.groupBy(_.getAs[Long]("id"))

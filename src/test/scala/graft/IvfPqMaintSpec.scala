@@ -114,6 +114,59 @@ class IvfPqMaintSpec extends SparkSpecBase {
     assert(dataBatches.map(_._1).sum === heldOut)
   }
 
+  test("stream_ivfpq_cdc equals its bulk batch formulation (inserts appended, deletes tombstoned)") {
+    val e = Tables.embeddings(spark, sf).select(col("vec_id"), col("embedding"))
+    val streamed = graft.streaming.CdcStream.queries("stream_ivfpq_cdc")(spark, sf)
+      .collect().map(_.toString).toSeq
+    // the bulk twin: one append of all streamed inserts, one tombstone
+    // batch of all streamed deletes, same base build
+    val dir = Scratch.dir("ivfpq_cdc_bulk_twin")
+    AnnSuite.ivfPqSave(AnnSuite.ivfPqBuild(e.filter(col("vec_id") % 7 =!= 3),
+      "vec_id", "embedding", AnnSuite.IvfK, m, dsub, ksub), dir)
+    AnnSuite.ivfPqAppend(spark, dir, e.filter(col("vec_id") % 7 === 3),
+      "vec_id", "embedding", batchId = 0L)
+    AnnSuite.CodesStore.delete(spark, dir,
+      e.filter(col("vec_id") % 13 === 2).select("vec_id"), "vec_id", batchId = 1L)
+    val bulk = AnnSuite.ivfPqQuery(AnnSuite.ivfPqLoad(spark, dir),
+      e.filter(col("vec_id") < 5), "vec_id", "embedding",
+      AnnSuite.IvfNProbe, topK = 5)
+      .orderBy("query_id", "rk").collect().map(_.toString).toSeq
+    assert(streamed.nonEmpty && streamed === bulk)
+  }
+
+  test("stream_ivfpq_upsert: an update of a live id supersedes; the stream equals its bulk twin") {
+    val e = Tables.embeddings(spark, sf).select(col("vec_id"), col("embedding"))
+    val streamed = graft.streaming.CdcStream.queries("stream_ivfpq_upsert")(spark, sf)
+      .collect().map(_.toString).toSeq
+    // bulk twin: same base build, ONE append of all c/u rows (updates
+    // carried with their mutated vectors), one tombstone batch
+    val dir = Scratch.dir("ivfpq_upsert_bulk_twin")
+    AnnSuite.ivfPqSave(AnnSuite.ivfPqBuild(e.filter(col("vec_id") % 7 =!= 3),
+      "vec_id", "embedding", AnnSuite.IvfK, m, dsub, ksub), dir)
+    val updated = col("vec_id") % 7 =!= 3 && col("vec_id") % 5 === 1
+    val deleted = col("vec_id") % 13 === 2 &&
+      col("vec_id") % 5 =!= 1 && col("vec_id") % 7 =!= 3
+    val ups = e.filter(updated)
+      .select(col("vec_id"), reverse(col("embedding")).as("embedding"))
+    val ins = e.filter(col("vec_id") % 7 === 3)
+    AnnSuite.ivfPqAppend(spark, dir, ups.unionByName(ins),
+      "vec_id", "embedding", batchId = 0L)
+    AnnSuite.CodesStore.delete(spark, dir,
+      e.filter(deleted).select("vec_id"), "vec_id", batchId = 1L)
+    val idx = AnnSuite.ivfPqLoadLww(spark, dir)
+    // every updated id serves exactly one code row
+    assert(idx.pq.codes.groupBy("cand_id").count()
+      .filter(col("count") > 1).count() === 0L)
+    // queries probe the corpus's final per-id state
+    val fin = e.filter(!deleted)
+      .withColumn("embedding",
+        when(updated, reverse(col("embedding"))).otherwise(col("embedding")))
+    val bulk = AnnSuite.ivfPqQuery(idx, fin.filter(col("vec_id") < 5),
+      "vec_id", "embedding", AnnSuite.IvfNProbe, topK = 5)
+      .orderBy("query_id", "rk").collect().map(_.toString).toSeq
+    assert(streamed.nonEmpty && streamed === bulk)
+  }
+
   test("persisted residual index round-trips: reload serves the fused residual chain identically") {
     val e = Tables.embeddings(spark, sf).select(col("vec_id"), col("embedding"))
     val queries = e.filter(col("vec_id") < 5)
