@@ -15,7 +15,7 @@ import java.nio.file.{Files, Paths}
   */
 object Scratch {
 
-  private def root: String =
+  private[graft] def root: String =
     sys.env.get("SPARK_GRAFT_TMP").getOrElse(System.getProperty("java.io.tmpdir"))
 
   /** A fresh unique scratch directory under the configured root. */

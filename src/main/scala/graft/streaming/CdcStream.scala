@@ -68,56 +68,109 @@ object CdcStream {
       .toDF("id", "custkey", "status", "op", "seq")
   }
 
-  /** Stream the synthesized change log through flatMapGroupsWithState and
-    * materialize the final table state. Returns a batch DataFrame equal to
-    * CdcSuite."cdc_apply_latest" (same oracle applies).
+  /** Where a replay drains its transformed stream, with the output mode
+    * it drains under: a uuid-named memory table the twin reads its final
+    * state from, Spark's `noop` sink, or a foreachBatch fold whose
+    * batchId IS the store batch id.
     */
-  /** Runs the upsert state machine over the landed log and returns the
-    * per-trigger emissions (id, custkey, status, op, seq) — shared by
-    * the hard-delete materialization and the compaction twin.
+  private sealed abstract class Sink(val mode: String)
+  private final case class MemorySink(m: String = "update") extends Sink(m)
+  private case object NoopSink extends Sink("update")
+  private final case class FoldSink(f: (DataFrame, Long) => Unit) extends Sink("append")
+
+  /** One replay's landing zone: every feed a twin lands goes under a
+    * fresh `Scratch.dir(prefix)` registered here, and [[withLanding]]
+    * deletes them all when the replay ends. Nothing is memoized across
+    * calls — each call lands its own input.
     */
-  /** Land the lake's change log as a 4-file parquet dir (so
-    * AvailableNow exercises multi-batch incremental processing with a
-    * key's events split across batches) and open it as a ChangeEvent
-    * stream through the external-source seam — the landed-file spec is
-    * the test implementation; a CdcSource.kafkaTopic spec (+
-    * parseEnvelope) slots in with no change downstream. Landing is
-    * memoized per lake dir within the JVM: the log is a pure function
-    * of the (read-only) lake, and the sf10 log is multi-GB — the bench
-    * runs the throughput probe once per state backend and must not
-    * re-land (or leak) a fresh copy each time.
-    */
-  private val landedLogs = scala.collection.concurrent.TrieMap[String, String]()
-  private def landedLogStream(spark: SparkSession, dir: String): Dataset[ChangeEvent] = {
-    import spark.implicits._
-    // synchronized: TrieMap.getOrElseUpdate runs the thunk unlocked, so
-    // two concurrent first callers would BOTH land (and one copy leaks)
-    val tmp = landedLogs.synchronized {
-      landedLogs.getOrElseUpdate(dir, {
-        val t = Scratch.dir("graft_cdc_stream")
-        CdcSuite.changeLog(spark, dir).repartition(4).write.mode("overwrite").parquet(t)
-        t
-      })
+  private final class Landing(val spark: SparkSession) {
+    val dirs = scala.collection.mutable.ArrayBuffer.empty[String]
+    def dir(prefix: String): String = { val d = Scratch.dir(prefix); dirs += d; d }
+    def write(prefix: String, rows: DataFrame, files: Int): String = {
+      val d = dir(prefix)
+      rows.repartition(files).write.mode("overwrite").parquet(d)
+      d
     }
-    val schema = spark.read.parquet(tmp).schema
-    CdcSource.loadStream(spark, SourceSpec("parquet",
-      Map("path" -> tmp, "maxFilesPerTrigger" -> "1"), Some(schema))).as[ChangeEvent]
+    /** Open a landed feed through the external-source seam, one file
+      * per micro-batch (`perFile`) or every file in one batch.
+      */
+    def open(spec: SourceSpec, perFile: Boolean = true): DataFrame =
+      CdcSource.loadStream(spark,
+        if (perFile) spec.copy(options = spec.options + ("maxFilesPerTrigger" -> "1"))
+        else spec)
+    /** Land `rows` as `files` parquet files and open them as a stream. */
+    def apply(prefix: String, rows: DataFrame, files: Int = 4,
+        perFile: Boolean = true): DataFrame =
+      open(SourceSpec("parquet", Map("path" -> write(prefix, rows, files)),
+        Some(rows.schema)), perFile)
   }
 
-  private def currentStateEmissions(
-      spark: SparkSession, dir: String, progressKey: String): DataFrame = {
-    val stream = landedLogStream(spark, dir)
-    val qname = "cdc_stream_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = applyEventsStream(stream)
-      .writeStream.format("memory").queryName(qname)
-      // checkpoint under the shared scratch root — the default temp
-      // checkpoint is driver-local, which silently breaks multi-node
-      .option("checkpointLocation", Scratch.dir(qname + "_cp"))
-      .outputMode("update").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    recordProgress(progressKey, q)
-    spark.table(qname)
+  private def withLanding[T](spark: SparkSession)(body: Landing => T): T = {
+    val land = new Landing(spark)
+    try body(land)
+    finally land.dirs.foreach(deleteDir(spark, _))
   }
+
+  private def deleteDir(spark: SparkSession, dir: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
+  }
+
+  /** The replay runner every AvailableNow twin goes through: `build`
+    * lands the twin's feed(s) and transforms the stream; the result
+    * drains under `Trigger.AvailableNow` into `sink` as the query
+    * `<queryPrefix><uuid>`, and the run's micro-batch progress is
+    * recorded under `progressKey`. Returns the memory sink's table (an
+    * empty frame for the other sinks). The landed feeds are deleted
+    * once the query ends; the checkpoint is not — a state-store
+    * provider that is still loaded may run maintenance tasks against it
+    * after the query stops.
+    */
+  private def replay(spark: SparkSession, progressKey: String, queryPrefix: String,
+      sink: Sink = MemorySink())(build: Landing => DataFrame): DataFrame =
+    withLanding(spark) { land =>
+      val qname = queryPrefix + java.util.UUID.randomUUID.toString.replace("-", "")
+      val w = build(land).writeStream.queryName(qname)
+        // checkpoint under the shared scratch root — the default temp
+        // checkpoint is driver-local, which silently breaks multi-node
+        .option("checkpointLocation", Scratch.dir(qname + "_cp"))
+        .outputMode(sink.mode).trigger(Trigger.AvailableNow())
+      val q = (sink match {
+        case MemorySink(_) => w.format("memory")
+        case NoopSink => w.format("noop")
+        case FoldSink(f) => w.foreachBatch { (df: DataFrame, batchId: Long) => f(df, batchId) }
+      }).start()
+      q.awaitTermination()
+      recordProgress(progressKey, q)
+      if (sink.isInstanceOf[MemorySink]) spark.table(qname) else spark.emptyDataFrame
+    }
+
+  /** The row with the highest `order` per `key`: a twin's final state
+    * read back from its update-mode emissions.
+    */
+  private def latestPerKey(df: DataFrame, key: String, order: String): DataFrame =
+    df.withColumn("rn", row_number().over(Window.partitionBy(col(key)).orderBy(desc(order))))
+      .filter(col("rn") === 1).drop("rn")
+
+  /** The lake's change log landed as a 4-file feed (so AvailableNow
+    * exercises multi-batch incremental processing with a key's events
+    * split across batches) and opened as a ChangeEvent stream through
+    * the external-source seam — the landed-file spec is the test
+    * implementation; a CdcSource.kafkaTopic spec (+ parseEnvelope)
+    * slots in with no change downstream.
+    */
+  private def changeEvents(land: Landing, dir: String): Dataset[ChangeEvent] = {
+    import land.spark.implicits._
+    land("graft_cdc_stream", CdcSuite.changeLog(land.spark, dir)).as[ChangeEvent]
+  }
+
+  /** The upsert machine's table state from its emissions: the latest
+    * emission per key wins; tombstoned keys drop (hard-delete mode).
+    */
+  private def liveState(emissions: DataFrame): DataFrame =
+    latestPerKey(emissions, "id", "seq").filter(col("op") =!= "d")
+      .select(col("id"), col("custkey"), col("status"))
+      .orderBy("id")
 
   /** Throughput probe for the upsert state machine at lake sizes whose
     * EMISSIONS no longer fit a memory sink (~18 M rows at sf10 OOM a
@@ -131,13 +184,8 @@ object CdcStream {
     * Returns a 1-row handle for the bench's materialize().
     */
   private[graft] def applyThroughputProbe(spark: SparkSession, dir: String): DataFrame = {
-    val qname = "cdc_stream_probe_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = applyEventsStream(landedLogStream(spark, dir))
-      .writeStream.format("noop")
-      .option("checkpointLocation", Scratch.dir(qname + "_cp"))
-      .outputMode("update").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    recordProgress("cdc_stream_apply", q)
+    replay(spark, "cdc_stream_apply", "cdc_stream_probe_", NoopSink)(
+      land => applyEventsStream(changeEvents(land, dir)))
     spark.range(1).toDF("ok")
   }
 
@@ -160,10 +208,6 @@ object CdcStream {
         * published so the artifact can never claim a cadence the
         * state store didn't use */
       cadence: Int = 100)
-
-  private val landedProbeFeeds = scala.collection.concurrent.TrieMap[String, String]()
-  private def probeFeed(key: String)(land: => String): String =
-    landedProbeFeeds.synchronized(landedProbeFeeds.getOrElseUpdate(key, land))
 
   /** Steady-state latency probe: every other streaming evidence path
     * replays the landed feed under `Trigger.AvailableNow` — that proves
@@ -207,137 +251,123 @@ object CdcStream {
     // plateau below expected and the probe would spin to its deadline
     // with a misleading failure. The listener sees every progress event
     // exactly once, so files is unbounded and idle noise is harmless.
-    val feedDir = twin match {
-      case "cdc_stream_apply" => probeFeed(s"cdc|$dir|$files") {
-        val t = Scratch.dir("graft_cont_cdc")
-        CdcSuite.changeLog(spark, dir).repartition(files)
-          .write.mode("overwrite").parquet(t)
-        t
+    withLanding(spark) { land =>
+      val (feedPrefix, feed) = twin match {
+        case "cdc_stream_apply" => ("graft_cont_cdc", CdcSuite.changeLog(spark, dir))
+        case "stream_dedup_minhash" =>
+          org.apache.spark.sql.graft.Bridge.register(spark)
+          ("graft_cont_mh", bandFeed(graft.operators.DedupSuite.shingleSets(spark, dir)))
+        case other => throw new IllegalArgumentException(
+          s"continuousProbe: no probe feed for twin '$other'")
       }
-      case "stream_dedup_minhash" => probeFeed(s"mh|$dir|$files") {
-        org.apache.spark.sql.graft.Bridge.register(spark)
-        val t = Scratch.dir("graft_cont_mh")
-        graft.operators.DedupSuite.minhashBands(
-            graft.operators.DedupSuite.shingleSets(spark, dir))
-          .select(concat_ws("|", col("band"), col("bucket")).as("k"), col("doc_id"),
-            lit("2000-01-01 00:00:00").cast("timestamp").as("ets"))
-          .repartition(files).write.mode("overwrite").parquet(t)
-        t
+      val feedDir = land.write(feedPrefix, feed, files)
+      val expected = spark.read.parquet(feedDir).count()
+      val stream = land.open(SourceSpec("parquet", Map("path" -> feedDir), Some(feed.schema)))
+      val transformed = twin match {
+        case "cdc_stream_apply" => applyEventsStream(stream.as[ChangeEvent])
+        case _ => minhashPairsStream(
+            stream.as[(String, Long, java.sql.Timestamp)], MinhashTtlMs, "1 minute")
+          .toDF("doc_a", "doc_b")
       }
-      case other => throw new IllegalArgumentException(
-        s"continuousProbe: no probe feed for twin '$other'")
-    }
-    val landed = spark.read.parquet(feedDir)
-    val expected = landed.count()
-    val schema = landed.schema
-    val stream = CdcSource.loadStream(spark, SourceSpec("parquet",
-      Map("path" -> feedDir, "maxFilesPerTrigger" -> "1"), Some(schema)))
-    val transformed = twin match {
-      case "cdc_stream_apply" => applyEventsStream(stream.as[ChangeEvent])
-      case _ => minhashPairsStream(
-          stream.as[(String, Long, java.sql.Timestamp)], MinhashTtlMs, "1 minute")
-        .toDF("doc_a", "doc_b")
-    }
-    val qname = "cont_probe_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    // Probe-scoped conf (restored afterwards): state partitions sized to
-    // the feed, and the snapshot cadence lifted off the latency path.
-    // Diagnosed from the per-batch series (batchSeriesMs): with the
-    // default minDeltasForSnapshot=10, the RocksDB commit path creates a
-    // full local snapshot every 10th micro-batch — a deterministic
-    // ~0.5-0.7 s spike riding exactly batches 10/20/... that put the
-    // sf1 RocksDB p95 AT the 1 s trigger in r10. Under changelog
-    // checkpointing the snapshot is pure recovery acceleration (restore
-    // replays at most `cadence` changelogs over the last snapshot), so
-    // cadence 100 trades bounded-replay recovery for a spike-free
-    // steady state — the trade an unbounded-feed deployment wants.
-    // The cadence is an EXPLICIT PARAMETER (default 100), always set
-    // for the probe's scope and restored after: the "keep a session-set
-    // value" detection via spark.conf.getOption is unimplementable —
-    // for a registered SQLConf key getOption returns the built-in
-    // DEFAULT (10), indistinguishable from a user set, so that form
-    // silently never pinned and the every-10th-batch snapshot spike
-    // returned (measured: sf1 RocksDB p95 554 ms pinned → 1062 ms
-    // unpinned, spikes riding exactly batches 10/20). A cadence sweep
-    // passes its value through this parameter instead.
-    val cadenceKey = "spark.sql.streaming.stateStore.minDeltasForSnapshot"
-    val probeConf = Map(
-      "spark.sql.shuffle.partitions" -> stateParts.toString,
-      cadenceKey -> snapshotCadence.toString)
-    val saved = probeConf.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    probeConf.foreach { case (k, v) => spark.conf.set(k, v) }
-    val progressBuf =
-      scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.streaming.StreamingQueryProgress]
-    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      override def onQueryStarted(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryProgress(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit =
-        if (e.progress.name == qname)
-          progressBuf.synchronized { progressBuf += e.progress }
-      override def onQueryTerminated(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-    }
-    spark.streams.addListener(listener)
-    val done = try {
-      val q = transformed.writeStream.format("noop").queryName(qname)
-        .option("checkpointLocation", Scratch.dir(qname + "_cp"))
-        .outputMode("update")
-        .trigger(Trigger.ProcessingTime(s"$triggerMs milliseconds")).start()
-      // run until the feed is fully consumed (bounded by a hard deadline
-      // so a wedged stream fails loudly instead of hanging the bench)
-      val deadline = System.nanoTime() + 600L * 1000 * 1000 * 1000
-      def consumed: Long =
-        progressBuf.synchronized { progressBuf.map(_.numInputRows).sum }
-      while (consumed < expected && q.isActive && System.nanoTime() < deadline)
-        Thread.sleep(50)
-      q.stop(); q.awaitTermination()
-      consumed
-    } finally {
-      spark.streams.removeListener(listener)
-      saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
+      val qname = "cont_probe_" + java.util.UUID.randomUUID.toString.replace("-", "")
+      // Probe-scoped conf (restored afterwards): state partitions sized to
+      // the feed, and the snapshot cadence lifted off the latency path.
+      // Diagnosed from the per-batch series (batchSeriesMs): with the
+      // default minDeltasForSnapshot=10, the RocksDB commit path creates a
+      // full local snapshot every 10th micro-batch — a deterministic
+      // ~0.5-0.7 s spike riding exactly batches 10/20/... that put the
+      // sf1 RocksDB p95 AT the 1 s trigger in r10. Under changelog
+      // checkpointing the snapshot is pure recovery acceleration (restore
+      // replays at most `cadence` changelogs over the last snapshot), so
+      // cadence 100 trades bounded-replay recovery for a spike-free
+      // steady state — the trade an unbounded-feed deployment wants.
+      // The cadence is an EXPLICIT PARAMETER (default 100), always set
+      // for the probe's scope and restored after: the "keep a session-set
+      // value" detection via spark.conf.getOption is unimplementable —
+      // for a registered SQLConf key getOption returns the built-in
+      // DEFAULT (10), indistinguishable from a user set, so that form
+      // silently never pinned and the every-10th-batch snapshot spike
+      // returned (measured: sf1 RocksDB p95 554 ms pinned → 1062 ms
+      // unpinned, spikes riding exactly batches 10/20). A cadence sweep
+      // passes its value through this parameter instead.
+      val cadenceKey = "spark.sql.streaming.stateStore.minDeltasForSnapshot"
+      val probeConf = Map(
+        "spark.sql.shuffle.partitions" -> stateParts.toString,
+        cadenceKey -> snapshotCadence.toString)
+      val saved = probeConf.keys.map(k => k -> spark.conf.getOption(k)).toMap
+      probeConf.foreach { case (k, v) => spark.conf.set(k, v) }
+      val progressBuf =
+        scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.streaming.StreamingQueryProgress]
+      val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
+        override def onQueryStarted(
+            e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
+        override def onQueryProgress(
+            e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit =
+          if (e.progress.name == qname)
+            progressBuf.synchronized { progressBuf += e.progress }
+        override def onQueryTerminated(
+            e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit = ()
       }
+      spark.streams.addListener(listener)
+      val done = try {
+        val q = transformed.writeStream.format("noop").queryName(qname)
+          .option("checkpointLocation", Scratch.dir(qname + "_cp"))
+          .outputMode("update")
+          .trigger(Trigger.ProcessingTime(s"$triggerMs milliseconds")).start()
+        // run until the feed is fully consumed (bounded by a hard deadline
+        // so a wedged stream fails loudly instead of hanging the bench)
+        val deadline = System.nanoTime() + 600L * 1000 * 1000 * 1000
+        def consumed: Long =
+          progressBuf.synchronized { progressBuf.map(_.numInputRows).sum }
+        while (consumed < expected && q.isActive && System.nanoTime() < deadline)
+          Thread.sleep(50)
+        q.stop(); q.awaitTermination()
+        consumed
+      } finally {
+        spark.streams.removeListener(listener)
+        saved.foreach {
+          case (k, Some(v)) => spark.conf.set(k, v)
+          case (k, None) => spark.conf.unset(k)
+        }
+      }
+      require(done >= expected,
+        s"continuousProbe($twin): consumed $done of $expected rows before the deadline")
+      val data = progressBuf.synchronized { progressBuf.filter(_.numInputRows > 0).toArray }
+      val series = data.map(p => Option(p.durationMs.get("triggerExecution"))
+        .map(_.longValue).getOrElse(0L)).toSeq
+      // steady-state percentiles: the first data batches pay the session's
+      // codegen/JIT of this twin's plan, not state-store behavior — a
+      // production job's millionth batch never sees them. They stay in the
+      // published series (and warmupExcluded says how many were dropped).
+      val steadyN = math.max(1, series.length - warmupBatches)
+      val steady = series.takeRight(steadyN)
+      val trigs = steady.sorted
+      def pct(p: Double): Long = trigs(math.max(0, math.ceil(p * trigs.length).toInt - 1))
+      val rows = data.map(_.numInputRows).sum
+      // procRps is a steady-state rate: rows and durations must cover the
+      // SAME window (all-batch rows over steady-only durations would
+      // inflate the published throughput — the opposite bias of the
+      // conservative median). inputRps keeps the full-run totals.
+      val steadyRows = data.takeRight(steadyN).map(_.numInputRows).sum
+      ContinuousStats(twin, triggerMs, data.length, pct(0.5), pct(0.95), trigs.last,
+        inputRps = rows * 1000.0 / (triggerMs.toDouble * data.length),
+        procRps = if (trigs.sum > 0) steadyRows * 1000.0 / trigs.sum else 0.0,
+        rows = rows,
+        stateRows = data.lastOption
+          .map(_.stateOperators.map(_.numRowsTotal).sum).getOrElse(0L),
+        batchSeriesMs = series,
+        warmupExcluded = series.length - steadyN,
+        cadence = snapshotCadence)
     }
-    require(done >= expected,
-      s"continuousProbe($twin): consumed $done of $expected rows before the deadline")
-    val data = progressBuf.synchronized { progressBuf.filter(_.numInputRows > 0).toArray }
-    val series = data.map(p => Option(p.durationMs.get("triggerExecution"))
-      .map(_.longValue).getOrElse(0L)).toSeq
-    // steady-state percentiles: the first data batches pay the session's
-    // codegen/JIT of this twin's plan, not state-store behavior — a
-    // production job's millionth batch never sees them. They stay in the
-    // published series (and warmupExcluded says how many were dropped).
-    val steadyN = math.max(1, series.length - warmupBatches)
-    val steady = series.takeRight(steadyN)
-    val trigs = steady.sorted
-    def pct(p: Double): Long = trigs(math.max(0, math.ceil(p * trigs.length).toInt - 1))
-    val rows = data.map(_.numInputRows).sum
-    // procRps is a steady-state rate: rows and durations must cover the
-    // SAME window (all-batch rows over steady-only durations would
-    // inflate the published throughput — the opposite bias of the
-    // conservative median). inputRps keeps the full-run totals.
-    val steadyRows = data.takeRight(steadyN).map(_.numInputRows).sum
-    ContinuousStats(twin, triggerMs, data.length, pct(0.5), pct(0.95), trigs.last,
-      inputRps = rows * 1000.0 / (triggerMs.toDouble * data.length),
-      procRps = if (trigs.sum > 0) steadyRows * 1000.0 / trigs.sum else 0.0,
-      rows = rows,
-      stateRows = data.lastOption
-        .map(_.stateOperators.map(_.numRowsTotal).sum).getOrElse(0L),
-      batchSeriesMs = series,
-      warmupExcluded = series.length - steadyN,
-      cadence = snapshotCadence)
   }
 
-  def applyLatest(spark: SparkSession, dir: String): DataFrame = {
-    // Latest emission per key wins; tombstoned keys drop (hard-delete mode).
-    val w = Window.partitionBy(col("id")).orderBy(desc("seq"))
-    currentStateEmissions(spark, dir, "cdc_stream_apply")
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1 && col("op") =!= "d")
-      .select(col("id"), col("custkey"), col("status"))
-      .orderBy("id")
-  }
+  /** Stream the synthesized change log through flatMapGroupsWithState and
+    * materialize the final table state. Returns a batch DataFrame equal to
+    * CdcSuite."cdc_apply_latest" (same oracle applies).
+    */
+  def applyLatest(spark: SparkSession, dir: String): DataFrame =
+    liveState(replay(spark, "cdc_stream_apply", "cdc_stream_")(
+      land => applyEventsStream(changeEvents(land, dir))))
 
   /** Streaming log compaction: same state machine, but the latest
     * emission per key is kept even when it is a delete — as a tombstone
@@ -345,18 +375,15 @@ object CdcStream {
     * oracle). This is the continuously-maintained compacted topic a
     * Kafka broker materializes in the background.
     */
-  def compactLog(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("id")).orderBy(desc("seq"))
-    currentStateEmissions(spark, dir, "stream_compact_log")
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
+  def compactLog(spark: SparkSession, dir: String): DataFrame =
+    latestPerKey(replay(spark, "stream_compact_log", "cdc_stream_")(
+        land => applyEventsStream(changeEvents(land, dir))), "id", "seq")
       .select(col("id"), col("op"), col("seq"),
         when(col("op") === "d", lit(null).cast("long"))
           .otherwise(col("custkey")).as("custkey"),
         when(col("op") === "d", lit(null).cast("string"))
           .otherwise(col("status")).as("status"))
       .orderBy("id")
-  }
 
   case class Scd2Ev(custkey: Long, status: String, op: String, seq: Long, ts_ms: Long)
   case class Scd2State(events: Seq[Scd2Ev])
@@ -400,26 +427,12 @@ object CdcStream {
     */
   def scd2(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val tmp = Scratch.dir("graft_scd2_stream")
-    CdcSuite.changeLog(spark, dir).repartition(4).write.mode("overwrite").parquet(tmp)
-    val schema = spark.read.parquet(tmp).schema
-    // same seam-parameterized ingest as currentStateEmissions
-    val stream = CdcSource.loadStream(spark, SourceSpec("parquet",
-      Map("path" -> tmp, "maxFilesPerTrigger" -> "1"), Some(schema))).as[ChangeEvent]
-    val qname = "scd2_stream_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = stream.groupByKey(_.id)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(scd2Fold)
-      .toDF("id", "custkey", "status", "valid_from", "valid_to_raw", "tag")
-      .writeStream.format("memory").queryName(qname)
-      // checkpoint under the shared scratch root — the default temp
-      // checkpoint is driver-local, which silently breaks multi-node
-      .option("checkpointLocation", Scratch.dir(qname + "_cp"))
-      .outputMode("update").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    recordProgress("stream_scd2", q)
-    // Authoritative rows = the key's last (highest-tag) emission.
     val wt = Window.partitionBy(col("id"))
-    spark.table(qname)
+    replay(spark, "stream_scd2", "scd2_stream_")(land =>
+      changeEvents(land, dir).groupByKey(_.id)
+        .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(scd2Fold)
+        .toDF("id", "custkey", "status", "valid_from", "valid_to_raw", "tag"))
+      // Authoritative rows = the key's last (highest-tag) emission.
       .withColumn("maxtag", max(col("tag")).over(wt))
       .filter(col("tag") === col("maxtag"))
       // replay-safe dedupe on the FULL version identity: within one fold's
@@ -439,34 +452,21 @@ object CdcStream {
     * monotone so the max over update-mode emissions is the final count
     * (matches the batch group-by oracle).
     */
-  def windowedCounts(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = Scratch.dir("graft_evt_stream")
-    Tables.events(spark, dir).select("ts", "event_type").repartition(4)
-      .write.mode("overwrite").parquet(tmp)
-    val schema = spark.read.parquet(tmp).schema
-    // One batch for the finite replay: the files aren't time-ordered, so
-    // per-file triggers would advance the watermark past genuinely-on-time
-    // events and drop them as late. A live feed is roughly time-ordered;
-    // a backfill replay is exactly this single-batch shape.
-    val stream = spark.readStream.schema(schema).parquet(tmp)
-    val qname = "evt_stream_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = stream
-      .withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("win_start"), col("event_type"), col("n"))
-      .writeStream.format("memory").queryName(qname)
-      // checkpoint under the shared scratch root — the default temp
-      // checkpoint is driver-local, which silently breaks multi-node
-      .option("checkpointLocation", Scratch.dir(qname + "_cp"))
-      .outputMode("update").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    recordProgress("stream_windowed_agg", q)
-    spark.table(qname)
-      .groupBy(col("win_start"), col("event_type"))
+  def windowedCounts(spark: SparkSession, dir: String): DataFrame =
+    replay(spark, "stream_windowed_agg", "evt_stream_") { land =>
+      // One batch for the finite replay: the files aren't time-ordered, so
+      // per-file triggers would advance the watermark past genuinely-on-time
+      // events and drop them as late. A live feed is roughly time-ordered;
+      // a backfill replay is exactly this single-batch shape.
+      land("graft_evt_stream", Tables.events(spark, dir).select("ts", "event_type"),
+          perFile = false)
+        .withWatermark("ts", "1 hour")
+        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+        .agg(count(lit(1)).as("n"))
+        .select(col("window.start").as("win_start"), col("event_type"), col("n"))
+    }.groupBy(col("win_start"), col("event_type"))
       .agg(max(col("n")).as("n"))
       .orderBy("win_start", "event_type")
-  }
 
   /** Streaming exact dedup: per-content-hash keyed state tracks
     * (min doc_id, copy count) across micro-batches — how a continuous
@@ -475,55 +475,26 @@ object CdcStream {
     */
   def dedupExact(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val tmp = Scratch.dir("graft_dedup_stream")
-    graft.operators.DedupSuite.corpusWithDups(spark, dir)
-      .select(md5(regexp_replace(lower(col("text")), "\\s+", " ")).as("h"), col("doc_id"))
-      .repartition(4).write.mode("overwrite").parquet(tmp)
-    val schema = spark.read.parquet(tmp).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(tmp).as[(String, Long)]
-    val qname = "dedup_stream_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = stream.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (h: String, rows: Iterator[(String, Long)], state: GroupState[(Long, Long)]) =>
-          val s0 = state.getOption.getOrElse((Long.MaxValue, 0L))
-          val s1 = rows.foldLeft(s0) { case ((m, c), (_, id)) => (math.min(m, id), c + 1) }
-          state.update(s1)
-          Iterator((h, s1._1, s1._2))
-      }
-      .toDF("h", "keep_id", "n_copies")
-      .writeStream.format("memory").queryName(qname)
-      // checkpoint under the shared scratch root — the default temp
-      // checkpoint is driver-local, which silently breaks multi-node
-      .option("checkpointLocation", Scratch.dir(qname + "_cp"))
-      .outputMode("update").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    recordProgress("stream_dedup_exact", q)
-    // final emission per key: count is monotone, min-id non-increasing
-    spark.table(qname)
+    replay(spark, "stream_dedup_exact", "dedup_stream_") { land =>
+      land("graft_dedup_stream", graft.operators.DedupSuite.corpusWithDups(spark, dir)
+          .select(md5(regexp_replace(lower(col("text")), "\\s+", " ")).as("h"), col("doc_id")))
+        .as[(String, Long)].groupByKey(_._1)
+        .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
+          (h: String, rows: Iterator[(String, Long)], state: GroupState[(Long, Long)]) =>
+            val s0 = state.getOption.getOrElse((Long.MaxValue, 0L))
+            val s1 = rows.foldLeft(s0) { case ((m, c), (_, id)) => (math.min(m, id), c + 1) }
+            state.update(s1)
+            Iterator((h, s1._1, s1._2))
+        }
+        .toDF("h", "keep_id", "n_copies")
+    }
+      // final emission per key: count is monotone, min-id non-increasing
       .groupBy(col("h"))
       .agg(min(col("keep_id")).as("keep_id"), max(col("n_copies")).as("n_copies"))
       .filter(col("n_copies") > 1)
       .select("keep_id", "n_copies")
       .orderBy("keep_id")
   }
-
-  /** Streaming MinHash near-dup dedup: the continuous-ingest counterpart
-    * of batch `dedup_minhash_lsh`. The narrow signature stage (shingle →
-    * fused minhash_sigs → band rows) runs per arriving document exactly
-    * as in batch; the pairwise memory lives in per-(band, bucket) keyed
-    * state — each key holds the doc ids seen in that bucket, and a new
-    * arrival emits candidate pairs against ONLY its bucket's state,
-    * never the corpus. Emitted candidates are then verified with the
-    * exact fused Jaccard, so the final result equals the batch pipeline
-    * and shares its oracle. State is O(bucket occupancy) — the honest
-    * lower bound for dedup-against-everything-seen — and at 100 TB the
-    * state store shards by the same (band, bucket) key the batch shuffle
-    * uses. State is bounded by an event-time TTL (see
-    * [[minhashPairsStream]]): buckets idle past the dedup horizon are
-    * evicted by the watermark, so unbounded ingest holds O(active
-    * buckets) state, not O(all history).
-    */
 
   /** Dedup horizon for the registry entry: effectively infinite (100
     * years), so the finite replay equals the batch pipeline and shares
@@ -573,38 +544,39 @@ object CdcStream {
       }
   }
 
+  /** Streaming MinHash near-dup dedup: the continuous-ingest counterpart
+    * of batch `dedup_minhash_lsh`. The narrow signature stage (shingle →
+    * fused minhash_sigs → band rows) runs per arriving document exactly
+    * as in batch; the pairwise memory lives in per-(band, bucket) keyed
+    * state — each key holds the doc ids seen in that bucket, and a new
+    * arrival emits candidate pairs against ONLY its bucket's state,
+    * never the corpus. Emitted candidates are then verified with the
+    * exact fused Jaccard, so the final result equals the batch pipeline
+    * and shares its oracle. State is O(bucket occupancy) — the honest
+    * lower bound for dedup-against-everything-seen — and at 100 TB the
+    * state store shards by the same (band, bucket) key the batch shuffle
+    * uses. State is bounded by an event-time TTL (see
+    * [[minhashPairsStream]]): buckets idle past the dedup horizon are
+    * evicted by the watermark, so unbounded ingest holds O(active
+    * buckets) state, not O(all history).
+    */
   def dedupMinhash(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     org.apache.spark.sql.graft.Bridge.register(spark)
-    val tmp = Scratch.dir("graft_mh_stream")
     // eager localCheckpoint: the verification join reads both sides
     // from the materialized blocks, released by the ContextCleaner when
     // the plan is dereferenced
     val sh = graft.operators.DedupSuite.shingleSets(spark, dir)
       .localCheckpoint()
-    graft.operators.DedupSuite.minhashBands(sh)
-      .select(concat_ws("|", col("band"), col("bucket")).as("k"), col("doc_id"),
-        // constant event time: the replayed corpus is one instant of the
-        // feed, so the TTL horizon never bites and batch equality holds
-        lit("2000-01-01 00:00:00").cast("timestamp").as("ets"))
-      .repartition(4).write.mode("overwrite").parquet(tmp)
-    val schema = spark.read.parquet(tmp).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(tmp)
-      .as[(String, Long, java.sql.Timestamp)]
-    val qname = "mh_stream_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    // 1-minute lateness allowance: the staged replay lands every row at
-    // one constant event time, and stateful ops drop rows AT the
-    // watermark (<=), so batches after the first would otherwise be
-    // discarded as late
-    val q = minhashPairsStream(stream, MinhashTtlMs, "1 minute")
-      .toDF("doc_a", "doc_b")
-      .writeStream.format("memory").queryName(qname)
-      .option("checkpointLocation", Scratch.dir(qname + "_cp"))
-      .outputMode("update").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    recordProgress("stream_dedup_minhash", q)
-    val cands = spark.table(qname).dropDuplicates("doc_a", "doc_b")
+    val cands = replay(spark, "stream_dedup_minhash", "mh_stream_") { land =>
+      // 1-minute lateness allowance: the staged replay lands every row at
+      // one constant event time, and stateful ops drop rows AT the
+      // watermark (<=), so batches after the first would otherwise be
+      // discarded as late
+      minhashPairsStream(land("graft_mh_stream", bandFeed(sh))
+          .as[(String, Long, java.sql.Timestamp)], MinhashTtlMs, "1 minute")
+        .toDF("doc_a", "doc_b")
+    }.dropDuplicates("doc_a", "doc_b")
     cands
       .join(sh.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("shingles", "sh_a"), "doc_a")
       .join(sh.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("shingles", "sh_b"), "doc_b")
@@ -613,6 +585,16 @@ object CdcStream {
       .select("doc_a", "doc_b", "jaccard")
       .orderBy("doc_a", "doc_b")
   }
+
+  /** A corpus's MinHash band rows as the (k = band|bucket, doc_id, ets)
+    * feed the pair stream reads, at one constant event time: the
+    * replayed corpus is one instant of the feed, so the TTL horizon
+    * never bites and batch equality holds.
+    */
+  private def bandFeed(sh: DataFrame): DataFrame =
+    graft.operators.DedupSuite.minhashBands(sh)
+      .select(concat_ws("|", col("band"), col("bucket")).as("k"), col("doc_id"),
+        lit("2000-01-01 00:00:00").cast("timestamp").as("ets"))
 
   /** Continuously-maintained per-chunk table checksum: every
     * micro-batch folds its rows' 60-bit hashes into per-chunk keyed
@@ -628,43 +610,29 @@ object CdcStream {
     */
   def reconChecksum(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val tmp = Scratch.dir("graft_ck_stream")
-    Tables.orders(spark, dir)
-      .select((col("o_orderkey") % 32).as("chunk"),
-        graft.functions.Portable.rowHash60(graft.functions.Portable.rowStr(
-          col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
-          col("o_orderpriority"))).as("h"))
-      .repartition(4).write.mode("overwrite").parquet(tmp)
-    val schema = spark.read.parquet(tmp).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(tmp).as[(Long, Long)]
-    val qname = "ck_stream_" + java.util.UUID.randomUUID.toString.replace("-", "")
     val Mod = graft.functions.Portable.ChecksumMod
-    val q = stream.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (chunk: Long, rows: Iterator[(Long, Long)], state: GroupState[(Long, Long)]) =>
-          val (ck0, n0) = state.getOption.getOrElse((0L, 0L))
-          // additive mod-2^60 fold — hashes are < 2^60, so the running
-          // sum stays in range with one mod per row
-          val (ck, n) = rows.foldLeft((ck0, n0)) {
-            case ((c, k), (_, h)) => ((c + h) % Mod, k + 1)
-          }
-          state.update((ck, n))
-          Iterator((chunk, ck, n))
-      }
-      .toDF("chunk", "source_checksum", "source_rows")
-      .writeStream.format("memory").queryName(qname)
-      .option("checkpointLocation", Scratch.dir(qname + "_cp"))
-      .outputMode("update").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    recordProgress("stream_recon_checksum", q)
+    val emitted = replay(spark, "stream_recon_checksum", "ck_stream_") { land =>
+      land("graft_ck_stream", Tables.orders(spark, dir)
+          .select((col("o_orderkey") % 32).as("chunk"),
+            graft.functions.Portable.rowHash60(graft.functions.Portable.rowStr(
+              col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
+              col("o_orderpriority"))).as("h")))
+        .as[(Long, Long)].groupByKey(_._1)
+        .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
+          (chunk: Long, rows: Iterator[(Long, Long)], state: GroupState[(Long, Long)]) =>
+            val (ck0, n0) = state.getOption.getOrElse((0L, 0L))
+            // additive mod-2^60 fold — hashes are < 2^60, so the running
+            // sum stays in range with one mod per row
+            val (ck, n) = rows.foldLeft((ck0, n0)) {
+              case ((c, k), (_, h)) => ((c + h) % Mod, k + 1)
+            }
+            state.update((ck, n))
+            Iterator((chunk, ck, n))
+        }
+        .toDF("chunk", "source_checksum", "source_rows")
+    }
     // final emission per chunk = the emission with the highest count
-    val w = Window.partitionBy(col("chunk")).orderBy(desc("source_rows"))
-    spark.table(qname)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("chunk"), col("source_checksum"), col("source_rows"))
-      .orderBy("chunk")
+    latestPerKey(emitted, "chunk", "source_rows").orderBy("chunk")
   }
 
   /** Session-gap threshold: 30 minutes in microseconds (shared by the
@@ -721,49 +689,24 @@ object CdcStream {
     */
   def sessionize(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val tmp = Scratch.dir("graft_sess_stream")
-    Tables.events(spark, dir)
-      .select(col("user_id"), unix_micros(col("ts")).as("tus"))
-      .repartition(4).write.mode("overwrite").parquet(tmp)
-    val schema = spark.read.parquet(tmp).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(tmp).as[(Long, Long)]
-    val qname = "sess_stream_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = stream.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (uid: Long, rows: Iterator[(Long, Long)], state: GroupState[Vector[(Long, Long, Long)]]) =>
-          val ivs = rows.foldLeft(state.getOption.getOrElse(Vector.empty)) {
-            (acc, r) => mergeSessionInterval(acc, r._2, SessionGapUs)
-          }
-          state.update(ivs)
-          Iterator((uid, ivs.map(_._3).sum, ivs.size.toLong))
-      }
-      .toDF("user_id", "n_events", "n_sessions")
-      .writeStream.format("memory").queryName(qname)
-      // checkpoint under the shared scratch root — the default temp
-      // checkpoint is driver-local, which silently breaks multi-node
-      .option("checkpointLocation", Scratch.dir(qname + "_cp"))
-      .outputMode("update").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    recordProgress("stream_sessionize", q)
+    val emitted = replay(spark, "stream_sessionize", "sess_stream_") { land =>
+      land("graft_sess_stream", Tables.events(spark, dir)
+          .select(col("user_id"), unix_micros(col("ts")).as("tus")))
+        .as[(Long, Long)].groupByKey(_._1)
+        .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
+          (uid: Long, rows: Iterator[(Long, Long)], state: GroupState[Vector[(Long, Long, Long)]]) =>
+            val ivs = rows.foldLeft(state.getOption.getOrElse(Vector.empty)) {
+              (acc, r) => mergeSessionInterval(acc, r._2, SessionGapUs)
+            }
+            state.update(ivs)
+            Iterator((uid, ivs.map(_._3).sum, ivs.size.toLong))
+        }
+        .toDF("user_id", "n_events", "n_sessions")
+    }
     // latest (= most-events) emission per key is the complete rollup
-    val w = Window.partitionBy(col("user_id")).orderBy(desc("n_events"))
-    spark.table(qname)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("user_id"), col("n_events"), col("n_sessions"))
-      .orderBy("user_id")
+    latestPerKey(emitted, "user_id", "n_events").orderBy("user_id")
   }
 
-  /** Stream-stream interval join: purchases joined to the same user's
-    * views within the 30 minutes before each purchase, both sides
-    * unbounded streams. The watermarks + the time-range join condition
-    * BOUND the join state — Spark purges view rows once the purchase
-    * watermark passes their 30-minute window, which is what makes a
-    * stream-stream join feasible on an infinite 100 TB/day feed. Single
-    * batch for the finite replay (inner-join matches emit during
-    * processing; the watermark only governs state purge).
-    */
   /** Continuously-maintained domain-mixture monitor: each micro-batch
     * folds its documents' token counts into per-source keyed state
     * (n_docs, n_tokens), so after any prefix of the feed the state IS
@@ -775,31 +718,22 @@ object CdcStream {
     */
   def mixMonitor(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val tmp = Scratch.dir("graft_mix_stream")
-    Tables.documents(spark, dir)
-      .select(col("source"), size(split(col("text"), " ")).cast("long").as("n_tok"))
-      .repartition(4).write.mode("overwrite").parquet(tmp)
-    val schema = spark.read.parquet(tmp).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(tmp).as[(String, Long)]
-    val qname = "mix_stream_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = stream.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (src: String, rows: Iterator[(String, Long)], state: GroupState[(Long, Long)]) =>
-          val s0 = state.getOption.getOrElse((0L, 0L))
-          val s1 = rows.foldLeft(s0) { case ((nd, nt), (_, t)) => (nd + 1, nt + t) }
-          state.update(s1)
-          Iterator((src, s1._1, s1._2))
-      }
-      .toDF("source", "n_docs", "n_tokens")
-      .writeStream.format("memory").queryName(qname)
-      .option("checkpointLocation", Scratch.dir(qname + "_cp"))
-      .outputMode("update").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    recordProgress("stream_mix_monitor", q)
+    val emitted = replay(spark, "stream_mix_monitor", "mix_stream_") { land =>
+      land("graft_mix_stream", Tables.documents(spark, dir)
+          .select(col("source"), size(split(col("text"), " ")).cast("long").as("n_tok")))
+        .as[(String, Long)].groupByKey(_._1)
+        .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
+          (src: String, rows: Iterator[(String, Long)], state: GroupState[(Long, Long)]) =>
+            val s0 = state.getOption.getOrElse((0L, 0L))
+            val s1 = rows.foldLeft(s0) { case ((nd, nt), (_, t)) => (nd + 1, nt + t) }
+            state.update(s1)
+            Iterator((src, s1._1, s1._2))
+        }
+        .toDF("source", "n_docs", "n_tokens")
+    }
     // final emission per source (counts are monotone), then the same
     // exact ppm algebra as Graft.mixWeights over the k-row state
-    val per = spark.table(qname)
+    val per = emitted
       .groupBy(col("source"))
       .agg(max(col("n_docs")).as("n_docs"), max(col("n_tokens")).as("n_tokens"))
       .localCheckpoint()
@@ -816,34 +750,29 @@ object CdcStream {
       .orderBy("source")
   }
 
+  /** Stream-stream interval join: purchases joined to the same user's
+    * views within the 30 minutes before each purchase, both sides
+    * unbounded streams. The watermarks + the time-range join condition
+    * BOUND the join state — Spark purges view rows once the purchase
+    * watermark passes their 30-minute window, which is what makes a
+    * stream-stream join feasible on an infinite 100 TB/day feed. Single
+    * batch for the finite replay (inner-join matches emit during
+    * processing; the watermark only governs state purge).
+    */
   def intervalJoin(spark: SparkSession, dir: String): DataFrame = {
-    val tmp = Scratch.dir("graft_ivj_stream")
     val ev = Tables.events(spark, dir)
-    ev.filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("event_id").as("purchase_id"), col("ts").as("pts"))
-      .repartition(2).write.mode("overwrite").parquet(tmp + "/p")
-    ev.filter(col("event_type") === "view")
-      .select(col("user_id").as("vuser"), col("ts").as("vts"))
-      .repartition(2).write.mode("overwrite").parquet(tmp + "/v")
-    val pSchema = spark.read.parquet(tmp + "/p").schema
-    val vSchema = spark.read.parquet(tmp + "/v").schema
-    val p = spark.readStream.schema(pSchema).parquet(tmp + "/p")
-      .withWatermark("pts", "1 hour")
-    val v = spark.readStream.schema(vSchema).parquet(tmp + "/v")
-      .withWatermark("vts", "1 hour")
-    val qname = "ivj_stream_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = p.join(v, expr(
-        "vuser = user_id AND vts > pts - INTERVAL 30 MINUTES AND vts <= pts"))
-      .select(col("user_id"), col("purchase_id"), unix_micros(col("pts")).as("ptus"))
-      .writeStream.format("memory").queryName(qname)
-      // checkpoint under the shared scratch root — the default temp
-      // checkpoint is driver-local, which silently breaks multi-node
-      .option("checkpointLocation", Scratch.dir(qname + "_cp"))
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    recordProgress("stream_interval_join", q)
-    spark.table(qname)
-      .groupBy(col("user_id"), col("purchase_id"), col("ptus"))
+    replay(spark, "stream_interval_join", "ivj_stream_", MemorySink("append")) { land =>
+      val p = land("graft_ivj_stream", ev.filter(col("event_type") === "purchase")
+          .select(col("user_id"), col("event_id").as("purchase_id"), col("ts").as("pts")),
+          files = 2, perFile = false)
+        .withWatermark("pts", "1 hour")
+      val v = land("graft_ivj_stream", ev.filter(col("event_type") === "view")
+          .select(col("user_id").as("vuser"), col("ts").as("vts")),
+          files = 2, perFile = false)
+        .withWatermark("vts", "1 hour")
+      p.join(v, expr("vuser = user_id AND vts > pts - INTERVAL 30 MINUTES AND vts <= pts"))
+        .select(col("user_id"), col("purchase_id"), unix_micros(col("pts")).as("ptus"))
+    }.groupBy(col("user_id"), col("purchase_id"), col("ptus"))
       .agg(count(lit(1)).as("n_views_30m"))
       .orderBy("user_id", "purchase_id")
   }
@@ -858,26 +787,13 @@ object CdcStream {
     */
   def sourceEnvelope(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val tmp = Scratch.dir("graft_env_stream")
-    CdcSuite.envelopeFeedLines(spark, dir)
-      .repartition(4).write.mode("overwrite").text(tmp)
-    val spec = CdcSource.fileEnvelopeFeed(tmp)
-    val stream = CdcSource.loadStream(spark,
-      spec.copy(options = spec.options + ("maxFilesPerTrigger" -> "1")))
-    val events = CdcSource.parseEnvelope(stream).as[ChangeEvent]
-    val qname = "env_stream_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = applyEventsStream(events)
-      .writeStream.format("memory").queryName(qname)
-      .option("checkpointLocation", Scratch.dir(qname + "_cp"))
-      .outputMode("update").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    recordProgress("stream_source_envelope", q)
-    val w = Window.partitionBy(col("id")).orderBy(desc("seq"))
-    spark.table(qname)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1 && col("op") =!= "d")
-      .select(col("id"), col("custkey"), col("status"))
-      .orderBy("id")
+    liveState(replay(spark, "stream_source_envelope", "env_stream_") { land =>
+      val feed = land.dir("graft_env_stream")
+      CdcSuite.envelopeFeedLines(spark, dir)
+        .repartition(4).write.mode("overwrite").text(feed)
+      applyEventsStream(CdcSource.parseEnvelope(
+        land.open(CdcSource.fileEnvelopeFeed(feed))).as[ChangeEvent])
+    })
   }
 
   /** Streaming last-touch attribution with per-user state across
@@ -901,55 +817,45 @@ object CdcStream {
     */
   def attribution(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val tmp = Scratch.dir("graft_attr_stream")
-    Tables.events(spark, dir)
-      .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("tus"),
-        col("event_type"),
-        floor(col("value") * 10000 + 0.5).cast("long").as("v4"))
-      .repartition(4).write.mode("overwrite").parquet(tmp)
-    val schema = spark.read.parquet(tmp).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(tmp)
-      .as[(Long, Long, Long, String, Long)]
-    val qname = "attr_stream_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = stream.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (uid: Long,
-         rows: Iterator[(Long, Long, Long, String, Long)],
-         state: GroupState[(Vector[(Long, Long, String)], Vector[(Long, Long, Long)], Long)]) =>
-          val (touches0, purchases0, gen0) =
-            state.getOption.getOrElse((Vector.empty[(Long, Long, String)],
-              Vector.empty[(Long, Long, Long)], 0L))
-          var touches = touches0
-          var purchases = purchases0
-          rows.foreach { case (_, eid, tus, typ, v4) =>
-            if (typ == "purchase") purchases = purchases :+ ((tus, eid, v4))
-            else touches = touches :+ ((tus, eid, typ))
-          }
-          val ts = touches.sortBy(t => (t._1, t._2))
-          val ps = purchases.sortBy(p => (p._1, p._2))
-          val gen = gen0 + 1
-          state.update((ts, ps, gen))
-          // latest touch strictly before each purchase in (tus, eid) order
-          val attributed = ps.map { case (ptus, peid, v4) =>
-            val ch = ts.view
-              .takeWhile(t => t._1 < ptus || (t._1 == ptus && t._2 < peid))
-              .lastOption.map(_._3).getOrElse("direct")
-            (ch, v4)
-          }
-          attributed.groupBy(_._1).iterator.map { case (ch, xs) =>
-            (uid, ch, xs.size.toLong, xs.map(_._2).sum, gen)
-          }
-      }
-      .toDF("user_id", "channel", "n", "rev4", "gen")
-      .writeStream.format("memory").queryName(qname)
-      .option("checkpointLocation", Scratch.dir(qname + "_cp"))
-      .outputMode("update").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    recordProgress("stream_attribution", q)
+    val emitted = replay(spark, "stream_attribution", "attr_stream_") { land =>
+      land("graft_attr_stream", Tables.events(spark, dir)
+          .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("tus"),
+            col("event_type"),
+            floor(col("value") * 10000 + 0.5).cast("long").as("v4")))
+        .as[(Long, Long, Long, String, Long)].groupByKey(_._1)
+        .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
+          (uid: Long,
+           rows: Iterator[(Long, Long, Long, String, Long)],
+           state: GroupState[(Vector[(Long, Long, String)], Vector[(Long, Long, Long)], Long)]) =>
+            val (touches0, purchases0, gen0) =
+              state.getOption.getOrElse((Vector.empty[(Long, Long, String)],
+                Vector.empty[(Long, Long, Long)], 0L))
+            var touches = touches0
+            var purchases = purchases0
+            rows.foreach { case (_, eid, tus, typ, v4) =>
+              if (typ == "purchase") purchases = purchases :+ ((tus, eid, v4))
+              else touches = touches :+ ((tus, eid, typ))
+            }
+            val ts = touches.sortBy(t => (t._1, t._2))
+            val ps = purchases.sortBy(p => (p._1, p._2))
+            val gen = gen0 + 1
+            state.update((ts, ps, gen))
+            // latest touch strictly before each purchase in (tus, eid) order
+            val attributed = ps.map { case (ptus, peid, v4) =>
+              val ch = ts.view
+                .takeWhile(t => t._1 < ptus || (t._1 == ptus && t._2 < peid))
+                .lastOption.map(_._3).getOrElse("direct")
+              (ch, v4)
+            }
+            attributed.groupBy(_._1).iterator.map { case (ch, xs) =>
+              (uid, ch, xs.size.toLong, xs.map(_._2).sum, gen)
+            }
+        }
+        .toDF("user_id", "channel", "n", "rev4", "gen")
+    }
     // each user's newest generation is their complete, current attribution
     val w = Window.partitionBy(col("user_id"))
-    spark.table(qname)
+    emitted
       .withColumn("mx", max(col("gen")).over(w))
       .filter(col("gen") === col("mx"))
       .groupBy(col("channel"))
@@ -958,32 +864,18 @@ object CdcStream {
       .orderBy("channel")
   }
 
-  /** The store-maintaining twins' shared sink plumbing: land `rows` as
-    * a 4-file feed (`Scratch.dir(feedPrefix)`), replay it one file per
-    * micro-batch under `Trigger.AvailableNow` into `sink` through
-    * foreachBatch — checkpointed under a unique
-    * `<queryPrefix><uuid>_cp` scratch dir — then record the run's
-    * progress under `progressKey`. foreachBatch's batchId IS the store
-    * batch id, so a checkpoint replay of a torn batch re-lands the same
+  /** The store-maintaining twins' foreachBatch replay: land `rows` as
+    * a 4-file feed (`Scratch.dir(feedPrefix)`) and fold it one file per
+    * micro-batch into `sink`. foreachBatch's batchId IS the store batch
+    * id, so a checkpoint replay of a torn batch re-lands the same
     * segment (idempotent per batchId, refused at or below a
     * compaction's watermark) — the exactly-once sink contract every
     * twin relies on.
     */
   private def foldFeed(spark: SparkSession, progressKey: String,
       feedPrefix: String, queryPrefix: String, rows: DataFrame)
-      (sink: (DataFrame, Long) => Unit): Unit = {
-    val feed = Scratch.dir(feedPrefix)
-    rows.repartition(4).write.mode("overwrite").parquet(feed)
-    val qname = queryPrefix + java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = spark.readStream.schema(rows.schema)
-      .option("maxFilesPerTrigger", "1").parquet(feed)
-      .writeStream
-      .foreachBatch { (df: DataFrame, batchId: Long) => sink(df, batchId) }
-      .option("checkpointLocation", Scratch.dir(qname + "_cp"))
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    recordProgress(progressKey, q)
-  }
+      (sink: (DataFrame, Long) => Unit): Unit =
+    replay(spark, progressKey, queryPrefix, FoldSink(sink))(land => land(feedPrefix, rows))
 
   /** Route one CDC envelope micro-batch (op, `key`, `payload`): `c` and
     * `u` rows, projected to (key, payload), go to `upsert`; `d` keys go
@@ -1002,9 +894,7 @@ object CdcStream {
     */
   private def clearedOutDir(spark: SparkSession, entry: String, lake: String): String = {
     val outDir = Scratch.perLake(entry, lake)
-    val outPath = new org.apache.hadoop.fs.Path(outDir)
-    val fs = outPath.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(outPath)) fs.delete(outPath, true)
+    deleteDir(spark, outDir)
     outDir
   }
 
@@ -1083,6 +973,28 @@ object CdcStream {
       .orderBy("query_id", "rk")
   }
 
+  /** The vector CDC twins' c/u/d envelope (op, vec_id, embedding) over
+    * `e`: held-out rows (% 7 = 3) arrive as inserts and a hash-slice of
+    * ids (% 13 = 2) as deletes carrying a typed null embedding. With
+    * `upserts`, live base ids (% 5 = 1) also arrive as updates with the
+    * vector reversed, and the deletes skip every id another op carries,
+    * so each id carries exactly one op. Without, the delete slice
+    * overlaps the inserts (delete-of-appended).
+    */
+  private def vectorEnvelope(e: DataFrame, upserts: Boolean): DataFrame = {
+    val id = col("vec_id")
+    def ops(op: String, keep: org.apache.spark.sql.Column,
+        emb: org.apache.spark.sql.Column) =
+      e.filter(keep).select(lit(op).as("op"), id, emb.as("embedding"))
+    val ins = ops("c", id % 7 === 3, col("embedding"))
+    val noEmb = lit(null).cast(org.apache.spark.sql.types.ArrayType(
+      org.apache.spark.sql.types.FloatType))
+    if (!upserts) ins.unionByName(ops("d", id % 13 === 2, noEmb))
+    else ops("u", id % 7 =!= 3 && id % 5 === 1, reverse(col("embedding")))
+      .unionByName(ins)
+      .unionByName(ops("d", id % 13 === 2 && id % 5 =!= 1 && id % 7 =!= 3, noEmb))
+  }
+
   /** A CDC-MAINTAINED living vector index — the reference's change-
     * data-capture discipline applied to ANN serving (ref:
     * src/transformation/transformers/base.py:1 routes c/u/d envelope
@@ -1119,17 +1031,8 @@ object CdcStream {
     val idxDir = Scratch.perLake("stream_ivf_cdc", dir)
     AnnSuite.ivfSave(AnnSuite.ivfBuild(e.filter(col("vec_id") % 7 =!= 3),
       "vec_id", "embedding", AnnSuite.IvfK), idxDir)
-    // the envelope feed: held-out rows arrive as inserts, a disjoint
-    // hash-slice of ids (base AND inserted rows both — the overlap
-    // exercises delete-of-appended) arrives as deletes
-    val ins = e.filter(col("vec_id") % 7 === 3)
-      .select(lit("c").as("op"), col("vec_id"), col("embedding"))
-    val dels = e.filter(col("vec_id") % 13 === 2)
-      .select(lit("d").as("op"), col("vec_id"),
-        lit(null).cast(org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.FloatType)).as("embedding"))
     foldFeed(spark, "stream_ivf_cdc", "stream_ivf_cdc_feed", "ivf_cdc_",
-        ins.unionByName(dels)) { (df, batchId) =>
+        vectorEnvelope(e, upserts = false)) { (df, batchId) =>
       applyEnvelope(df, "vec_id", "embedding")(
         graft.api.Graft.ivfAppend(spark, idxDir, _, "vec_id", "embedding", batchId),
         graft.api.Graft.ivfDelete(spark, idxDir, _, "vec_id", batchId))
@@ -1167,18 +1070,8 @@ object CdcStream {
     val idxDir = Scratch.perLake("stream_ivf_upsert", dir)
     AnnSuite.ivfSave(AnnSuite.ivfBuild(e.filter(col("vec_id") % 7 =!= 3),
       "vec_id", "embedding", AnnSuite.IvfK), idxDir)
-    val ups = e.filter(col("vec_id") % 7 =!= 3 && col("vec_id") % 5 === 1)
-      .select(lit("u").as("op"), col("vec_id"),
-        reverse(col("embedding")).as("embedding"))
-    val ins = e.filter(col("vec_id") % 7 === 3)
-      .select(lit("c").as("op"), col("vec_id"), col("embedding"))
-    val dels = e.filter(col("vec_id") % 13 === 2 &&
-        col("vec_id") % 5 =!= 1 && col("vec_id") % 7 =!= 3)
-      .select(lit("d").as("op"), col("vec_id"),
-        lit(null).cast(org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.FloatType)).as("embedding"))
     foldFeed(spark, "stream_ivf_upsert", "stream_ivf_upsert_feed", "ivf_upsert_",
-        ups.unionByName(ins).unionByName(dels)) { (df, batchId) =>
+        vectorEnvelope(e, upserts = true)) { (df, batchId) =>
       applyEnvelope(df, "vec_id", "embedding")(
         graft.api.Graft.ivfAppend(spark, idxDir, _, "vec_id", "embedding", batchId),
         graft.api.Graft.ivfDelete(spark, idxDir, _, "vec_id", batchId))
@@ -1209,18 +1102,8 @@ object CdcStream {
     val idxDir = Scratch.perLake("stream_ivfpq_upsert", dir)
     AnnSuite.ivfPqSave(AnnSuite.ivfPqBuild(e.filter(col("vec_id") % 7 =!= 3),
       "vec_id", "embedding", AnnSuite.IvfK, m = 8, dsub = 8, ksub = 16), idxDir)
-    val ups = e.filter(col("vec_id") % 7 =!= 3 && col("vec_id") % 5 === 1)
-      .select(lit("u").as("op"), col("vec_id"),
-        reverse(col("embedding")).as("embedding"))
-    val ins = e.filter(col("vec_id") % 7 === 3)
-      .select(lit("c").as("op"), col("vec_id"), col("embedding"))
-    val dels = e.filter(col("vec_id") % 13 === 2 &&
-        col("vec_id") % 5 =!= 1 && col("vec_id") % 7 =!= 3)
-      .select(lit("d").as("op"), col("vec_id"),
-        lit(null).cast(org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.FloatType)).as("embedding"))
     foldFeed(spark, "stream_ivfpq_upsert", "stream_ivfpq_upsert_feed", "ivfpq_upsert_",
-        ups.unionByName(ins).unionByName(dels)) { (df, batchId) =>
+        vectorEnvelope(e, upserts = true)) { (df, batchId) =>
       applyEnvelope(df, "vec_id", "embedding")(
         graft.api.Graft.ivfPqAppend(spark, idxDir, _, "vec_id", "embedding", batchId),
         graft.api.Graft.ivfPqDelete(spark, idxDir, _, "vec_id", batchId))
@@ -1251,14 +1134,8 @@ object CdcStream {
     val idxDir = Scratch.perLake("stream_ivfpq_cdc", dir)
     AnnSuite.ivfPqSave(AnnSuite.ivfPqBuild(e.filter(col("vec_id") % 7 =!= 3),
       "vec_id", "embedding", AnnSuite.IvfK, m = 8, dsub = 8, ksub = 16), idxDir)
-    val ins = e.filter(col("vec_id") % 7 === 3)
-      .select(lit("c").as("op"), col("vec_id"), col("embedding"))
-    val dels = e.filter(col("vec_id") % 13 === 2)
-      .select(lit("d").as("op"), col("vec_id"),
-        lit(null).cast(org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.FloatType)).as("embedding"))
     foldFeed(spark, "stream_ivfpq_cdc", "stream_ivfpq_cdc_feed", "ivfpq_cdc_",
-        ins.unionByName(dels)) { (df, batchId) =>
+        vectorEnvelope(e, upserts = false)) { (df, batchId) =>
       applyEnvelope(df, "vec_id", "embedding")(
         graft.api.Graft.ivfPqAppend(spark, idxDir, _, "vec_id", "embedding", batchId),
         graft.api.Graft.ivfPqDelete(spark, idxDir, _, "vec_id", batchId))
@@ -1322,25 +1199,6 @@ object CdcStream {
     CurationSuite.verifyCands(cands, sh)
   }
 
-  /** Streaming twin of semantic dedup (`dedup_semantic`): arriving
-    * documents probe the STANDING semantic-cell index instead of
-    * re-clustering the corpus. Build once (the dedup_semantic kernel —
-    * deterministic k-means cells over the standing corpus, hot cells
-    * gated, k from parquet footers); then each micro-batch is assigned
-    * at the FIXED centroids (ivfAssignBatch — cost ∝ batch, the
-    * standing assignments are never rescanned for assignment) and
-    * verified by exact e6-rounded cosine against ONLY the occupants of
-    * the batch's own cells (the batch's distinct cells — bounded by
-    * batch size — become an isin partition filter on the
-    * cell-partitioned standing index, so the probe reads ~cells/k of
-    * the index files). Flagged pairs land batchId-keyed with
-    * per-segment overwrite — the same torn-batch-idempotent sink as
-    * stream_ivf_append. The batch algebra (assign-at-fixed-centroids +
-    * within-cell verify) makes N folded probes equal one bulk
-    * (standing × batch) pass, so a single DuckDB chain
-    * (DedupSuite.SemanticProbeOracleSql) checks the streamed path
-    * end-to-end.
-    */
   /** One micro-batch of the semantic probe: assign the batch at the
     * standing index's FIXED centroids, then exact-cosine verify against
     * ONLY the occupants of the batch's own cells. The standing read
@@ -1371,6 +1229,25 @@ object CdcStream {
       .select("cell", "vec_a", "vec_b", "cos")
   }
 
+  /** Streaming twin of semantic dedup (`dedup_semantic`): arriving
+    * documents probe the STANDING semantic-cell index instead of
+    * re-clustering the corpus. Build once (the dedup_semantic kernel —
+    * deterministic k-means cells over the standing corpus, hot cells
+    * gated, k from parquet footers); then each micro-batch is assigned
+    * at the FIXED centroids (ivfAssignBatch — cost ∝ batch, the
+    * standing assignments are never rescanned for assignment) and
+    * verified by exact e6-rounded cosine against ONLY the occupants of
+    * the batch's own cells (the batch's distinct cells — bounded by
+    * batch size — become an isin partition filter on the
+    * cell-partitioned standing index, so the probe reads ~cells/k of
+    * the index files). Flagged pairs land batchId-keyed with
+    * per-segment overwrite — the same torn-batch-idempotent sink as
+    * stream_ivf_append. The batch algebra (assign-at-fixed-centroids +
+    * within-cell verify) makes N folded probes equal one bulk
+    * (standing × batch) pass, so a single DuckDB chain
+    * (DedupSuite.SemanticProbeOracleSql) checks the streamed path
+    * end-to-end.
+    */
   def dedupSemanticStream(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.{AnnSuite, DedupSuite}
     org.apache.spark.sql.graft.Bridge.register(spark)

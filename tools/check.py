@@ -2,12 +2,20 @@
 """Local stand-in for the driver's DuckDB oracle compare.
 
 Usage: python3 tools/check.py <verify_out_dir> <sf_dir> [query ...]
+       python3 tools/check.py <verify_out_dir> <sf_dir> --against <other_out> [query ...]
 
 Reads each <out>/<name> parquet (Spark result), runs the matching SQL
 from <out>/oracle_sql.json in DuckDB over the sf parquet tables, and
 compares: column names (sorted), row count, and values (rows sorted,
 exact equality; tiny report of first diffs). A FAIL line carries the
 error Verify recorded for that entry in <out>/verify_status.jsonl.
+
+With --against, no oracle runs: each entry dumped in either Verify
+output dir is compared with the other dir's dump of the same entry —
+column names (in order), row count, and the sorted canonical rows —
+one PASS/FAIL line per entry. This is the "row-identical to another
+build" check for a refactor: run Verify on both builds at the same sf,
+then compare the two output dirs.
 """
 import json
 import math
@@ -25,9 +33,63 @@ def canon(v):
     return (type(v).__name__, str(v))
 
 
+def read_dump(con, out, name):
+    """(column names, rows) of one entry's parquet dump in a Verify dir."""
+    rel = con.sql(f"SELECT * FROM read_parquet('{out}/{name}/*.parquet')")
+    return rel.columns, rel.fetchall()
+
+
+def canon_rows(rows):
+    return sorted(tuple(canon(v) for v in r) for r in rows)
+
+
+def dumped(out):
+    return {e.name for e in os.scandir(out) if e.is_dir()}
+
+
+def against(out, other, only):
+    con = duckdb.connect()
+    n_pass = n_fail = 0
+    for name in sorted(dumped(out) | dumped(other)):
+        if only and name not in only:
+            continue
+        try:
+            acols, arows = read_dump(con, out, name)
+            bcols, brows = read_dump(con, other, name)
+        except Exception as e:
+            print(f"FAIL {name}: error {e}")
+            n_fail += 1
+            continue
+        arows, brows = canon_rows(arows), canon_rows(brows)
+        if acols != bcols:
+            msg = f"columns {acols} vs {bcols}"
+        elif len(arows) != len(brows):
+            msg = f"rowcount {len(arows)} vs {len(brows)}"
+        else:
+            diffs = [(a, b) for a, b in zip(arows, brows) if a != b]
+            msg = (f"{len(diffs)} differing rows; first: {diffs[0][0]} vs {diffs[0][1]}"
+                   if diffs else None)
+        if msg:
+            print(f"FAIL {name}: {msg}")
+            n_fail += 1
+        else:
+            print(f"PASS {name} ({len(arows)} rows, identical)")
+            n_pass += 1
+    print(f"== {n_pass} pass, {n_fail} fail ==")
+    sys.exit(1 if n_fail else 0)
+
+
 def main():
-    out, sf = sys.argv[1], sys.argv[2]
-    only = set(sys.argv[3:])
+    args = sys.argv[1:]
+    other = None
+    if "--against" in args:
+        i = args.index("--against")
+        other = args[i + 1]
+        del args[i:i + 2]
+    out, sf = args[0], args[1]
+    only = set(args[2:])
+    if other is not None:
+        return against(out, other, only)
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')")
@@ -50,11 +112,11 @@ def main():
             print(f"FAIL {msg}" + (f" [verify: {err}]" if err else ""))
 
         try:
-            spark_rel = con.sql(f"SELECT * FROM read_parquet('{out}/{name}/*.parquet')")
-            scols = sorted(spark_rel.columns)
-            sdata = con.sql(
-                f"SELECT {', '.join(scols)} FROM spark_rel"
-            ).fetchall()
+            scols, sdata = read_dump(con, out, name)
+            # rows in sorted-column order, to line up with the oracle's
+            order = sorted(range(len(scols)), key=lambda i: scols[i])
+            scols = [scols[i] for i in order]
+            sdata = [tuple(r[i] for i in order) for r in sdata]
             duck_rel = con.sql(sql)
             dcols = sorted(duck_rel.columns)
             ddata = con.execute(
@@ -68,8 +130,8 @@ def main():
             fail(f"{name}: columns spark={scols} duck={dcols}")
             n_fail += 1
             continue
-        srows = sorted([tuple(canon(v) for v in r) for r in sdata])
-        drows = sorted([tuple(canon(v) for v in r) for r in ddata])
+        srows = canon_rows(sdata)
+        drows = canon_rows(ddata)
         if len(srows) != len(drows):
             fail(f"{name}: rowcount spark={len(srows)} duck={len(drows)}")
             n_fail += 1
