@@ -361,29 +361,28 @@ object AnnSuite {
     * store resets to generation 0 (prior append segments / compacted
     * generations must not leak into reloads).
     */
-  private[graft] def pqSave(idx: PqIndex, dir: String): Unit = {
-    // two independent tables — overlap the one-row book write with the
-    // corpus-sized code write (guide §2.6)
-    graft.functions.Par.inParallel(
-      idx.book.write.mode("overwrite").parquet(s"$dir/book.parquet"), {
-        val w = idx.codes.write.mode("overwrite")
-        (if (idx.codes.columns.contains("cell")) w.partitionBy("cell") else w)
-          .parquet(s"$dir/codes.parquet")
-      })
-    CodesStore.reset(idx.codes.sparkSession, dir)
+  private[graft] def pqSave(idx: PqIndex, dir: String): Unit =
+    CodesStore.save(dir, idx.codes, "book" -> idx.book)
+
+  /** The codebook and its geometry (m, dsub, ksub), read from the book
+    * row itself (one head() on a one-row frame).
+    */
+  private def bookLoad(spark: SparkSession, dir: String): (DataFrame, Int, Int, Int) = {
+    val book = CodesStore.sidecar(spark, dir, "book")
+    val g = book.select(
+      size(col("subcents")).as("m"),
+      size(expr("element_at(element_at(subcents, 1), 1).ce")).as("dsub"),
+      size(expr("element_at(subcents, 1)")).as("ksub")).head()
+    (book, g.getInt(0), g.getInt(1), g.getInt(2))
   }
 
   /** The codebook half of a persisted index, without touching the
-    * codes — the append path needs (book, m, dsub) only. `m`/`dsub`
-    * come from the book row itself (one head() on a one-row frame).
+    * codes — the append path needs (book, m, dsub) only.
     */
   private[graft] def pqBookLoad(spark: SparkSession, dir: String)
       : (DataFrame, Int, Int) = {
-    val book = spark.read.parquet(CodesStore.sidecarPath(spark, dir, "book"))
-    val sub = book.select(
-      size(col("subcents")).as("m"),
-      size(expr("element_at(element_at(subcents, 1), 1).ce")).as("dsub")).head()
-    (book, sub.getInt(0), sub.getInt(1))
+    val (book, m, dsub, _) = bookLoad(spark, dir)
+    (book, m, dsub)
   }
 
   /** A quantized store's full metadata quadruple, read ONCE per entry:
@@ -396,11 +395,11 @@ object AnnSuite {
     * is valid across a maintain+serve chain that does not retrain.
     */
   private[graft] case class PqMeta(book: DataFrame, m: Int, dsub: Int,
-      residual: Boolean, carry: Seq[String])
+      ksub: Int, residual: Boolean, carry: Seq[String])
 
   private[graft] def pqMetaLoad(spark: SparkSession, dir: String): PqMeta = {
-    val (book, m, dsub) = pqBookLoad(spark, dir)
-    PqMeta(book, m, dsub, ivfPqResidualFlag(spark, dir),
+    val (book, m, dsub, ksub) = bookLoad(spark, dir)
+    PqMeta(book, m, dsub, ksub, ivfPqResidualFlag(spark, dir),
       CodesStore.carryOf(spark, dir))
   }
 
@@ -438,7 +437,7 @@ object AnnSuite {
     */
   private[graft] def ivfPqLoadLww(spark: SparkSession, dir: String,
       carry: Seq[String] = Nil): IvfPqIndex =
-    IvfPqIndex(spark.read.parquet(CodesStore.sidecarPath(spark, dir, "centroids")),
+    IvfPqIndex(CodesStore.sidecar(spark, dir, "centroids"),
       pqLoadLww(spark, dir, carry), ivfPqResidualFlag(spark, dir))
 
   /** Serve a query batch from a (possibly reloaded) flat-PQ index:
@@ -538,18 +537,15 @@ object AnnSuite {
     * (a loaded index must know which query-side ADC derivation
     * matches its codes).
     */
-  private[graft] def ivfPqSave(idx: IvfPqIndex, dir: String): Unit = {
-    val spark = idx.centroids.sparkSession
+  private[graft] def ivfPqSave(idx: IvfPqIndex, dir: String): Unit =
+    CodesStore.save(dir, idx.pq.codes, "centroids" -> idx.centroids,
+      "book" -> idx.pq.book,
+      "flags" -> flagsTable(idx.centroids.sparkSession, idx.residual))
+
+  /** The one-row `flags` sidecar: whether the codes are residual. */
+  private def flagsTable(spark: SparkSession, residual: Boolean): DataFrame = {
     import spark.implicits._
-    // three independent tables (centroids / book+codes / flags) —
-    // overlap their writes (guide §2.6); pqSave's generation reset only
-    // touches manifests and VERSIONED sidecars, never these files
-    graft.functions.Par.all(
-      () => idx.centroids.write.mode("overwrite")
-        .parquet(s"$dir/centroids.parquet"),
-      () => pqSave(idx.pq, dir),
-      () => Seq(idx.residual).toDF("residual")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/flags.parquet"))
+    Seq(residual).toDF("residual").coalesce(1)
   }
 
   /** The index's residual-ness at its CURRENT generation (pre-flag
@@ -571,8 +567,7 @@ object AnnSuite {
     // driver-side record read either way, so no Par needed here)
     val pq = pqLoad(spark, dir, carry, meta.map(mt => (mt.book, mt.m, mt.dsub)))
     val residual = meta.map(_.residual).getOrElse(ivfPqResidualFlag(spark, dir))
-    IvfPqIndex(spark.read.parquet(CodesStore.sidecarPath(spark, dir, "centroids")),
-      pq, residual)
+    IvfPqIndex(CodesStore.sidecar(spark, dir, "centroids"), pq, residual)
   }
 
   /** Incremental IVFADC maintenance — the composed quantized index as
@@ -615,8 +610,7 @@ object AnnSuite {
         assigned.select((col("cand_id").as("vec_id") +: col("cell") +:
           col("ce2").as("embedding") +: carry.map(col)): _*)
       else {
-        val cents = cellCents(
-          spark.read.parquet(CodesStore.sidecarPath(spark, dir, "centroids")))
+        val cents = cellCents(CodesStore.sidecar(spark, dir, "centroids"))
         assigned.join(broadcast(cents), Seq("cell"))
           .select((col("cand_id").as("vec_id") +: col("cell") +:
             expr(residExpr("ce2", "cce")).as("embedding") +: carry.map(col)): _*)
@@ -634,7 +628,7 @@ object AnnSuite {
     * everything in as the next generation: the new codes land as the
     * folded base, the new centroids/book/flags land as
     * generation-versioned sidecars inside the atomic commit window
-    * (`CodesStore.sidecarPath` — gen < next ignores them, so a torn
+    * (`CodesStore.sidecar` — gen < next ignores them, so a torn
     * retrain is invisible and a serving (codes, centroids, book,
     * flags) quadruple can never mix generations). Appends after the
     * retrain encode at the NEW parameters; tombstones purge; the
@@ -645,7 +639,7 @@ object AnnSuite {
     *
     * Deletion contract: the retrain anti-joins BOTH the current
     * generation's tombstones and the store's cumulative purged-key
-    * record ([[graft.sources.SegmentStore.purged]], written by every
+    * record (`CodesStore.purged`, written by every
     * `recordPurged` compaction) — so `corpus` may be the raw lake
     * frame even when it still carries rows whose purge already
     * completed. Rows deleted from the LAKE itself before this call
@@ -665,29 +659,25 @@ object AnnSuite {
     */
   private[graft] def ivfPqRetrainPrep(spark: SparkSession, dir: String,
       corpus: DataFrame, idCol: String, embCol: String): IvfPqIndex = {
-    val (book, m, dsub) = pqBookLoad(spark, dir)
-    val ksub = book.select(size(expr("element_at(subcents, 1)"))).head().getInt(0)
+    val mt = pqMetaLoad(spark, dir)
     // geometry parameter from the k-row table's footers — driver-side,
     // no Spark job (ParquetMeta.rowCountDriver)
     val kCoarse = graft.sources.ParquetMeta.rowCountDriver(spark,
       CodesStore.sidecarPath(spark, dir, "centroids")).toInt
-    val residual = ivfPqResidualFlag(spark, dir)
-    val carry = CodesStore.carryOf(spark, dir)
     val src0 = corpus.select((col(idCol).as("vec_id") +:
-      col(embCol).as("embedding") +: carry.map(col)): _*)
+      col(embCol).as("embedding") +: mt.carry.map(col)): _*)
     // mask BOTH the current generation's tombstones AND the cumulative
     // purged-key record: the caller's corpus frame is the LAKE table,
     // which may still carry rows an earlier compaction physically
     // purged (channel cleared) — without the purged list the rebuild
     // would quietly undo a completed right-to-be-forgotten purge.
-    val masks = graft.sources.SegmentStore.deletes(spark, dir, CodesStore).toSeq ++
-      graft.sources.SegmentStore.purged(spark, dir, CodesStore).toSeq
+    val masks = CodesStore.deletes(spark, dir).toSeq ++ CodesStore.purged(spark, dir).toSeq
     val src = masks.foldLeft(src0) { (acc, t) =>
       val m = t.select("cand_id")
       acc.join(broadcast(m), acc("vec_id") === m("cand_id"), "left_anti")
     }
-    ivfPqBuild(src, "vec_id", "embedding", kCoarse, m, dsub, ksub,
-      residual, carry = carry)
+    ivfPqBuild(src, "vec_id", "embedding", kCoarse, mt.m, mt.dsub, mt.ksub,
+      mt.residual, carry = mt.carry)
   }
 
   private[graft] def ivfPqRetrain(spark: SparkSession, dir: String,
@@ -696,16 +686,9 @@ object AnnSuite {
       prebuilt: Option[IvfPqIndex] = None): Boolean = {
     val idx = prebuilt.getOrElse(
       ivfPqRetrainPrep(spark, dir, corpus, idCol, embCol))
-    CodesStore.swap(spark, dir, idx.pq.codes, crashBeforeCommit, retain) { next =>
-      idx.centroids.write.mode("overwrite")
-        .parquet(s"$dir/centroids_v$next.parquet")
-      idx.pq.book.write.mode("overwrite")
-        .parquet(s"$dir/book_v$next.parquet")
-      import spark.implicits._
-      Seq(idx.residual).toDF("residual")
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"$dir/flags_v$next.parquet")
-    }
+    CodesStore.swap(spark, dir, idx.pq.codes, crashBeforeCommit, retain)(
+      "centroids" -> idx.centroids, "book" -> idx.pq.book,
+      "flags" -> flagsTable(spark, idx.residual))
   }
 
   /** Serve: probe `nprobe` coarse cells per query (the [[probeCells]]
@@ -838,18 +821,11 @@ object AnnSuite {
     * whole files/partitions at the scan (cell is the partition column),
     * instead of re-filtering the full corpus.
     */
-  private[graft] def ivfSave(idx: IvfIndex, dir: String): Unit = {
-    // two independent tables — overlap the k-row centroid write with
-    // the corpus-sized assignment write (guide §2.6)
-    graft.functions.Par.inParallel(
-      idx.centroids.write.mode("overwrite").parquet(s"$dir/centroids.parquet"),
-      idx.assigned.write.mode("overwrite")
-        .partitionBy("cell").parquet(s"$dir/assigned.parquet"))
+  private[graft] def ivfSave(idx: IvfIndex, dir: String): Unit =
     // a save is a FULL rebuild: incremental segments from prior
     // ivfAppend batches, compacted generations and retrain-versioned
     // centroid tables must not leak into reloads
-    IvfStore.reset(idx.assigned.sparkSession, dir)
-  }
+    IvfStore.save(dir, idx.assigned, "centroids" -> idx.centroids)
 
   /** ZERO-DOWNTIME REINDEX — the answer to codebook/centroid drift on
     * a living index: re-cluster the CURRENT reader view (base ∪
@@ -860,7 +836,7 @@ object AnnSuite {
     * centroid table means the pair can never mix) until the manifest
     * commits; a torn retrain is invisible; generation retention keeps
     * in-flight readers whole. Appends after the retrain assign at the
-    * NEW centroids ([[ivfAssignBatch]] resolves `IvfStore.sidecarPath`).
+    * NEW centroids ([[ivfAssignBatch]] resolves `IvfStore.sidecar`).
     * The retrain corpus is exactly what a reader sees, so
     * build-on-the-view determinism makes the swapped index equal a
     * fresh full build over the live corpus — which is the oracle
@@ -885,10 +861,8 @@ object AnnSuite {
       .select((col("cand_id").as("vec_id") +: col("ce2").as("embedding") +:
         carry.map(col)): _*)
     val idx = ivfBuild(view, "vec_id", "embedding", kEff, carry)
-    IvfStore.swap(spark, dir, idx.assigned, crashBeforeCommit, retain) { next =>
-      idx.centroids.write.mode("overwrite")
-        .parquet(s"$dir/centroids_v$next.parquet")
-    }
+    IvfStore.swap(spark, dir, idx.assigned, crashBeforeCommit, retain)(
+      "centroids" -> idx.centroids)
   }
 
   /** The IVF ASSIGNMENT store — generation manifests, batchId-keyed
@@ -923,7 +897,7 @@ object AnnSuite {
   private[graft] def ivfLoad(spark: SparkSession, dir: String,
       carry: Seq[String] = Nil): IvfIndex =
     IvfIndex(IvfStore.load(spark, dir, carry),
-      spark.read.parquet(IvfStore.sidecarPath(spark, dir, "centroids")))
+      IvfStore.sidecar(spark, dir, "centroids"))
 
   /** LAST-WRITE-WINS reader view of a persisted IVF index —
     * [[ivfLoad]]'s CDC-UPSERT twin (the reference sink's
@@ -936,17 +910,17 @@ object AnnSuite {
     * re-insert revives the id). Within one batch an id must carry at
     * most one op — collapse the envelope per key upstream
     * (cdc_apply_latest) — and on an insert/delete batchId TIE the
-    * tombstone wins. Scale shape is [[graft.sources.SegmentStore
-    * .loadLww]]'s: winner selection runs on the delta only; the
-    * corpus-sized base pays one broadcast anti-join of the touched
-    * ids. Compact through `IvfStore.upsertCompact`, which folds the
-    * LWW view (NOT the terminal-delete view) into the next generation
-    * and carries no tombstone across the fold.
+    * tombstone wins. Scale shape is `Scheme.loadLww`'s: winner
+    * selection runs on the delta only; the corpus-sized base pays one
+    * broadcast anti-join of the touched ids. Compact through
+    * `IvfStore.upsertCompact`, which folds the LWW view (NOT the
+    * terminal-delete view) into the next generation and carries no
+    * tombstone across the fold.
     */
   private[graft] def ivfLoadLww(spark: SparkSession, dir: String,
       carry: Seq[String] = Nil): IvfIndex =
     IvfIndex(IvfStore.loadLww(spark, dir, carry),
-      spark.read.parquet(IvfStore.sidecarPath(spark, dir, "centroids")))
+      IvfStore.sidecar(spark, dir, "centroids"))
 
   /** A new batch assigned at a PERSISTED index's centroids — the
     * incremental-maintenance kernel: cost ∝ batch (one narrow scan of
@@ -960,7 +934,7 @@ object AnnSuite {
     kmeansAssign(
         batch.select((col(idCol).as("vec_id") +:
           col(embCol).as("embedding") +: carry.map(col)): _*),
-        spark.read.parquet(IvfStore.sidecarPath(spark, dir, "centroids")))
+        IvfStore.sidecar(spark, dir, "centroids"))
       .select((col("vec_id").as("cand_id") +: col("cid").as("cell") +:
         col("embedding").as("ce2") +: carry.map(col)): _*)
 
@@ -1643,9 +1617,9 @@ object AnnSuite {
     // deleted keys, orphan tombstones in the disjoint negative range,
     // and — the LWW-specific fault — a writer violating the one-row-
     // per-key-per-batch contract (a slice landed TWICE inside one
-    // segment), which [[graft.sources.SegmentStore.loadLww]] cannot
-    // detect at read time: the view serves duplicate rows for those
-    // keys, and this pass's `dup_keys` is the scheduled detection path.
+    // segment), which `Scheme.loadLww` cannot detect at read time: the
+    // view serves duplicate rows for those keys, and this pass's
+    // `dup_keys` is the scheduled detection path.
     // `superseded_rows` prices the standing compaction debt the next
     // IvfStore.upsertCompact clears. All counts are modular-arithmetic
     // replayable, so the whole audit is hash-checked.

@@ -208,7 +208,7 @@ object CdcSuite {
       // the spec for CdcSource.kafkaTopic(...) changes nothing
       // downstream; the result must equal cdc_apply_latest's oracle.
       import graft.sources.{CdcSource, Scratch}
-      val feedDir = Scratch.dir("graft_cdc_feed")
+      val feedDir = Scratch.perLake("cdc_source_roundtrip", d)
       envelopeFeedLines(s, d).repartition(4).write.mode("overwrite").text(feedDir)
       val feed = CdcSource.load(s, CdcSource.fileEnvelopeFeed(feedDir))
       graft.api.Graft.cdcApplyLatest(

@@ -798,11 +798,8 @@ object DedupSuite {
     * `bands` is a [[minhashBands]] frame; the hot-bucket gate runs
     * here (write time) so every future probe is join-only.
     */
-  private[graft] def bandIndexSave(bands: DataFrame, dir: String): Unit = {
-    gateHotBuckets(bands, Seq("band", "bucket"))
-      .write.mode("overwrite").parquet(s"$dir/bands.parquet")
-    BandStore.reset(bands.sparkSession, dir)
-  }
+  private[graft] def bandIndexSave(bands: DataFrame, dir: String): Unit =
+    BandStore.save(dir, gateHotBuckets(bands, Seq("band", "bucket")))
 
   /** Grow the standing band index at cost ∝ batch (hash + band only
     * the arriving documents; the standing rows are never read). The
@@ -833,11 +830,8 @@ object DedupSuite {
     * of dedup_incremental's band index. A save is a FULL rebuild: the
     * segment store resets to generation 0.
     */
-  private[graft] def substringIndexSave(docs: DataFrame, w: Int, dir: String): Unit = {
-    substringHashes(docs, w)
-      .write.mode("overwrite").parquet(s"$dir/hashes.parquet")
-    HashStore.reset(docs.sparkSession, dir)
-  }
+  private[graft] def substringIndexSave(docs: DataFrame, w: Int, dir: String): Unit =
+    HashStore.save(dir, substringHashes(docs, w))
 
   /** Grow the standing index WITHOUT a rebuild: land one committed
     * batch's distinct window hashes as a batchId-keyed segment the

@@ -86,7 +86,7 @@ object OpsSuite {
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"))
       val src = base.agg(checksumAgg(row).as("source_checksum"))
       val restored = Seq("parquet", "orc", "json", "csv").map { fmt =>
-        val tmp = Scratch.dir(s"graft_fmt_$fmt")
+        val tmp = s"${Scratch.perLake("source_formats", d)}/$fmt"
         fmt match {
           case "parquet" => base.write.mode("overwrite").parquet(tmp)
           case "orc"     => base.write.mode("overwrite").orc(tmp)
@@ -117,7 +117,7 @@ object OpsSuite {
       // difference between re-shuffling two fact tables per query and
       // paying the layout cost once at ingest.
       import graft.functions.Portable.dsum
-      val root = Scratch.dir("graft_bucketed")
+      val root = Scratch.perLake("q_bucketed_join", d)
       Tables.orders(s, d).select("o_orderkey", "o_orderstatus")
         .write.mode("overwrite").format("parquet")
         .bucketBy(8, "o_orderkey").sortBy("o_orderkey")
@@ -141,7 +141,7 @@ object OpsSuite {
       // PartitionFilter, reading one directory of N). Counts come from
       // the restored data; the oracle rebuilds them from the source, so
       // a lost or corrupted partition fails the row.
-      val tmp = Scratch.dir("graft_partwrite")
+      val tmp = Scratch.perLake("layout_partition_write", d)
       val row = rowStr(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"))
       val base = Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"),
         col("o_orderstatus"), date_format(col("o_orderdate"), "yyyy-MM").as("omonth"))
@@ -162,7 +162,7 @@ object OpsSuite {
       // (ref: scripts/bash/backup-databases.sh / restore-databases.sh).
       // Oracle-checkable: the round-trip must preserve the checksum, so
       // the output equals a direct source checksum with status RESTORED.
-      val tmp = Scratch.dir("graft_snapshot")
+      val tmp = Scratch.perLake("snapshot_roundtrip", d)
       val row = rowStr(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"))
       Tables.orders(s, d).write.mode("overwrite").parquet(tmp)
       val src = Tables.orders(s, d).agg(checksumAgg(row).as("source_checksum"))
@@ -183,8 +183,8 @@ object OpsSuite {
       // listing goes through the session's Hadoop FS, not java.io —
       // works against object stores, and counts are deterministic
       // (explicit repartition is never AQE-coalesced).
-      val frag = Scratch.dir("graft_frag")
-      val comp = Scratch.dir("graft_compact")
+      val root = Scratch.perLake("layout_compaction", d)
+      val (frag, comp) = (s"$root/frag", s"$root/compact")
       val row = rowStr(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"))
       Tables.orders(s, d).repartition(64).write.mode("overwrite").parquet(frag)
       s.read.parquet(frag)

@@ -406,7 +406,7 @@ object ReconSuite {
       // — the report written as JSON-lines + CSV artifacts, read back and
       // checksum-verified (same roundtrip proof as source_formats).
       val rep = reportDf(s, d)
-      val dir = Scratch.dir("graft_report")
+      val dir = Scratch.perLake("recon_report_export", d)
       rep.coalesce(1).write.mode("overwrite").json(dir + "/json")
       rep.coalesce(1).write.mode("overwrite").option("header", "true").csv(dir + "/csv")
       val row = rowStr(col("discrepancy_type"), col("n"), col("severity"))

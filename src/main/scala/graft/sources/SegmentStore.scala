@@ -9,10 +9,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * substring-dedup window-hash index (`DedupSuite.BandStore`,
   * `DedupSuite.HashStore`). Each store is one [[Scheme]] value — the
   * store HANDLE: it names the store's files, keys, partitions,
-  * sidecars and fold step, and carries every maintenance operation
-  * (load, loadLww, append, delete, compact, upsertCompact, swap,
-  * carryOf, sidecarPath, reset, audit), written once over the
-  * scheme-parametric primitives of this object. The reference's
+  * sidecars and fold step, and carries every operation on the store
+  * (save, load, loadLww, append, delete, compact, upsertCompact, swap,
+  * sidecar, carryOf, sidecarPath, reset, audit). The reference's
   * incremental reconciliation keeps a watermark table and re-reads
   * only what moved (ref: src/reconciliation/incremental/watermark.py:1,
   * incremental.py:1); the lake analog for an APPEND-ONLY index is
@@ -27,31 +26,31 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     segment root, plus the folded-batchId WATERMARK.
   *
   * Crash-safety invariants (spec-pinned in IvfPersistSpec):
-  *   - a torn segment write is healed by replay: [[append]] OVERWRITES
+  *   - a torn segment write is healed by replay: [[Scheme.append]] OVERWRITES
   *     exactly its own `batch_id=` directory, so re-driving a batch
   *     whose landing succeeded but whose offset commit did not rewrites
   *     the same rows instead of duplicating them;
   *   - a torn compaction is invisible: the folded base lands under the
   *     NEXT generation's name (idempotent redo), and the generation
   *     only exists once its manifest commits (a torn manifest write is
-  *     self-invalidating — [[resolve]] requires the trailing newline);
+  *     self-invalidating — [[Scheme.resolve]] requires the trailing newline);
   *   - a replay ACROSS a compaction is a no-op: the manifest carries
-  *     the highest batchId folded into the base, and [[append]]
+  *     the highest batchId folded into the base, and [[Scheme.append]]
   *     refuses ids at or below it — without this, a checkpoint replay
   *     arriving after its original segment was folded would land the
   *     rows a second time (they already live in the new base). This
   *     requires batch ids to be MONOTONICALLY INCREASING per index,
   *     which is exactly foreachBatch's batchId contract;
   *   - DELETES are tombstone segments in a third channel
-  *     (`<deletes><gen>/batch_id=<id>/`): [[appendDeletes]] lands a
-  *     batch of keys, [[load]] anti-joins them (broadcast — tombstones
+  *     (`<deletes><gen>/batch_id=<id>/`): [[Scheme.delete]] lands a
+  *     batch of keys, [[Scheme.load]] anti-joins them (broadcast — tombstones
   *     are bounded by the delete traffic between compactions, never
   *     corpus-sized), and a compaction PURGES them physically (the
   *     folded base is the reader view, which already excludes them;
   *     the new generation's delete channel holds only the CARRIED
   *     tombstones — keys that matched no row yet, kept so a delete
   *     that preceded its insert still kills the row when it lands
-  *     after the fold — see [[compact]]).
+  *     after the fold — see [[Scheme.compact]]).
   *     Delete-wins semantics: a tombstoned key is masked no matter
   *     which segment carries it or in which order the batches landed —
   *     re-inserting a deleted key is out of contract (keys are unique
@@ -61,7 +60,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     append-batch replay arriving after a compaction folded both the
   *     batch and a later delete of its rows is refused, so the deleted
   *     rows cannot ride back in through the replay. Stores whose keys
-  *     legitimately UPDATE in place read through [[loadLww]] instead —
+  *     legitimately UPDATE in place read through [[Scheme.loadLww]] instead —
   *     last op per key wins by batchId, and deletes stop being
   *     terminal;
   *   - readers and the compactor are isolated by GENERATION RETENTION:
@@ -74,8 +73,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object SegmentStore {
 
   /** One segment store's HANDLE: everything that identifies the store,
-    * and each maintenance operation written once on top of this
-    * object's scheme-parametric primitives.
+    * and every operation on it, written once. It is the only code that
+    * knows the store's file names: callers save, swap and read sidecar
+    * tables through it and never build a store path themselves.
     *
     * Naming: `vBase`/`vAppends`/`vDeletes` are PREFIXES — generation
     * n's dirs are `<vBase><n>.parquet` / `<vAppends><n>.parquet` /
@@ -90,11 +90,12 @@ object SegmentStore {
     *   - `partitionCols`: the on-disk partition columns of base and
     *     segments (read back as BIGINT — partition-value inference would
     *     otherwise widen/narrow per lake);
-    *   - `sidecars`: generation-versioned sidecar tables
-    *     (`<name>_v<gen>.parquet`, see [[sidecarPath]]) a retrain lands
-    *     inside its commit window;
+    *   - `sidecars`: the declared sidecar tables — `<name>.parquet` from
+    *     a [[save]], generation-versioned `<name>_v<gen>.parquet` from a
+    *     [[swap]] (see [[sidecarPath]]);
     *   - `recordPurged`: whether a terminal compaction appends its
-    *     folded tombstones to the cumulative purged-key record;
+    *     folded tombstones to the cumulative purged-key record (needs
+    *     `keyCols`);
     *   - `core`: the reader view's core columns (in order); with
     *     `carriesAttrs` the rows also carry caller attribute columns,
     *     which maintenance reads back from the base schema
@@ -116,7 +117,11 @@ object SegmentStore {
       carriesAttrs: Boolean = false,
       expectedKeys: DataFrame => DataFrame = identity,
       refold: DataFrame => DataFrame = identity) {
-    import org.apache.spark.sql.functions.{col, lit, sum, when}
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.functions.{broadcast, col, lit, max, sum, when}
+
+    require(!recordPurged || keyCols.nonEmpty,
+      s"$base0: recordPurged requires keyCols (the tombstone key columns)")
 
     def baseOf(gen: Int): String = if (gen == 0) base0 else s"$vBase$gen.parquet"
     def appendsOf(gen: Int): String =
@@ -125,9 +130,68 @@ object SegmentStore {
       if (gen == 0) deletes0 else s"$vDeletes$gen.parquet"
     private def sidecarPrefixes: Seq[String] = sidecars.map(_ + "_v")
 
-    /** The store's current layout ([[SegmentStore.resolve]]). */
-    def resolve(spark: SparkSession, dir: String): Layout =
-      SegmentStore.resolve(spark, dir, this)
+    /** Sidecar GC and the torn-retrain scrub cover declared names only,
+      * so an undeclared table would outlive both: refuse it up front.
+      */
+    private def requireDeclared(tables: Seq[(String, DataFrame)]): Unit = {
+      val unknown = tables.map(_._1).filterNot(sidecars.contains)
+      require(unknown.isEmpty,
+        s"$base0: undeclared sidecar(s) ${unknown.mkString(", ")}; " +
+          s"declared: ${sidecars.mkString(", ")}")
+    }
+
+    private def write(df: DataFrame, parts: Seq[String], path: String): Unit = {
+      val w = df.write.mode("overwrite")
+      (if (parts.nonEmpty) w.partitionBy(parts: _*) else w).parquet(path)
+    }
+
+    /** Resolve the store's current layout: the HIGHEST manifest that
+      * parses completely (trailing newline — a torn write is
+      * self-invalidating) and whose base dir exists wins; else fall back
+      * a generation; else generation 0. Manifest grammar:
+      * `v2 <base> <appends> <foldedWatermark>\n` (v1 lines — no
+      * watermark — still parse, folded = −1).
+      */
+    def resolve(spark: SparkSession, dir: String): Layout = {
+      val p = new Path(dir)
+      val fs = fileSystem(spark, dir)
+      val manifests: Seq[(Int, Path)] =
+        if (!fs.exists(p)) Seq.empty
+        else fs.listStatus(p).toSeq.flatMap { st =>
+          val n = st.getPath.getName
+          if (n.startsWith("MANIFEST-"))
+            n.stripPrefix("MANIFEST-").toIntOption.map(_ -> st.getPath)
+          else None
+        }.sortBy(-_._1)
+      manifests.foreach { case (gen, mp) =>
+        val in = fs.open(mp)
+        val content =
+          try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+          finally in.close()
+        if (content.endsWith("\n")) content.trim.split(" ") match {
+          case Array("v1", base, appends) if fs.exists(new Path(s"$dir/$base")) =>
+            return Layout(base, appends, gen, -1L)
+          case Array("v2", base, appends, folded)
+              if folded.toLongOption.nonEmpty && fs.exists(new Path(s"$dir/$base")) =>
+            return Layout(base, appends, gen, folded.toLong)
+          case _ => ()
+        }
+      }
+      Layout(base0, appends0, 0, -1L)
+    }
+
+    /** A FULL rebuild: write the fresh base (partitioned by whichever
+      * `partitionCols` it carries) and each sidecar table as
+      * `<name>.parquet` — independent writes, overlapped (guide §2.6) —
+      * then [[reset]] the store to generation 0.
+      */
+    def save(dir: String, base: DataFrame, tables: (String, DataFrame)*): Unit = {
+      requireDeclared(tables)
+      val parts = partitionCols.filter(base.columns.contains)
+      graft.functions.Par.all((() => write(base, parts, s"$dir/$base0")) +:
+        tables.map { case (name, df) => () => write(df, Nil, s"$dir/$name.parquet") }: _*)
+      reset(base.sparkSession, dir)
+    }
 
     /** The core-column projection both union legs of a reader view
       * pass through: partition columns typed back to BIGINT, then the
@@ -139,45 +203,182 @@ object SegmentStore {
       typed.select((core.filter(typed.columns.contains) ++ carry).map(col): _*)
     }
 
-    /** Terminal-delete reader view: base ∪ committed segments −
-      * tombstoned keys ([[SegmentStore.load]]).
+    /** Terminal-delete reader view: base ∪ committed segments, both
+      * projected. The union preserves each leg's partition layout, so
+      * partition-column predicates prune on both. When tombstone
+      * segments exist, the view anti-joins them out (broadcast — the
+      * tombstone set is delete-traffic-sized, and a compaction purges
+      * it back to zero); a store without `keyCols` adds no join at all.
       */
-    def load(spark: SparkSession, dir: String, carry: Seq[String] = Nil): DataFrame =
-      SegmentStore.load(spark, dir, this, keyCols)(project(_, carry))
+    def load(spark: SparkSession, dir: String, carry: Seq[String] = Nil): DataFrame = {
+      val lay = resolve(spark, dir)
+      val fs = fileSystem(spark, dir)
+      val base = project(spark.read.parquet(s"$dir/${lay.base}"), carry)
+      val union =
+        if (fs.exists(new Path(s"$dir/${lay.appends}")))
+          base.unionByName(project(spark.read.parquet(s"$dir/${lay.appends}"), carry))
+        else base
+      val dp = s"$dir/${deletesOf(lay.gen)}"
+      if (keyCols.isEmpty || !fs.exists(new Path(dp))) union
+      else union.join(broadcast(spark.read.parquet(dp).select(keyCols.map(col): _*)),
+        keyCols, "left_anti")
+    }
 
-    /** Last-write-wins reader view ([[SegmentStore.loadLww]]). */
-    def loadLww(spark: SparkSession, dir: String, carry: Seq[String] = Nil): DataFrame =
-      SegmentStore.loadLww(spark, dir, this, keyCols)(project(_, carry))
+    /** LAST-WRITE-WINS reader view — the reference CDC sink's
+      * insert-mode=upsert discipline (ref: docker/configs/kafka-connect/
+      * postgresql-sink.json:1, last write by LSN wins per key) applied
+      * to a segment store: per `keyCols` key, the row from the
+      * HIGHEST-batchId append segment wins; the base counts as batchId
+      * −∞ (any segment row supersedes it); a tombstone batch masks the
+      * key only while no LATER append re-inserts it. So `op ∈ {c, u}`
+      * both land as plain [[append]]s — an update of a live id
+      * SUPERSEDES instead of duplicating — and a delete is no longer
+      * terminal: the last op per key wins, exactly the semantics a CDC
+      * feed of (op, key, row) envelopes needs. Within one batchId a key
+      * must appear in at most ONE channel with ONE row (collapse the
+      * envelope per key first — cdc_apply_latest — as foreachBatch gives
+      * no intra-batch order); on an insert and a tombstone TYING at the
+      * same batchId the tombstone wins (matches the terminal-delete
+      * stores' delete-wins tie rule).
+      *
+      * Plan shape at scale: the winner computation runs on the DELTA
+      * only (segments + tombstones, bounded by the traffic between
+      * compactions — two small groupBys); the corpus-sized base pays
+      * exactly one BROADCAST anti-join of the touched keys, the same
+      * price as [[load]]'s tombstone mask. Partition layout of both
+      * union legs is preserved, so partition-column pruning (e.g. the
+      * IVF cell probes) holds.
+      *
+      * Two operating bounds a deployment owns (unenforced here):
+      *   - the at-most-one-row-per-key-per-batch contract is NOT checked
+      *     at read time (the winning-batch join passes every row of that
+      *     batch through) — a violating writer makes the view serve
+      *     duplicate rows for the key. The detection path is the
+      *     scheduled recon pass: recon_index_lww's `dup_keys` invariant
+      *     counts exactly these (must be 0 on a healthy LWW store);
+      *   - `touched` (the broadcast anti-join side) grows with the
+      *     DISTINCT keys written since the last compaction. Compact
+      *     before it outgrows the broadcast threshold (~10M keys at
+      *     default autoBroadcastJoinThreshold); recon_index_lww's
+      *     `append_segments` / `superseded_rows` are the observable to
+      *     alert on, and bench/lww_cadence.json carries the measured
+      *     serving-wall degradation curve that sizes the cadence.
+      */
+    def loadLww(spark: SparkSession, dir: String, carry: Seq[String] = Nil): DataFrame = {
+      require(keyCols.nonEmpty, "loadLww requires the store's key columns")
+      val lay = resolve(spark, dir)
+      val fs = fileSystem(spark, dir)
+      val base = project(spark.read.parquet(s"$dir/${lay.base}"), carry)
+      val ap = new Path(s"$dir/${lay.appends}")
+      val dp = new Path(s"$dir/${deletesOf(lay.gen)}")
+      if (!fs.exists(ap) && !fs.exists(dp)) return base
+      val ks = keyCols.map(col)
+      // batch_id is the segment dirs' partition column; delta-sized legs
+      val segs =
+        if (fs.exists(ap))
+          Some(spark.read.parquet(ap.toString)
+            .withColumn("__b", col("batch_id").cast("long")))
+        else None
+      val maxIns = segs.map(_.groupBy(ks: _*).agg(max("__b").as("__bi")))
+      val maxDel =
+        if (fs.exists(dp))
+          Some(spark.read.parquet(dp.toString)
+            .withColumn("__b", col("batch_id").cast("long"))
+            .groupBy(ks: _*).agg(max("__b").as("__bd")))
+        else None
+      val status = (maxIns, maxDel) match {
+        case (Some(i), Some(d)) => i.join(d, keyCols, "full_outer")
+        case (Some(i), None) => i.withColumn("__bd", lit(null).cast("long"))
+        case (None, Some(d)) => d.withColumn("__bi", lit(null).cast("long"))
+        case (None, None) => return base // unreachable (guarded above)
+      }
+      // every touched key leaves the base; the winning insert rows of the
+      // delta re-enter. Ties (__bi = __bd) go to the tombstone.
+      val touched = status.select(ks: _*)
+      val winners = status
+        .filter(col("__bi").isNotNull &&
+          (col("__bd").isNull || col("__bi") > col("__bd")))
+        .select((ks :+ col("__bi").as("__b")): _*)
+      val masked = base.join(broadcast(touched), keyCols, "left_anti")
+      segs match {
+        case Some(sg) =>
+          val winRows = sg.join(broadcast(winners), keyCols :+ "__b")
+            .drop("__b", "batch_id")
+          masked.unionByName(project(winRows, carry))
+        case None => masked
+      }
+    }
 
-    /** Land one batch as a batchId-keyed segment; false (nothing
-      * written) for a replay at or below the watermark.
+    /** Land one batch as an idempotent, batchId-keyed segment. Returns
+      * false (and writes NOTHING) when `batchId` is at or below the
+      * folded watermark — a checkpoint replay of a batch a compaction
+      * already folded into the base. `batchId` must be monotonically
+      * increasing per store (foreachBatch's contract); ad-hoc callers
+      * own picking fresh ids above the watermark.
       */
     def append(spark: SparkSession, dir: String, segment: DataFrame,
-        batchId: Long): Boolean =
-      SegmentStore.append(spark, dir, this, segment, partitionCols, batchId)
+        batchId: Long): Boolean = {
+      val lay = resolve(spark, dir)
+      if (batchId <= lay.folded) return false
+      write(segment, partitionCols, s"$dir/${lay.appends}/batch_id=$batchId")
+      true
+    }
 
-    /** Tombstone the distinct `idCol` values of `ids` as a batchId-keyed
-      * delete segment — same watermark contract as [[append]] (one
-      * shared monotonic batch-id space per store).
+    /** Tombstone the distinct `idCol` values of `ids` as an idempotent,
+      * batchId-keyed delete segment ([[load]] anti-joins them; the next
+      * compaction purges them). Same watermark contract as [[append]]
+      * (one shared monotonic batch-id space per store): a replay at or
+      * below the folded watermark lands nothing — a tombstone whose rows
+      * a compaction already removed must not reappear as a standing
+      * (harmless but unbounded) mask.
       */
     def delete(spark: SparkSession, dir: String, ids: DataFrame, idCol: String,
         batchId: Long): Boolean = {
       require(keyCols.size == 1, s"$base0: delete needs a one-column store key")
-      SegmentStore.appendDeletes(spark, dir, this,
-        ids.select(col(idCol).as(keyCols.head)).distinct(), batchId)
+      val keys = ids.select(col(idCol).as(keyCols.head)).distinct()
+      val lay = resolve(spark, dir)
+      if (batchId <= lay.folded) return false
+      keys.write.mode("overwrite")
+        .parquet(s"$dir/${deletesOf(lay.gen)}/batch_id=$batchId")
+      true
+    }
+
+    /** The current generation's committed tombstone keys, if any. */
+    def deletes(spark: SparkSession, dir: String): Option[DataFrame] = {
+      val dp = s"$dir/${deletesOf(resolve(spark, dir).gen)}"
+      if (fileSystem(spark, dir).exists(new Path(dp))) Some(spark.read.parquet(dp))
+      else None
+    }
+
+    /** The store's CUMULATIVE purged-key list, if any — every tombstone
+      * key a `recordPurged` compaction ever folded (commit-versioned
+      * append-only dirs; see [[compact]]). The durable
+      * right-to-be-forgotten record: a rebuild from a source frame that
+      * still carries deleted rows anti-joins this.
+      */
+    def purged(spark: SparkSession, dir: String): Option[DataFrame] = {
+      val pp = s"$dir/$purged0"
+      if (fileSystem(spark, dir).exists(new Path(pp)))
+        Some(spark.read.parquet(pp).drop("commit").distinct())
+      else None
     }
 
     /** Fold the terminal-delete view (re-folded, attributes carried)
       * into the next generation: unmatched tombstones carry forward,
       * matched ones purge (recorded when `recordPurged`), and a torn
       * retrain's orphaned sidecars are scrubbed before the commit.
+      * Returns false (no-op) when neither channel holds a committed
+      * segment (a deletes-only compaction is the physical-purge
+      * operation). `crashBeforeCommit` is the specs' torn-compaction
+      * hook: land, then "die" before the manifest commit. Keeps the
+      * newest `retain` PREVIOUS generations for in-flight readers
+      * (default 1: committing n+1 retires n−1, never n); size it to the
+      * longest query a deployment lets run across compaction cadences.
       */
     def compact(spark: SparkSession, dir: String,
         crashBeforeCommit: Boolean = false, retain: Int = 1): Boolean =
-      SegmentStore.compact(spark, dir, this,
-        refold(load(spark, dir, carryOf(spark, dir))), partitionCols,
-        crashBeforeCommit, retain, sidecarPrefixes = sidecarPrefixes,
-        deleteKeys = keyCols, recordPurged = recordPurged)
+      fold(spark, dir, refold(load(spark, dir, carryOf(spark, dir))),
+        crashBeforeCommit, retain, lww = false)
 
     /** Fold the LWW view into the next generation. No tombstone carry
       * and no purged record: under last-write-wins a later insert
@@ -185,34 +386,138 @@ object SegmentStore {
       */
     def upsertCompact(spark: SparkSession, dir: String,
         crashBeforeCommit: Boolean = false, retain: Int = 1): Boolean =
-      SegmentStore.compact(spark, dir, this,
-        refold(loadLww(spark, dir, carryOf(spark, dir))), partitionCols,
-        crashBeforeCommit, retain, sidecarPrefixes = sidecarPrefixes)
+      fold(spark, dir, refold(loadLww(spark, dir, carryOf(spark, dir))),
+        crashBeforeCommit, retain, lww = true)
 
     /** Swap a REBUILT base in as the next generation (a retrain): the
-      * fold runs with zero pending segments too, `landSidecars(next)`
-      * writes the rebuild's `<name>_v<next>` sidecars inside the atomic
-      * window, and a superseded sidecar version is GC'd only once every
+      * fold runs with zero pending segments too, and each sidecar table
+      * lands as `<name>_v<next>.parquet` inside the atomic window, so
+      * the manifest commit publishes base + sidecars as a unit. Throws,
+      * before anything is written, on a sidecar name the store does not
+      * declare. A superseded sidecar version is GC'd only once every
       * retained generation maps to a newer one (generation → sidecar is
       * highest-version-at-or-below, so an eager delete would orphan a
       * retained generation's serving tables).
       */
     def swap(spark: SparkSession, dir: String, rebuilt: DataFrame,
         crashBeforeCommit: Boolean = false, retain: Int = 1)
-        (landSidecars: Int => Unit): Boolean = {
-      val lowestRetained = resolve(spark, dir).gen + 1 - retain
+        (tables: (String, DataFrame)*): Boolean = {
+      requireDeclared(tables)
+      fold(spark, dir, rebuilt, crashBeforeCommit, retain, lww = false,
+        retrained = Some(tables))
+    }
+
+    /** Fold into generation gen+1 with crash-safe land-then-swap (see
+      * the object doc). `folded` is the frame to land — the reader view
+      * for a compaction, so fold ≡ read; the rebuilt base for a retrain
+      * (`retrained` = its sidecar tables).
+      *
+      * Tombstone handling at the fold is semantics-dependent:
+      *   - TERMINAL-delete folds (`lww = false`, stores with `keyCols`):
+      *     tombstones whose key matched NO row in base ∪ appends are
+      *     CARRIED FORWARD into the new generation's delete channel (a
+      *     delete that arrived before its insert — the CDC
+      *     delete-before-row ordering — must still kill the row when it
+      *     lands after the compaction; without the carry, the fold would
+      *     consume the tombstone with no effect and the later append
+      *     would resurrect the key). Tombstones that DID remove rows are
+      *     purged with the channel. The carried set is bounded by the
+      *     store's never-matched delete traffic, never corpus-sized.
+      *   - LWW folds ([[upsertCompact]]): a later insert legitimately
+      *     supersedes an earlier tombstone, so an unmatched tombstone
+      *     must NOT outlive the fold (the arriving insert's batchId is
+      *     above the watermark, hence newer).
+      * `recordPurged` additionally appends a terminal fold's tombstone
+      * keys to a CUMULATIVE `purged0` list ([[purged]]) — the durable
+      * right-to-be-forgotten record a from-source rebuild
+      * ([[graft.operators.AnnSuite.ivfPqRetrain]]) anti-joins so a
+      * completed purge survives retraining from a lake frame that still
+      * carries the deleted rows. Append-only, bounded by lifetime
+      * delete traffic.
+      */
+    private def fold(spark: SparkSession, dir: String, folded: => DataFrame,
+        crashBeforeCommit: Boolean, retain: Int, lww: Boolean,
+        retrained: Option[Seq[(String, DataFrame)]] = None): Boolean = {
+      require(retain >= 1, s"retain must be >= 1 (got $retain)")
+      val lay = resolve(spark, dir)
       val fs = fileSystem(spark, dir)
-      def version(name: String, v: Int) =
-        new org.apache.hadoop.fs.Path(s"$dir/${name}_v$v.parquet")
-      SegmentStore.compact(spark, dir, this, rebuilt, partitionCols,
-        crashBeforeCommit, retain, requireSegments = false,
-        beforeCommit = landSidecars,
-        onRetire = g => sidecars.foreach { name =>
-          if ((g + 1 to lowestRetained).exists(v => fs.exists(version(name, v))))
-            fs.delete(version(name, g), true)
-        },
-        sidecarPrefixes = sidecarPrefixes, deleteKeys = keyCols,
-        recordPurged = recordPurged)
+      def path(name: String) = new Path(s"$dir/$name")
+      val appendsPath = path(lay.appends)
+      val deletesPath = path(deletesOf(lay.gen))
+      if (retrained.isEmpty && !fs.exists(appendsPath) && !fs.exists(deletesPath))
+        return false
+      // the new watermark: every committed segment id — append AND
+      // tombstone — folds into the base (tombstoned rows by omission:
+      // `folded` is the reader view, which anti-joined them already)
+      val newFolded =
+        (segmentIds(fs, appendsPath) ++ segmentIds(fs, deletesPath) :+ lay.folded).max
+      val next = lay.gen + 1
+      // 1. land the folded base under the NEXT generation's name
+      //    (idempotent overwrite — a torn attempt just redoes)
+      write(folded, partitionCols, s"$dir/${baseOf(next)}")
+      // 2. clear generation-<next> leftovers a TORN prior attempt (plain
+      //    compact, retrain, or carry-forward) may have orphaned: the
+      //    delete channel dir and every sidecar family's <next> version.
+      //    Runs BEFORE the sidecar landing/carry-forward so this run's own
+      //    landings survive; committing the manifest below would
+      //    otherwise make any stale orphan visible as generation state.
+      fs.delete(path(deletesOf(next)), true)
+      // ... including a torn recordPurged attempt's commit dir: purged
+      //   entries become durable only when the generation commits, so a
+      //   stale commit=<next> left by a prior torn run must not ride into
+      //   THIS run's manifest (this run re-lands it below iff the store
+      //   records purges — the invariant is structural). An emptied
+      //   parent is removed too: [[purged]] treats bare existence as
+      //   "has entries".
+      fs.delete(path(s"$purged0/commit=$next"), true)
+      if (fs.exists(path(purged0)) && fs.listStatus(path(purged0)).isEmpty)
+        fs.delete(path(purged0), true)
+      sidecarPrefixes.foreach(pre => fs.delete(path(s"$pre$next.parquet"), true))
+      // 3. tombstone disposition (terminal-delete folds only — see doc)
+      if (!lww && keyCols.nonEmpty && fs.exists(deletesPath)) {
+        val ks = keyCols.map(col)
+        val tombs = spark.read.parquet(deletesPath.toString).select(ks: _*).distinct()
+        val standing = {
+          val b = spark.read.parquet(s"$dir/${lay.base}").select(ks: _*)
+          if (fs.exists(appendsPath))
+            b.unionByName(spark.read.parquet(appendsPath.toString).select(ks: _*))
+          else b
+        }
+        val carried = tombs.join(standing, keyCols, "left_anti")
+        if (carried.count() > 0)
+          carried.write.mode("overwrite")
+            .parquet(s"$dir/${deletesOf(next)}/batch_id=$newFolded")
+        if (recordPurged)
+          tombs.write.mode("overwrite").parquet(s"$dir/$purged0/commit=$next")
+      }
+      // 4. a retrain's sidecars, inside the atomic window
+      retrained.toSeq.flatten.foreach { case (name, df) =>
+        write(df, Nil, s"$dir/${name}_v$next.parquet")
+      }
+      if (crashBeforeCommit) return false
+      // 5. commit the generation (readers switch at their next resolve)
+      val out = fs.create(path(s"MANIFEST-$next"), true)
+      try out.write(
+        s"v2 ${baseOf(next)} ${appendsOf(next)} $newFolded\n".getBytes("UTF-8"))
+      finally out.close()
+      // 6. retire every generation older than the newest `retain`
+      //    previous ones — the retained generations keep a pre-commit
+      //    reader's files on disk (and the manifest-fallback chain
+      //    serviceable); the loop form also heals leftovers if `retain`
+      //    shrank between calls. A retrain also GCs each sidecar version
+      //    that a newer retained version supersedes.
+      for (g <- 0 to next - 1 - retain) {
+        fs.delete(path(baseOf(g)), true)
+        fs.delete(path(appendsOf(g)), true)
+        fs.delete(path(deletesOf(g)), true)
+        if (g > 0) fs.delete(path(s"MANIFEST-$g"), true)
+        if (retrained.nonEmpty) sidecars.foreach { name =>
+          def version(v: Int) = path(s"${name}_v$v.parquet")
+          if ((g + 1 to next - retain).exists(v => fs.exists(version(v))))
+            fs.delete(version(g), true)
+        }
+      }
+      true
     }
 
     /** The ATTRIBUTE columns the store's rows carry beyond `core`, read
@@ -225,31 +530,36 @@ object SegmentStore {
       else spark.read.parquet(s"$dir/${resolve(spark, dir).base}").columns.toSeq
         .filterNot(core.toSet)
 
-    /** The sidecar table `name` that the CURRENT generation serves: the
-      * HIGHEST `<name>_v<m>.parquet` with m ≤ gen, else the build's
-      * `<name>.parquet`. Compactions never move the mapping; a retrain's
-      * manifest commit does, which makes the commit the single
+    /** The path of sidecar table `name` that the CURRENT generation
+      * serves: the HIGHEST `<name>_v<m>.parquet` with m ≤ gen, else the
+      * build's `<name>.parquet`. Compactions never move the mapping; a
+      * retrain's manifest commit does, which makes the commit the single
       * visibility point for base + sidecars as a unit (gen < next
-      * ignores a torn retrain's landings).
+      * ignores a torn retrain's landings). For driver-side footer reads
+      * (ParquetMeta); Spark reads go through [[sidecar]].
       */
     def sidecarPath(spark: SparkSession, dir: String, name: String): String = {
       val gen = resolve(spark, dir).gen
       val fs = fileSystem(spark, dir)
       ((gen to 1 by -1).map(g => s"${name}_v$g.parquet") :+ s"$name.parquet")
-        .find(n => fs.exists(new org.apache.hadoop.fs.Path(s"$dir/$n")))
+        .find(n => fs.exists(new Path(s"$dir/$n")))
         .map(n => s"$dir/$n")
         .getOrElse(s"$dir/$name.parquet")
     }
 
+    /** The sidecar table `name` that the current generation serves. */
+    def sidecar(spark: SparkSession, dir: String, name: String): DataFrame =
+      spark.read.parquet(sidecarPath(spark, dir, name))
+
     /** Clear every segment, manifest, versioned generation and
       * versioned sidecar — a full rebuild resets the store to
-      * generation 0 (the fresh base the caller just wrote). Prior
+      * generation 0 (the fresh base [[save]] just wrote). Prior
       * segments must not leak into reloads of the new build, and a
       * stale `<sidecar>_v<g>` would shadow the fresh build's table once
       * the store re-reaches generation g.
       */
     def reset(spark: SparkSession, dir: String): Unit = {
-      val p = new org.apache.hadoop.fs.Path(dir)
+      val p = new Path(dir)
       val fs = fileSystem(spark, dir)
       if (!fs.exists(p)) return
       fs.listStatus(p).foreach { st =>
@@ -262,7 +572,7 @@ object SegmentStore {
       }
     }
 
-    /** OPERATIONAL RECONCILIATION of the store — the reference's recon
+  /** OPERATIONAL RECONCILIATION of the store — the reference's recon
       * discipline (ref: src/reconciliation/strategies/row_count.py:1,
       * referential checks) pointed at the engine's own segment stores:
       * the specs prove exactly-once per operation, but a 100 TB
@@ -293,7 +603,7 @@ object SegmentStore {
       * (raw segment rows legitimately duplicate a superseded key, but
       * the winner selection serves one row per key unless a writer
       * violated the one-row-per-key-per-batch contract, which is
-      * exactly what this detects — see [[SegmentStore.loadLww]]'s
+      * exactly what this detects — see [[loadLww]]'s
       * operating bounds), and a tombstone superseded by a later insert
       * is NOT an orphan (the anti-join's standing side already carries
       * the later insert's segment row). One invariant is added:
@@ -308,7 +618,7 @@ object SegmentStore {
       val served = if (lww) loadLww(spark, dir) else load(spark, dir)
       val lay = resolve(spark, dir)
       val fs = fileSystem(spark, dir)
-      val apPath = new org.apache.hadoop.fs.Path(s"$dir/${lay.appends}")
+      val apPath = new Path(s"$dir/${lay.appends}")
       val segIds = segmentIds(fs, apPath)
       val expected = expectedKeys(corpus)
       val keys = expected.columns.toSeq.map(col)
@@ -337,7 +647,7 @@ object SegmentStore {
               .as("foreign_in_index"))
           .head(),
         graft.functions.Par.inParallel(
-          deletes(spark, dir, this)
+          deletes(spark, dir)
             .map(_.select(keyCols.map(col): _*).distinct()
               .join(standingKeys, keyCols, "left_anti").count())
             .getOrElse(0L),
@@ -384,366 +694,4 @@ object SegmentStore {
       : org.apache.hadoop.fs.FileSystem =
     new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sessionState.newHadoopConf())
-
-  /** Resolve the store's current layout: the HIGHEST manifest that
-    * parses completely (trailing newline — a torn write is
-    * self-invalidating) and whose base dir exists wins; else fall back
-    * a generation; else generation 0. Manifest grammar:
-    * `v2 <base> <appends> <foldedWatermark>\n` (v1 lines — no
-    * watermark — still parse, folded = −1).
-    */
-  def resolve(spark: SparkSession, dir: String, scheme: Scheme): Layout = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = fileSystem(spark, dir)
-    val manifests: Seq[(Int, org.apache.hadoop.fs.Path)] =
-      if (!fs.exists(p)) Seq.empty
-      else fs.listStatus(p).toSeq.flatMap { st =>
-        val n = st.getPath.getName
-        if (n.startsWith("MANIFEST-"))
-          n.stripPrefix("MANIFEST-").toIntOption.map(_ -> st.getPath)
-        else None
-      }.sortBy(-_._1)
-    manifests.foreach { case (gen, mp) =>
-      val in = fs.open(mp)
-      val content =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      if (content.endsWith("\n")) content.trim.split(" ") match {
-        case Array("v1", base, appends)
-            if fs.exists(new org.apache.hadoop.fs.Path(s"$dir/$base")) =>
-          return Layout(base, appends, gen, -1L)
-        case Array("v2", base, appends, folded)
-            if folded.toLongOption.nonEmpty &&
-              fs.exists(new org.apache.hadoop.fs.Path(s"$dir/$base")) =>
-          return Layout(base, appends, gen, folded.toLong)
-        case _ => ()
-      }
-    }
-    Layout(scheme.base0, scheme.appends0, 0, -1L)
-  }
-
-  /** Land one batch as an idempotent, batchId-keyed segment. Returns
-    * false (and writes NOTHING) when `batchId` is at or below the
-    * folded watermark — a checkpoint replay of a batch a compaction
-    * already folded into the base. `batchId` must be monotonically
-    * increasing per store (foreachBatch's contract); ad-hoc callers
-    * own picking fresh ids above the watermark.
-    */
-  def append(spark: SparkSession, dir: String, scheme: Scheme,
-      segment: DataFrame, partitionCols: Seq[String], batchId: Long): Boolean = {
-    val lay = resolve(spark, dir, scheme)
-    if (batchId <= lay.folded) return false
-    val w = segment.write.mode("overwrite")
-    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-      .parquet(s"$dir/${lay.appends}/batch_id=$batchId")
-    true
-  }
-
-  /** Land one batch of TOMBSTONE KEYS as an idempotent, batchId-keyed
-    * delete segment ([[load]] anti-joins them; the next compaction
-    * purges them). Same watermark contract as [[append]]: ids share
-    * the store's monotonic batch-id space, and a replay at or below
-    * the folded watermark lands nothing — a tombstone whose rows a
-    * compaction already removed must not reappear as a standing
-    * (harmless but unbounded) mask.
-    */
-  def appendDeletes(spark: SparkSession, dir: String, scheme: Scheme,
-      keys: DataFrame, batchId: Long): Boolean = {
-    val lay = resolve(spark, dir, scheme)
-    if (batchId <= lay.folded) return false
-    keys.write.mode("overwrite")
-      .parquet(s"$dir/${scheme.deletesOf(lay.gen)}/batch_id=$batchId")
-    true
-  }
-
-  /** The current generation's committed tombstone keys, if any. */
-  def deletes(spark: SparkSession, dir: String, scheme: Scheme)
-      : Option[DataFrame] = {
-    val lay = resolve(spark, dir, scheme)
-    val dp = new org.apache.hadoop.fs.Path(s"$dir/${scheme.deletesOf(lay.gen)}")
-    if (fileSystem(spark, dir).exists(dp))
-      Some(spark.read.parquet(s"$dir/${scheme.deletesOf(lay.gen)}"))
-    else None
-  }
-
-  /** The store's CUMULATIVE purged-key list, if any — every tombstone
-    * key a `recordPurged` compaction ever folded (commit-versioned
-    * append-only dirs; see [[compact]]). The durable
-    * right-to-be-forgotten record: a rebuild from a source frame that
-    * still carries deleted rows anti-joins this.
-    */
-  def purged(spark: SparkSession, dir: String, scheme: Scheme)
-      : Option[DataFrame] = {
-    val pp = new org.apache.hadoop.fs.Path(s"$dir/${scheme.purged0}")
-    if (fileSystem(spark, dir).exists(pp))
-      Some(spark.read.parquet(pp.toString).drop("commit").distinct())
-    else None
-  }
-
-  /** Base ∪ committed segments, both passed through `normalize`
-    * (column selection / partition-value type restoration). The union
-    * preserves each leg's partition layout, so partition-column
-    * predicates prune on both. `deleteKeys` names the store's key
-    * columns: when tombstone segments exist, the view anti-joins them
-    * out (broadcast — the tombstone set is delete-traffic-sized, and a
-    * compaction purges it back to zero). Pass Nil for stores without a
-    * delete channel — no join is added to the plan at all.
-    */
-  def load(spark: SparkSession, dir: String, scheme: Scheme,
-      deleteKeys: Seq[String] = Nil)
-      (normalize: DataFrame => DataFrame): DataFrame = {
-    val lay = resolve(spark, dir, scheme)
-    val base = normalize(spark.read.parquet(s"$dir/${lay.base}"))
-    val ap = new org.apache.hadoop.fs.Path(s"$dir/${lay.appends}")
-    val union =
-      if (fileSystem(spark, dir).exists(ap))
-        base.unionByName(normalize(spark.read.parquet(s"$dir/${lay.appends}")))
-      else base
-    if (deleteKeys.isEmpty) union
-    else {
-      val dp = new org.apache.hadoop.fs.Path(s"$dir/${scheme.deletesOf(lay.gen)}")
-      if (!fileSystem(spark, dir).exists(dp)) union
-      else union.join(
-        org.apache.spark.sql.functions.broadcast(
-          spark.read.parquet(s"$dir/${scheme.deletesOf(lay.gen)}")
-            .select(deleteKeys.map(org.apache.spark.sql.functions.col): _*)),
-        deleteKeys, "left_anti")
-    }
-  }
-
-  /** LAST-WRITE-WINS reader view — the reference CDC sink's
-    * insert-mode=upsert discipline (ref: docker/configs/kafka-connect/
-    * postgresql-sink.json:1, last write by LSN wins per key) applied
-    * to a segment store: per `keyCols` key, the row from the
-    * HIGHEST-batchId append segment wins; the base counts as batchId
-    * −∞ (any segment row supersedes it); a tombstone batch masks the
-    * key only while no LATER append re-inserts it. So `op ∈ {c, u}`
-    * both land as plain [[append]]s — an update of a live id
-    * SUPERSEDES instead of duplicating — and a delete is no longer
-    * terminal: the last op per key wins, exactly the semantics a CDC
-    * feed of (op, key, row) envelopes needs. Within one batchId a key
-    * must appear in at most ONE channel with ONE row (collapse the
-    * envelope per key first — cdc_apply_latest — as foreachBatch gives
-    * no intra-batch order); on an insert and a tombstone TYING at the
-    * same batchId the tombstone wins (matches the terminal-delete
-    * stores' delete-wins tie rule).
-    *
-    * Plan shape at scale: the winner computation runs on the DELTA
-    * only (segments + tombstones, bounded by the traffic between
-    * compactions — two small groupBys); the corpus-sized base pays
-    * exactly one BROADCAST anti-join of the touched keys, the same
-    * price as [[load]]'s tombstone mask. Partition layout of both
-    * union legs is preserved, so partition-column pruning (e.g. the
-    * IVF cell probes) holds.
-    *
-    * Two operating bounds a deployment owns (unenforced here):
-    *   - the at-most-one-row-per-key-per-batch contract is NOT checked
-    *     at read time (the winning-batch join passes every row of that
-    *     batch through) — a violating writer makes the view serve
-    *     duplicate rows for the key. The detection path is the
-    *     scheduled recon pass: recon_index_lww's `dup_keys` invariant
-    *     counts exactly these (must be 0 on a healthy LWW store);
-    *   - `touched` (the broadcast anti-join side) grows with the
-    *     DISTINCT keys written since the last compaction. Compact
-    *     before it outgrows the broadcast threshold (~10M keys at
-    *     default autoBroadcastJoinThreshold); recon_index_lww's
-    *     `append_segments` / `superseded_rows` are the observable to
-    *     alert on, and bench/lww_cadence.json carries the measured
-    *     serving-wall degradation curve that sizes the cadence.
-    */
-  def loadLww(spark: SparkSession, dir: String, scheme: Scheme,
-      keyCols: Seq[String])(normalize: DataFrame => DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col, max}
-    require(keyCols.nonEmpty, "loadLww requires the store's key columns")
-    val lay = resolve(spark, dir, scheme)
-    val fs = fileSystem(spark, dir)
-    val base = normalize(spark.read.parquet(s"$dir/${lay.base}"))
-    val ap = new org.apache.hadoop.fs.Path(s"$dir/${lay.appends}")
-    val dp = new org.apache.hadoop.fs.Path(s"$dir/${scheme.deletesOf(lay.gen)}")
-    if (!fs.exists(ap) && !fs.exists(dp)) return base
-    val ks = keyCols.map(col)
-    // batch_id is the segment dirs' partition column; delta-sized legs
-    val segs =
-      if (fs.exists(ap))
-        Some(spark.read.parquet(ap.toString)
-          .withColumn("__b", col("batch_id").cast("long")))
-      else None
-    val maxIns = segs.map(_.groupBy(ks: _*).agg(max("__b").as("__bi")))
-    val maxDel =
-      if (fs.exists(dp))
-        Some(spark.read.parquet(dp.toString)
-          .withColumn("__b", col("batch_id").cast("long"))
-          .groupBy(ks: _*).agg(max("__b").as("__bd")))
-      else None
-    val status = (maxIns, maxDel) match {
-      case (Some(i), Some(d)) => i.join(d, keyCols, "full_outer")
-      case (Some(i), None) => i.withColumn("__bd",
-        org.apache.spark.sql.functions.lit(null).cast("long"))
-      case (None, Some(d)) => d.withColumn("__bi",
-        org.apache.spark.sql.functions.lit(null).cast("long"))
-      case (None, None) => return base // unreachable (guarded above)
-    }
-    // every touched key leaves the base; the winning insert rows of the
-    // delta re-enter. Ties (__bi = __bd) go to the tombstone.
-    val touched = status.select(ks: _*)
-    val winners = status
-      .filter(col("__bi").isNotNull &&
-        (col("__bd").isNull || col("__bi") > col("__bd")))
-      .select((ks :+ col("__bi").as("__b")): _*)
-    val masked = base.join(broadcast(touched), keyCols, "left_anti")
-    segs match {
-      case Some(sg) =>
-        val winRows = sg.join(broadcast(winners), keyCols :+ "__b")
-          .drop("__b", "batch_id")
-        masked.unionByName(normalize(winRows))
-      case None => masked
-    }
-  }
-
-  /** Fold base ∪ committed segments into generation gen+1 with
-    * crash-safe land-then-swap (see object doc). `folded` must be the
-    * frame to land — callers pass their reader-side union so fold ≡
-    * read. Retains the newest `retain` PREVIOUS generations for
-    * in-flight readers (default 1: committing n+1 retires n−1, never
-    * n) and retires everything older. Size `retain` to the longest
-    * query a deployment lets run across compaction cadences — a
-    * reader stalling across MORE than `retain` compactions of the
-    * same store loses files. Returns false (no-op) when there are no
-    * committed segments in EITHER channel (appends or tombstones — a
-    * deletes-only compaction is the physical-purge operation) UNLESS
-    * `requireSegments = false` (a RETRAIN swaps in a re-derived base
-    * even when nothing is pending). `crashBeforeCommit` is the specs'
-    * torn-compaction hook: land, then "die" before the manifest
-    * commit. `beforeCommit(nextGen)` lands generation-versioned
-    * SIDECARS (e.g. a retrain's new centroids) inside the atomic
-    * window — after the folded base, before the manifest, so a torn
-    * run leaves them invisible; `onRetire(gen)` runs per retired
-    * generation for the caller's sidecar GC. `sidecarPrefixes` names
-    * the store's sidecar families (`<prefix><gen>.parquet`): before
-    * the manifest commit, any `<prefix><next>` file THIS run's
-    * `beforeCommit` did not just write is deleted — without this, a
-    * torn RETRAIN's orphaned sidecars would become visible through a
-    * later plain compaction's manifest and serve a mixed-generation
-    * pair (new centroids/book against a base folded at the old
-    * parameters).
-    *
-    * Tombstone handling at the fold is semantics-dependent:
-    *   - TERMINAL-delete stores pass `deleteKeys`: tombstones whose
-    *     key matched NO row in base ∪ appends are CARRIED FORWARD into
-    *     the new generation's delete channel (a delete that arrived
-    *     before its insert — the CDC delete-before-row ordering — must
-    *     still kill the row when it lands after the compaction;
-    *     without the carry, the fold would consume the tombstone with
-    *     no effect and the later append would resurrect the key).
-    *     Tombstones that DID remove rows are purged with the channel.
-    *     The carried set is bounded by the store's never-matched
-    *     delete traffic, never corpus-sized.
-    *   - LWW stores ([[loadLww]]) pass `deleteKeys = Nil`: a later
-    *     insert legitimately supersedes an earlier tombstone, so an
-    *     unmatched tombstone must NOT outlive the fold (the arriving
-    *     insert's batchId is above the watermark, hence newer).
-    * `recordPurged` (requires `deleteKeys`) additionally appends the
-    * folding tombstones' keys to a CUMULATIVE `purged.parquet` list
-    * ([[purged]]) — the durable right-to-be-forgotten record a
-    * from-source rebuild ([[graft.operators.AnnSuite.ivfPqRetrain]])
-    * anti-joins so a completed purge survives retraining from a lake
-    * frame that still carries the deleted rows. Append-only, bounded
-    * by lifetime delete traffic.
-    */
-  def compact(spark: SparkSession, dir: String, scheme: Scheme,
-      folded: => DataFrame, partitionCols: Seq[String],
-      crashBeforeCommit: Boolean = false, retain: Int = 1,
-      requireSegments: Boolean = true,
-      beforeCommit: Int => Unit = _ => (),
-      onRetire: Int => Unit = _ => (),
-      sidecarPrefixes: Seq[String] = Nil,
-      deleteKeys: Seq[String] = Nil,
-      recordPurged: Boolean = false): Boolean = {
-    require(retain >= 1, s"retain must be >= 1 (got $retain)")
-    require(!recordPurged || deleteKeys.nonEmpty,
-      "recordPurged requires deleteKeys (the tombstone key columns)")
-    val lay = resolve(spark, dir, scheme)
-    val fs = fileSystem(spark, dir)
-    val appendsPath = new org.apache.hadoop.fs.Path(s"$dir/${lay.appends}")
-    val deletesPath =
-      new org.apache.hadoop.fs.Path(s"$dir/${scheme.deletesOf(lay.gen)}")
-    if (requireSegments && !fs.exists(appendsPath) && !fs.exists(deletesPath))
-      return false
-    // the new watermark: every committed segment id — append AND
-    // tombstone — folds into the base (tombstoned rows by omission:
-    // `folded` is the reader view, which anti-joined them already)
-    val newFolded =
-      (segmentIds(fs, appendsPath) ++ segmentIds(fs, deletesPath) :+ lay.folded).max
-    val next = lay.gen + 1
-    // 1. land the folded base under the NEXT generation's name
-    //    (idempotent overwrite — a torn attempt just redoes)
-    val w = folded.write.mode("overwrite")
-    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-      .parquet(s"$dir/${scheme.baseOf(next)}")
-    // 2. clear generation-<next> leftovers a TORN prior attempt (plain
-    //    compact, retrain, or carry-forward) may have orphaned: the
-    //    delete channel dir and every sidecar family's <next> version.
-    //    Runs BEFORE beforeCommit/carry-forward so this run's own
-    //    landings survive; committing the manifest below would
-    //    otherwise make any stale orphan visible as generation state.
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/${scheme.deletesOf(next)}"), true)
-    // ... including a torn recordPurged attempt's commit dir: purged
-    //   entries become durable only when the generation commits, so a
-    //   stale commit=<next> left by a prior torn run must not ride into
-    //   THIS run's manifest (this run re-lands it below iff it also
-    //   passes recordPurged — the invariant is structural, not
-    //   dependent on callers always purging). An emptied parent is
-    //   removed too: [[purged]] treats bare existence as "has entries".
-    fs.delete(new org.apache.hadoop.fs.Path(
-      s"$dir/${scheme.purged0}/commit=$next"), true)
-    locally {
-      val pp = new org.apache.hadoop.fs.Path(s"$dir/${scheme.purged0}")
-      if (fs.exists(pp) && fs.listStatus(pp).isEmpty) fs.delete(pp, true)
-    }
-    sidecarPrefixes.foreach { pre =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$dir/$pre$next.parquet"), true)
-    }
-    // 3. tombstone disposition (terminal-delete stores only — see doc)
-    if (deleteKeys.nonEmpty && fs.exists(deletesPath)) {
-      val keyCols = deleteKeys.map(org.apache.spark.sql.functions.col)
-      val tombs = spark.read.parquet(deletesPath.toString)
-        .select(keyCols: _*).distinct()
-      val standing = {
-        val b = spark.read.parquet(s"$dir/${lay.base}").select(keyCols: _*)
-        if (fs.exists(appendsPath))
-          b.unionByName(
-            spark.read.parquet(appendsPath.toString).select(keyCols: _*))
-        else b
-      }
-      val carried = tombs.join(standing, deleteKeys, "left_anti")
-      if (carried.count() > 0)
-        carried.write.mode("overwrite").parquet(
-          s"$dir/${scheme.deletesOf(next)}/batch_id=$newFolded")
-      if (recordPurged)
-        tombs.write.mode("overwrite")
-          .parquet(s"$dir/${scheme.purged0}/commit=$next")
-    }
-    beforeCommit(next)
-    if (crashBeforeCommit) return false
-    // 2. commit the generation (readers switch at their next resolve)
-    val out = fs.create(new org.apache.hadoop.fs.Path(s"$dir/MANIFEST-$next"), true)
-    try out.write(
-      s"v2 ${scheme.baseOf(next)} ${scheme.appendsOf(next)} $newFolded\n"
-        .getBytes("UTF-8"))
-    finally out.close()
-    // 3. retire every generation older than the newest `retain`
-    //    previous ones — the retained generations keep a pre-commit
-    //    reader's files on disk (and the manifest-fallback chain
-    //    serviceable); the loop form also heals leftovers if `retain`
-    //    shrank between calls
-    for (g <- 0 to next - 1 - retain) {
-      fs.delete(new org.apache.hadoop.fs.Path(s"$dir/${scheme.baseOf(g)}"), true)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$dir/${scheme.appendsOf(g)}"), true)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$dir/${scheme.deletesOf(g)}"), true)
-      if (g > 0)
-        fs.delete(new org.apache.hadoop.fs.Path(s"$dir/MANIFEST-$g"), true)
-      onRetire(g)
-    }
-    true
-  }
 }

@@ -30,7 +30,7 @@ object Plans {
   private val Extra: Map[String, (SparkSession, String) => DataFrame] = Map(
     "lww_serving_read" -> { (spark, sfDir) =>
       val e = Tables.embeddings(spark, sfDir).select(col("vec_id"), col("embedding"))
-      val dir = graft.sources.Scratch.dir("lww_plan_dump")
+      val dir = graft.sources.Scratch.perLake("lww_serving_read", sfDir)
       AnnSuite.ivfSave(AnnSuite.ivfBuild(e, "vec_id", "embedding", AnnSuite.IvfK), dir)
       AnnSuite.ivfAppend(spark, dir,
         e.filter(col("vec_id") % 5 === 1)

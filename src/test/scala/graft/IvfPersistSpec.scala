@@ -818,24 +818,21 @@ class IvfPersistSpec extends SparkSpecBase {
     // commit=1 then dies before the manifest. A later compaction that
     // does NOT pass recordPurged commits MANIFEST-1 — the stale commit
     // dir must be scrubbed in the step-2 window, or keys the torn run
-    // never durably purged would surface through [[SegmentStore.purged]]
+    // never durably purged would surface through [[SegmentStore.Scheme.purged]]
     // and be anti-joined out of every future retrain.
     val sess = spark
     import sess.implicits._
     import graft.sources.SegmentStore
     val dir = Scratch.dir("segstore_torn_purged")
     val scheme = SegmentStore.Scheme(
-      "base.parquet", "appends.parquet", "base_v", "appends_v")
+      "base.parquet", "appends.parquet", "base_v", "appends_v",
+      keyCols = Seq("k"), core = Seq("k", "v"))
+    val purging = scheme.copy(recordPurged = true)
     Seq((1L, "a"), (2L, "b")).toDF("k", "v")
       .write.mode("overwrite").parquet(s"$dir/base.parquet")
-    assert(SegmentStore.append(spark, dir, scheme,
-      Seq((3L, "c")).toDF("k", "v"), Nil, batchId = 0L))
-    assert(SegmentStore.appendDeletes(spark, dir, scheme,
-      Seq(1L).toDF("k"), batchId = 1L))
-    def view = SegmentStore.load(spark, dir, scheme,
-      deleteKeys = Seq("k"))(_.select("k", "v"))
-    assert(!SegmentStore.compact(spark, dir, scheme, view, Nil,
-      crashBeforeCommit = true, deleteKeys = Seq("k"), recordPurged = true))
+    assert(scheme.append(spark, dir, Seq((3L, "c")).toDF("k", "v"), batchId = 0L))
+    assert(scheme.delete(spark, dir, Seq(1L).toDF("k"), "k", batchId = 1L))
+    assert(!purging.compact(spark, dir, crashBeforeCommit = true))
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sessionState.newHadoopConf())
     assert(fs.exists(new org.apache.hadoop.fs.Path(
@@ -843,18 +840,15 @@ class IvfPersistSpec extends SparkSpecBase {
       "fixture: the torn attempt should have landed the commit dir")
     // a later compaction WITHOUT recordPurged commits generation 1:
     // the stale commit dir must not become durable purge state
-    assert(SegmentStore.compact(spark, dir, scheme, view, Nil,
-      deleteKeys = Seq("k")))
-    assert(SegmentStore.resolve(spark, dir, scheme).gen === 1)
-    assert(SegmentStore.purged(spark, dir, scheme).isEmpty,
+    assert(scheme.compact(spark, dir))
+    assert(scheme.resolve(spark, dir).gen === 1)
+    assert(scheme.purged(spark, dir).isEmpty,
       "a torn recordPurged attempt leaked through a later plain compaction")
     // and a RE-DRIVEN recordPurged compaction still lands its own
     // purge record durably (the scrub removes only the torn orphan)
-    assert(SegmentStore.appendDeletes(spark, dir, scheme,
-      Seq(2L).toDF("k"), batchId = 2L))
-    assert(SegmentStore.compact(spark, dir, scheme, view, Nil,
-      deleteKeys = Seq("k"), recordPurged = true))
-    assert(SegmentStore.purged(spark, dir, scheme).get
+    assert(scheme.delete(spark, dir, Seq(2L).toDF("k"), "k", batchId = 2L))
+    assert(purging.compact(spark, dir))
+    assert(purging.purged(spark, dir).get
       .select("k").as[Long].collect().toSeq === Seq(2L))
   }
 

@@ -82,7 +82,7 @@ class PqPersistSpec extends SparkSpecBase {
     // purge: the compacted code base physically excludes them and the
     // delete channel resets; the served top-k is unchanged
     assert(AnnSuite.CodesStore.compact(spark, dir), "deletes-only compaction must fold")
-    val lay = graft.sources.SegmentStore.resolve(spark, dir, AnnSuite.CodesStore)
+    val lay = AnnSuite.CodesStore.resolve(spark, dir)
     assert(lay.gen === 1)
     assert(spark.read.parquet(s"$dir/${lay.base}")
       .filter(col("cand_id") % 11 === 5).count() === 0L)
@@ -111,8 +111,7 @@ class PqPersistSpec extends SparkSpecBase {
     // but no manifest — readers keep the OLD quadruple bit-identically
     assert(!AnnSuite.ivfPqRetrain(spark, dir, e, "vec_id", "embedding",
       crashBeforeCommit = true))
-    assert(graft.sources.SegmentStore
-      .resolve(spark, dir, AnnSuite.CodesStore).gen === 0)
+    assert(AnnSuite.CodesStore.resolve(spark, dir).gen === 0)
     assert(AnnSuite.CodesStore.sidecarPath(spark, dir, "book")
       .endsWith("/book.parquet"),
       "a torn retrain's book leaked into the serving path")

@@ -11,9 +11,11 @@ import graft.sources.{Scratch, SegmentStore}
   * sequence — save a base, append batch 0, compact, replay batch 0
   * (refused at the folded watermark), tombstone a key where the store
   * has a delete channel, load — and must serve exactly base ∪ batch 0 −
-  * deleted. Rows are hand-made in each store's core shape (the first
-  * core column is the id), so the table exercises the handles rather
-  * than the index builds behind them.
+  * deleted — and the same retrain commit: a swap publishes a rebuilt
+  * base and its sidecar tables as one generation. Rows are hand-made
+  * in each store's core shape (the first core column is the id), so
+  * the table exercises the handles rather than the index builds
+  * behind them.
   */
 class StoreConformanceSpec extends SparkSpecBase {
 
@@ -34,10 +36,7 @@ class StoreConformanceSpec extends SparkSpecBase {
   for ((name, store, rows) <- stores)
     test(s"$name store: save, append, compact, refused replay, delete, load") {
       val dir = Scratch.dir(s"conformance_$name")
-      val w = rows(Seq(1L, 2L, 3L, 4L)).write.mode("overwrite")
-      (if (store.partitionCols.nonEmpty) w.partitionBy(store.partitionCols: _*) else w)
-        .parquet(s"$dir/${store.base0}")
-      store.reset(spark, dir)
+      store.save(dir, rows(Seq(1L, 2L, 3L, 4L)))
       def served: Seq[Long] =
         store.load(spark, dir).select(col(store.core.head)).collect()
           .map(_.getLong(0)).toSeq.sorted
@@ -66,5 +65,38 @@ class StoreConformanceSpec extends SparkSpecBase {
         assert(store.delete(spark, dir, ids, "id", batchId = 1L))
         assert(served === folded.filterNot(_ == 2L))
       }
+    }
+
+  for ((name, declared, rows) <- stores)
+    test(s"$name store: swap commits base and sidecar as one generation, refuses undeclared") {
+      // a store without a sidecar family declares one for this leg
+      val store =
+        if (declared.sidecars.nonEmpty) declared else declared.copy(sidecars = Seq("side"))
+      val side = store.sidecars.head
+      val s = spark
+      import s.implicits._
+      val dir = Scratch.dir(s"conformance_swap_$name")
+      val fs = new org.apache.hadoop.fs.Path(dir)
+        .getFileSystem(spark.sessionState.newHadoopConf())
+      def onDisk(table: String) = fs.exists(new org.apache.hadoop.fs.Path(s"$dir/$table"))
+      def served: Seq[Long] =
+        store.load(spark, dir).select(col(store.core.head)).collect()
+          .map(_.getLong(0)).toSeq.sorted
+      store.save(dir, rows(Seq(1L, 2L, 3L)), side -> Seq(0L).toDF("v"))
+
+      intercept[IllegalArgumentException] {
+        store.swap(spark, dir, rows(Seq(7L, 8L)))("undeclared" -> Seq(1L).toDF("v"))
+      }
+      assert(store.resolve(spark, dir).gen === 0)
+      assert(!onDisk("undeclared_v1.parquet") && !onDisk(store.baseOf(1)),
+        "a refused swap must write nothing")
+
+      assert(store.swap(spark, dir, rows(Seq(7L, 8L)))(side -> Seq(1L).toDF("v")))
+      assert(store.resolve(spark, dir).gen === 1)
+      val table = store.sidecar(spark, dir, side)
+      assert(table.inputFiles.nonEmpty &&
+        table.inputFiles.forall(_.contains(s"/${side}_v1.parquet/")))
+      assert(table.as[Long].collect().toSeq === Seq(1L))
+      assert(served === Seq(7L, 8L))
     }
 }

@@ -15,7 +15,10 @@ output dir is compared with the other dir's dump of the same entry —
 column names (in order), row count, and the sorted canonical rows —
 one PASS/FAIL line per entry. This is the "row-identical to another
 build" check for a refactor: run Verify on both builds at the same sf,
-then compare the two output dirs.
+then compare the two output dirs. It also compares the per-entry Spark
+job counts the two verify_status.jsonl files record: each entry whose
+count differs gets a `JOBS <name> <other's jobs> -> <out's jobs>` line,
+and the summary counts them. The exit status reflects rows only.
 """
 import json
 import math
@@ -47,6 +50,14 @@ def dumped(out):
     return {e.name for e in os.scandir(out) if e.is_dir()}
 
 
+def statuses(out):
+    """name -> status record of one Verify dir's verify_status.jsonl."""
+    path = f"{out}/verify_status.jsonl"
+    if not os.path.exists(path):
+        return {}
+    return {st["name"]: st for st in map(json.loads, open(path))}
+
+
 def against(out, other, only):
     con = duckdb.connect()
     n_pass = n_fail = 0
@@ -75,7 +86,16 @@ def against(out, other, only):
         else:
             print(f"PASS {name} ({len(arows)} rows, identical)")
             n_pass += 1
-    print(f"== {n_pass} pass, {n_fail} fail ==")
+    ajobs, bjobs = statuses(out), statuses(other)
+    n_jobs = 0
+    for name in sorted(ajobs.keys() & bjobs.keys()):
+        if only and name not in only:
+            continue
+        a, b = ajobs[name].get("jobs"), bjobs[name].get("jobs")
+        if a != b:
+            print(f"JOBS {name} {b} -> {a}")
+            n_jobs += 1
+    print(f"== {n_pass} pass, {n_fail} fail, {n_jobs} job counts differ ==")
     sys.exit(1 if n_fail else 0)
 
 
@@ -94,14 +114,10 @@ def main():
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')")
     oracle = json.load(open(f"{out}/oracle_sql.json"))
-    verify_errors = {}
-    if os.path.exists(f"{out}/verify_status.jsonl"):
-        for line in open(f"{out}/verify_status.jsonl"):
-            st = json.loads(line)
-            if st["status"] != "ok":
-                # first line only: one FAIL line per entry; the full
-                # message stays in the jsonl
-                verify_errors[st["name"]] = (st["error"] or "").split("\n")[0]
+    # first line only: one FAIL line per entry; the full message stays
+    # in the jsonl
+    verify_errors = {name: (st["error"] or "").split("\n")[0]
+                     for name, st in statuses(out).items() if st["status"] != "ok"}
     n_pass = n_fail = 0
     for name, sql in sorted(oracle.items()):
         if only and name not in only:
